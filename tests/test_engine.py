@@ -238,9 +238,8 @@ def test_identifier_indirection(engine):
 
 
 def test_query_log_cost(engine):
-    n0 = len(engine.query_log)
     engine.execute("SELECT 1 AS a; SELECT 2 AS b")
-    assert len(engine.query_log) == n0 + 2
+    assert [r["sql"] for r in list(engine.query_log)[-2:]] == ["SELECT 1 AS a", "SELECT 2 AS b"]
     entry = engine.query_log[-1]
     assert entry["duration_sec"] >= 0 and entry["estimated_cost_usd"] >= 0
 
@@ -2665,7 +2664,7 @@ def test_analyze_table_stats(engine):
 
 def test_describe_result_and_last_query_id_offset(engine):
     engine.execute("SELECT o_orderkey AS k, o_orderpriority AS p FROM orders LIMIT 3")
-    qid1 = engine._last_qid
+    qid1 = engine.query_log[-1]["query_id"]
     engine.execute("SELECT 42 AS answer")
     rows = engine.execute("DESCRIBE RESULT LAST_QUERY_ID()").to_pylist()
     assert [r["name"] for r in rows] == ["answer"]
@@ -2692,10 +2691,10 @@ def test_last_query_id_positive_and_mixed_with_result_scan(engine):
     contains RESULT_SCAN still resolves (the old substring gate skipped
     it)."""
     engine.execute("SELECT 1 AS a")
-    # 1-based from session start: position len(ring) addresses the query
-    # just run (the ring is shared across this test session's statements)
-    pos = len(engine._results)
-    expected = list(engine._results)[pos - 1]
+    # 1-based from the oldest retained record: position len(query_log)
+    # addresses the query just run (the log is shared across this module)
+    pos = len(engine.query_log)
+    expected = engine.query_log[pos - 1]["query_id"]
     out = engine.execute(f"SELECT LAST_QUERY_ID({pos}) AS q").to_pylist()
     assert out == [{"q": expected}]
     # bare LAST_QUERY_ID() next to a RESULT_SCAN in the same statement
@@ -4609,3 +4608,44 @@ def test_result_reuse_stream_reads_never_cached(engine):
     assert engine.result_cache_hits == h
     engine.execute("DROP STREAM rr_stream")
     engine.execute("DROP TABLE rr_src")
+
+
+# -- query_log: one bounded record per statement --------------------------------
+
+
+def test_failed_statement_recorded_and_in_query_history(engine):
+    """A failed statement leaves a FAILED_WITH_ERROR record carrying its
+    message and SQLSTATE, and shows in INFORMATION_SCHEMA.QUERY_HISTORY."""
+    with pytest.raises(QueryError) as err:
+        engine.execute("SELECT * FROM qlog_no_such_table")
+    rec = engine.query_log[-1]
+    assert rec["sql"] == "SELECT * FROM qlog_no_such_table"
+    assert rec["status"] == "FAILED_WITH_ERROR"
+    assert rec["error_message"] == err.value.message and rec["sql_state"] == err.value.sql_state
+    rows = engine.execute(
+        "SELECT QUERY_ID, QUERY_TEXT FROM TABLE(INFORMATION_SCHEMA.QUERY_HISTORY())"
+    ).to_pylist()
+    assert {"QUERY_ID": rec["query_id"], "QUERY_TEXT": "SELECT * FROM qlog_no_such_table"} in rows
+
+
+def test_caller_query_id_names_the_last_statement_run(engine):
+    engine.execute("SELECT 1 AS a; SELECT 2 AS b", query_id="qlog-caller-1")
+    first, last = list(engine.query_log)[-2:]
+    assert last["query_id"] == "qlog-caller-1" and first["query_id"] != "qlog-caller-1"
+    # a failure stops the call: the failing statement is its last one
+    with pytest.raises(QueryError):
+        engine.execute("SELECT 3 AS c; SELECT * FROM qlog_missing; SELECT 4 AS d", query_id="qlog-caller-2")
+    assert engine.query_log[-1]["query_id"] == "qlog-caller-2"
+    assert engine.query_log[-1]["status"] == "FAILED_WITH_ERROR"
+
+
+def test_query_log_keeps_last_100_and_forgets_evicted_ids(engine):
+    engine.execute("SELECT 'qlog-oldest' AS v")
+    oldest = engine.query_log[-1]["query_id"]
+    assert engine.execute(f"SELECT v FROM TABLE(RESULT_SCAN('{oldest}'))").to_pylist() == [
+        {"v": "qlog-oldest"}
+    ]
+    engine.execute("; ".join(f"SELECT {i} AS qlog_v" for i in range(100)))
+    assert len(engine.query_log) == 100
+    with pytest.raises(QueryError, match="unknown query id"):
+        engine.execute(f"SELECT v FROM TABLE(RESULT_SCAN('{oldest}'))")

@@ -630,3 +630,105 @@ def test_result_reuse_through_protocol(client):
     ).get_json()
     logged = [q for q in hist["data"]["queries"] if q.get("sql", "").startswith("SELECT r_regionkey")]
     assert any(q.get("result_reuse") for q in logged)
+
+
+# -- one query_log record answers every per-statement surface -------------------
+
+
+def test_sync_monitoring_by_request_id(client):
+    token = _login(client)
+    hdr = {"Authorization": f'Snowflake Token="{token}"'}
+    out = client.post(
+        "/queries/v1/query-request?requestId=sync-mon-0001", json={"sqlText": "SELECT 1 AS one"}, headers=hdr
+    ).get_json()
+    assert out["success"] and out["data"]["queryId"] == "sync-mon-0001"
+    mon = client.get("/monitoring/queries/sync-mon-0001", headers=hdr).get_json()
+    assert mon["data"]["queries"] == [{"id": "sync-mon-0001", "status": "SUCCEEDED"}]
+
+
+def test_failed_sync_statement_in_monitoring(client):
+    token = _login(client)
+    hdr = {"Authorization": f'Snowflake Token="{token}"'}
+    out = client.post(
+        "/queries/v1/query-request?requestId=sync-fail-0001",
+        json={"sqlText": "SELECT * FROM no_such_table_mon"},
+        headers=hdr,
+    ).get_json()
+    assert out["success"] is False
+    mon = client.get("/monitoring/queries/sync-fail-0001", headers=hdr).get_json()
+    assert mon["data"]["queries"][0]["status"] == "FAILED_WITH_ERROR"
+    listed = client.get("/monitoring/queries", headers=hdr).get_json()["data"]["queries"]
+    rec = next(q for q in listed if q["query_id"] == "sync-fail-0001")
+    assert rec["status"] == "FAILED_WITH_ERROR"
+    assert rec["error_message"] == out["message"]
+    assert rec["sql_state"] == out["data"]["sqlState"]
+
+
+def test_sync_result_endpoint_returns_chunks(client):
+    """/queries/<id>/result serves a finished sync statement too; a result
+    over CHUNK_ROWS comes back as the inline slice plus chunks[]."""
+    token = _login(client)
+    hdr = {"Authorization": f'Snowflake Token="{token}"'}
+    sql = "SELECT id, id * 2 AS dbl FROM range(25000) ORDER BY id"
+    out = client.post("/queries/v1/query-request?requestId=sync-big-0001", json={"sqlText": sql}, headers=hdr)
+    assert out.get_json()["success"]
+    res = client.get("/queries/sync-big-0001/result", headers=hdr).get_json()
+    assert res["success"] and res["data"]["returned"] == 25000
+    tables = [_decode(res)]
+    for entry in res["data"]["chunks"]:
+        tables.append(_decode(client.get(entry["url"], headers=hdr).get_json()))
+    full = pa.concat_tables(tables)
+    assert full.column("id").to_pylist() == list(range(25000))
+    assert full.column("dbl").to_pylist() == [2 * i for i in range(25000)]
+
+
+def test_evicted_statement_chunk_url_is_404(client):
+    token = _login(client)
+    hdr = {"Authorization": f'Snowflake Token="{token}"'}
+    out = client.post(
+        "/queries/v1/query-request?requestId=evict-big-0001",
+        json={"sqlText": "SELECT id FROM range(15000) ORDER BY id"},
+        headers=hdr,
+    ).get_json()
+    url = out["data"]["chunks"][0]["url"]
+    assert client.get(url, headers=hdr).status_code == 200
+    more = "; ".join(f"SELECT {i} AS evict_v" for i in range(100))
+    assert client.post("/queries/v1/query-request", json={"sqlText": more}, headers=hdr).get_json()["success"]
+    assert client.get(url, headers=hdr).status_code == 404
+    assert client.get("/monitoring/queries/evict-big-0001", headers=hdr).get_json()["data"]["queries"][0][
+        "status"
+    ] == "NO_DATA"
+
+
+def test_async_poll_never_loses_a_finishing_statement(client):
+    """Stress the hand-off from the in-flight set to the record: while
+    async statements finish, every poll of a submitted id reads RUNNING or
+    SUCCEEDED, never NO_DATA."""
+    import sys
+    import time
+
+    token = _login(client)
+    hdr = {"Authorization": f'Snowflake Token="{token}"'}
+    ids = [f"async-stress-{i:02d}" for i in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for i, qid in enumerate(ids):
+            r = client.post(
+                f"/queries/v1/query-request?requestId={qid}",
+                json={"sqlText": f"SELECT {i} AS stress_v", "asyncExec": True},
+                headers=hdr,
+            ).get_json()
+            assert r["code"] == "333334"
+        deadline = time.monotonic() + 120
+        pending = set(ids)
+        while pending and time.monotonic() < deadline:
+            for qid in list(pending):
+                st = client.get(f"/monitoring/queries/{qid}", headers=hdr).get_json()
+                status = st["data"]["queries"][0]["status"]
+                if status != "RUNNING":
+                    pending.discard(qid)
+                    assert status == "SUCCEEDED", (qid, status)
+    finally:
+        sys.setswitchinterval(old)
+    assert not pending, pending

@@ -2,7 +2,9 @@
 
 - zero-exchange / zero-sort SMJ for the orderkey fact joins over the
   sorted co-bucketed layout (q3/q18 MERGE hint +
-  spark.sql.legacy.bucketedTableScan.outputOrdering)
+  spark.sql.legacy.bucketedTableScan.outputOrdering), and its safety pin:
+  the engine's bucketed writer leaves one file per bucket, and a layout
+  with two files per bucket still plans a Sort under that flag
 - broadcast-class dims cached as a single partition
 - the __ivf_probes view memo (skip probe-projection rebuild for a
   repeated query batch; rebuild when the batch or probe width changes)
@@ -18,6 +20,7 @@ import pytest
 
 from universql_spark.queries import ensure_views, load_all
 from universql_spark.operators import similarity
+from universql_spark.session import _files_per_bucket, _write_bucketed
 
 REG = load_all()
 
@@ -51,6 +54,36 @@ def test_fact_join_zero_sort_smj_over_sorted_buckets(spark, sf_dir, name):
         assert "hashpartitioning(o_orderkey" not in p
     finally:
         ensure_views(spark, sf_dir)  # restore the suite's views
+
+
+def _self_join_plan(spark, path: str, table: str) -> str:
+    spark.sql(
+        f"CREATE TABLE {table} (id BIGINT, k BIGINT) USING parquet "
+        f"CLUSTERED BY (k) SORTED BY (k) INTO 4 BUCKETS LOCATION '{path}'"
+    )
+    try:
+        df = spark.sql(f"SELECT /*+ MERGE(b) */ a.id, b.id FROM {table} a JOIN {table} b ON a.k = b.k")
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.sql(f"DROP TABLE {table}")
+
+
+def test_bucket_sort_order_needs_one_file_per_bucket(spark, tmp_path):
+    """outputOrdering safety pin: with two files per bucket the scan must
+    not claim its sort order, so the SMJ still sorts; the engine's writer
+    leaves one file per bucket, and that layout plans zero sorts."""
+    assert spark.conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering") == "true"
+    df = spark.range(0, 2000, 1, 2).selectExpr("id", "id % 97 AS k")
+    two = str(tmp_path / "two")
+    df.write.bucketBy(4, "k").sortBy("k").option("path", two).saveAsTable("uq_pin_two_tmp")
+    spark.sql("DROP TABLE uq_pin_two_tmp")
+    assert set(_files_per_bucket(two).values()) == {2}
+    one = str(tmp_path / "one")
+    _write_bucketed(df, 4, "k", one, "uq_pin_one_tmp")
+    assert _files_per_bucket(one) == {0: 1, 1: 1, 2: 1, 3: 1}
+    assert "Sort [" in _self_join_plan(spark, two, "uq_pin_two")
+    plan = _self_join_plan(spark, one, "uq_pin_one")
+    assert "SortMergeJoin" in plan and "Sort [" not in plan
 
 
 def test_broadcast_class_dims_cached_single_partition(spark, sf_dir):

@@ -36,6 +36,7 @@ import os
 import re
 import time
 import uuid
+from collections import deque
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -380,6 +381,13 @@ _NONDET_FN_RE = re.compile(
 )
 _RESULT_CACHE_MAX_BYTES = 16 * 1024 * 1024
 _RESULT_CACHE_MAX_ENTRIES = 32
+#: statements retained in Engine.query_log — the one retention bound for
+#: RESULT_SCAN / LAST_QUERY_ID / BEFORE(STATEMENT) / QUERY_HISTORY and the
+#: REST result, chunk and monitoring surfaces (Snowflake's QUERY_HISTORY
+#: RESULT_LIMIT default)
+QUERY_LOG_RETAIN = 100
+#: record keys that hold engine-side state rather than history fields
+RECORD_STATE_KEYS = ("result", "pre_snapshots")
 _STAGE_REF_RE = re.compile(
     r"@(\w+)((?:/[\w.\-*]+)*)\s*(?:\(\s*FILE_FORMAT\s*=>\s*([\w']+)\s*\))?", re.I
 )
@@ -474,13 +482,6 @@ class Engine:
         self.current_warehouse = "x-spark"
         #: stored procedures: name -> (param names, scripting-block body)
         self.procedures: dict[str, tuple[list[str], str]] = {}
-        #: query id -> result table (RESULT_SCAN surface; bounded ring)
-        self._results: dict[str, pa.Table] = {}
-        self._last_qid: str | None = None
-        #: query id -> {snap table -> snapshot id BEFORE that statement ran}
-        #: (BEFORE(STATEMENT => qid) time travel; recorded for
-        #: history-changing statements only — same bounded ring as _results)
-        self._stmt_pre_snapshots: dict[str, dict[str, int]] = {}
         #: names created by CREATE TEMP TABLE AS SELECT (view-backed):
         #: INSERT/DELETE/UPDATE on them re-materialize the view
         #: (localCheckpoint) instead of falling into Spark's
@@ -525,8 +526,13 @@ class Engine:
         #: metadata_location) so an external catalog learns the table.
         #: Injected via enable_rest_catalog_sync() or set directly.
         self.catalog_sync = None  # Callable[[str, str], None] | None
-        #: per-statement duration + cost estimate (reference util.py:375-406)
-        self.query_log: list[dict] = []
+        #: one record per executed statement, newest last, failed ones
+        #: included: query_id, sql, status (SUCCEEDED / FAILED_WITH_ERROR),
+        #: error_message + sql_state, duration_sec, estimated_cost_usd
+        #: (reference util.py:375-406), query_tag, result_reuse, and the
+        #: RECORD_STATE_KEYS: the result table and the pre-statement
+        #: snapshot ids of history-changing statements
+        self.query_log: deque[dict] = deque(maxlen=QUERY_LOG_RETAIN)
         #: routing fallback (reference: anything the local engine can't run
         #: is sent to the other executor, protocol/session.py:195-201 /
         #: warehouse/snowflake.py:219-225). Here the "other executor" is the
@@ -583,110 +589,131 @@ class Engine:
 
     # -- public API --------------------------------------------------------
 
-    def execute(self, sql: str) -> pa.Table:
+    def execute(self, sql: str, query_id: str | None = None) -> pa.Table:
         """Execute one or more ';'-separated statements; return the last
         result as a PyArrow table (the reference's result contract,
-        plugin.py:81-82 / protocol/snowflake.py:223-243). Each statement is
-        appended to query_log with duration + estimated local-compute cost
-        (port of the reference's cost logger, util.py:375-406)."""
+        plugin.py:81-82 / protocol/snowflake.py:223-243). Each statement,
+        failed ones included, lands in query_log when it finishes; the
+        last statement the call runs is recorded under `query_id` (the
+        client's requestId) when one is given, the others under fresh
+        uuids."""
         from universql_spark import scripting  # noqa: PLC0415
 
         if scripting.is_script(sql):
             # Snowflake Scripting block / EXECUTE IMMEDIATE: one unit — the
-            # ';'-splitter must not cut through BEGIN ... END. Scripts run
-            # arbitrary DML through their own dispatcher, so the result
-            # cache invalidates unconditionally.
+            # ';'-splitter must not cut through BEGIN ... END
+            stmts, run = [sql], self._run_script
+        else:
+            stmts, run = split_statements(sql), self._run_statement
+        result: pa.Table = pa.table({"status": pa.array([], type=pa.string())})
+        for i, stmt in enumerate(stmts):
+            t0 = time.perf_counter()
+            rec: dict = {"sql": stmt[:200]}
+            try:
+                result = run(stmt, rec)
+            except Exception as e:
+                rec["error_message"] = getattr(e, "message", None) or str(e)[:500]
+                rec["sql_state"] = getattr(e, "sql_state", "42000")
+                self._record(rec, t0, query_id, None)
+                raise
+            self._record(rec, t0, query_id if i == len(stmts) - 1 else None, result)
+        return result
+
+    def _record(self, rec: dict, t0: float, query_id: str | None, result: pa.Table | None) -> None:
+        dur = time.perf_counter() - t0
+        rec["query_id"] = query_id or uuid.uuid4().hex
+        rec["status"] = "FAILED_WITH_ERROR" if result is None else "SUCCEEDED"
+        rec["duration_sec"] = round(dur, 4)
+        rec["estimated_cost_usd"] = 0.0 if rec.get("result_reuse") else round(_estimate_cost_usd(dur), 8)
+        # ALTER SESSION SET QUERY_TAG tags subsequent records (the
+        # dbt/airflow attribution convention)
+        if self.session_params.get("QUERY_TAG"):
+            rec["query_tag"] = self.session_params["QUERY_TAG"]
+        rec["result"] = result
+        self.query_log.append(rec)
+
+    def query_record(self, query_id: str | None) -> dict | None:
+        """The newest retained record with this id; None once evicted."""
+        # list() copies in one step: an async worker may append meanwhile
+        return next((r for r in reversed(list(self.query_log)) if r["query_id"] == query_id), None)
+
+    def _query_id_at(self, off: int) -> str | None:
+        """LAST_QUERY_ID(off): negative offsets count back from the newest
+        retained statement (-1), positive ones are 1-based from the oldest
+        retained, Snowflake-style (ADVICE r5 #5); None when out of range."""
+        log = list(self.query_log)
+        if off < 0:
+            return log[off]["query_id"] if -len(log) <= off else None
+        return log[off - 1]["query_id"] if 1 <= off <= len(log) else None
+
+    def _retained_result(self, query_id: str | None, what: str) -> pa.Table:
+        rec = self.query_record(query_id)
+        if rec is None or rec["result"] is None:
+            raise QueryError(f"{what}: unknown query id {query_id!r}", sql_state="02000")
+        return rec["result"]
+
+    def _run_script(self, sql: str, rec: dict) -> pa.Table:
+        from universql_spark import scripting  # noqa: PLC0415
+
+        # scripts run arbitrary DML through their own dispatcher, so the
+        # result cache invalidates unconditionally
+        self._data_version += 1
+        self._result_cache.clear()
+        try:
+            value = scripting.ScriptRunner(self).run(sql)
+        except scripting.ScriptError as e:
+            raise QueryError(str(e)) from e
+        if value is None:
+            return _status("block executed")
+        if isinstance(value, pa.Table):  # RETURN TABLE(resultset)
+            return value
+        return pa.table({"RETURN_VALUE": [str(value)]})
+
+    def _run_statement(self, stmt: str, rec: dict) -> pa.Table:
+        self._streams_consumed.clear()
+        ck = self._result_cache_key(stmt)
+        cached = self._result_cache.get(ck) if ck is not None else None
+        if cached is not None:
+            # persisted-result reuse: recorded as a fresh query and kept
+            # RESULT_SCAN-addressable under its new id, like Snowflake's
+            # QUERY_RESULT_REUSE entries
+            self.result_cache_hits += 1
+            rec["result_reuse"] = True
+            return cached
+        # BEFORE(STATEMENT => qid) support: history-changing statements
+        # record each snapshot table's pre-statement snapshot id (a
+        # metadata-json read per table — no data scan)
+        if self.snap_tables and re.match(
+            r"^\s*(INSERT|MERGE|UPDATE|DELETE|TRUNCATE|CREATE|COPY|ALTER|DROP)\b",
+            stmt,
+            re.I,
+        ):
+            pre_snaps: dict[str, int] = {}
+            for tname, t in self.snap_tables.items():
+                try:
+                    snaps = t.snapshots()
+                    if snaps:
+                        pre_snaps[tname] = snaps[-1]["id"]
+                except Exception:  # noqa: BLE001 - table mid-drop
+                    continue
+            rec["pre_snapshots"] = pre_snaps
+        result = self._execute_one(stmt)
+        if not _READ_ONLY_HEAD_RE.match(stmt):
+            # anything that can change engine-visible state invalidates
+            # every retained result (version key + explicit clear so
+            # stale tables are not pinned in memory)
             self._data_version += 1
             self._result_cache.clear()
-            try:
-                value = scripting.ScriptRunner(self).run(sql)
-            except scripting.ScriptError as e:
-                raise QueryError(str(e)) from e
-            if value is None:
-                return _status("block executed")
-            if isinstance(value, pa.Table):  # RETURN TABLE(resultset)
-                return value
-            return pa.table({"RETURN_VALUE": [str(value)]})
-        result: pa.Table = pa.table({"status": pa.array([], type=pa.string())})
-        for stmt in split_statements(sql):
-            t0 = time.perf_counter()
+        elif ck is not None and result.nbytes <= _RESULT_CACHE_MAX_BYTES:
+            self._result_cache[ck] = result
+            while len(self._result_cache) > _RESULT_CACHE_MAX_ENTRIES:
+                self._result_cache.pop(next(iter(self._result_cache)))
+        # Snowflake stream consumption: only a DML that read the stream
+        # advances its bookmark; a plain SELECT re-reads the same delta
+        if re.match(r"^\s*(INSERT|MERGE|CREATE)\b", stmt, re.I):
+            self._advance_consumed_streams()
+        else:
             self._streams_consumed.clear()
-            ck = self._result_cache_key(stmt)
-            cached = self._result_cache.get(ck) if ck is not None else None
-            if cached is not None:
-                # persisted-result reuse: logged as a fresh query and kept
-                # RESULT_SCAN-addressable under its new id, like Snowflake's
-                # QUERY_RESULT_REUSE entries
-                self.result_cache_hits += 1
-                result = cached
-                dur = time.perf_counter() - t0
-                qid = uuid.uuid4().hex
-                entry = {"sql": stmt[:200], "duration_sec": round(dur, 4),
-                         "estimated_cost_usd": 0.0, "query_id": qid,
-                         "result_reuse": True}
-                if self.session_params.get("QUERY_TAG"):
-                    entry["query_tag"] = self.session_params["QUERY_TAG"]
-                self.query_log.append(entry)
-                self._results[qid] = result
-                self._last_qid = qid
-                while len(self._results) > 20:
-                    old = next(iter(self._results))
-                    self._results.pop(old)
-                    self._stmt_pre_snapshots.pop(old, None)
-                continue
-            # BEFORE(STATEMENT => qid) support: history-changing statements
-            # record each snapshot table's pre-statement snapshot id (a
-            # metadata-json read per table — no data scan)
-            pre_snaps: dict[str, int] | None = None
-            if self.snap_tables and re.match(
-                r"^\s*(INSERT|MERGE|UPDATE|DELETE|TRUNCATE|CREATE|COPY|ALTER|DROP)\b",
-                stmt,
-                re.I,
-            ):
-                pre_snaps = {}
-                for tname, t in self.snap_tables.items():
-                    try:
-                        snaps = t.snapshots()
-                        if snaps:
-                            pre_snaps[tname] = snaps[-1]["id"]
-                    except Exception:  # noqa: BLE001 - table mid-drop
-                        continue
-            result = self._execute_one(stmt)
-            if not _READ_ONLY_HEAD_RE.match(stmt):
-                # anything that can change engine-visible state invalidates
-                # every retained result (version key + explicit clear so
-                # stale tables are not pinned in memory)
-                self._data_version += 1
-                self._result_cache.clear()
-            elif ck is not None and result.nbytes <= _RESULT_CACHE_MAX_BYTES:
-                self._result_cache[ck] = result
-                while len(self._result_cache) > _RESULT_CACHE_MAX_ENTRIES:
-                    self._result_cache.pop(next(iter(self._result_cache)))
-            # Snowflake stream consumption: only a DML that read the stream
-            # advances its bookmark; a plain SELECT re-reads the same delta
-            if re.match(r"^\s*(INSERT|MERGE|CREATE)\b", stmt, re.I):
-                self._advance_consumed_streams()
-            else:
-                self._streams_consumed.clear()
-            dur = time.perf_counter() - t0
-            cost = _estimate_cost_usd(dur)
-            qid = uuid.uuid4().hex
-            entry = {"sql": stmt[:200], "duration_sec": round(dur, 4),
-                     "estimated_cost_usd": round(cost, 8), "query_id": qid}
-            # ALTER SESSION SET QUERY_TAG tags subsequent log entries (the
-            # dbt/airflow attribution convention)
-            if self.session_params.get("QUERY_TAG"):
-                entry["query_tag"] = self.session_params["QUERY_TAG"]
-            self.query_log.append(entry)
-            # RESULT_SCAN surface: retain the last few result sets by id
-            self._results[qid] = result
-            self._last_qid = qid
-            if pre_snaps:
-                self._stmt_pre_snapshots[qid] = pre_snaps
-            while len(self._results) > 20:
-                old = next(iter(self._results))
-                self._results.pop(old)
-                self._stmt_pre_snapshots.pop(old, None)
         return result
 
     def execute_df(self, sql: str) -> DataFrame:
@@ -2137,15 +2164,8 @@ class Engine:
             if drm:
                 # DESCRIBE RESULT: column metadata of a retained result set
                 # (clients use it to introspect a past statement's shape)
-                if drm.group(1):
-                    qid = drm.group(1)
-                else:
-                    off = int(drm.group(2)) if drm.group(2) else -1
-                    qids = list(self._results)
-                    qid = qids[off] if qids and -len(qids) <= off <= -1 else None
-                if not qid or qid not in self._results:
-                    raise QueryError(f"DESCRIBE RESULT: unknown query id {qid!r}", "02000")
-                res = self._results[qid]
+                qid = drm.group(1) or self._query_id_at(int(drm.group(2) or -1))
+                res = self._retained_result(qid, "DESCRIBE RESULT")
                 _arrow_names = {
                     "int64": "bigint", "int32": "int", "int16": "smallint",
                     "int8": "tinyint", "double": "double", "float": "float",
@@ -2430,21 +2450,13 @@ class Engine:
         # bare LAST_QUERY_ID(n) as a scalar (the RESULT_SCAN form resolved
         # its own — _resolve_result_scan ran above, so any LAST_QUERY_ID
         # still present is outside a RESULT_SCAN and safe to substitute,
-        # ADVICE r5 #5). Negative offsets index the retained-result ring
-        # from the newest (-1); positive offsets are 1-based from session
-        # start, Snowflake-style.
-        def _lqid(m: re.Match) -> str:
-            off = int(m.group(1)) if m.group(1) else -1
-            qids = list(self._results)
-            if off < 0:
-                qid = qids[off] if -len(qids) <= off else ""
-            else:
-                qid = qids[off - 1] if 1 <= off <= len(qids) else ""
-            return f"'{qid}'"
-
+        # ADVICE r5 #5)
         if "last_query_id" in stmt.lower():
             stmt = re.sub(
-                r"\bLAST_QUERY_ID\s*\(\s*(-?\d+)?\s*\)", _lqid, stmt, flags=re.I
+                r"\bLAST_QUERY_ID\s*\(\s*(-?\d+)?\s*\)",
+                lambda m: f"'{self._query_id_at(int(m.group(1) or -1)) or ''}'",
+                stmt,
+                flags=re.I,
             )
         # IS_ROLE_IN_SESSION: one active role per engine session (no role
         # hierarchy locally), so membership == equality with CURRENT_ROLE
@@ -2654,18 +2666,11 @@ class Engine:
                 # Snowflake named args: RESULT_LIMIT => n caps at the NEWEST
                 # n entries; the BY_SESSION/USER/WAREHOUSE variants collapse
                 # to the same log (one engine == one session/user/warehouse)
-                limit = 1000
+                log = list(self.query_log)
                 lm = re.search(r"RESULT_LIMIT\s*=>\s*(\d+)", m.group(1), re.I)
                 if lm:
-                    limit = int(lm.group(1))
-                rows = [
-                    (
-                        q.get("query_id", ""),
-                        q.get("sql", "")[:2000],
-                        float(q.get("duration_sec", 0.0)),
-                    )
-                    for q in self.query_log[-limit:]
-                ]
+                    log = log[max(0, len(log) - int(lm.group(1))) :]
+                rows = [(q["query_id"], q["sql"], float(q["duration_sec"])) for q in log]
                 self.spark.createDataFrame(
                     rows,
                     "QUERY_ID string, QUERY_TEXT string, TOTAL_ELAPSED_TIME double",
@@ -3795,18 +3800,12 @@ class Engine:
             arg = (m.group(1) or m.group(2)).strip()
             if arg.upper().startswith("LAST_QUERY_ID"):
                 om = re.search(r"\(\s*(-?\d+)\s*\)", arg)
-                off = int(om.group(1)) if om and om.group(1) else -1
-                qids = list(self._results)
-                if off < 0:
-                    qid = qids[off] if -len(qids) <= off else None
-                else:  # 1-based from session start (ADVICE r5 #5)
-                    qid = qids[off - 1] if 1 <= off <= len(qids) else None
+                qid = self._query_id_at(int(om.group(1)) if om else -1)
             else:
                 qid = arg.strip("'")
-            if not qid or qid not in self._results:
-                raise QueryError(f"RESULT_SCAN: unknown query id {qid!r}", sql_state="02000")
+            res = self._retained_result(qid, "RESULT_SCAN")
             view = f"__result_scan_{qid[:16]}"
-            self.spark.createDataFrame(self._results[qid]).createOrReplaceTempView(view)
+            self.spark.createDataFrame(res).createOrReplaceTempView(view)
             return view
 
         return _RESULT_SCAN_RE.sub(repl, stmt)
@@ -4168,7 +4167,7 @@ class Engine:
         point — BEFORE(SNAPSHOT => n) is the snapshot preceding n,
         BEFORE(TIMESTAMP/OFFSET => t) is the state at t - 1 ms, and
         BEFORE(STATEMENT => qid) is the state recorded just before that
-        history-changing statement executed (_stmt_pre_snapshots ring)."""
+        history-changing statement executed (its query_log record)."""
         snaps = snap.snapshots()
         ids = [s["id"] for s in snaps]
         if kind == "SNAPSHOT":
@@ -4186,15 +4185,15 @@ class Engine:
             return snap.resolve_ref(val.strip("'"))
         if kind == "STATEMENT":
             qid = val.strip("'")
-            rec = self._stmt_pre_snapshots.get(qid)
-            if rec is None or name not in rec:
+            pre = (self.query_record(qid) or {}).get("pre_snapshots") or {}
+            if name not in pre:
                 raise QueryError(
                     f"BEFORE(STATEMENT => {qid!r}): statement id not found in the "
-                    f"retained history ring or it predates table {name}; only "
+                    f"retained query log or it predates table {name}; only "
                     "history-changing statements (INSERT/MERGE/UPDATE/DELETE/"
                     "CREATE/...) record pre-statement snapshots"
                 )
-            return rec[name]
+            return pre[name]
         if kind == "OFFSET":
             # OFFSET => -60: the table as of 60 seconds ago (fractional ok)
             ms = int(time.time() * 1000 + float(val) * 1000)

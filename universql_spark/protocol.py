@@ -13,9 +13,15 @@ serialized as a RecordBatch IPC stream and base64-encoded into
 gzip-compressed request bodies are accepted (util.py:258-264). Failures map
 to the reference's error envelope with sqlState (snowflake.py:200-218).
 
-One Engine (= one SparkSession) serves all sessions; per-session state is
-the (database, schema) pair — the Spark-native collapse of the reference's
-per-session DuckDB instances (SURVEY.md §3.2).
+Every statement is answered by its query id from one record in
+`Engine.query_log` (the last `QUERY_LOG_RETAIN` statements): result fetch,
+chunk fetch, multi-statement children and monitoring all read that record.
+
+One Engine (= one SparkSession) serves all sessions, and all session state
+(current database/schema, session variables and parameters, QUERY_TAG, the
+query log) is engine-global. Login records `databaseName`/`schemaName` but
+does not apply them; the reference keeps one DuckDB instance per session
+instead (SURVEY.md §3.2).
 """
 
 from __future__ import annotations
@@ -24,12 +30,13 @@ import base64
 import gzip
 import io
 import json
+import re
 import secrets
 import threading
 
 import pyarrow as pa
 
-from universql_spark.engine import Engine, QueryError
+from universql_spark.engine import RECORD_STATE_KEYS, Engine, QueryError
 from universql_spark.result import json_rowset, normalize, rowtype
 
 try:
@@ -98,9 +105,7 @@ def _body() -> dict:
     return json.loads(raw) if raw else {}
 
 
-import re as _re_bind  # noqa: E402
-
-_BIND_STR_RE = _re_bind.compile(r"'(?:[^']|'')*'")
+_BIND_STR_RE = re.compile(r"'(?:[^']|'')*'")
 
 
 def _apply_bindings(sql: str, bindings: dict) -> str:
@@ -168,31 +173,61 @@ def _apply_bindings(sql: str, bindings: dict) -> str:
     return "".join(out)
 
 
+#: rows per result chunk: an Arrow result inlines its first CHUNK_ROWS rows
+#: and lists the rest behind chunk URLs (the reference returns everything
+#: in rowsetBase64 and leaves chunk URLs unimplemented,
+#: protocol/snowflake.py:223-243)
+CHUNK_ROWS = 10_000
+
+
+def _result_data(query_id: str, table: pa.Table, fmt: str) -> dict:
+    """The success payload for one statement's result. JSON results go
+    inline whole; Arrow results go out as the inline slice plus chunk
+    entries. Each slice is normalized when it is sent: the inline one now,
+    each chunk when it is fetched (`result_chunk`)."""
+    inline = normalize(table if fmt == "json" else table.slice(0, CHUNK_ROWS))
+    data = {
+        "queryId": query_id,
+        "queryResultFormat": fmt,
+        "rowtype": rowtype(inline),
+        "returned": table.num_rows,
+    }
+    if fmt == "json":
+        data["rowset"] = json_rowset(inline)
+        return data
+    data["rowsetBase64"] = _arrow_b64(inline)
+    if table.num_rows > CHUNK_ROWS:
+        # the Snowflake result-set contract for large results
+        slices = (table.slice(off, CHUNK_ROWS) for off in range(CHUNK_ROWS, table.num_rows, CHUNK_ROWS))
+        data["chunks"] = [
+            {"url": f"/results/{query_id}/chunk/{i}", "rowCount": sl.num_rows, "uncompressedSize": sl.nbytes}
+            for i, sl in enumerate(slices)
+        ]
+    return data
+
+
+def _error(query_id: str, message: str, sql_state: str) -> dict:
+    return {
+        "success": False,
+        "message": message,
+        "data": {"sqlState": sql_state, "errorCode": "002003", "queryId": query_id},
+    }
+
+
 def create_app(engine: Engine | None = None) -> "Flask":
     if not HAS_FLASK:
         raise RuntimeError("flask not available")
     app = Flask("universql_spark")
     eng = engine or Engine()
     sessions: dict[str, dict] = {}
-    #: queryId -> remaining result chunks (the reference returns everything
-    #: in rowsetBase64 and leaves chunk URLs unimplemented,
-    #: protocol/snowflake.py:223-243; here large results chunk for real)
-    result_chunks: dict[str, list[pa.Table]] = {}
-    CHUNK_ROWS = 10_000
-    #: async executions (execute_async contract): queryId -> state tuple
-    #: ("running", None) | ("done", table) | ("error", QueryError)
-    async_queries: dict[str, tuple] = {}
-    ASYNC_RETAIN = 100  # completed entries kept; oldest evicted beyond this
-    #: Engine state (session params, _results ring, snap_tables, DuckDB
+    #: async submissions still executing; a finished one is its query_log
+    #: record (execute_async contract)
+    running: set[str] = set()
+    #: Engine state (session params, query_log, snap_tables, DuckDB
     #: connections) is not thread-safe; a client that submits async and keeps
     #: issuing synchronous statements would race the worker thread
     #: (ADVICE r3 #3). One lock serializes every eng.execute/execute_df.
     exec_lock = threading.Lock()
-
-    def _evict_async() -> None:
-        done = [q for q, (st, _) in async_queries.items() if st != "running"]
-        for q in done[: max(0, len(done) - ASYNC_RETAIN)]:
-            async_queries.pop(q, None)
 
     @app.post("/session/v1/login-request")
     def login():
@@ -232,13 +267,10 @@ def create_app(engine: Engine | None = None) -> "Flask":
         # per-query parameter or the session parameter set at login; the
         # multi-statement PARENT response below is ALWAYS json (the real
         # server's contract — the parent carries resultIds, not data)
-        fmt = str(
-            params.get("PYTHON_CONNECTOR_QUERY_RESULT_FORMAT")
-            or sessions[token].get("parameters", {}).get(
-                "PYTHON_CONNECTOR_QUERY_RESULT_FORMAT"
-            )
-            or "arrow"
-        ).lower()
+        fmt_param = params.get("PYTHON_CONNECTOR_QUERY_RESULT_FORMAT") or sessions[token][
+            "parameters"
+        ].get("PYTHON_CONNECTOR_QUERY_RESULT_FORMAT")
+        fmt = "json" if str(fmt_param).lower() == "json" else "arrow"
         try:
             sql = _apply_bindings(body.get("sqlText", ""), body.get("bindings") or {})
         except QueryError as e:
@@ -259,21 +291,17 @@ def create_app(engine: Engine | None = None) -> "Flask":
             # execute_async contract: return immediately with code 333334
             # (QUERY_IN_PROGRESS_ASYNC); the client polls monitoring and
             # fetches /queries/<id>/result when SUCCEEDED
-            import threading  # noqa: PLC0415
-
-            async_queries[query_id] = ("running", None)
-            _evict_async()
+            running.add(query_id)
 
             def _run(qid=query_id, text=sql):
                 eng.spark.sparkContext.setJobGroup(qid, text[:120], interruptOnCancel=True)
                 try:
                     with exec_lock:
-                        res = ("done", normalize(eng.execute(text)))
-                    async_queries[qid] = res
-                except QueryError as e:
-                    async_queries[qid] = ("error", e)
-                except Exception as e:  # surfaced via monitoring as FAILED
-                    async_queries[qid] = ("error", QueryError(str(e)[:500]))
+                        eng.execute(text, query_id=qid)
+                except QueryError:  # recorded as FAILED_WITH_ERROR
+                    pass
+                finally:
+                    running.discard(qid)
 
             threading.Thread(target=_run, daemon=True).start()
             return {
@@ -324,121 +352,47 @@ def create_app(engine: Engine | None = None) -> "Flask":
                     ),
                     "data": {"sqlState": "0A000", "queryId": query_id},
                 }
-            ids: list[str] = []
-            first = None
+            ids = [f"{query_id}-{i + 1:02d}" for i in range(len(stmts))]
+            results = []
             try:
-                for s_i, s_sql in enumerate(stmts):
-                    cid = f"{query_id}-{s_i + 1:02d}"
+                for cid, s_sql in zip(ids, stmts):
                     with exec_lock:
-                        tbl = normalize(eng.execute(s_sql))
-                    async_queries[cid] = ("done", tbl)
-                    _evict_async()
-                    ids.append(cid)
-                    if first is None:
-                        first = tbl
+                        results.append(eng.execute(s_sql, query_id=cid))
             except QueryError as e:
-                return {
-                    "success": False,
-                    "message": e.message,
-                    "data": {
-                        "sqlState": e.sql_state,
-                        "errorCode": "002003",
-                        "queryId": query_id,
-                    },
-                }
-            return {
-                "success": True,
-                "data": {
-                    "queryId": query_id,
-                    "queryResultFormat": "json",
-                    "rowtype": rowtype(first),
-                    "returned": first.num_rows,
-                    "rowset": json_rowset(first),
-                    "resultIds": ",".join(ids),
-                },
-            }
+                return _error(query_id, e.message, e.sql_state)
+            data = _result_data(query_id, results[0], "json")
+            data["resultIds"] = ",".join(ids)
+            return {"success": True, "data": data}
         try:
             if body.get("describeOnly"):
                 # JDBC prepared-statement metadata: analyze the plan, return
                 # the rowtype, execute NOTHING (SELECT/WITH only — DDL/DML
                 # describe as a status row without side effects)
-                import re as _re  # noqa: PLC0415
-
-                if _re.match(r"^\s*(SELECT|WITH)\b", sql, _re.I):
+                if re.match(r"^\s*(SELECT|WITH)\b", sql, re.I):
                     with exec_lock:
-                        table = normalize(eng.execute_df(sql).limit(0).toArrow())
+                        table = eng.execute_df(sql).limit(0).toArrow()
                 else:
-                    import pyarrow as _pa  # noqa: PLC0415
-
-                    table = normalize(_pa.table({"status": _pa.array([], _pa.string())}))
-                return {
-                    "success": True,
-                    "data": {
-                        "queryId": query_id,
-                        "queryResultFormat": "arrow",
-                        "rowtype": rowtype(table),
-                        "returned": 0,
-                        "rowsetBase64": _arrow_b64(table),
-                    },
-                }
+                    table = pa.table({"status": pa.array([], pa.string())})
+                return {"success": True, "data": _result_data(query_id, table, "arrow")}
             with exec_lock:
-                table = normalize(eng.execute(sql))
+                table = eng.execute(sql, query_id=query_id)
         except QueryError as e:
-            return {
-                "success": False,
-                "message": e.message,
-                "data": {"sqlState": e.sql_state, "errorCode": "002003", "queryId": query_id},
-            }
+            return _error(query_id, e.message, e.sql_state)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        if fmt == "json":
-            return {
-                "success": True,
-                "data": {
-                    "queryId": query_id,
-                    "queryResultFormat": "json",
-                    "rowtype": rowtype(table),
-                    "returned": table.num_rows,
-                    "rowset": json_rowset(table),
-                },
-            }
-        data = {
-            "queryId": query_id,
-            "queryResultFormat": "arrow",
-            "rowtype": rowtype(table),
-            "returned": table.num_rows,
-        }
-        if table.num_rows > CHUNK_ROWS:
-            # first CHUNK_ROWS inline, the rest behind chunk URLs — the
-            # Snowflake result-set contract for large results
-            data["rowsetBase64"] = _arrow_b64(table.slice(0, CHUNK_ROWS))
-            chunks, entries = [], []
-            offset = CHUNK_ROWS
-            while offset < table.num_rows:
-                sl = table.slice(offset, CHUNK_ROWS)
-                entries.append(
-                    {
-                        "url": f"/results/{query_id}/chunk/{len(chunks)}",
-                        "rowCount": sl.num_rows,
-                        "uncompressedSize": sl.nbytes,
-                    }
-                )
-                chunks.append(sl)
-                offset += CHUNK_ROWS
-            result_chunks[query_id] = chunks
-            data["chunks"] = entries
-        else:
-            data["rowsetBase64"] = _arrow_b64(table)
-        return {"success": True, "data": data}
+        return {"success": True, "data": _result_data(query_id, table, fmt)}
 
     @app.get("/results/<query_id>/chunk/<int:idx>")
     def result_chunk(query_id: str, idx: int):
         if _session() is None:
             return {"success": False}, 401
-        chunks = result_chunks.get(query_id)
-        if chunks is None or idx >= len(chunks):
+        rec = eng.query_record(query_id)
+        table = rec and rec["result"]
+        offset = (idx + 1) * CHUNK_ROWS
+        if table is None or offset >= table.num_rows:
             return {"success": False, "message": "unknown chunk"}, 404
-        return {"success": True, "data": {"rowsetBase64": _arrow_b64(chunks[idx])}}
+        chunk = normalize(table.slice(offset, CHUNK_ROWS))
+        return {"success": True, "data": {"rowsetBase64": _arrow_b64(chunk)}}
 
     @app.post("/telemetry/send")
     def telemetry():
@@ -454,52 +408,40 @@ def create_app(engine: Engine | None = None) -> "Flask":
     def monitoring_one(query_id: str):
         if _session() is None:
             return {"success": False}, 401
-        st = async_queries.get(query_id)
-        if st is None:
-            status = "SUCCEEDED" if any(
-                q.get("query_id") == query_id for q in eng.query_log
-            ) else "NO_DATA"
+        # running first: a finished async statement's record lands before
+        # its id leaves `running`
+        if query_id in running:
+            status = "RUNNING"
         else:
-            status = {"running": "RUNNING", "done": "SUCCEEDED", "error": "FAILED_WITH_ERROR"}[st[0]]
+            rec = eng.query_record(query_id)
+            status = rec["status"] if rec else "NO_DATA"
         return {"success": True, "data": {"queries": [{"id": query_id, "status": status}]}}
 
     @app.get("/queries/<query_id>/result")
     def async_result(query_id: str):
         if _session() is None:
             return {"success": False}, 401
-        st = async_queries.get(query_id)
-        if st is None:
-            return {"success": False, "message": "unknown query id"}, 404
-        kind, payload = st
-        if kind == "running":
+        if query_id in running:
             return {"success": True, "code": "333334",
                     "data": {"queryId": query_id, "status": "RUNNING"}}
-        if kind == "error":
-            return {
-                "success": False,
-                "message": payload.message,
-                "data": {"sqlState": payload.sql_state, "errorCode": "002003",
-                         "queryId": query_id},
-            }
-        table = payload
-        return {
-            "success": True,
-            "data": {
-                "queryId": query_id,
-                "queryResultFormat": "arrow",
-                "rowtype": rowtype(table),
-                "returned": table.num_rows,
-                "rowsetBase64": _arrow_b64(table),
-            },
-        }
+        rec = eng.query_record(query_id)
+        if rec is None:
+            return {"success": False, "message": "unknown query id"}, 404
+        if rec["result"] is None:
+            return _error(query_id, rec["error_message"], rec["sql_state"])
+        return {"success": True, "data": _result_data(query_id, rec["result"], "arrow")}
 
     @app.get("/monitoring/queries")
     def monitoring():
         # reference exposes query monitoring (protocol/snowflake.py:337-343);
-        # ours surfaces the engine's per-statement duration/cost log
+        # ours surfaces the engine's per-statement records
         if _session() is None:
             return {"success": False}, 401
-        return {"success": True, "data": {"queries": eng.query_log[-100:]}}
+        queries = [
+            {k: v for k, v in rec.items() if k not in RECORD_STATE_KEYS}
+            for rec in list(eng.query_log)
+        ]
+        return {"success": True, "data": {"queries": queries}}
 
     @app.post("/queries/v1/abort-request")
     def abort():

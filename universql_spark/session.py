@@ -10,6 +10,8 @@ a real cluster, and Arrow is enabled for every Python<->JVM crossing.
 from __future__ import annotations
 
 import os
+import re
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -173,7 +175,7 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # The engine writes its bucketed facts as exactly ONE sorted file
-        # per bucket (_bucketed_table repartitions on the bucket key before
+        # per bucket (_write_bucketed repartitions on the bucket key before
         # bucketBy().sortBy()), but Spark 3+ stopped reporting bucket sort
         # order from scans by default (file listing at planning was deemed
         # too expensive for arbitrary tables, SPARK-28169 lineage). For a
@@ -346,6 +348,34 @@ def _bucket_count(sf_dir: str, name: str) -> int:
     return 32 if size >= BUCKET_WIDE_BYTES.get(name, BUCKET_WIDE_DEFAULT) else 8
 
 
+#: Spark's bucket file-name convention (BucketingUtils): `..._<id>[.ext]`
+_BUCKET_FILE_RE = re.compile(r"^[^._].*_(\d+)(?:\..*)?$")
+
+
+def _files_per_bucket(path: str) -> Counter:
+    """bucket id -> number of data files in a bucketed write's directory."""
+    return Counter(int(m.group(1)) for f in os.listdir(path) if (m := _BUCKET_FILE_RE.match(f)))
+
+
+def _write_bucketed(df: DataFrame, n: int, key: str, path: str, tmpname: str) -> None:
+    """Write `df` to `path` as `n` buckets on `key`, each ONE file sorted on
+    `key`. Repartitioning on the bucket key first gives each writer task
+    one bucket's rows. Multiple files per bucket measured 1.5-2x slower
+    scans, and they void the sort order get_spark() lets the scan report
+    (bucketedTableScan.outputOrdering), so every SMJ over them would sort."""
+    (
+        df.repartition(n, F.col(key))
+        .write.bucketBy(n, key)
+        .sortBy(key)
+        .option("path", path)
+        .mode("overwrite")
+        .saveAsTable(tmpname)
+    )
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {tmpname}")  # external: files stay
+    per_bucket = _files_per_bucket(path)
+    assert per_bucket and set(per_bucket.values()) == {1}, f"files per bucket: {dict(per_bucket)}"
+
+
 def _bucketed_table(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     """Materialize (once) and attach the bucketed resident form of a fact
     table; returns the catalog table name, or None when bucketing does not
@@ -378,21 +408,8 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     dest = os.path.join(RESIDENT_DIR, os.path.basename(sf_dir.rstrip("/")), ident)
     try:
         if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-            raw = spark.read.parquet(src)
             tmp = f"{dest}.tmp-{os.getpid()}"
-            tmpname = f"uq_bkt_tmp_{name}_{os.getpid()}"
-            # repartition on the bucket key first -> exactly ONE file per
-            # bucket (each writer task holds one bucket's rows); multiple
-            # files per bucket measured 1.5-2x slower scans
-            (
-                raw.repartition(n, F.col(key))
-                .write.bucketBy(n, key)
-                .sortBy(key)
-                .option("path", tmp)
-                .mode("overwrite")
-                .saveAsTable(tmpname)
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {tmpname}")  # external: files stay
+            _write_bucketed(spark.read.parquet(src), n, key, tmp, f"uq_bkt_tmp_{name}_{os.getpid()}")
             try:
                 os.rename(tmp, dest)
             except OSError:  # concurrent writer won the race — use theirs
