@@ -39,7 +39,9 @@ _SMOKE_TESTS: dict[str, set[str]] = {
     "test_r11_opts.py": {"test_broadcast_class_dims_cached_single_partition"},
     "test_operators.py": {"test_exact_groups_partition_of_corpus"},
     "test_engine.py": {"test_split_statements_quotes_and_comments", "test_dialect_type_renames"},
-    "test_protocol.py": {"test_login_query_roundtrip", "test_sync_monitoring_by_request_id"},
+    "test_protocol.py": {
+        "test_login_query_roundtrip", "test_sync_monitoring_by_request_id", "test_set_variable_stays_in_its_session",
+    },
     "test_streaming.py": {"test_stream_tumbling_equals_batch"},
     "test_properties.py": {"test_split_statements_preserves_each_statement"},
     "test_iceberg_format.py": {"test_round_trip_and_time_travel"},

@@ -94,9 +94,9 @@ def test_create_or_replace_view(engine):
 
 def test_use_database_state(engine):
     engine.execute("USE DATABASE analytics")
-    assert engine.current_database == "analytics"
+    assert engine.session.database == "analytics"
     engine.execute("USE SCHEMA public")
-    assert engine.current_schema == "public"
+    assert engine.session.schema == "public"
 
 
 def test_to_query_duckdb_escape_hatch(engine):
@@ -1442,9 +1442,25 @@ def test_txn_and_alter_session(engine):
     for s in ("BEGIN", "COMMIT", "ROLLBACK", "BEGIN TRANSACTION"):
         assert "status" in engine.execute(s).column_names
     engine.execute("ALTER SESSION SET QUERY_TAG = 'etl_run_42'")
-    assert engine.session_params["QUERY_TAG"] == "etl_run_42"
+    assert engine.session.params["QUERY_TAG"] == "etl_run_42"
     engine.execute("ALTER SESSION SET TIMEZONE = 'UTC'")
     assert engine.spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_sessions_keep_their_own_id_and_history(engine):
+    """execute(session=) runs a statement in that session: each one answers
+    its own CURRENT_SESSION() (never another's from the result cache) and
+    QUERY_HISTORY_BY_SESSION()."""
+    home, other = engine.session, engine.new_session()
+    try:
+        sql = "SELECT CURRENT_SESSION() AS s"
+        assert engine.execute(sql).column("s").to_pylist() == [home.id]
+        assert engine.execute(sql, session=other).column("s").to_pylist() == [other.id]
+        mine = [r["query_id"] for r in engine.query_log if r["session_id"] == other.id]
+        hist = engine.execute("SELECT QUERY_ID FROM TABLE(INFORMATION_SCHEMA.QUERY_HISTORY_BY_SESSION())")
+        assert hist.column("QUERY_ID").to_pylist() == mine
+    finally:
+        engine.session = home
 
 
 def test_result_scan_last_query_id(engine):

@@ -732,3 +732,86 @@ def test_async_poll_never_loses_a_finishing_statement(client):
     finally:
         sys.setswitchinterval(old)
     assert not pending, pending
+
+
+# -- each login owns its session state ----------------------------------------
+
+
+def _hdr(token):
+    return {"Authorization": f'Snowflake Token="{token}"'}
+
+
+def _run(client, token, sql, request_id):
+    out = client.post(
+        f"/queries/v1/query-request?requestId={request_id}", json={"sqlText": sql}, headers=_hdr(token)
+    ).get_json()
+    assert out["success"], out.get("message")
+    return out
+
+
+def test_set_variable_stays_in_its_session(client):
+    a, b = _login(client), _login(client)
+    assert _query(client, a, "SET iso_v = 1")["success"]
+    assert _decode(_query(client, a, "SELECT $iso_v AS v")).to_pylist() == [{"v": 1}]
+    assert _query(client, b, "SELECT $iso_v AS v")["success"] is False
+
+
+def test_query_tag_tags_only_its_session(client):
+    a, b = _login(client), _login(client)
+    assert _query(client, a, "ALTER SESSION SET QUERY_TAG = 'iso_tag_a'")["success"]
+    _run(client, a, "SELECT 1 AS tagged", "iso-tag-a1")
+    _run(client, b, "SELECT 1 AS tagged", "iso-tag-b1")
+    listed = client.get("/monitoring/queries", headers=_hdr(a)).get_json()["data"]["queries"]
+    recs = {q["query_id"]: q for q in listed}
+    assert recs["iso-tag-a1"].get("query_tag") == "iso_tag_a"
+    assert "query_tag" not in recs["iso-tag-b1"]
+
+
+def test_timezone_stays_in_its_session(client):
+    a, b = _login(client), _login(client)
+    sql = "SELECT TO_VARCHAR(TO_TIMESTAMP_LTZ(0)) AS t"
+    utc = _decode(_query(client, b, sql)).to_pylist()
+    assert _query(client, a, "ALTER SESSION SET TIMEZONE = 'America/New_York'")["success"]
+    assert _decode(_query(client, a, sql)).to_pylist() != utc
+    assert _decode(_query(client, b, sql)).to_pylist() == utc
+    params = _decode(_query(client, b, "SHOW PARAMETERS LIKE 'TIMEZONE'")).to_pylist()
+    assert params[0]["value"] == "UTC" and params[0]["level"] == ""
+
+
+def test_use_database_stays_in_its_session(client):
+    a, b = _login(client), _login(client)
+    for sql in ("CREATE DATABASE IF NOT EXISTS iso_use_db", "CREATE OR REPLACE TABLE iso_use_t AS SELECT 'default' AS w"):
+        assert _query(client, b, sql)["success"]
+    for sql in ("USE DATABASE iso_use_db", "CREATE OR REPLACE TABLE iso_use_t AS SELECT 'iso' AS w"):
+        assert _query(client, a, sql)["success"]
+    read = "SELECT w FROM iso_use_t"
+    assert _decode(_query(client, a, read)).to_pylist() == [{"w": "iso"}]
+    assert _decode(_query(client, b, read)).to_pylist() == [{"w": "default"}]
+    for token in (a, b):
+        assert _query(client, token, "DROP TABLE iso_use_t")["success"]
+    # another session drops A's database: A falls back to `default`
+    assert _query(client, b, "DROP DATABASE iso_use_db")["success"]
+    assert _decode(_query(client, a, "SELECT 1 AS alive")).to_pylist() == [{"alive": 1}]
+
+
+def test_login_database_resolves_bare_names(client):
+    a = _login(client)
+    for sql in ("CREATE DATABASE IF NOT EXISTS iso_login_db",
+                "CREATE OR REPLACE TABLE iso_login_db.iso_login_t AS SELECT 7 AS x"):
+        assert _query(client, a, sql)["success"]
+    r = client.post("/session/v1/login-request", json={"data": {"databaseName": "ISO_LOGIN_DB"}}).get_json()
+    assert r["data"]["sessionInfo"]["database"] == "ISO_LOGIN_DB"
+    b = r["data"]["token"]
+    assert _decode(_query(client, b, "SELECT x FROM iso_login_t")).to_pylist() == [{"x": 7}]
+    assert _query(client, a, "SELECT x FROM iso_login_t")["success"] is False
+
+
+def test_last_query_id_is_per_session_result_scan_is_not(client):
+    """LAST_QUERY_ID counts the caller's own statements (Snowflake's
+    contract); RESULT_SCAN of another session's retained id still works."""
+    a, b = _login(client), _login(client)
+    _run(client, b, "SELECT 'b' AS who", "lqid-b1")
+    _run(client, a, "SELECT 'a' AS who", "lqid-a1")
+    assert _decode(_run(client, b, "SELECT LAST_QUERY_ID() AS q", "lqid-b2")).to_pylist() == [{"q": "lqid-b1"}]
+    scan = _run(client, b, "SELECT who FROM TABLE(RESULT_SCAN('lqid-a1'))", "lqid-b3")
+    assert _decode(scan).to_pylist() == [{"who": "a"}]

@@ -92,7 +92,7 @@ def brute_force_topk(
     HOF expression tree (~25-40 ms/pass of driver latency measured at r10
     session 3 — creation was ~40% of this spec's replan wall). Expression
     text is identical to the chain's, so plan and values are unchanged
-    (plans/r10/ann_cosine_topk_{before,after}.txt byte-match modulo ids).
+    (plans/r11/ann_cosine_topk_{before,after}.txt byte-match modulo ids).
     """
     spark = corpus.sparkSession
     # corpus_view: name of an ALREADY-REGISTERED view equal to `corpus`

@@ -15,13 +15,18 @@ to the reference's error envelope with sqlState (snowflake.py:200-218).
 
 Every statement is answered by its query id from one record in
 `Engine.query_log` (the last `QUERY_LOG_RETAIN` statements): result fetch,
-chunk fetch, multi-statement children and monitoring all read that record.
+chunk fetch, multi-statement children and monitoring all read that record,
+from any session.
 
-One Engine (= one SparkSession) serves all sessions, and all session state
-(current database/schema, session variables and parameters, QUERY_TAG, the
-query log) is engine-global. Login records `databaseName`/`schemaName` but
-does not apply them; the reference keeps one DuckDB instance per session
-instead (SURVEY.md §3.2).
+One Engine (= one SparkSession) serves all sessions; each login token owns
+an `engine.Session` (as the reference's logins do, snowflake.py:51-118):
+database/schema (login `databaseName`/`schemaName` apply as USE would),
+warehouse, ALTER SESSION parameters, SET variables; LAST_QUERY_ID counts
+its own statements. Warehouse-wide: the result cache (Snowflake's reuse is
+account-wide; the key holds the session's db/schema/parameters), the query
+log, the current role (bound into policied temp views at refresh) and TEMP
+tables (temp views of the one SparkSession, like every fixture and user
+table, which a `spark.newSession()` per login would not see).
 """
 
 from __future__ import annotations
@@ -36,7 +41,7 @@ import threading
 
 import pyarrow as pa
 
-from universql_spark.engine import RECORD_STATE_KEYS, Engine, QueryError
+from universql_spark.engine import RECORD_STATE_KEYS, Engine, QueryError, Session
 from universql_spark.result import json_rowset, normalize, rowtype
 
 try:
@@ -219,11 +224,11 @@ def create_app(engine: Engine | None = None) -> "Flask":
         raise RuntimeError("flask not available")
     app = Flask("universql_spark")
     eng = engine or Engine()
-    sessions: dict[str, dict] = {}
+    sessions: dict[str, Session] = {}
     #: async submissions still executing; a finished one is its query_log
     #: record (execute_async contract)
     running: set[str] = set()
-    #: Engine state (session params, query_log, snap_tables, DuckDB
+    #: Engine state (the current session, query_log, snap_tables, DuckDB
     #: connections) is not thread-safe; a client that submits async and keeps
     #: issuing synchronous statements would race the worker thread
     #: (ADVICE r3 #3). One lock serializes every eng.execute/execute_df.
@@ -232,24 +237,17 @@ def create_app(engine: Engine | None = None) -> "Flask":
     @app.post("/session/v1/login-request")
     def login():
         body = _body().get("data", {})
+        arg = {**body, **request.args.to_dict()}
         token = secrets.token_urlsafe(32)
-        sessions[token] = {
-            "database": request.args.get("databaseName") or body.get("databaseName"),
-            "schema": request.args.get("schemaName") or body.get("schemaName", "PUBLIC"),
-            "warehouse": request.args.get("warehouse") or body.get("warehouse"),
-            # session-scoped parameters the client ships at login (e.g.
-            # PYTHON_CONNECTOR_QUERY_RESULT_FORMAT=JSON for older clients)
-            "parameters": dict(body.get("SESSION_PARAMETERS") or {}),
-        }
-        return {
-            "success": True,
-            "data": {
-                "token": token,
-                "masterToken": token,
-                "sessionInfo": sessions[token],
-                "parameters": SESSION_PARAMETERS,
-            },
-        }
+        # SESSION_PARAMETERS: client parameters shipped at login (e.g.
+        # PYTHON_CONNECTOR_QUERY_RESULT_FORMAT=JSON for older clients)
+        s = sessions[token] = eng.new_session(
+            arg.get("databaseName"), arg.get("schemaName"), arg.get("warehouse"), body.get("SESSION_PARAMETERS")
+        )
+        info = {"database": s.database, "schema": s.schema or "PUBLIC",
+                "warehouse": s.warehouse, "parameters": s.client_params}
+        return {"success": True, "data": {"token": token, "masterToken": token, "sessionInfo": info,
+                                          "parameters": SESSION_PARAMETERS}}
 
     def _session():
         auth = request.headers.get("Authorization", "")
@@ -261,15 +259,16 @@ def create_app(engine: Engine | None = None) -> "Flask":
         token = _session()
         if token is None:
             return {"success": False, "message": "invalid token", "code": "390104"}, 401
+        session = sessions[token]
         body = _body()
         params = body.get("parameters") or {}
         # queryResultFormat=json fallback (VERDICT r8 #8): honored from the
         # per-query parameter or the session parameter set at login; the
         # multi-statement PARENT response below is ALWAYS json (the real
         # server's contract — the parent carries resultIds, not data)
-        fmt_param = params.get("PYTHON_CONNECTOR_QUERY_RESULT_FORMAT") or sessions[token][
-            "parameters"
-        ].get("PYTHON_CONNECTOR_QUERY_RESULT_FORMAT")
+        fmt_param = params.get("PYTHON_CONNECTOR_QUERY_RESULT_FORMAT") or session.client_params.get(
+            "PYTHON_CONNECTOR_QUERY_RESULT_FORMAT"
+        )
         fmt = "json" if str(fmt_param).lower() == "json" else "arrow"
         try:
             sql = _apply_bindings(body.get("sqlText", ""), body.get("bindings") or {})
@@ -297,7 +296,7 @@ def create_app(engine: Engine | None = None) -> "Flask":
                 eng.spark.sparkContext.setJobGroup(qid, text[:120], interruptOnCancel=True)
                 try:
                     with exec_lock:
-                        eng.execute(text, query_id=qid)
+                        eng.execute(text, query_id=qid, session=session)
                 except QueryError:  # recorded as FAILED_WITH_ERROR
                     pass
                 finally:
@@ -309,6 +308,10 @@ def create_app(engine: Engine | None = None) -> "Flask":
                 "code": "333334",
                 "data": {"queryId": query_id, "queryResultFormat": "arrow"},
             }
+        def count_error(message: str) -> dict:
+            return {"success": False, "code": "000008", "message": message,
+                    "data": {"sqlState": "0A000", "queryId": query_id}}
+
         msc = params.get("MULTI_STATEMENT_COUNT")
         if msc is not None:
             # The parameter arrives client-controlled; a non-numeric value
@@ -317,12 +320,7 @@ def create_app(engine: Engine | None = None) -> "Flask":
             try:
                 msc = int(msc)
             except (TypeError, ValueError):
-                return {
-                    "success": False,
-                    "code": "000008",
-                    "message": f"Invalid MULTI_STATEMENT_COUNT: {msc!r}",
-                    "data": {"sqlState": "0A000", "queryId": query_id},
-                }
+                return count_error(f"Invalid MULTI_STATEMENT_COUNT: {msc!r}")
         if msc is not None and msc != 1:
             # multi-statement request: the connector sends the whole script
             # as one sqlText plus MULTI_STATEMENT_COUNT (0 = any). The
@@ -336,28 +334,17 @@ def create_app(engine: Engine | None = None) -> "Flask":
                 # comment-/semicolon-only sqlText with MULTI_STATEMENT_COUNT=0
                 # previously fell through with first=None and 500'd on
                 # rowtype(first) (ADVICE r9 #3)
-                return {
-                    "success": False,
-                    "code": "000008",
-                    "message": "Actual statement count 0 did not match the desired statement count.",
-                    "data": {"sqlState": "0A000", "queryId": query_id},
-                }
+                return count_error("Actual statement count 0 did not match the desired statement count.")
             if msc not in (0, len(stmts)):
-                return {
-                    "success": False,
-                    "code": "000008",
-                    "message": (
-                        f"Actual statement count {len(stmts)} did not match "
-                        f"the desired statement count {msc}."
-                    ),
-                    "data": {"sqlState": "0A000", "queryId": query_id},
-                }
+                return count_error(
+                    f"Actual statement count {len(stmts)} did not match the desired statement count {msc}."
+                )
             ids = [f"{query_id}-{i + 1:02d}" for i in range(len(stmts))]
             results = []
             try:
                 for cid, s_sql in zip(ids, stmts):
                     with exec_lock:
-                        results.append(eng.execute(s_sql, query_id=cid))
+                        results.append(eng.execute(s_sql, query_id=cid, session=session))
             except QueryError as e:
                 return _error(query_id, e.message, e.sql_state)
             data = _result_data(query_id, results[0], "json")
@@ -370,12 +357,12 @@ def create_app(engine: Engine | None = None) -> "Flask":
                 # describe as a status row without side effects)
                 if re.match(r"^\s*(SELECT|WITH)\b", sql, re.I):
                     with exec_lock:
-                        table = eng.execute_df(sql).limit(0).toArrow()
+                        table = eng.execute_df(sql, session=session).limit(0).toArrow()
                 else:
                     table = pa.table({"status": pa.array([], pa.string())})
                 return {"success": True, "data": _result_data(query_id, table, "arrow")}
             with exec_lock:
-                table = eng.execute(sql, query_id=query_id)
+                table = eng.execute(sql, query_id=query_id, session=session)
         except QueryError as e:
             return _error(query_id, e.message, e.sql_state)
         finally:

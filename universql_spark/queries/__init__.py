@@ -104,10 +104,6 @@ def relax_nullability(df: DataFrame) -> DataFrame:
     all-nullable relation: Union output nullability is the OR of its children,
     and the empty side contributes zero rows and zero execution cost.
     """
-    import os
-
-    if os.environ.get("UQS_NO_RELAX"):  # perf-debug switch: isolate the cost
-        return df
     if df.isStreaming or not _has_nonnullable(df.schema):
         return df
     # Top-level-only divergence (the usual case): wrap each non-nullable

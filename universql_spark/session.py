@@ -381,8 +381,6 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     table; returns the catalog table name, or None when bucketing does not
     apply (small fixture / non-fact table / any failure -> caller falls
     back to the plain resident path)."""
-    if os.environ.get("SPARK_GRAFT_NO_BUCKET"):  # A/B probe kill-switch
-        return None
     key = BUCKETED_TABLES.get(name)
     if key is None:
         return None
