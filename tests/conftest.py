@@ -38,7 +38,10 @@ _SMOKE_TESTS: dict[str, set[str]] = {
     "test_plans.py": {"test_filter_pushdown_reaches_scan", "test_dims_broadcast_facts_shuffle", "test_topk_no_global_sort"},
     "test_r11_opts.py": {"test_broadcast_class_dims_cached_single_partition"},
     "test_operators.py": {"test_exact_groups_partition_of_corpus"},
-    "test_engine.py": {"test_split_statements_quotes_and_comments", "test_dialect_type_renames"},
+    "test_engine.py": {
+        "test_split_statements_quotes_and_comments", "test_dialect_type_renames",
+        "test_adopted_plain_table_takes_iceberg_statements",
+    },
     "test_protocol.py": {
         "test_login_query_roundtrip", "test_sync_monitoring_by_request_id", "test_set_variable_stays_in_its_session",
     },

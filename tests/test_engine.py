@@ -588,6 +588,86 @@ def test_unpartitioned_delete_adopts_file_granular(engine):
     engine.execute("DROP TABLE upd_t")
 
 
+@pytest.mark.parametrize(
+    "case",
+    ["optimize", "vacuum", "clone", "branch", "partition_field", "clustering", "merge_on_read"],
+)
+def test_adopted_plain_table_takes_iceberg_statements(engine, case):
+    """A plain table's first DELETE adopts it as an Iceberg v2 table, so the
+    statements of a CREATE ICEBERG TABLE work on it too."""
+    import json
+
+    from universql_spark.iceberg_format import IcebergTable
+
+    t = f"adp_{case}"
+    engine.execute(
+        f"CREATE OR REPLACE TABLE {t} AS "
+        "SELECT id, CAST(id * 10 AS BIGINT) AS v FROM range(0, 40, 1, 4) AS r(id)"
+    )
+    engine.execute(f"DELETE FROM {t} WHERE id = 3")
+    snap = engine.snap_tables[t]
+    assert isinstance(snap, IcebergTable)
+    engine.execute("CREATE OR REPLACE ICEBERG TABLE adp_ice AS SELECT 1 AS id")
+
+    def snapshot_cols(name):
+        return engine.execute(f"SELECT * FROM {name}$snapshots").column_names
+
+    assert snapshot_cols(t) == snapshot_cols("adp_ice")
+
+    def rows(name):
+        return sorted((r["id"], r["v"]) for r in engine.execute(f"SELECT id, v FROM {name}").to_pylist())
+
+    before = rows(t)
+    assert [i for i, _v in before] == [i for i in range(40) if i != 3]
+    if case == "optimize":
+        engine.execute(f"OPTIMIZE {t}")
+        assert rows(t) == before
+    elif case == "vacuum":
+        engine.execute(f"VACUUM {t} RETAIN 1 SNAPSHOTS")
+        assert rows(t) == before
+    elif case == "clone":
+        engine.execute(f"CREATE OR REPLACE TABLE {t}_cl CLONE {t}")
+        assert rows(f"{t}_cl") == before
+        engine.execute(f"DROP TABLE {t}_cl")
+    elif case == "branch":
+        engine.execute(f"ALTER TABLE {t} CREATE BRANCH dev")
+        refs = engine.execute(f"SELECT name, type FROM {t}$refs").to_pylist()
+        assert refs == [{"name": "dev", "type": "BRANCH"}]
+    elif case == "partition_field":
+        engine.execute(f"ALTER TABLE {t} ADD PARTITION FIELD v")
+        engine.execute(f"INSERT INTO {t} VALUES (100, 1000)")
+        specs = engine.execute(f"SELECT partition_spec_id FROM {t}$manifests").to_pydict()
+        assert specs["partition_spec_id"] == [1]
+    elif case == "clustering":
+        out = engine.execute(
+            f"SELECT SYSTEM$CLUSTERING_INFORMATION('{t}', '(id)') AS ci"
+        ).to_pylist()[0]["ci"]
+        assert json.loads(out)["total_partition_count"] == len(snap.current_files())
+    elif case == "merge_on_read":
+        engine.execute(f"ALTER TABLE {t} SET TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+        files = set(snap.current_files())
+        engine.execute(f"DELETE FROM {t} WHERE id = 5")
+        assert set(snap.current_files()) == files
+        assert snap.current_delete_files()
+        assert rows(t) == [r for r in before if r[0] != 5]
+    engine.execute(f"DROP TABLE {t}; DROP TABLE adp_ice")
+
+
+def test_plain_table_without_iceberg_type_keeps_shadow_swap(engine):
+    """A column type Iceberg cannot express (an interval) refuses adoption:
+    the files move back and DELETE runs on the plain table instead."""
+    engine.execute(
+        "CREATE OR REPLACE TABLE adp_ivl AS "
+        "SELECT id, INTERVAL '1' DAY AS i FROM range(0, 8, 1, 2) AS r(id)"
+    )
+    engine.execute("DELETE FROM adp_ivl WHERE id = 3")
+    assert "adp_ivl" not in engine.snap_tables
+    assert not os.path.exists(engine._snap_root("adp_ivl"))
+    ids = sorted(r["id"] for r in engine.execute("SELECT id FROM adp_ivl").to_pylist())
+    assert ids == [0, 1, 2, 4, 5, 6, 7]
+    engine.execute("DROP TABLE adp_ivl")
+
+
 def test_partitioned_merge_insert_appends_only(engine):
     engine.execute(
         "CREATE OR REPLACE TABLE pgi_t PARTITION BY (p) AS "
@@ -787,7 +867,7 @@ def test_scalar_fn_emulations(engine):
     assert out["f"] == 12.5 and out["g"] is None and out["h"] == "12"
 
 
-# -- snapshot-format tables (tableformat.py: Iceberg mechanism, no jar) -------
+# -- Iceberg v2 tables (iceberg_format.py: the Iceberg format, no jar) --------
 
 
 def test_iceberg_ctas_select_drop(engine):

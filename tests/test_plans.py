@@ -608,9 +608,7 @@ def test_bucket_width_keys_on_source_bytes(tmp_path):
     has to bring fresh interleaved A/B evidence."""
     import os
 
-    from universql_spark.session import BUCKET_WIDE_BYTES, _bucket_count
-
-    assert BUCKET_WIDE_BYTES == {}  # no per-table special cases (r10 A/B)
+    from universql_spark.session import _bucket_count
 
     def fake(size, table="documents"):
         d = tmp_path / f"s{table}{size}"

@@ -535,7 +535,8 @@ class Engine:
         #: "not dynamic / manual refresh". In-memory cache so the read-path
         #: staleness check does not re-read metadata files per SELECT
         self._dynamic_meta: dict[str, tuple[int, int]] = {}
-        #: CREATE ICEBERG TABLE targets -> SnapshotTable (tableformat.py):
+        #: bare name -> IcebergTable (iceberg_format.py) for every CREATE
+        #: ICEBERG TABLE target and every plain table adopted on first DML:
         #: snapshot manifests + file-granular copy-on-write DML + time travel
         self.snap_tables: dict[str, "object"] = {}
         #: catalog write-back (reference warehouse/snowflake.py:73-88):
@@ -1444,7 +1445,7 @@ class Engine:
                 tbl = bare_name(self._resolve_name(m.group(2)))
                 if tbl not in self.snap_tables:
                     # change tracking needs snapshots: ADOPT a plain managed
-                    # parquet table into the snapshot format (metadata-only
+                    # parquet table as an Iceberg v2 table (metadata-only
                     # file moves — the same upgrade first DML performs)
                     self._adopt_for_dml(
                         re.compile(r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?STREAM\s+[\w.\"]+\s+ON\s+TABLE\s+([\w.\"]+)"),
@@ -1804,15 +1805,8 @@ class Engine:
             if pm2 and bare_name(pm2.group(1)) in self.snap_tables:
                 # partition evolution (Iceberg spec): a new default spec,
                 # metadata-only — old files are never rewritten
-                from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
                 bn = bare_name(pm2.group(1))
                 snap = self.snap_tables[bn]
-                if not isinstance(snap, IcebergTable):
-                    raise QueryError(
-                        f"{bn} is not an Iceberg table (partition evolution "
-                        "needs the metadata chain)", "42000",
-                    )
                 try:
                     if pm2.group(2).upper() == "ADD":
                         if pm2.group(3):  # transform(col) form
@@ -3624,12 +3618,7 @@ class Engine:
     def _recorded_cluster_keys(self, bn: str) -> list[str] | None:
         """The table's stored CLUSTER BY columns (Iceberg default sort
         order), or None when no clustering key is recorded."""
-        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
-        snap = self.snap_tables.get(bn)
-        if not isinstance(snap, IcebergTable):
-            return None
-        _v, meta = snap._read_metadata()
+        _v, meta = self.snap_tables[bn]._read_metadata()
         order = next(
             (o for o in meta.get("sort-orders", [])
              if o["order-id"] == meta.get("default-sort-order-id")),
@@ -3650,32 +3639,20 @@ class Engine:
         table's recorded sort order (CLUSTER BY keys) is used."""
         import json  # noqa: PLC0415
 
-        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
         bn = bare_name(table)
         snap = self.snap_tables.get(bn)
-        if not isinstance(snap, IcebergTable):
+        if snap is None:
             raise QueryError(
                 f"SYSTEM$CLUSTERING_INFORMATION: {bn} is not an Iceberg table", "42000"
             )
         if cols_arg:
             cols = [c.strip().strip('"').lower() for c in cols_arg.split(",") if c.strip()]
         else:
-            _v, meta = snap._read_metadata()
-            order = next(
-                (o for o in meta.get("sort-orders", [])
-                 if o["order-id"] == meta.get("default-sort-order-id")),
-                None,
-            )
-            if not order or not order["fields"]:
+            cols = self._recorded_cluster_keys(bn)
+            if not cols:
                 raise QueryError(
                     f"{bn} has no clustering key; pass the columns explicitly", "42000"
                 )
-            fields = next(
-                s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-            )["fields"]
-            by_id = {f["id"]: f["name"] for f in fields}
-            cols = [by_id[f["source-id"]].lower() for f in order["fields"]]
         try:
             info = snap.clustering_information(cols)
         except ValueError as e:
@@ -3912,7 +3889,7 @@ class Engine:
         cands = ([f"{database}__{schema}"] if database else []) + [schema]
         return next((c.lower() for c in cands if self.spark.catalog.databaseExists(c.lower())), None)
 
-    # -- snapshot tables (tableformat.py) ----------------------------------
+    # -- snapshot tables (iceberg_format.py) --------------------------------
 
     def _reclaim_dropped(self, name: str) -> None:
         """Creating a new table under a dropped name forfeits its UNDROP
@@ -4030,16 +4007,18 @@ class Engine:
         return (name, snap) if snap else None
 
     def _adopt_for_dml(self, pattern: re.Pattern, sql: str):
-        """Upgrade an UNPARTITIONED plain managed parquet table to the
-        snapshot format on first DML, so DELETE/UPDATE/MERGE run
-        file-granular copy-on-write instead of a whole-table shadow swap
-        (VERDICT r2 'What's wrong' #3 — the one remaining full-rewrite DML
-        path). The adoption itself is metadata-scale: the table's existing
-        parquet files are MOVED (same-filesystem rename) under the snapshot
-        root and referenced as snapshot 1 — zero bytes of data rewritten.
-        Partitioned tables keep the partition-granular dynamic-overwrite
-        path; qualified (non-default-namespace) tables keep the shadow swap
-        (snap_tables is keyed by bare name)."""
+        """Upgrade an UNPARTITIONED plain managed parquet table to an Iceberg
+        v2 table on first DML (or CREATE STREAM), so DELETE/UPDATE/MERGE run
+        file-granular copy-on-write instead of a whole-table shadow swap, and
+        every Iceberg statement (OPTIMIZE, VACUUM, branches, CLONE,
+        partition evolution, merge-on-read) works on it. The adoption
+        itself is metadata-scale: the table's existing parquet files are
+        MOVED (same-filesystem rename) under the table root and referenced
+        as snapshot 1 — zero bytes of data rewritten; the manifests read
+        only the files' footers. Partitioned tables keep the
+        partition-granular dynamic-overwrite path (their hive files lack
+        the partition columns); qualified (non-default-namespace) tables
+        keep the shadow swap (snap_tables is keyed by bare name)."""
         m = pattern.match(sql)
         if not m:
             return None
@@ -4054,14 +4033,15 @@ class Engine:
                 return None
             if any(c.isPartition for c in self.spark.catalog.listColumns(resolved)):
                 return None
-            files = [
-                f.removeprefix("file:") for f in self.spark.table(resolved).inputFiles()
-            ]
+            table = self.spark.table(resolved)
+            files = [f.removeprefix("file:") for f in table.inputFiles()]
             if not files or not all(f.endswith(".parquet") for f in files):
                 return None
         except Exception:
             return None
-        from universql_spark.tableformat import SnapshotTable  # noqa: PLC0415
+        import shutil  # noqa: PLC0415
+
+        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
 
         root = self._snap_root(name)
         self._reclaim_dropped(bn)
@@ -4081,9 +4061,17 @@ class Engine:
             dest = os.path.join(dest_dir, os.path.basename(f))
             os.rename(f, dest)
             moved.append(dest)
+        try:
+            snap = IcebergTable.adopt(root, moved, table.schema)
+        except ValueError:
+            # a column type with no Iceberg mapping: put the files back and
+            # leave DML on the shadow-swap path
+            for f, dest in zip(files, moved):
+                os.rename(dest, f)
+            shutil.rmtree(root, ignore_errors=True)
+            return None
         # the managed dir is now fileless; DROP purges only the husk
         self.spark.sql(f"DROP TABLE {resolved}")
-        snap = SnapshotTable.adopt(root, moved)
         self.snap_tables[bn] = snap
         self._refresh_snap_view(bn)
         return (bn, snap)

@@ -427,7 +427,7 @@ def execute_merge(spark: SparkSession, stmt: str, resolve=resolve_name) -> pa.Ta
 
 
 # ---------------------------------------------------------------------------
-# snapshot-table (tableformat.py) DML: file-granular copy-on-write
+# Iceberg-table (iceberg_format.py) DML: file-granular copy-on-write
 # ---------------------------------------------------------------------------
 
 

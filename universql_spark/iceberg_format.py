@@ -20,13 +20,14 @@ the public spec (https://iceberg.apache.org/spec/, format-version 2):
   Iceberg's own manifest-compaction produces;
 - immutable parquet data files under `data/`.
 
-The copy-on-write DML mechanics (file-granular DELETE/UPDATE/MERGE via
-input_file_name targeting, snapshot time travel) are inherited unchanged
-from SnapshotTable — this class swaps only the metadata persistence, so
-the SAME engine statements (CREATE ICEBERG TABLE / MERGE / AT(SNAPSHOT =>
-n)) now produce and consume spec-conformant Iceberg metadata. Readers plan
-a scan as: version-hint -> metadata.json -> snapshot -> manifest list ->
-manifests -> live data files -> spark.read.parquet(*files).
+The copy-on-write DML mechanics (file-granular DELETE/UPDATE/MERGE,
+snapshot time travel) are inherited from tableformat.SnapshotTable; this
+class is their only persistence, so every engine table with snapshots —
+CREATE ICEBERG TABLE targets and plain tables adopted on first DML
+(IcebergTable.adopt) — produces and consumes spec-conformant Iceberg
+metadata. Readers plan a scan as: version-hint -> metadata.json ->
+snapshot -> manifest list -> manifests -> live data files ->
+spark.read.parquet(*files).
 
 Scale note: metadata I/O is driver-side and manifest-sized (KBs per
 commit), never data-sized; scan planning reads only the current snapshot's
@@ -482,7 +483,7 @@ def _range_overlaps(op: str, v: Any, lo: Any, hi: Any) -> bool:
 
 
 class IcebergTable(SnapshotTable):
-    """SnapshotTable whose persistence layer is the Iceberg v2 format."""
+    """SnapshotTable persisted as Iceberg v2 metadata (its only format)."""
 
     def __init__(self, root: str):
         super().__init__(root)
@@ -1796,33 +1797,21 @@ class IcebergTable(SnapshotTable):
     # -- lifecycle ---------------------------------------------------------
 
     @classmethod
-    def create(
+    def _init(
         cls,
         root: str,
-        df: DataFrame,
-        replace: bool = False,
+        schema: T.StructType,
         cluster_by: list[str] | None = None,
         partition_by: list[str] | None = None,
     ) -> "IcebergTable":
-        """`cluster_by` = Snowflake clustering keys: the data is
-        range-clustered on those columns before the first write (so files
-        get tight, mostly-disjoint [min,max] bounds on them → manifest
-        file skipping on cluster-key predicates) and the keys are recorded
-        as the table's Iceberg sort order. `partition_by` = IDENTITY
-        partition spec: recorded as spec-id 0 fields (ids from 1000), data
-        files each belong to one partition tuple, manifests carry the
-        typed partition struct, and plan_files() prunes on it."""
-        if os.path.exists(root):
-            if not replace:
-                raise ValueError(f"iceberg table already exists at {root}")
-            shutil.rmtree(root)
-        if cluster_by:
-            df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
-        os.makedirs(os.path.join(root, "data"))
+        """Publish v1 metadata for a new table at root: schema 0 from the
+        Spark schema, partition spec 0 from `partition_by` and sort order 1
+        from `cluster_by` (both optional), no snapshots yet."""
         t = cls(root)
-        os.makedirs(t._meta_dir)
+        if os.path.exists(t._meta_dir):
+            raise ValueError(f"iceberg table already exists at {root}")
         next_id = [1]
-        fields = _iceberg_fields(df.schema, next_id)
+        fields = _iceberg_fields(schema, next_id)
         meta = {
             "format-version": 2,
             "table-uuid": str(uuid.uuid4()),
@@ -1880,12 +1869,56 @@ class IcebergTable(SnapshotTable):
             "snapshot-log": [],
             "metadata-log": [],
         }
+        os.makedirs(os.path.join(root, "data"), exist_ok=True)
+        os.makedirs(t._meta_dir)
         with open(t._version_path(1), "w") as f:
             json.dump(meta, f, indent=1)
         with open(t._hint_path, "w") as f:
             f.write("1")
+        return t
+
+    @classmethod
+    def create(
+        cls,
+        root: str,
+        df: DataFrame,
+        replace: bool = False,
+        cluster_by: list[str] | None = None,
+        partition_by: list[str] | None = None,
+    ) -> "IcebergTable":
+        """`cluster_by` = Snowflake clustering keys: the data is
+        range-clustered on those columns before the first write (so files
+        get tight, mostly-disjoint [min,max] bounds on them → manifest
+        file skipping on cluster-key predicates) and the keys are recorded
+        as the table's Iceberg sort order. `partition_by` = IDENTITY
+        partition spec: recorded as spec-id 0 fields (ids from 1000), data
+        files each belong to one partition tuple, manifests carry the
+        typed partition struct, and plan_files() prunes on it."""
+        if os.path.exists(root):
+            if not replace:
+                raise ValueError(f"iceberg table already exists at {root}")
+            shutil.rmtree(root)
+        if cluster_by:
+            df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
+        t = cls._init(root, df.schema, cluster_by, partition_by)
         files = t._write_files(df)
         t._append_snapshot(files, "append")
+        return t
+
+    @classmethod
+    def adopt(cls, root: str, files: list[str], schema: T.StructType) -> "IcebergTable":
+        """Adopt EXISTING parquet files as snapshot 1 — metadata-only: the
+        files are referenced in place, never rewritten (the manifest writer
+        reads only their footers for row counts and column bounds). This is
+        the upgrade path that gives plain unpartitioned tables file-granular
+        copy-on-write DML: the caller moves the table's files under `root`
+        and hands ownership here; from then on a 1-row DELETE rewrites only
+        the file(s) holding matched rows, not the whole table. `schema` is
+        the table's schema (the files' own schemas may lag it). The caller
+        may have staged the files under `root/data` already, so only
+        existing metadata refuses."""
+        t = cls._init(root, schema)
+        t._append_snapshot(sorted(files), "append")
         return t
 
 

@@ -137,7 +137,7 @@ FROM after_delete ORDER BY etype, d
 @register("dml_plain_file_granular", _PLAIN_FG_ORACLE, category="dml")
 def dml_plain_file_granular(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE + UPDATE on an UNPARTITIONED plain table: the first DML adopts
-    the table's parquet files into the snapshot format (metadata-only move),
+    the table's parquet files as an Iceberg v2 table (metadata-only move),
     so both statements run file-granular copy-on-write — no whole-table
     shadow swap (VERDICT r2 'What's wrong' #3; efficiency pinned by
     test_unpartitioned_delete_adopts_file_granular)."""
@@ -407,8 +407,8 @@ def dml_iceberg_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dml_iceberg_merge_timetravel", _ICE_ORACLE, category="dml")
 def dml_iceberg_merge_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-format table (tableformat.py — the Iceberg mechanism without
-    the jar): MERGE rewrites only data files holding matched rows, and the
+    """Iceberg v2 table (iceberg_format.py — the Iceberg format without the
+    jar): MERGE rewrites only data files holding matched rows, and the
     pre-merge snapshot stays queryable via AT(SNAPSHOT => 1). The single
     result carries BOTH states so the oracle checks time travel too."""
     from universql_spark.engine import Engine

@@ -84,6 +84,11 @@ def session_uid(spark: SparkSession) -> str:
 #: the at-scale plans.
 SMALL_DATA_BYTES = 512 * 1024 * 1024
 
+#: autoBroadcastJoinThreshold: join sides under this size broadcast. The
+#: dimension-table cache (register_testdata) gates on the same number, so
+#: exactly the broadcast-class dims are cached.
+BROADCAST_THRESHOLD_BYTES = 64 * 1024 * 1024
+
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -173,7 +178,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        .config("spark.sql.autoBroadcastJoinThreshold", str(BROADCAST_THRESHOLD_BYTES))
         # The engine writes its bucketed facts as exactly ONE sorted file
         # per bucket (_write_bucketed repartitions on the bucket key before
         # bucketBy().sortBy()), but Spark 3+ stopped reporting bucket sort
@@ -304,8 +309,7 @@ BUCKET_ANCHOR = {
 #: CPU-amplified operators. Width keys on SOURCE bytes uniformly; sf1
 #: documents (~6 MB) still goes 32-wide where the work volume is real.
 BUCKET_MIN_BYTES = 256 * 1024
-BUCKET_WIDE_BYTES: dict[str, int] = {}
-BUCKET_WIDE_DEFAULT = 4 * 1024 * 1024
+BUCKET_WIDE_MIN_BYTES = 4 * 1024 * 1024
 
 
 def _prune_stale_variants(parent: str, prefix: str, keep: str) -> None:
@@ -345,7 +349,7 @@ def _bucket_count(sf_dir: str, name: str) -> int:
         return 0
     if size < BUCKET_MIN_BYTES:
         return 0
-    return 32 if size >= BUCKET_WIDE_BYTES.get(name, BUCKET_WIDE_DEFAULT) else 8
+    return 32 if size >= BUCKET_WIDE_MIN_BYTES else 8
 
 
 #: Spark's bucket file-name convention (BucketingUtils): `..._<id>[.ext]`
@@ -473,9 +477,8 @@ def _resident_path(spark: SparkSession, sf_dir: str, name: str) -> str | None:
 
 
 #: Fixed/slow-growing dimension tables cached in executor memory when they
-#: are broadcast-class anyway (source under the 64 MB broadcast threshold).
+#: are broadcast-class anyway (source under BROADCAST_THRESHOLD_BYTES).
 DIM_TABLES = ("region", "nation", "customer", "supplier", "part")
-DIM_CACHE_MAX_BYTES = 64 * 1024 * 1024
 
 #: ClickBench `hits` derivation over events — ONE definition shared by the
 #: cb_* specs (Spark side: this view; oracle side: the identical text as a
@@ -513,7 +516,7 @@ def register_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     out: dict[str, DataFrame] = {}
     for name in TESTDATA_TABLES:
         df = load_table(spark, sf_dir, name)
-        if name in DIM_TABLES and _src_bytes(sf_dir, name) < DIM_CACHE_MAX_BYTES:
+        if name in DIM_TABLES and _src_bytes(sf_dir, name) < BROADCAST_THRESHOLD_BYTES:
             # broadcast-class dimensions feed a hash-relation build job in
             # every star join; caching them serves those builds from memory
             # instead of re-decoding parquet per replan (measured -10% on

@@ -1,45 +1,48 @@
-"""Snapshot table format: Iceberg's data model without the Iceberg jar.
+"""Snapshot-table logic: Iceberg's data model, persistence left to a subclass.
 
 The reference's entire table abstraction is catalog-managed Iceberg
 (warehouse/snowflake.py:97-111 resolves tables to Iceberg metadata;
 duckdb.py:223-225 reads them via iceberg_scan; duckdb.py:274-334 CTAS
 creates them through PyIceberg). This container has no iceberg-spark
 runtime jar, so this module re-derives the MECHANISM — the part that makes
-Iceberg Iceberg — from first principles on plain parquet + JSON:
+Iceberg Iceberg — from first principles on plain parquet:
 
-- a table is a metadata file listing immutable data files per SNAPSHOT
-  (`metadata.json`: [{id, timestamp_ms, operation, files[]}]);
+- a table is a list of SNAPSHOTS, each naming immutable data files
+  (`_load()` returns the logical state {"snapshots": [{id, timestamp_ms,
+  operation, files[], delete_files[], eq_delete_files[]}], plus the
+  schema-evolution logs});
 - readers plan from a snapshot's file list (`spark.read.parquet(*files)`),
   so every read is a consistent point-in-time view and TIME TRAVEL is just
   reading an older snapshot;
 - writes never mutate files: appends add files + a new snapshot;
   DELETE/UPDATE/MERGE are FILE-GRANULAR copy-on-write — the files that
-  contain affected rows are found with `input_file_name()` (a
-  manifest-sized distinct), ONLY those files are rewritten, and the new
-  snapshot lists (live - affected) + rewritten + appended.
+  contain affected rows are found by their file path (a manifest-sized
+  distinct), ONLY those files are rewritten, and the new snapshot lists
+  (live - affected) + rewritten + appended.
+
+The one persistence is iceberg_format.IcebergTable (Iceberg v2 metadata +
+Avro manifests): it supplies `_load`/`_commit`, the file targeting and the
+merge-on-read paths, and reaches the shared read/write/DML code here
+through super().
 
 File-granular COW is strictly finer than the hive-partition path in
 engine_dml.py (it bounds rewrite cost on UNPARTITIONED tables too) and is
 exactly what Iceberg's copy-on-write write mode does. At 100 TB the
-`input_file_name()` distinct is a narrow aggregate over matched rows only
-(filter pushdown cuts the scan), and the rewrite touches as many bytes as
-the matched files hold — independent of table size.
+file-path distinct is a narrow aggregate over matched rows only (filter
+pushdown cuts the scan), and the rewrite touches as many bytes as the
+matched files hold — independent of table size.
 
 Concurrency: commits are DELTA-based (added/removed files) and go through
-an optimistic retry loop. The base format's `_commit` is single-writer
-(metadata.json swap, always succeeds); IcebergTable overrides it with the
-HadoopCatalog compare-and-swap (exclusive creation of the next
-vN.metadata.json — the loser's create fails and the operation REBASES:
-appends re-apply on the winner's snapshot, rewrites re-validate that every
-file they rewrote is still live and raise CommitConflict if not — Iceberg's
-snapshot-isolation validation).
+an optimistic retry loop. `_commit` is IcebergTable's HadoopCatalog
+compare-and-swap (exclusive creation of the next vN.metadata.json — the
+loser's create fails and the operation REBASES: appends re-apply on the
+winner's snapshot, rewrites re-validate that every file they rewrote is
+still live and raise CommitConflict if not — Iceberg's snapshot-isolation
+validation).
 """
-
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
 import uuid
 
@@ -57,28 +60,14 @@ MAX_COMMIT_RETRIES = 10
 
 
 class SnapshotTable:
+    """Snapshot and copy-on-write logic over the logical state a subclass
+    persists: `_load()` -> state dict, `_commit(state)` -> False when the
+    commit lost the optimistic race (the caller re-loads and retries)."""
+
     def __init__(self, root: str):
         self.root = root
 
     # -- metadata ----------------------------------------------------------
-
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.root, "metadata.json")
-
-    def _load(self) -> dict:
-        with open(self._meta_path) as f:
-            return json.load(f)
-
-    def _commit(self, meta: dict) -> bool:
-        """Persist metadata. Returns False when the commit lost an
-        optimistic-concurrency race (the caller re-loads and retries); the
-        base format is single-writer and always wins."""
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self._meta_path)  # atomic snapshot swap
-        return True
 
     def snapshots(self) -> list[dict]:
         return self._load()["snapshots"]
@@ -89,7 +78,7 @@ class SnapshotTable:
 
     def current_delete_files(self) -> list[str]:
         """Positional-delete files of the current snapshot (Iceberg v2
-        merge-on-read; always [] for the base format)."""
+        merge-on-read)."""
         snaps = self.snapshots()
         return snaps[-1].get("delete_files", []) if snaps else []
 
@@ -146,19 +135,6 @@ class SnapshotTable:
             for f in s["files"]:
                 out.setdefault(f, i + 1)
         return out
-
-    # -- table properties (Iceberg-style `write.delete.mode` etc.) ---------
-
-    def get_property(self, key: str, default: str | None = None) -> str | None:
-        return self._load().get("properties", {}).get(key, default)
-
-    def set_property(self, key: str, value: str) -> None:
-        for _ in range(MAX_COMMIT_RETRIES):
-            meta = self._load()
-            meta.setdefault("properties", {})[key] = value
-            if self._commit(meta):
-                return
-        raise CommitConflict(f"set_property({key}) lost the commit race {MAX_COMMIT_RETRIES} times")
 
     def files_at(self, snapshot_id: int | None = None, timestamp_ms: int | None = None) -> list[str]:
         snaps = self.snapshots()
@@ -226,32 +202,6 @@ class SnapshotTable:
                     return self._read_files(spark, s["files"]).limit(0)
             raise ValueError("table has no data files in any snapshot")
         return self._read_files(spark, files)
-
-    def metadata_table(self, spark: SparkSession, kind: str) -> DataFrame:
-        """Iceberg-style metadata tables (`t$snapshots` etc. in the engine):
-        driver-side manifest-sized lists, never a data scan."""
-        snaps = self.snapshots()
-        if kind == "snapshots":
-            return spark.createDataFrame(
-                [(s["id"], s["timestamp_ms"], s["operation"], len(s["files"])) for s in snaps],
-                "snapshot_id bigint, timestamp_ms bigint, operation string, n_files int",
-            )
-        if kind == "history":
-            return spark.createDataFrame(
-                [(s["timestamp_ms"], s["id"]) for s in snaps],
-                "timestamp_ms bigint, snapshot_id bigint",
-            )
-        if kind == "files":
-            import pyarrow.parquet as pq  # noqa: PLC0415
-
-            return spark.createDataFrame(
-                [
-                    (f, "PARQUET", pq.ParquetFile(f).metadata.num_rows, os.path.getsize(f))
-                    for f in self.current_files()
-                ],
-                "file_path string, file_format string, record_count bigint, file_size_in_bytes bigint",
-            )
-        raise ValueError(f"no metadata table ${kind} for this table format")
 
     def add_column(self, col: str, sql_type: str) -> None:
         """Schema evolution as a METADATA operation: no file is rewritten;
@@ -341,11 +291,11 @@ class SnapshotTable:
             only_from = [f for f in f_from if f not in set(f_to)]
         empty = None
         if only_to:
-            rows_to = self._read_with_tombstones(spark, only_to, dels_to, eq_to)
+            rows_to = self._read_files(spark, only_to, deletes=dels_to, eq_entries=eq_to)
         else:
             rows_to = empty
         if only_from:
-            rows_from = self._read_with_tombstones(spark, only_from, dels_from, eq_from)
+            rows_from = self._read_files(spark, only_from, deletes=dels_from, eq_entries=eq_from)
         else:
             rows_from = empty
         if rows_to is None and rows_from is None:
@@ -362,14 +312,6 @@ class SnapshotTable:
             "METADATA$ACTION", F.lit("DELETE")
         )
         return ins.unionByName(dels).withColumn("METADATA$ISUPDATE", F.lit(False))
-
-    def _read_with_tombstones(self, spark, files, dels, eq):
-        """Read a file subset under a snapshot's tombstones. Base format has
-        no tombstones; IcebergTable overrides _read_files with them."""
-        try:
-            return self._read_files(spark, files, deletes=dels, eq_entries=eq)
-        except TypeError:
-            return self._read_files(spark, files)
 
     def truncate(self) -> int:
         """New empty snapshot; history (and time travel) keeps the data."""
@@ -492,39 +434,6 @@ class SnapshotTable:
 
     # -- operations --------------------------------------------------------
 
-    @classmethod
-    def create(cls, root: str, df: DataFrame, replace: bool = False) -> "SnapshotTable":
-        if os.path.exists(root):
-            if not replace:
-                raise ValueError(f"snapshot table already exists at {root}")
-            shutil.rmtree(root)
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        t = cls(root)
-        with open(t._meta_path, "w") as f:
-            json.dump({"snapshots": []}, f)
-        files = t._write_files(df)
-        t._append_snapshot(files, "append")
-        return t
-
-    @classmethod
-    def adopt(cls, root: str, files: list[str]) -> "SnapshotTable":
-        """Adopt EXISTING parquet files as snapshot 1 — metadata-only: the
-        files are referenced in place, never read or rewritten. This is the
-        upgrade path that gives plain unpartitioned tables file-granular
-        copy-on-write DML (VERDICT r2 'What's wrong' #3): the caller moves
-        the table's files under `root` and hands ownership here; from then
-        on a 1-row DELETE rewrites only the file(s) holding matched rows,
-        not the whole table. The caller may have staged the files under
-        `root/data` already, so only a pre-existing metadata.json refuses."""
-        t = cls(root)
-        if os.path.exists(t._meta_path):
-            raise ValueError(f"snapshot table already exists at {root}")
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        with open(t._meta_path, "w") as f:
-            json.dump({"snapshots": []}, f)
-        t._append_snapshot(sorted(files), "append")
-        return t
-
     def append(self, df: DataFrame) -> int:
         new = self._write_files(df)
         return self._commit_delta("append", added=new, removed=[])
@@ -542,32 +451,6 @@ class SnapshotTable:
         `_metadata`-based scan (input_file_name() cannot bind once the plan
         joins a second file source — the positional-delete anti-join)."""
         return self.read(spark).withColumn("__file", F.input_file_name())
-
-    def _candidate_files(self, cond_str: str | None) -> list[str] | None:
-        """Metadata-level file pruning hook (None = all files are
-        candidates). IcebergTable overrides this with manifest column-bound
-        skipping; the base format has no per-file stats."""
-        return None
-
-    def _affected_files(
-        self, spark: SparkSession, match, candidates: list[str] | None = None
-    ) -> list[str]:
-        """Files holding at least one matched row — Iceberg's COW targeting,
-        via input_file_name() (manifest-sized distinct; the scan prunes with
-        the pushed-down match predicate). `candidates` restricts the scan to
-        metadata-pruned files — sound because pruning only drops files whose
-        stats PROVE no row can match."""
-        if candidates is not None and not candidates:
-            return []
-        df = self.read(spark) if candidates is None else self._read_files(spark, candidates)
-        rows = (
-            df.filter(match)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
-        # input_file_name returns URIs (file:///...); manifest stores paths
-        return sorted({r["f"].replace("file://", "").replace("file:", "") for r in rows})
 
     def delete_where(
         self, spark: SparkSession, match, cond_str: str | None = None
