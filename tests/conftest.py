@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,6 +25,24 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture()
+def spark_jobs(spark):
+    """`with spark_jobs() as jobs:` collects the ids of the Spark jobs the
+    block runs (read by job group from the status tracker)."""
+
+    @contextlib.contextmanager
+    def count():
+        sc, group, ids = spark.sparkContext, uuid.uuid4().hex, []
+        sc.setJobGroup(group, "counted")
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 # --- smoke tier (VERDICT r10 item 6) -------------------------------------
 # The full suite is ~795 tests / 35-45 min — longer than the driver's
 # pytest window, which expired at ~75% in r10 and turned a fully-green run
@@ -32,7 +52,8 @@ def sf_dir() -> str:
 # lives HERE (collection hook), so the member lists stay in one place and
 # test modules stay unmarked; test_session_uid carries its own inline mark.
 
-#: one (or two) fast, load-bearing tests per module
+#: one (or two) fast, load-bearing tests per module (a parametrized case
+#: by its full name, e.g. "test_x[case]")
 _SMOKE_TESTS: dict[str, set[str]] = {
     "test_correctness.py": {"test_hits_view_equals_inline_cte", "test_portable_xxh64_matches_spark"},
     "test_plans.py": {"test_filter_pushdown_reaches_scan", "test_dims_broadcast_facts_shuffle", "test_topk_no_global_sort"},
@@ -41,6 +62,8 @@ _SMOKE_TESTS: dict[str, set[str]] = {
     "test_engine.py": {
         "test_split_statements_quotes_and_comments", "test_dialect_type_renames",
         "test_adopted_plain_table_takes_iceberg_statements",
+        "test_iceberg_dml_spark_jobs_per_statement",
+        "test_dml_type_change_keeps_iceberg_table_readable[update_promotes]",
     },
     "test_protocol.py": {
         "test_login_query_roundtrip", "test_sync_monitoring_by_request_id", "test_set_variable_stays_in_its_session",
@@ -69,7 +92,7 @@ def pytest_collection_modifyitems(config, items):
         fn = getattr(getattr(item, "function", None), "__name__", "")
         mod = os.path.basename(str(getattr(item, "fspath", "")))
         params = getattr(getattr(item, "callspec", None), "params", {})
-        if fn in _SMOKE_TESTS.get(mod, ()):
+        if fn in _SMOKE_TESTS.get(mod, ()) or item.name in _SMOKE_TESTS.get(mod, ()):
             item.add_marker(smoke)
         elif fn == "test_query_matches_oracle" and params.get("name") in bench_specs:
             item.add_marker(smoke)

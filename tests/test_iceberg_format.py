@@ -818,3 +818,131 @@ def test_equality_delete_broadcast_size_gate(spark, tmp_path):
     assert not t._eq_delete_broadcastable(path)
     remaining = sorted(r["id"] for r in t.read(spark).collect())
     assert remaining == [0, 3, 4, 5, 6, 7, 8, 9]
+
+
+# -- reads by schema (no inference job) -------------------------------------
+
+
+def _rows_and_dtypes(df):
+    return sorted(map(tuple, df.collect()), key=repr), df.dtypes
+
+
+def _by_inference(t):
+    """The same table handle read by mergeSchema inference instead."""
+    inferred = IcebergTable(t.root)
+    inferred._read_schema = lambda: None
+    return inferred
+
+
+def _evolved(spark, root):
+    t = IcebergTable.create(
+        root, spark.range(6).select("id", (F.col("id") % 2).alias("g"), (F.col("id") * 1.5).alias("v"))
+    )
+    t.add_column("w", "int")
+    t.append(spark.range(6, 9).select(
+        "id", (F.col("id") % 2).alias("g"), (F.col("id") * 1.5).alias("v"), F.col("id").cast("int").alias("w")
+    ))
+    t.drop_column("g")
+    t.rename_column("v", "vv")
+    t.append(spark.range(9, 11).select(
+        "id", (F.col("id") * 1.5).alias("vv"), F.col("id").cast("int").alias("w")
+    ))
+    return t
+
+
+def _adopted_lagging(spark, root):
+    # a plain table's files written before and after its ADD COLUMN
+    os.makedirs(os.path.join(root, "data"))
+    old, new = os.path.join(root, "data", "old"), os.path.join(root, "data", "new")
+    spark.range(3).select("id", F.lit("a").alias("s")).coalesce(1).write.parquet(old)
+    spark.range(3, 5).select("id", F.lit("b").alias("s"), F.col("id").cast("double").alias("x")).coalesce(
+        1
+    ).write.parquet(new)
+    files = [os.path.join(d, f) for d in (old, new) for f in os.listdir(d) if f.endswith(".parquet")]
+    schema = spark.range(1).select("id", F.lit("a").alias("s"), F.lit(1.0).alias("x")).schema
+    return IcebergTable.adopt(root, files, schema)
+
+
+def _mor_deleted(spark, root):
+    t = IcebergTable.create(root, spark.range(20).select("id", (F.col("id") % 4).alias("g")))
+    t.set_property("write.delete.mode", "merge-on-read")
+    t.delete_where(spark, F.col("g") == 1)
+    return t
+
+
+def _typed(spark, root):
+    df = spark.sql(
+        """SELECT CAST(id AS DECIMAL(12, 3)) / 7 AS d, DATE'2024-01-01' + CAST(id AS INT) AS dt,
+                  TIMESTAMP'2024-01-01 10:00:00' + make_interval(0, 0, 0, 0, CAST(id AS INT)) AS ts,
+                  CAST(TIMESTAMP_NTZ'2024-01-01 10:00:00' AS TIMESTAMP_NTZ) AS ntz,
+                  CAST(CAST(id AS STRING) AS BINARY) AS b, array(id, id + 1) AS arr,
+                  map('k', id) AS m, named_struct('x', id, 'y', CAST(id AS STRING)) AS st
+           FROM range(4)"""
+    )
+    t = IcebergTable.create(root, df.repartition(2))
+    t.append(df.limit(1))
+    return t
+
+
+@pytest.mark.parametrize(
+    "build, snapshot",
+    [(_evolved, None), (_adopted_lagging, None), (_evolved, 1), (_mor_deleted, None), (_typed, None)],
+    ids=["add_drop_rename", "adopted_lagging_files", "time_travel_before_add", "mor_deletes", "types"],
+)
+def test_read_by_schema_equals_inference_read(spark, tmp_path, build, snapshot):
+    t = build(spark, str(tmp_path / "t"))
+    assert t._read_schema() is not None
+    df = t.read(spark, snapshot_id=snapshot)
+    # columns come in the current schema's order; inference put a renamed
+    # column last once pre- and post-rename files mix
+    assert df.columns == t._spark_schema().fieldNames()
+    inferred = _by_inference(t).read(spark, snapshot_id=snapshot).select(*df.columns)
+    assert _rows_and_dtypes(df) == _rows_and_dtypes(inferred)
+
+
+def test_read_by_schema_runs_no_job(spark, tmp_path, spark_jobs):
+    t = _evolved(spark, str(tmp_path / "t"))
+    with spark_jobs() as jobs:
+        t.read(spark).columns  # planning only
+        t.truncate()
+        empty = t.read(spark)
+    assert jobs == []
+    assert empty.dtypes == [("id", "bigint"), ("vv", "double"), ("w", "int")]
+
+
+def test_smallint_table_keeps_its_types(spark, tmp_path):
+    df = spark.range(4).select(F.col("id").cast("smallint").alias("s"), F.col("id").cast("tinyint").alias("t"))
+    t = IcebergTable.create(str(tmp_path / "t"), df)
+    t.update_where(spark, F.col("s") < 2, {"s": "s + 1"})
+    assert t._read_schema() is None
+    assert t.read(spark).dtypes == [("s", "smallint"), ("t", "tinyint")]
+    assert sorted(r["s"] for r in t.read(spark).collect()) == [1, 2, 2, 3]
+
+
+# -- manifest writer --------------------------------------------------------
+
+
+def test_commit_opens_only_added_footers(spark, tmp_path, monkeypatch):
+    import pyarrow.parquet as pq
+
+    t = IcebergTable.create(str(tmp_path / "t"), spark.range(0, 40, 1, 8))
+    assert len(t.current_files()) == 8
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(path, *a, **kw):
+        opened.append(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    t.append(spark.range(40, 45, 1, 1))
+    assert len(opened) == 1
+    # the EXISTING entries kept their counts and bounds
+    _, meta = t._read_metadata()
+    cur = meta["snapshots"][-1]
+    entries = [
+        e for mf in _read_avro_records(cur["manifest-list"]) for e in _read_avro_records(mf["manifest_path"])
+    ]
+    assert sum(e["data_file"]["record_count"] for e in entries) == 45
+    assert all(e["data_file"]["lower_bounds"] for e in entries)
+    assert set(t.plan_files([("id", "=", 42)])) == set(t.current_files()) - set(t.files_at(1))

@@ -91,7 +91,17 @@ def split_statements(sql: str) -> list[str]:
             continue
         elif ch == "/" and i + 1 < n and sql[i + 1] == "*":
             j = sql.find("*/", i + 2)
-            i = n if j < 0 else j + 2
+            end = n if j < 0 else j + 2
+            if (
+                sql.startswith("/*+", i)
+                and _prev_word(i) == "select"
+                and "".join(buf).lstrip()[:6].lower() in ("create", "insert")
+            ):
+                # a REPARTITION/COALESCE hint in the query of a CTAS or
+                # INSERT sets the layout of the files it writes: Spark
+                # applies it (elsewhere hints stay comments, as in Snowflake)
+                buf.append(sql[i:end])
+            i = end
             continue
         elif ch == ";":
             if depth > 0:

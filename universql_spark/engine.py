@@ -46,6 +46,7 @@ from universql_spark import copy_into, engine_dml
 from universql_spark.dialect import snowflake_to_spark, split_statements, strip_table_wrapper
 from universql_spark.names import bare_name, split_ident
 from universql_spark.session import get_spark, register_testdata
+from universql_spark.tableformat import right_sized
 
 
 class QueryError(Exception):
@@ -1772,7 +1773,7 @@ class Engine:
                     )
                 else:
                     df = self._align_to_snap(df, tdf)
-                snap.append(df)
+                snap.append(right_sized(df))
                 self._refresh_snap_view(bn)
                 return _status(f"inserted into iceberg {bn}")
             if im and self._is_temp_ctas(im.group(1)):
@@ -2375,7 +2376,7 @@ class Engine:
                     snap = self.snap_tables[bn]
                     df = copy_into.read_stage(self.spark, cp[1], cp[2], cp[3])
                     n = df.count()
-                    snap.append(self._align_to_snap(df, snap.read(self.spark)))
+                    snap.append(right_sized(self._align_to_snap(df, snap.read(self.spark))))
                     self._refresh_snap_view(bn)
                     return pa.table({"rows_loaded": [n], "status": ["LOADED"]})
                 return copy_into.execute_copy_with_options(
@@ -4360,7 +4361,7 @@ class Engine:
             # plan_files() can skip whole files on cluster-key predicates
             snap = IcebergTable.create(
                 root,
-                df,
+                df if pcols else right_sized(df),
                 replace=replace,
                 cluster_by=pcols if pcols and pkind == "CLUSTER" else None,
                 partition_by=pcols if pcols and pkind == "PARTITION" else None,

@@ -55,10 +55,7 @@ from pyspark.sql import functions as F
 
 from universql_spark.dialect import _match_paren, _split_top_args
 from universql_spark.names import bare_name, resolve_name
-
-
-class NondeterministicMergeError(ValueError):
-    """Snowflake's ERROR_ON_NONDETERMINISTIC_MERGE=TRUE behavior."""
+from universql_spark.tableformat import NondeterministicMergeError, estimated_bytes
 
 _DELETE_RE = re.compile(r"^\s*DELETE\s+FROM\s+([\w.\"]+)(?:\s+WHERE\s+(.*))?$", re.I | re.S)
 _UPDATE_RE = re.compile(r"^\s*UPDATE\s+([\w.\"]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$", re.I | re.S)
@@ -330,7 +327,9 @@ def _inserts_df(
     target: DataFrame, source: DataFrame, cond, tcols: list[str], insert_clauses: list
 ) -> DataFrame:
     """Unmatched source rows routed to the first not-matched clause whose
-    AND-condition holds."""
+    AND-condition holds; a column the INSERT list leaves out is a NULL of
+    the column's type."""
+    ttypes = {f.name: f.dataType for f in target.schema.fields}
     unmatched_src = source.join(target, cond, "left_anti")
     pieces = []
     prior = F.lit(False)
@@ -340,7 +339,9 @@ def _inserts_df(
         if val_map is not None:
             sel = sel.select(
                 *[
-                    F.expr(val_map[col]).alias(col) if col in val_map else F.lit(None).alias(col)
+                    F.expr(val_map[col]).alias(col)
+                    if col in val_map
+                    else F.lit(None).cast(ttypes[col]).alias(col)
                     for col in tcols
                 ]
             )
@@ -450,8 +451,13 @@ def execute_update_snap(spark: SparkSession, stmt: str, snap) -> pa.Table:
 
 
 def execute_merge_snap(spark: SparkSession, stmt: str, snap, read_table) -> pa.Table:
-    """MERGE into a snapshot table: only data files holding matched target
-    rows are rewritten (input_file_name targeting); inserts append files."""
+    """MERGE into a snapshot table in one targeting job and one write:
+    `merge_apply` groups the target-source join by data file (a target row
+    matched twice is ERROR_ON_NONDETERMINISTIC_MERGE) to find the files
+    holding matched rows, and rewrites only those together with the
+    inserts, sized by the source's plan estimate. The inserted-row count
+    rides on the write; the table's row count comes from the manifests
+    unless delete files apply."""
     stmt = _lift_subquery_source(spark, stmt)
     m = _MERGE_RE.match(stmt)
     if not m:
@@ -466,30 +472,21 @@ def execute_merge_snap(spark: SparkSession, stmt: str, snap, read_table) -> pa.T
     tcols = target.columns
 
     matched_clauses, insert_clauses = _parse_when_clauses(clauses)
-    if matched_clauses:
-        _check_deterministic(target, source, cond)
-
     inserts = None
     if insert_clauses:
         inserts = _inserts_df(target, source, cond, tcols, insert_clauses)
-
+    matched_result = None
     if matched_clauses:
-        n_ins, n_files = snap.merge_apply(
-            spark,
-            source,
-            cond,
-            t_alias,
-            lambda sub: _matched_result_df(sub, source, cond, t_alias, tcols, matched_clauses),
-            inserts,
+        matched_result = lambda sub: _matched_result_df(  # noqa: E731
+            sub, source, cond, t_alias, tcols, matched_clauses
         )
-    else:
-        n_ins = inserts.count() if inserts is not None else 0
-        n_files = 0
-        if n_ins:
-            snap.append(inserts)
+    n_ins, n_files = snap.merge_apply(
+        spark, source, cond, t_alias, matched_result, inserts,
+        insert_bytes=estimated_bytes(source) if inserts is not None else None,
+    )
     return pa.table(
         {
-            "rows_affected": [snap.read(spark).count()],
+            "rows_affected": [snap.row_count(spark)],
             "rows_inserted": [n_ins],
             "files_rewritten": [n_files],
         }

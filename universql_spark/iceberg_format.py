@@ -17,7 +17,9 @@ the public spec (https://iceberg.apache.org/spec/, format-version 2):
 - `metadata/*-m0.avro` — MANIFESTS (`manifest_entry` records: status
   ADDED/EXISTING/DELETED, data_file with field-ids 100-134). Each commit
   writes one compacted manifest listing every live data file — the shape
-  Iceberg's own manifest-compaction produces;
+  Iceberg's own manifest-compaction produces. EXISTING entries carry their
+  record count, size and column bounds over from the parent snapshot's
+  manifest, so a commit opens only the footers of the files it adds;
 - immutable parquet data files under `data/`.
 
 The copy-on-write DML mechanics (file-granular DELETE/UPDATE/MERGE,
@@ -27,7 +29,10 @@ CREATE ICEBERG TABLE targets and plain tables adopted on first DML
 (IcebergTable.adopt) — produces and consumes spec-conformant Iceberg
 metadata. Readers plan a scan as: version-hint -> metadata.json ->
 snapshot -> manifest list -> manifests -> live data files ->
-spark.read.parquet(*files).
+spark.read.schema(S).parquet(*files), with S the current schema as Spark
+types: no schema-inference job. Tables whose Spark types Iceberg cannot
+express exactly (SMALLINT/TINYINT are Iceberg int, CHAR/VARCHAR string)
+keep mergeSchema inference, so their column types stay as written.
 
 Scale note: metadata I/O is driver-side and manifest-sized (KBs per
 commit), never data-sized; scan planning reads only the current snapshot's
@@ -344,17 +349,96 @@ _SQL_TO_ICEBERG = {
 }
 
 
+_ICEBERG_TO_SPARK = {
+    "boolean": T.BooleanType(), "int": T.IntegerType(), "long": T.LongType(),
+    "float": T.FloatType(), "double": T.DoubleType(), "date": T.DateType(),
+    "timestamptz": T.TimestampType(), "timestamp": T.TimestampNTZType(),
+    "string": T.StringType(), "binary": T.BinaryType(),
+}
+
+#: table property set when the table's Spark types do not round-trip
+#: through Iceberg types (SMALLINT/TINYINT are Iceberg int, CHAR/VARCHAR
+#: are Iceberg string): such tables read by mergeSchema inference, so their
+#: columns keep the types the files carry
+_INEXACT_PROP = "universql-spark.spark-types-inexact"
+_INEXACT_SQL = {"smallint", "tinyint", "byte", "short", "char", "varchar"}
+
+
+def _spark_type(t: Any) -> T.DataType | None:
+    """Iceberg schema-JSON type -> Spark type; None when Spark has no
+    exact counterpart (uuid, fixed, time, ...)."""
+    if isinstance(t, dict):
+        if t["type"] == "list":
+            e = _spark_type(t["element"])
+            return None if e is None else T.ArrayType(e, not t.get("element-required", False))
+        if t["type"] == "map":
+            k, v = _spark_type(t["key"]), _spark_type(t["value"])
+            if k is None or v is None:
+                return None
+            return T.MapType(k, v, not t.get("value-required", False))
+        if t["type"] == "struct":
+            fields = [(f, _spark_type(f["type"])) for f in t["fields"]]
+            if any(dt is None for _f, dt in fields):
+                return None
+            return T.StructType(
+                [T.StructField(f["name"], dt, not f.get("required", False)) for f, dt in fields]
+            )
+        return None
+    m = re.match(r"decimal\((\d+),\s*(\d+)\)$", t)
+    if m:
+        return T.DecimalType(int(m.group(1)), int(m.group(2)))
+    return _ICEBERG_TO_SPARK.get(t)
+
+
+def _spark_types_inexact(dt: T.DataType) -> bool:
+    """True when dt holds a type Iceberg maps to a wider one (see
+    _INEXACT_PROP)."""
+    if isinstance(dt, (T.ShortType, T.ByteType, T.CharType, T.VarcharType)):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _spark_types_inexact(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _spark_types_inexact(dt.keyType) or _spark_types_inexact(dt.valueType)
+    if isinstance(dt, T.StructType):
+        # catalog CHAR/VARCHAR columns surface as string + this marker
+        return any(
+            "__CHAR_VARCHAR_TYPE_STRING" in (f.metadata or {}) or _spark_types_inexact(f.dataType)
+            for f in dt.fields
+        )
+    return False
+
+
+def _spark_schemas(meta: dict) -> tuple[T.StructType, T.StructType] | None:
+    """(current schema, read schema) as Spark types, or None for tables
+    read by inference. The read schema appends the older names of renamed
+    columns, which files written before the rename hold (typed as the
+    column is now; the read stitches them into the current name)."""
+    props = meta.get("properties", {})
+    added = json.loads(props.get("universql-spark.added-columns", "[]"))
+    if props.get(_INEXACT_PROP) == "true" or any(
+        t.split("(")[0].strip().lower() in _INEXACT_SQL for _c, t in added
+    ):
+        return None
+    cur = next(s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"])
+    types = {f["id"]: _spark_type(f["type"]) for f in cur["fields"]}
+    if any(dt is None for dt in types.values()):
+        return None
+    current = T.StructType([T.StructField(f["name"], types[f["id"]]) for f in cur["fields"]])
+    seen = {f["name"].lower() for f in cur["fields"]}
+    older = []
+    for sch in meta["schemas"]:
+        for f in sch["fields"]:
+            if f["id"] in types and f["name"].lower() not in seen:
+                seen.add(f["name"].lower())
+                older.append(T.StructField(f["name"], types[f["id"]]))
+    return current, T.StructType(current.fields + older)
+
+
 def _read_avro_records(path: str) -> list[dict]:
     with open(path, "rb") as f:
         buf = f.read()
     schema, codec, _sync, start = avro_io.parse_header(buf)
     return list(avro_io._iter_records(buf, schema, codec, start))
-
-
-def _parquet_row_count(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
 
 
 # -- per-file column bounds (spec: single-value binary serialization) -------
@@ -392,11 +476,12 @@ def _deser_bound(b: bytes, itype: str):
     if itype == "int":
         return st.unpack("<i", b)[0]
     if itype == "long":
-        return st.unpack("<q", b)[0]
+        # bounds written before an int -> long promotion keep 4 bytes
+        return st.unpack("<q" if len(b) == 8 else "<i", b)[0]
     if itype == "float":
         return st.unpack("<f", b)[0]
     if itype == "double":
-        return st.unpack("<d", b)[0]
+        return st.unpack("<d" if len(b) == 8 else "<f", b)[0]
     if itype == "boolean":
         return b == b"\x01"
     if itype == "date":
@@ -406,24 +491,25 @@ def _deser_bound(b: bytes, itype: str):
     return b.decode("utf-8")
 
 
-def _file_bounds(path: str, fields: list[dict]) -> tuple[list[dict], list[dict]]:
-    """Per-column [min,max] from the parquet FOOTER (row-group stats —
-    metadata-only, no data read) -> (lower_bounds, upper_bounds) entries
-    keyed by Iceberg field id."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    arrow_schema = pf.schema_arrow
+def _footer_bounds(md, fields: list[dict]) -> tuple[list[dict], list[dict]]:
+    """Per-column [min,max] from a parquet FOOTER's row-group stats
+    (metadata-only, no data read) -> (lower_bounds, upper_bounds) entries
+    keyed by Iceberg field id. Top-level primitive columns only, matched
+    by their leaf path in the file."""
+    leaf = {}
+    if md.num_row_groups:
+        rg0 = md.row_group(0)
+        leaf = {rg0.column(j).path_in_schema: j for j in range(rg0.num_columns)}
     lower, upper = [], []
     for f in fields:
         if not isinstance(f["type"], str) or f["type"] not in _BOUNDABLE:
             continue
-        idx = arrow_schema.get_field_index(f["name"])
-        if idx < 0:
+        idx = leaf.get(f["name"])
+        if idx is None:
             continue
         mins, maxs = [], []
-        for rg in range(pf.metadata.num_row_groups):
-            st_ = pf.metadata.row_group(rg).column(idx).statistics
+        for rg in range(md.num_row_groups):
+            st_ = md.row_group(rg).column(idx).statistics
             if st_ is None or not st_.has_min_max:
                 mins = []
                 break
@@ -487,7 +573,13 @@ class IcebergTable(SnapshotTable):
 
     def __init__(self, root: str):
         super().__init__(root)
+        #: logical state of the latest metadata version _load read
         self._version_cache: dict[int, dict] = {}
+        #: manifest-list path -> _snapshot_files (manifests are immutable)
+        self._snapshot_files_memo: dict[str, tuple] = {}
+        #: parquet footer of each file _write_files wrote and no commit has
+        #: listed yet (the manifest writer pops it)
+        self._footers: dict[str, Any] = {}
 
     # -- layout ------------------------------------------------------------
 
@@ -594,7 +686,10 @@ class IcebergTable(SnapshotTable):
                     id_to_name.setdefault(f["id"], f["name"])
             snaps = []
             for s in meta.get("snapshots", []):
-                data, deletes, eq = self._snapshot_files(s["manifest-list"])
+                ml = s["manifest-list"]
+                if ml not in self._snapshot_files_memo:
+                    self._snapshot_files_memo[ml] = self._snapshot_files(ml)
+                data, deletes, eq = self._snapshot_files_memo[ml]
                 snap = {
                     "id": s["snapshot-id"],
                     "timestamp_ms": s["timestamp-ms"],
@@ -610,6 +705,7 @@ class IcebergTable(SnapshotTable):
                     ]
                 snaps.append(snap)
             props = meta.get("properties", {})
+            self._version_cache.clear()
             self._version_cache[v] = {
                 "snapshots": snaps,
                 "added_columns": json.loads(
@@ -651,6 +747,49 @@ class IcebergTable(SnapshotTable):
             if self._cas_write_version(v, meta):
                 return
         raise CommitConflict(f"set_property({key}) lost the commit race {MAX_COMMIT_RETRIES} times")
+
+    # -- schema ------------------------------------------------------------
+
+    def _schemas(self) -> tuple[T.StructType, T.StructType] | None:
+        return _spark_schemas(self._read_metadata()[1])
+
+    def _spark_schema(self) -> T.StructType | None:
+        """The current schema as Spark types (None: read by inference)."""
+        both = self._schemas()
+        return both[0] if both else None
+
+    def _read_schema(self) -> T.StructType | None:
+        """The schema files are read with (None: read by inference)."""
+        both = self._schemas()
+        return both[1] if both else None
+
+    def _promote(self, cols: dict[str, T.DataType]) -> None:
+        """Type promotion as metadata (spec: schema evolution): a new schema
+        entry gives the columns their wider types. Files keep theirs and
+        read widened under the new schema."""
+        for _ in range(MAX_COMMIT_RETRIES):
+            v, meta = self._read_metadata()
+            cur = next(
+                s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
+            )
+            wider = {n.lower(): dt for n, dt in cols.items()}
+            fields = [
+                {**f, "type": _iceberg_type(wider[f["name"].lower()], [0])}
+                if f["name"].lower() in wider
+                else f
+                for f in cur["fields"]
+            ]
+            new_schema = {
+                "type": "struct",
+                "schema-id": meta["current-schema-id"] + 1,
+                "fields": fields,
+            }
+            meta["schemas"].append(new_schema)
+            meta["current-schema-id"] = new_schema["schema-id"]
+            meta["last-updated-ms"] = int(time.time() * 1000)
+            if self._cas_write_version(v, meta):
+                return
+        raise CommitConflict(f"type promotion lost the commit race {MAX_COMMIT_RETRIES} times")
 
     def add_partition_field(
         self, source_col: str, transform: str = "identity", name: str | None = None
@@ -777,6 +916,30 @@ class IcebergTable(SnapshotTable):
         return out
 
     def _write_files(self, df: DataFrame) -> list[str]:
+        """Write df's rows as new data files (one per partition of df) and
+        read each new file's footer once: the manifest writer takes its
+        row count and bounds from it, `_nonempty` its row count."""
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        files = self._write_layout(df)
+        for f in files:
+            self._footers[f] = pq.ParquetFile(f).metadata
+        return files
+
+    def _nonempty(self, files: list[str]) -> list[str]:
+        """`files` without the ones holding no rows, which are deleted: a
+        rewrite whose every row went away still leaves one empty file."""
+        keep = []
+        for f in files:
+            md = self._footers.get(f)
+            if md is not None and md.num_rows == 0:
+                del self._footers[f]
+                os.remove(f)
+            else:
+                keep.append(f)
+        return keep
+
+    def _write_layout(self, df: DataFrame) -> list[str]:
         """Partition-aware write: each data file belongs to exactly one
         partition tuple. The partition columns are DUPLICATED as hive
         layout keys (__p_<col>=<value>/ dirs) so the originals stay inside
@@ -834,14 +997,34 @@ class IcebergTable(SnapshotTable):
         return {n: _parse_part_value(raw[n.lower()], t) if n.lower() in raw else None
                 for n, t, _f in part_fields}
 
+    def _entry_stats(
+        self, path: str, status: int, prev: dict[str, dict], fields: list[dict] | None
+    ) -> tuple[int, int, list | None, list | None]:
+        """(record_count, file_size_in_bytes, lower_bounds, upper_bounds) of
+        a manifest entry. EXISTING files carry theirs over from the parent
+        snapshot's manifest (`prev`); an ADDED file's footer is opened once
+        (the footer `_write_files` already read, when it wrote the file).
+        `fields` None: no bounds (delete files)."""
+        old = prev.get(path) if status == _STATUS_EXISTING else None
+        if old is not None:
+            return (old["record_count"], old["file_size_in_bytes"],
+                    old.get("lower_bounds"), old.get("upper_bounds"))
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        md = self._footers.pop(path, None)
+        if md is None:
+            md = pq.ParquetFile(path).metadata
+        lower, upper = _footer_bounds(md, fields) if fields else ([], [])
+        return md.num_rows, os.path.getsize(path), lower or None, upper or None
+
     def _write_manifest(
-        self, snap: dict, seq: int, first_seen: dict[str, tuple[int, int]]
+        self, snap: dict, seq: int, first_seen: dict[str, tuple[int, int]],
+        meta: dict, prev: dict[str, dict],
     ) -> tuple[str, dict]:
         """Write ONE compacted manifest holding every live file of `snap`
         (status ADDED for files first seen in this snapshot, EXISTING with
         their original snapshot/sequence otherwise) -> (path, manifest_file
         record for the manifest list)."""
-        _v, meta = self._read_metadata()
         fields = next(
             s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )["fields"]
@@ -851,12 +1034,11 @@ class IcebergTable(SnapshotTable):
         for path in snap["files"]:
             o_snap, o_seq = first_seen.get(path, (snap["id"], seq))
             status = _STATUS_ADDED if o_snap == snap["id"] else _STATUS_EXISTING
-            n = _parquet_row_count(path)
+            n, size, lower, upper = self._entry_stats(path, status, prev, fields)
             key = "added" if status == _STATUS_ADDED else "existing"
             counts[key][0] += 1
             counts[key][1] += n
             min_seq = min(min_seq, o_seq)
-            lower, upper = _file_bounds(path, fields)
             entries.append(
                 {
                     "status": status,
@@ -871,9 +1053,9 @@ class IcebergTable(SnapshotTable):
                         if part_fields
                         else {},
                         "record_count": n,
-                        "file_size_in_bytes": os.path.getsize(path),
-                        "lower_bounds": lower or None,
-                        "upper_bounds": upper or None,
+                        "file_size_in_bytes": size,
+                        "lower_bounds": lower,
+                        "upper_bounds": upper,
                         "equality_ids": None,
                     },
                 }
@@ -898,7 +1080,7 @@ class IcebergTable(SnapshotTable):
 
     def _write_delete_manifest(
         self, snap: dict, seq: int, first_seen: dict[str, tuple[int, int]],
-        name_to_id: dict[str, int] | None = None,
+        prev: dict[str, dict], name_to_id: dict[str, int] | None = None,
     ) -> tuple[str, dict]:
         """DELETE manifest (spec: manifest content=1) listing the snapshot's
         live POSITION-delete files (data_file content=1) and EQUALITY-delete
@@ -915,7 +1097,7 @@ class IcebergTable(SnapshotTable):
         for path, content, eq_ids in work:
             o_snap, o_seq = first_seen.get(path, (snap["id"], seq))
             status = _STATUS_ADDED if o_snap == snap["id"] else _STATUS_EXISTING
-            n = _parquet_row_count(path)
+            n, size, _lo, _up = self._entry_stats(path, status, prev, None)
             key = "added" if status == _STATUS_ADDED else "existing"
             counts[key][0] += 1
             counts[key][1] += n
@@ -932,7 +1114,7 @@ class IcebergTable(SnapshotTable):
                         "file_format": "PARQUET",
                         "partition": {},
                         "record_count": n,
-                        "file_size_in_bytes": os.path.getsize(path),
+                        "file_size_in_bytes": size,
                         "lower_bounds": None,
                         "upper_bounds": None,
                         "equality_ids": eq_ids,
@@ -956,6 +1138,23 @@ class IcebergTable(SnapshotTable):
             "existing_rows_count": counts["existing"][1],
             "deleted_rows_count": 0,
         }
+
+    @staticmethod
+    def _current_entries(meta: dict) -> dict[str, dict]:
+        """file path -> data_file record of every live entry (data and
+        deletes) in the current snapshot's manifests."""
+        current = next(
+            (s for s in meta.get("snapshots", [])
+             if s["snapshot-id"] == meta.get("current-snapshot-id")),
+            None,
+        )
+        out: dict[str, dict] = {}
+        if current is not None:
+            for mf in _read_avro_records(current["manifest-list"]):
+                for e in _read_avro_records(mf["manifest_path"]):
+                    if e["status"] != _STATUS_DELETED:
+                        out[e["data_file"]["file_path"]] = e["data_file"]
+        return out
 
     def _base_meta(self, v: int) -> dict:
         """The committed metadata document at version token v — the base a
@@ -990,15 +1189,16 @@ class IcebergTable(SnapshotTable):
         name_to_id = {f["name"].lower(): f["id"] for f in cur_schema["fields"]}
         seq = meta.get("last-sequence-number", 0)
         parent = meta.get("current-snapshot-id")
+        prev = self._current_entries(meta)
         for i, snap in enumerate(d["snapshots"]):
             if snap["id"] in known:
                 continue
             seq = i + 1  # one sequence number per snapshot, in commit order
-            _mpath, mf_record = self._write_manifest(snap, seq, first_seen)
+            _mpath, mf_record = self._write_manifest(snap, seq, first_seen, meta, prev)
             records = [mf_record]
             if snap.get("delete_files") or snap.get("eq_delete_files"):
                 _dpath, del_record = self._write_delete_manifest(
-                    snap, seq, first_seen, name_to_id=name_to_id
+                    snap, seq, first_seen, prev, name_to_id=name_to_id
                 )
                 records.append(del_record)
             mlist = os.path.join(
@@ -1305,7 +1505,7 @@ class IcebergTable(SnapshotTable):
             "__path", F.regexp_replace(F.col("_metadata.file_path"), self._PATH_NORM, "")
         ).withColumn("__pos", F.col("_metadata.row_index"))
         if delete_files:
-            dels = spark.read.parquet(*delete_files).select(
+            dels = spark.read.schema("file_path string, pos bigint").parquet(*delete_files).select(
                 F.col("file_path").alias("__dpath"), F.col("pos").alias("__dpos")
             )
             df = df.join(
@@ -1346,7 +1546,7 @@ class IcebergTable(SnapshotTable):
             deletes = self.current_delete_files()
         if eq_entries is None:
             eq_entries = self.eq_entries_at()
-        if not deletes and not eq_entries:
+        if not files or (not deletes and not eq_entries):
             return super()._read_files(spark, files)
         return self._scan_with_pos(spark, files, deletes, eq_entries).drop(
             "__path", "__pos"
@@ -1363,26 +1563,47 @@ class IcebergTable(SnapshotTable):
             eq_entries=self.eq_entries_at(snapshot_id, timestamp_ms),
         )
 
-    def _affected_files(self, spark, match, candidates=None):
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        if candidates is not None and not candidates:
-            return []
+    def _affected_files(self, spark, match, candidates=None) -> dict[str, int]:
+        """Files holding rows that `match` -> their matching-row counts, in
+        ONE grouped job over the candidate (else current) files with the
+        current deletes applied."""
         files = candidates if candidates is not None else self.current_files()
-        df = self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
-        rows = df.filter(match).select(F.col("__path").alias("f")).distinct().collect()
-        return sorted({r["f"] for r in rows})
+        if not files:
+            return {}
+        rows = (
+            self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
+            .filter(match)
+            .groupBy("__path")
+            .count()
+            .collect()
+        )
+        return {r["__path"]: r["count"] for r in rows}
 
     def _tagged_read(self, spark):
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
+        """Current-snapshot scan with each row's `__path`/`__pos` (deletes
+        applied); None when the snapshot has no data files."""
         files = self.current_files()
         if not files:
-            return super()._tagged_read(spark)
-        return (
-            self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
-            .withColumnRenamed("__path", "__file")
-            .drop("__pos")
+            return None
+        return self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
+
+    def row_count(self, spark) -> int:
+        """Rows in the current snapshot: the manifests' record counts, or a
+        count job when delete files hide some of them."""
+        if self.current_delete_files() or self.eq_entries_at():
+            return self.read(spark).count()
+        _v, meta = self._read_metadata()
+        current = next(
+            (s for s in meta.get("snapshots", [])
+             if s["snapshot-id"] == meta.get("current-snapshot-id")),
+            None,
+        )
+        if current is None:
+            return 0
+        return sum(
+            m["added_rows_count"] + m["existing_rows_count"]
+            for m in _read_avro_records(current["manifest-list"])
+            if m.get("content") != 1
         )
 
     def _write_position_deletes(self, positions) -> list[str]:
@@ -1594,7 +1815,7 @@ class IcebergTable(SnapshotTable):
         cols = [c.lower() for c in cols]
         keys = keys_df.select(*cols).distinct().coalesce(1)
         paths = self._write_files(keys)
-        n = sum(_parquet_row_count(p) for p in paths)
+        n = sum(self._footers[p].num_rows for p in paths)
         self._commit_delta(
             "delete", added=[], removed=[],
             add_eq_delete_files=[{"path": p, "cols": cols} for p in paths],
@@ -1614,7 +1835,7 @@ class IcebergTable(SnapshotTable):
         new = self._write_files(rows_df)
         keys = rows_df.select(*key_cols).distinct().coalesce(1)
         kpaths = self._write_files(keys)
-        n = sum(_parquet_row_count(p) for p in new)
+        n = sum(self._footers[p].num_rows for p in new)
         self._commit_delta(
             "upsert", added=new, removed=[],
             add_eq_delete_files=[{"path": p, "cols": key_cols} for p in kpaths],
@@ -1788,6 +2009,7 @@ class IcebergTable(SnapshotTable):
                 if os.path.exists(f):
                     os.remove(f)
             for s in dropped:
+                self._snapshot_files_memo.pop(s["manifest-list"], None)
                 if os.path.exists(s["manifest-list"]):
                     os.remove(s["manifest-list"])
             self._version_cache.clear()
@@ -1864,7 +2086,8 @@ class IcebergTable(SnapshotTable):
                 },
             ],
             "default-sort-order-id": 0 if not cluster_by else 1,
-            "properties": {"write.format.default": "parquet"},
+            "properties": {"write.format.default": "parquet"}
+            | ({_INEXACT_PROP: "true"} if _spark_types_inexact(schema) else {}),
             "snapshots": [],
             "snapshot-log": [],
             "metadata-log": [],

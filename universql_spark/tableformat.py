@@ -11,24 +11,26 @@ Iceberg Iceberg — from first principles on plain parquet:
   (`_load()` returns the logical state {"snapshots": [{id, timestamp_ms,
   operation, files[], delete_files[], eq_delete_files[]}], plus the
   schema-evolution logs});
-- readers plan from a snapshot's file list (`spark.read.parquet(*files)`),
-  so every read is a consistent point-in-time view and TIME TRAVEL is just
+- readers plan from a snapshot's file list under the table's schema
+  (`spark.read.schema(S).parquet(*files)`: no schema-inference job), so
+  every read is a consistent point-in-time view and TIME TRAVEL is just
   reading an older snapshot;
 - writes never mutate files: appends add files + a new snapshot;
-  DELETE/UPDATE/MERGE are FILE-GRANULAR copy-on-write — the files that
-  contain affected rows are found by their file path (a manifest-sized
-  distinct), ONLY those files are rewritten, and the new snapshot lists
-  (live - affected) + rewritten + appended.
+  DELETE/UPDATE/MERGE are FILE-GRANULAR copy-on-write — ONE grouped job
+  over the matched rows finds the files that hold them (a file-path
+  aggregate that also yields the row counts), ONLY those files are
+  rewritten, into one file per target size of the bytes they held, and
+  the new snapshot lists (live - affected) + rewritten + appended.
 
 The one persistence is iceberg_format.IcebergTable (Iceberg v2 metadata +
-Avro manifests): it supplies `_load`/`_commit`, the file targeting and the
-merge-on-read paths, and reaches the shared read/write/DML code here
-through super().
+Avro manifests): it supplies `_load`/`_commit`, the read schema, the file
+targeting and the merge-on-read paths, and reaches the shared
+read/write/DML code here through super().
 
 File-granular COW is strictly finer than the hive-partition path in
 engine_dml.py (it bounds rewrite cost on UNPARTITIONED tables too) and is
 exactly what Iceberg's copy-on-write write mode does. At 100 TB the
-file-path distinct is a narrow aggregate over matched rows only (filter
+file-path aggregate is a narrow one over matched rows only (filter
 pushdown cuts the scan), and the rewrite touches as many bytes as the
 matched files hold — independent of table size.
 
@@ -43,11 +45,13 @@ validation).
 from __future__ import annotations
 
 import os
+import re
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class CommitConflict(RuntimeError):
@@ -59,10 +63,76 @@ class CommitConflict(RuntimeError):
 MAX_COMMIT_RETRIES = 10
 
 
+class NondeterministicMergeError(ValueError):
+    """Snowflake's ERROR_ON_NONDETERMINISTIC_MERGE=TRUE behavior: a target
+    row matched by more than one source row."""
+
+
+# -- write sizing -----------------------------------------------------------
+#
+# A write aims at files of the session's scan split size
+# (spark.sql.files.maxPartitionBytes), so each file is one scan task. Small
+# writes then produce one file instead of one per input partition, and the
+# next statement's scan, listing and manifest costs stay flat.
+
+
+def coalesce_to_bytes(df: DataFrame, nbytes: int) -> DataFrame:
+    """df coalesced to ceil(nbytes / split size) partitions. coalesce never
+    adds partitions, so a write never gets more than df already has."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    n = max(1, -(-nbytes // int(conf.filesMaxPartitionBytes())))
+    return df.coalesce(n) if n < 2**31 else df
+
+
+#: plan nodes whose presence makes the size estimate unusable for sizing a
+#: write: without CBO a Join's estimate multiplies its inputs, and a
+#: repartition (REPARTITION/COALESCE hint, DISTRIBUTE BY, REBALANCE) is a
+#: layout the statement asked for
+_UNSIZED_PLAN_RE = re.compile(
+    r"^[\s:+\-|]*(?:Join|Repartition|RepartitionByExpression|RebalancePartitions)\b", re.M
+)
+
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """The optimized plan's sizeInBytes, or None when the plan has a join
+    or an explicit layout (see _UNSIZED_PLAN_RE)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if _UNSIZED_PLAN_RE.search(plan.toString()):
+        return None
+    return int(plan.stats().sizeInBytes())
+
+
+def right_sized(df: DataFrame) -> DataFrame:
+    """New data sized from its plan estimate; df unchanged when the
+    estimate cannot be used."""
+    nbytes = estimated_bytes(df)
+    return df if nbytes is None else coalesce_to_bytes(df, nbytes)
+
+
+def _file_bytes(files: list[str]) -> int:
+    """Bytes a copy-on-write rewrite replaces: it is sized to them."""
+    return sum(os.path.getsize(f) for f in files)
+
+
+def _promotion(old: T.DataType, new: T.DataType) -> bool:
+    """Iceberg's legal type promotions: int -> long, float -> double,
+    decimal(P, S) -> decimal(P', S) with P' > P."""
+    if isinstance(old, T.IntegerType):
+        return isinstance(new, T.LongType)
+    if isinstance(old, T.FloatType):
+        return isinstance(new, T.DoubleType)
+    if isinstance(old, T.DecimalType) and isinstance(new, T.DecimalType):
+        return new.scale == old.scale and new.precision > old.precision
+    return False
+
+
 class SnapshotTable:
     """Snapshot and copy-on-write logic over the logical state a subclass
     persists: `_load()` -> state dict, `_commit(state)` -> False when the
-    commit lost the optimistic race (the caller re-loads and retries)."""
+    commit lost the optimistic race (the caller re-loads and retries). The
+    subclass also supplies the schema (`_spark_schema`, `_read_schema`,
+    `_promote`), the targeting scans (`_affected_files`, `_tagged_read`)
+    and `_nonempty` over the files it wrote."""
 
     def __init__(self, root: str):
         self.root = root
@@ -164,18 +234,28 @@ class SnapshotTable:
         )
 
     def _read_files(self, spark: SparkSession, files: list[str]) -> DataFrame:
-        """Schema-normalized read of a file subset: mergeSchema unions the
-        per-file schemas (files written before an ADD COLUMN lack it —
-        Iceberg-style evolution, old files untouched) and columns added
-        after every one of these files were written surface as NULL."""
-        df = spark.read.option("mergeSchema", "true").parquet(*files)
+        """Read a file subset under the table's schema. With a read schema
+        (`_read_schema`: the current schema plus the older names of renamed
+        columns) there is no inference job: files written before an ADD
+        COLUMN (Iceberg-style evolution, old files untouched) read it as
+        NULL, and files written before a type promotion read widened.
+        Tables whose Spark types do not round-trip through Iceberg types
+        (`_read_schema` None) keep mergeSchema inference, which unions the
+        per-file schemas."""
         meta = self._load()
-        for col, sql_type in meta.get("added_columns", []):
-            if col not in df.columns:
-                df = df.withColumn(col, F.lit(None).cast(sql_type))
+        schema = self._read_schema()
+        if schema is None:
+            df = spark.read.option("mergeSchema", "true").parquet(*files)
+            for col, sql_type in meta.get("added_columns", []):
+                if col not in df.columns:
+                    df = df.withColumn(col, F.lit(None).cast(sql_type))
+        elif files:
+            df = spark.read.schema(schema).parquet(*files)
+        else:
+            df = spark.createDataFrame([], schema)
         # drop/rename are metadata ops applied at read time.  After
         # `RENAME COLUMN a TO b`, pre-rename files physically hold `a` and
-        # post-rename files hold `b`; the merged schema then has both, each
+        # post-rename files hold `b`; the read schema then has both, each
         # NULL outside its era, so coalesce stitches them into one logical
         # column — the same per-file identity Iceberg gets from field-ids
         # (name reuse after drop/rename is refused at ALTER time, which is
@@ -195,13 +275,14 @@ class SnapshotTable:
     def read(self, spark: SparkSession, snapshot_id: int | None = None,
              timestamp_ms: int | None = None) -> DataFrame:
         files = self.files_at(snapshot_id, timestamp_ms)
-        if not files:
-            # empty table: preserve schema from any historical snapshot
-            for s in reversed(self.snapshots()):
-                if s["files"]:
-                    return self._read_files(spark, s["files"]).limit(0)
-            raise ValueError("table has no data files in any snapshot")
-        return self._read_files(spark, files)
+        if files or self._read_schema() is not None:
+            return self._read_files(spark, files)
+        # empty table read by inference: take the schema from any
+        # historical snapshot's files
+        for s in reversed(self.snapshots()):
+            if s["files"]:
+                return self._read_files(spark, s["files"]).limit(0)
+        raise ValueError("table has no data files in any snapshot")
 
     def add_column(self, col: str, sql_type: str) -> None:
         """Schema evolution as a METADATA operation: no file is rewritten;
@@ -445,26 +526,44 @@ class SnapshotTable:
         new = self._write_files(df)
         return self._append_snapshot(new, "replace", delete_files=[])
 
-    def _tagged_read(self, spark: SparkSession) -> DataFrame:
-        """Current-snapshot read with a `__file` column naming each row's
-        source data file. IcebergTable overrides this with a deletes-aware
-        `_metadata`-based scan (input_file_name() cannot bind once the plan
-        joins a second file source — the positional-delete anti-join)."""
-        return self.read(spark).withColumn("__file", F.input_file_name())
+    def _conform(self, spark: SparkSession, df: DataFrame) -> DataFrame:
+        """df with the table's columns in its current types, so every file a
+        commit adds matches the schema. A column whose new type is a legal
+        Iceberg promotion of the current one (int -> long, float -> double,
+        decimal precision widening) keeps it and the table's schema is
+        promoted in a new schema entry; any other type is cast. Tables read
+        by inference never promote: a mixed-type file set would not merge."""
+        current = self._spark_schema()
+        exact = current is not None
+        if not exact:
+            current = self.read(spark).schema
+        have = {f.name: f.dataType for f in df.schema.fields}
+        cols, promote = [], {}
+        for f in current.fields:
+            t = have[f.name]
+            if t == f.dataType:
+                cols.append(F.col(f.name))
+            elif exact and _promotion(f.dataType, t):
+                cols.append(F.col(f.name))
+                promote[f.name] = t
+            else:
+                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        if promote:
+            self._promote(promote)
+        return df.select(*cols)
 
     def delete_where(
         self, spark: SparkSession, match, cond_str: str | None = None
     ) -> tuple[int, int]:
         """-> (rows_deleted, n_files_rewritten)"""
-        affected = self._affected_files(spark, match, self._candidate_files(cond_str))
-        if not affected:
+        hits = self._affected_files(spark, match, self._candidate_files(cond_str))
+        if not hits:
             return 0, 0
-        sub = self._read_files(spark, affected)
-        n_del = sub.filter(match).count()
-        survivors = sub.filter(~match)
-        new = self._write_files(survivors) if survivors.limit(1).count() else []
+        affected = sorted(hits)
+        survivors = self._read_files(spark, affected).filter(~match)
+        new = self._nonempty(self._write_files(coalesce_to_bytes(survivors, _file_bytes(affected))))
         self._commit_delta("delete", added=new, removed=affected)
-        return n_del, len(affected)
+        return sum(hits.values()), len(affected)
 
     def update_where(
         self,
@@ -474,11 +573,11 @@ class SnapshotTable:
         cond_str: str | None = None,
     ) -> tuple[int, int]:
         """-> (rows_updated, n_files_rewritten); simultaneous assignment."""
-        affected = self._affected_files(spark, match, self._candidate_files(cond_str))
-        if not affected:
+        hits = self._affected_files(spark, match, self._candidate_files(cond_str))
+        if not hits:
             return 0, 0
+        affected = sorted(hits)
         sub = self._read_files(spark, affected)
-        n_upd = sub.filter(match).count()
         out = sub.select(
             *[
                 F.when(match, F.expr(assign_exprs[c])).otherwise(F.col(c)).alias(c)
@@ -487,9 +586,9 @@ class SnapshotTable:
                 for c in sub.columns
             ]
         )
-        new = self._write_files(out)
+        new = self._write_files(coalesce_to_bytes(self._conform(spark, out), _file_bytes(affected)))
         self._commit_delta("update", added=new, removed=affected)
-        return n_upd, len(affected)
+        return sum(hits.values()), len(affected)
 
     def merge_apply(
         self,
@@ -499,32 +598,49 @@ class SnapshotTable:
         t_alias: str,
         matched_result,
         inserts: DataFrame | None,
+        insert_bytes: int | None = None,
     ) -> tuple[int, int]:
-        """File-granular MERGE: rewrite only files holding matched target
-        rows (matched_result(sub_df) -> their post-merge rows), append
-        insert files untouched-by-rewrite. -> (n_inserted, n_files_rewritten)
-        """
-        # input_file_name() must bind to a single scan: stamp the file path
-        # on the TARGET before the join touches any other source
-        tagged = self._tagged_read(spark).alias(t_alias)
-        match_rows = tagged.join(source, cond, "left_semi")
-        affected = sorted(
-            {
-                r["__file"].replace("file://", "").replace("file:", "")
-                for r in match_rows.select("__file").distinct().collect()
-            }
-        )
-        new: list[str] = []
+        """File-granular MERGE in one targeting job and one write: rewrite
+        only files holding matched target rows (matched_result(sub_df) ->
+        their post-merge rows; None when the MERGE has no WHEN MATCHED
+        clause) and write them together with the `inserts`, whose plan
+        estimate `insert_bytes` (None: unknown) sizes the write with the
+        replaced bytes. -> (n_inserted, n_files_rewritten)
+
+        The targeting groups the target-source join by file: more join rows
+        than distinct target rows means a row matched more than once
+        (NondeterministicMergeError), and the files are the affected set."""
+        affected: list[str] = []
+        tagged = self._tagged_read(spark) if matched_result is not None else None
+        if tagged is not None:
+            rows = (
+                tagged.alias(t_alias)
+                .join(source, cond, "inner")
+                .groupBy("__path")
+                .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("__pos").alias("rows"))
+                .collect()
+            )
+            if any(r["n"] > r["rows"] for r in rows):
+                raise NondeterministicMergeError(
+                    "MERGE: a target row matches more than one source row "
+                    "(ERROR_ON_NONDETERMINISTIC_MERGE)"
+                )
+            affected = sorted(r["__path"] for r in rows)
+        out, replaced = None, _file_bytes(affected)
         if affected:
             sub = self._read_files(spark, affected).alias(t_alias)
-            untouched = sub.join(source, cond, "left_anti").select(*self.read(spark).columns)
-            rewritten = untouched.unionByName(matched_result(sub))
-            new += self._write_files(rewritten)
-        n_ins = 0
+            untouched = sub.join(source, cond, "left_anti").select(*sub.columns)
+            out = coalesce_to_bytes(untouched.unionByName(matched_result(sub)), replaced)
+        obs = None
         if inserts is not None:
-            n_ins = inserts.count()
-            if n_ins:
-                new += self._write_files(inserts)
+            # the inserted-row count rides on the write job
+            obs = Observation()
+            inserts = inserts.observe(obs, F.count(F.lit(1)).alias("n"))
+            out = inserts if out is None else out.unionByName(inserts)
+            if insert_bytes is not None:
+                out = coalesce_to_bytes(out, replaced + insert_bytes)
+        if out is None:
+            return 0, 0
+        new = self._nonempty(self._write_files(self._conform(spark, out)))
         self._commit_delta("merge", added=new, removed=affected)
-        return n_ins, len(affected)
-
+        return (obs.get["n"] if obs is not None else 0), len(affected)
