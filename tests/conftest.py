@@ -64,6 +64,7 @@ _SMOKE_TESTS: dict[str, set[str]] = {
         "test_adopted_plain_table_takes_iceberg_statements",
         "test_iceberg_dml_spark_jobs_per_statement",
         "test_dml_type_change_keeps_iceberg_table_readable[update_promotes]",
+        "test_delete_keeps_null_condition_rows",
     },
     "test_protocol.py": {
         "test_login_query_roundtrip", "test_sync_monitoring_by_request_id", "test_set_variable_stays_in_its_session",

@@ -515,8 +515,13 @@ def test_copy_into_single_scan(engine, tmp_path, monkeypatch):
 
 
 def _table_files(engine, table):
+    """{data file: mtime} of a table: a snapshot table's current snapshot,
+    else the parquet files under a catalog table's location."""
     import os
 
+    snap = engine.snap_tables.get(table)
+    if snap is not None:
+        return {f: os.stat(f).st_mtime_ns for f in snap.current_files()}
     loc = (
         engine.spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
         .filter("col_name = 'Location'")
@@ -551,10 +556,10 @@ def test_partitioned_merge_rewrites_one_partition(engine):
         "WHEN MATCHED THEN UPDATE SET v = s.v"
     )
     after = _table_files(engine, "pgm_t")
-    untouched_before = {f: m for f, m in before.items() if "/p=1/" not in f}
-    untouched_after = {f: m for f, m in after.items() if "/p=1/" not in f}
+    untouched_before = {f: m for f, m in before.items() if "/__p_p=1/" not in f}
+    untouched_after = {f: m for f, m in after.items() if "/__p_p=1/" not in f}
     assert untouched_before == untouched_after  # p=0, p=2 files identical
-    assert {f for f in before if "/p=1/" in f} != {f for f in after if "/p=1/" in f}
+    assert {f for f in before if "/__p_p=1/" in f} != {f for f in after if "/__p_p=1/" in f}
     rows = {r["id"]: r["v"] for r in engine.execute("SELECT id, v FROM pgm_t").to_pylist()}
     assert rows[4] == 999 and rows[5] == 50 and len(rows) == 30
     engine.execute("DROP TABLE pgm_t; DROP TABLE pgm_s")
@@ -707,10 +712,10 @@ def test_partitioned_delete_drops_dead_partition(engine):
     engine.execute("DELETE FROM pgd_t WHERE p = 2 OR id = 3")  # kills p=2; 1 row from p=0
     after = _table_files(engine, "pgd_t")
     # p=1 untouched
-    assert {f: m for f, m in before.items() if "/p=1/" in f} == {
-        f: m for f, m in after.items() if "/p=1/" in f
+    assert {f: m for f, m in before.items() if "/__p_p=1/" in f} == {
+        f: m for f, m in after.items() if "/__p_p=1/" in f
     }
-    assert not any("/p=2/" in f for f in after)  # dead partition dropped
+    assert not any("/__p_p=2/" in f for f in after)  # dead partition dropped
     ids = sorted(r["id"] for r in engine.execute("SELECT id FROM pgd_t").to_pylist())
     assert len(ids) == 19 and 3 not in ids and all(i % 3 != 2 for i in ids)
     engine.execute("DROP TABLE pgd_t")
@@ -724,7 +729,7 @@ def test_partitioned_update_rewrites_matched_partitions_only(engine):
     before = _table_files(engine, "pgu_t")
     engine.execute("UPDATE pgu_t SET v = v * 100 WHERE p = 0")
     after = _table_files(engine, "pgu_t")
-    for part in ("/p=1/", "/p=2/"):
+    for part in ("/__p_p=1/", "/__p_p=2/"):
         assert {f: m for f, m in before.items() if part in f} == {
             f: m for f, m in after.items() if part in f
         }, part
@@ -793,6 +798,233 @@ def test_merge_multi_clause_partitioned(engine):
     assert 3 not in rows and rows[2] == 200 and rows[4] == 400 and rows[5] == 5
     assert len(rows) == 7
     engine.execute("DROP TABLE mcp_t; DROP TABLE mcp_s")
+
+
+#: CREATE statements for each DML target kind: Iceberg, a plain table
+#: adopted on its first DML, a partitioned (Iceberg from CREATE) table, a
+#: qualified catalog table and a TEMP table (the last two replaced whole)
+_DML_KINDS = {
+    "iceberg": "CREATE OR REPLACE ICEBERG TABLE {t} AS {q}",
+    "adopted": "CREATE OR REPLACE TABLE {t} AS {q}",
+    "partitioned": "CREATE OR REPLACE TABLE {t} PARTITION BY (p) AS {q}",
+    "qualified": "CREATE OR REPLACE TABLE {t} AS {q}",
+    "temp": "CREATE OR REPLACE TEMP TABLE {t} AS {q}",
+}
+
+
+@pytest.mark.parametrize("kind", list(_DML_KINDS))
+def test_delete_keeps_null_condition_rows(engine, kind):
+    """DELETE removes the rows whose condition is TRUE: a NULL condition
+    keeps the row (NOT coalesce(cond, false)) on every target kind."""
+    t = "ndq.s.nd_t" if kind == "qualified" else f"nd_{kind}"
+    engine.execute(
+        _DML_KINDS[kind].format(
+            t=t,
+            q="SELECT id, CAST(id % 3 AS INT) AS p, IF(id % 2 = 0, NULL, id) AS x "
+            "FROM range(20) AS r(id)",
+        )
+    )
+    out = engine.execute(f"DELETE FROM {t} WHERE x > 5").to_pylist()[0]
+    assert out["rows_deleted"] == 7  # x in 7, 9, ..., 19
+    left = engine.execute(f"SELECT id, x FROM {t}").to_pylist()
+    assert sorted(r["id"] for r in left) == [i for i in range(20) if i % 2 == 0 or i <= 5]
+    assert sum(r["x"] is None for r in left) == 10
+    assert (t in engine.snap_tables) == (kind in ("iceberg", "adopted", "partitioned"))
+    engine.execute(f"DROP TABLE {t}")
+
+
+def test_partitioned_ctas_is_iceberg(engine):
+    """An unqualified CREATE TABLE ... PARTITION BY / CLUSTER BY takes the
+    Iceberg create: an identity partition spec, or a sort order. Over a
+    plain table's name it replaces that table with OR REPLACE only."""
+    from universql_spark.engine import QueryError
+    from universql_spark.iceberg_format import IcebergTable
+
+    q = "SELECT id, CAST(id % 3 AS INT) AS p FROM range(12) AS r(id)"
+    engine.execute("CREATE OR REPLACE TABLE pci_t AS SELECT 1 AS id, 0 AS p")
+    with pytest.raises(QueryError, match="already exists"):
+        engine.execute(f"CREATE TABLE pci_t PARTITION BY (p) AS {q}")
+    engine.execute(f"CREATE OR REPLACE TABLE pci_t PARTITION BY (p) AS {q}")
+    snap = engine.snap_tables["pci_t"]
+    assert isinstance(snap, IcebergTable)
+    assert [(n, tr) for n, _t, _f, tr, _s in snap._part_spec_full()] == [("p", "identity")]
+    assert len(snap.current_files()) == 3  # one file per partition tuple
+    engine.execute(f"CREATE OR REPLACE TABLE pci_c CLUSTER BY (id) AS {q}")
+    meta = engine.snap_tables["pci_c"]._read_metadata()[1]
+    assert meta["default-sort-order-id"] == 1
+    assert engine.execute("SELECT COUNT(*) AS n FROM pci_c").to_pylist() == [{"n": 12}]
+    engine.execute("DROP TABLE pci_t; DROP TABLE pci_c")
+    assert not engine.spark.catalog.tableExists("pci_t")  # the plain table went too
+
+
+@pytest.mark.parametrize(
+    "old, new",
+    [
+        ("TABLE {t} PARTITION BY (p)", "TABLE {t} PARTITION BY (p)"),
+        ("ICEBERG TABLE {t}", "ICEBERG TABLE {t}"),
+        ("TABLE {t} PARTITION BY (p)", "TABLE {t}"),
+        ("TABLE {t}", "TABLE {t} CLUSTER BY (id)"),
+    ],
+)
+def test_ctas_replacing_its_own_source_keeps_rows(engine, old, new):
+    """CREATE OR REPLACE TABLE t ... AS SELECT ... FROM t reads the old
+    table's rows before they are removed, whatever kind either table is."""
+    engine.execute(
+        f"CREATE OR REPLACE {old.format(t='srt_t')} AS "
+        "SELECT id, CAST(id % 3 AS INT) AS p FROM range(12) AS r(id)"
+    )
+    engine.execute(f"CREATE OR REPLACE {new.format(t='srt_t')} AS SELECT * FROM srt_t WHERE id < 6")
+    rows = engine.execute("SELECT id, p FROM srt_t ORDER BY id").to_pylist()
+    assert rows == [{"id": i, "p": i % 3} for i in range(6)]
+    engine.execute("DROP TABLE srt_t")
+
+
+def test_hive_partitioned_table_dml_keeps_partitions(engine):
+    """A Spark-DDL PARTITIONED BY table (adoption refuses it) is rewritten
+    whole by DML, and the rewrite keeps its partition columns."""
+    engine.spark.sql("CREATE TABLE hp_t (id BIGINT, p INT) USING parquet PARTITIONED BY (p)")
+    engine.spark.sql("INSERT INTO hp_t SELECT id, CAST(id % 3 AS INT) FROM range(12)")
+    assert engine.execute("DELETE FROM hp_t WHERE id < 3").to_pylist()[0]["rows_deleted"] == 3
+    assert engine.execute("UPDATE hp_t SET id = id + 100 WHERE p = 1").to_pylist()[0][
+        "rows_updated"
+    ] == 3
+    assert "hp_t" not in engine.snap_tables
+    assert [c.name for c in engine.spark.catalog.listColumns("hp_t") if c.isPartition] == ["p"]
+    rows = engine.execute("SELECT id, p FROM hp_t ORDER BY id").to_pylist()
+    assert rows == sorted(
+        ({"id": i + 100 * (i % 3 == 1), "p": i % 3} for i in range(3, 12)), key=lambda r: r["id"]
+    )
+    engine.execute("DROP TABLE hp_t")
+
+
+@pytest.mark.parametrize("kind", ["qualified", "temp"])
+def test_relation_dml_keeps_column_types(engine, kind):
+    """On a table DML rewrites whole, a wider value is cast to its column's
+    type (only an Iceberg table promotes a column)."""
+    t = "rct.s.rct_t" if kind == "qualified" else "rct_temp"
+    engine.execute(
+        _DML_KINDS[kind].format(t=t, q="SELECT CAST(id AS INT) AS i FROM range(3) AS r(id)")
+    )
+    engine.execute(f"UPDATE {t} SET i = i + CAST(10 AS BIGINT) WHERE i = 1")
+    engine.execute(
+        f"MERGE INTO {t} t USING (SELECT CAST(7 AS BIGINT) AS k) s ON t.i = s.k "
+        "WHEN NOT MATCHED THEN INSERT (i) VALUES (s.k)"
+    )
+    tdf = engine.spark.table(engine._resolve_name(t) if kind == "qualified" else t)
+    assert dict(tdf.dtypes)["i"] == "int"
+    assert sorted(r["i"] for r in engine.execute(f"SELECT i FROM {t}").to_pylist()) == [0, 2, 7, 11]
+    engine.execute(f"DROP TABLE {t}")
+
+
+def test_dml_target_columns_resolve_case_insensitively(engine):
+    """UPDATE SET, MERGE UPDATE SET and MERGE INSERT (cols) name target
+    columns case-insensitively, cast each value to the column's type, and
+    reject an unknown name."""
+    from universql_spark.engine import QueryError
+
+    engine.execute(
+        "CREATE OR REPLACE ICEBERG TABLE rc_t AS "
+        "SELECT id, CAST(id AS DOUBLE) AS v FROM range(4) AS r(id)"
+    )
+    assert engine.execute("UPDATE rc_t SET V = 7 WHERE id = 1").to_pylist()[0]["rows_updated"] == 1
+    engine.execute(
+        "MERGE INTO rc_t t USING (SELECT id, 'x' AS s FROM range(2, 6) AS r(id)) s "
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET \"V\" = 9 "
+        "WHEN NOT MATCHED THEN INSERT (ID, V) VALUES (s.id, s.id * 10)"
+    )
+    rows = {r["id"]: r["v"] for r in engine.execute("SELECT id, v FROM rc_t").to_pylist()}
+    assert rows == {0: 0.0, 1: 7.0, 2: 9.0, 3: 9.0, 4: 40.0, 5: 50.0}
+    assert dict(engine.spark.table("rc_t").dtypes)["v"] == "double"
+    for bad in (
+        "UPDATE rc_t SET nosuch = 1",
+        "MERGE INTO rc_t t USING rc_t s ON t.id = s.id WHEN MATCHED THEN UPDATE SET nosuch = 1",
+        "MERGE INTO rc_t t USING rc_t s ON t.id = s.id "
+        "WHEN NOT MATCHED THEN INSERT (id, nosuch) VALUES (s.id, 1)",
+    ):
+        with pytest.raises(QueryError, match="nosuch"):
+            engine.execute(bad)
+    engine.execute("DROP TABLE rc_t")
+
+
+def test_merge_when_clauses_with_parentheses(engine):
+    """WHEN clauses parse around parentheses, CASE ... END and literals; a
+    clause list with text no clause consumes is an error, not a no-op."""
+    from universql_spark.engine import QueryError
+
+    engine.execute(
+        "CREATE OR REPLACE ICEBERG TABLE mp_t AS "
+        "SELECT id, CAST(id AS DOUBLE) AS v, 'a' AS s FROM range(3) AS r(id)"
+    )
+    engine.execute(
+        "CREATE OR REPLACE TABLE mp_s AS SELECT id, id + 1 AS w FROM range(1, 5) AS r(id)"
+    )
+    out = engine.execute(
+        "MERGE INTO mp_t t USING mp_s s ON t.id = s.id "
+        "WHEN MATCHED AND s.w > 2 THEN UPDATE SET v = CASE WHEN s.w > 2 THEN 1 ELSE 2 END, "
+        "s = 'when (x) then' "
+        "WHEN NOT MATCHED AND s.w IN (4, 5) THEN INSERT (id, v, s) "
+        "VALUES (s.id, CAST(s.w AS DOUBLE), CONCAT('n', CAST(s.w AS STRING)))"
+    ).to_pylist()[0]
+    assert out["rows_inserted"] == 2
+    rows = {r["id"]: (r["v"], r["s"]) for r in engine.execute("SELECT * FROM mp_t").to_pylist()}
+    assert rows == {
+        0: (0.0, "a"), 1: (1.0, "a"), 2: (1.0, "when (x) then"), 3: (4.0, "n4"), 4: (5.0, "n5"),
+    }
+    # parenthesized ON and AND conditions
+    engine.execute(
+        "MERGE INTO mp_t t USING mp_s s ON (t.id = s.id) WHEN MATCHED AND (s.w = 5) THEN DELETE"
+    )
+    for bad in (
+        "MERGE INTO mp_t t USING mp_s s ON t.id = s.id "
+        "WHEN NOT MATCHED THEN INSERT (id) VALUES (s.id) AND MORE",
+        "MERGE INTO mp_t t USING mp_s s ON t.id = s.id WHEN MATCHED THEN DELETE NOW",
+        "MERGE INTO mp_t t USING mp_s s ON t.id = s.id WHEN MATCHED UPDATE SET v = 1",
+    ):
+        with pytest.raises(QueryError):
+            engine.execute(bad)
+    assert sorted(r["id"] for r in engine.execute("SELECT id FROM mp_t").to_pylist()) == [0, 1, 2, 3]
+    engine.execute("DROP TABLE mp_t; DROP TABLE mp_s")
+
+
+def test_temp_ctas_holds_data(engine):
+    """CREATE TEMP TABLE ... AS SELECT stores the rows it selected: a later
+    change to the source does not show through."""
+    engine.execute("CREATE OR REPLACE TABLE tcs_src AS SELECT 1 AS v UNION ALL SELECT 2")
+    engine.execute("CREATE OR REPLACE TEMP TABLE tcs_t AS SELECT v FROM tcs_src")
+    engine.execute("INSERT INTO tcs_src SELECT 3")
+    assert engine.execute("SELECT COUNT(*) AS n FROM tcs_t").to_pylist() == [{"n": 2}]
+    engine.execute("DROP TABLE tcs_t; DROP TABLE tcs_src")
+
+
+def test_temp_table_merge_stays_temporary(engine):
+    """MERGE into a TEMP table replaces its rows and keeps it a TEMP table."""
+    engine.execute("CREATE OR REPLACE TEMP TABLE tm_t AS SELECT 1 AS id, 'a' AS v")
+    out = engine.execute(
+        "MERGE INTO tm_t t USING (SELECT 1 AS id, 'b' AS v UNION ALL SELECT 2, 'c') s "
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
+    ).to_pylist()
+    assert out == [{"rows_affected": 2, "rows_inserted": 1}]
+    assert [t.isTemporary for t in engine.spark.catalog.listTables() if t.name == "tm_t"] == [True]
+    rows = engine.execute("SELECT id, v FROM tm_t ORDER BY id").to_pylist()
+    assert rows == [{"id": 1, "v": "b"}, {"id": 2, "v": "c"}]
+    engine.execute("DROP TABLE tm_t")
+
+
+@pytest.mark.parametrize("name", ["qi1.s.ice_q", "qi2.ice_q"])
+@pytest.mark.parametrize(
+    "create", ["ICEBERG TABLE {n}", "TABLE {n} PARTITION BY (x)", "TABLE {n} CLUSTER BY (x)"]
+)
+def test_qualified_iceberg_name_rejected(engine, name, create):
+    """Iceberg tables (and so partitioned or clustered ones) are keyed by
+    their bare name, so a qualified name would alias another database's
+    table: it is an error, never a table created without its layout."""
+    from universql_spark.engine import QueryError
+
+    with pytest.raises(QueryError, match="qualified"):
+        engine.execute(f"CREATE OR REPLACE {create.format(n=name)} AS SELECT 1 AS x")
+    assert "ice_q" not in engine.snap_tables
+    assert not engine.spark.catalog.tableExists(engine._resolve_name(name))
 
 
 def test_qualify_anded_window_predicates(engine):
@@ -4468,7 +4700,8 @@ def test_quantified_subquery_comparisons(engine):
 def test_temp_table_dml(engine):
     """Snowflake temp tables (CREATE TEMP TABLE AS SELECT) take
     INSERT/DELETE/UPDATE: the view-backed table re-materializes
-    (localCheckpoint) per DML — data semantics, not a live query."""
+    (localCheckpoint) per DML — data semantics, not a live query. DELETE
+    and UPDATE report the same rows_* counts as every other table."""
     engine.execute("CREATE OR REPLACE TEMP TABLE tdml AS SELECT 1 AS v, 'a' AS s")
     assert engine.execute("INSERT INTO tdml SELECT 2, 'b'").to_pylist() == [
         {"number of rows inserted": 1}
@@ -4484,9 +4717,9 @@ def test_temp_table_dml(engine):
     ).to_pylist() == [{"n": 6, "sv": 15}]
     assert engine.execute(
         "UPDATE tdml SET v = v * 10 WHERE s IN ('a','b')"
-    ).to_pylist() == [{"number of rows updated": 2}]
+    ).to_pylist() == [{"rows_updated": 2}]
     assert engine.execute("DELETE FROM tdml WHERE v IS NULL").to_pylist() == [
-        {"number of rows deleted": 1}
+        {"rows_deleted": 1}
     ]
     rows = engine.execute("SELECT v, s FROM tdml ORDER BY s").to_pylist()
     assert rows == [

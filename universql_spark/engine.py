@@ -2386,47 +2386,8 @@ class Engine:
                     named_formats=self.file_formats,
                     default_format=default_fmt,
                 )
-            if _DELETE_RE.match(stmt):
-                sql = snowflake_to_spark(stmt)
-                snap = self._snap_target(engine_dml._DELETE_RE, sql) or self._adopt_for_dml(
-                    engine_dml._DELETE_RE, sql
-                )
-                if snap:
-                    out = engine_dml.execute_delete_snap(self.spark, sql, snap[1])
-                    self._refresh_snap_view(snap[0])
-                    return out
-                dm2 = engine_dml._DELETE_RE.match(sql)
-                if dm2 and self._is_temp_ctas(dm2.group(1)):
-                    return self._temp_delete(dm2)
-                return engine_dml.execute_delete(self.spark, sql, resolve=self._resolve_name)
-            if _UPDATE_RE.match(stmt):
-                sql = snowflake_to_spark(stmt)
-                snap = self._snap_target(engine_dml._UPDATE_RE, sql) or self._adopt_for_dml(
-                    engine_dml._UPDATE_RE, sql
-                )
-                if snap:
-                    out = engine_dml.execute_update_snap(self.spark, sql, snap[1])
-                    self._refresh_snap_view(snap[0])
-                    return out
-                um2 = engine_dml._UPDATE_RE.match(sql)
-                if um2 and self._is_temp_ctas(um2.group(1)):
-                    return self._temp_update(um2)
-                return engine_dml.execute_update(self.spark, sql, resolve=self._resolve_name)
-            if _MERGE_RE.match(stmt):
-                sql = snowflake_to_spark(stmt)
-                # inline USING (subquery) -> named temp view FIRST, so
-                # snap-target detection sees the named-source grammar
-                sql = engine_dml._lift_subquery_source(self.spark, sql)
-                snap = self._snap_target(engine_dml._MERGE_RE, sql) or self._adopt_for_dml(
-                    engine_dml._MERGE_RE, sql
-                )
-                if snap:
-                    out = engine_dml.execute_merge_snap(
-                        self.spark, sql, snap[1], read_table=self._read_table
-                    )
-                    self._refresh_snap_view(snap[0])
-                    return out
-                return engine_dml.execute_merge(self.spark, sql, resolve=self._resolve_name)
+            if _DELETE_RE.match(stmt) or _UPDATE_RE.match(stmt) or _MERGE_RE.match(stmt):
+                return self._dml(stmt)
             return self._run_select(stmt).toArrow()
         except QueryError:
             raise
@@ -3242,12 +3203,13 @@ class Engine:
         re.I | re.S,
     )
 
-    # -- temp-CTAS table DML ------------------------------------------------
-    # CREATE TEMP TABLE AS SELECT lands as a session temp view; Snowflake
-    # temp tables nevertheless take INSERT/DELETE/UPDATE. These re-derive
-    # the view and re-materialize it (localCheckpoint) so the table holds
-    # DATA (not a live query): repeated DML neither deepens the lazy plan
-    # nor re-evaluates non-deterministic sources.
+    # -- TEMP tables --------------------------------------------------------
+    # CREATE TEMP TABLE AS SELECT lands as a session temp view over
+    # materialized rows (localCheckpoint), so the table holds DATA, not a
+    # live query. INSERT re-derives the view here; DELETE/UPDATE/MERGE run
+    # in engine_dml with `_temp_register` as their final replace. Either
+    # way repeated DML neither deepens the lazy plan nor re-evaluates
+    # non-deterministic sources.
 
     def _is_temp_ctas(self, name: str) -> bool:
         bn = bare_name(name)
@@ -3301,45 +3263,6 @@ class Engine:
         self._temp_register(bn, tdf.unionByName(df))
         after = self.spark.table(bn).count()
         return pa.table({"number of rows inserted": [after - before]})
-
-    def _temp_delete(self, m: re.Match) -> pa.Table:
-        bn = bare_name(m.group(1))
-        before = self.spark.table(bn).count()
-        cond = (m.group(2) or "").strip()
-        if cond:
-            new = self.spark.sql(
-                f"SELECT * FROM {bn} WHERE NOT coalesce(({cond}), false)"
-            )
-        else:
-            new = self.spark.table(bn).limit(0)
-        self._temp_register(bn, new)
-        after = self.spark.table(bn).count()
-        return pa.table({"number of rows deleted": [before - after]})
-
-    def _temp_update(self, m: re.Match) -> pa.Table:
-        bn = bare_name(m.group(1))
-        tdf = self.spark.table(bn)
-        ttypes = dict(tdf.dtypes)
-        assigns = {
-            c.strip().strip('"').lower(): e
-            for c, e in engine_dml._split_assignments(m.group(2))
-        }
-        unknown = [c for c in assigns if c not in {x.lower() for x in tdf.columns}]
-        if unknown:
-            raise QueryError(f"UPDATE {bn}: unknown column(s) {unknown}")
-        cond = (m.group(3) or "TRUE").strip()
-        proj = ", ".join(
-            f"CASE WHEN coalesce(({cond}), false) THEN CAST(({assigns[c.lower()]}) AS {ttypes[c]}) "
-            f"ELSE `{c}` END AS `{c}`"
-            if c.lower() in assigns
-            else f"`{c}`"
-            for c in tdf.columns
-        )
-        n = self.spark.sql(
-            f"SELECT COUNT(*) FROM {bn} WHERE coalesce(({cond}), false)"
-        ).first()[0]
-        self._temp_register(bn, self.spark.sql(f"SELECT {proj} FROM {bn}"))
-        return pa.table({"number of rows updated": [n]})
 
     def _insert_multi(self, mode: str, clauses: str, select: str) -> pa.Table:
         """Snowflake multi-table INSERT ALL|FIRST: the source SELECT runs
@@ -3998,6 +3921,45 @@ class Engine:
         base = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
         return os.path.join(base.replace("file:", ""), "_snap", bare_name(name))
 
+    def _dml(self, stmt: str) -> pa.Table:
+        """DELETE / UPDATE / MERGE: engine_dml evaluates the statement once;
+        only the target's final write depends on its kind (`_dml_target`)."""
+        sql = snowflake_to_spark(stmt)
+        if _MERGE_RE.match(stmt):
+            # inline USING (subquery) -> named temp view FIRST, so target
+            # detection sees the named-source grammar
+            sql = engine_dml._lift_subquery_source(self.spark, sql)
+            name, table = self._dml_target(engine_dml._MERGE_RE, sql)
+            out = engine_dml.execute_merge(self.spark, sql, table, read_table=self._read_table)
+        elif _UPDATE_RE.match(stmt):
+            name, table = self._dml_target(engine_dml._UPDATE_RE, sql)
+            out = engine_dml.execute_update(self.spark, sql, table)
+        else:
+            name, table = self._dml_target(engine_dml._DELETE_RE, sql)
+            out = engine_dml.execute_delete(self.spark, sql, table)
+        if name is not None:
+            self._refresh_snap_view(name)
+        return out
+
+    def _dml_target(self, pattern: re.Pattern, sql: str):
+        """(snapshot-table name | None, target) of a DML statement: a
+        snapshot table (a plain one is adopted on its first DML), else an
+        `engine_dml.Relation` replaced whole — a TEMP table by
+        re-registering its view, a catalog table by a shadow swap."""
+        m = pattern.match(sql)
+        if not m:
+            raise QueryError(f"unsupported {sql.split(None, 1)[0].upper()} syntax: {sql[:120]}")
+        snap = self._snap_target(pattern, sql) or self._adopt_for_dml(pattern, sql)
+        if snap:
+            return snap
+        if self._is_temp_ctas(m.group(1)):
+            bn = bare_name(m.group(1))
+            return None, engine_dml.Relation(bn, lambda df: self._temp_register(bn, df))
+        resolved = self._resolve_name(m.group(1))
+        return None, engine_dml.Relation(
+            resolved, lambda df: engine_dml._replace_table(self.spark, resolved, df)
+        )
+
     def _snap_target(self, pattern: re.Pattern, sql: str):
         """(name, SnapshotTable) when the statement's target is one."""
         m = pattern.match(sql)
@@ -4016,10 +3978,10 @@ class Engine:
         itself is metadata-scale: the table's existing parquet files are
         MOVED (same-filesystem rename) under the table root and referenced
         as snapshot 1 — zero bytes of data rewritten; the manifests read
-        only the files' footers. Partitioned tables keep the
-        partition-granular dynamic-overwrite path (their hive files lack
-        the partition columns); qualified (non-default-namespace) tables
-        keep the shadow swap (snap_tables is keyed by bare name)."""
+        only the files' footers. Hive-partitioned catalog tables (their
+        files lack the partition columns) and qualified (non-default-
+        namespace) tables stay whole relations (snap_tables is keyed by
+        bare name)."""
         m = pattern.match(sql)
         if not m:
             return None
@@ -4285,12 +4247,12 @@ class Engine:
             k.upper(): v
             for k, v in _CTAS_PROP_RE.findall((m.group(5) or "") + (m.group(8) or ""))
         }
-        # PARTITION BY / CLUSTER BY: on plain tables both map to a
-        # hive-partitioned layout — the unit of copy-on-write DML
-        # (engine_dml) and of partition pruning. On Iceberg targets the
-        # keyword matters: PARTITION BY records an identity partition spec
-        # (per-file partition tuples + manifest pruning), CLUSTER BY
-        # range-clusters the write and records the sort order.
+        # PARTITION BY records an identity partition spec (per-file
+        # partition tuples + manifest pruning), CLUSTER BY range-clusters
+        # the write and records the sort order. Either makes the table an
+        # Iceberg table from its CREATE, so its DML is the file-granular
+        # copy-on-write every snapshot table takes. Snapshot tables are
+        # keyed by bare name, so a qualified name takes neither.
         pkind = (m.group(6) or "").upper()
         from universql_spark.dialect import _split_top_args  # noqa: PLC0415
 
@@ -4299,10 +4261,11 @@ class Engine:
             for c in _split_top_args(m.group(7) or "")
             if c.strip()
         ]
-        if pcols and not bool(m.group(3)) and any("(" in c for c in pcols):
+        if (iceberg or pcols) and not temp and len(split_ident(name)) > 1:
+            what = "ICEBERG" if iceberg else f"{pkind} BY"
             raise QueryError(
-                "partition TRANSFORMS (day/month/year/hour/truncate) require an "
-                "ICEBERG table; plain tables take bare partition columns"
+                f"{what} table {name}: Iceberg tables are keyed by their bare "
+                "name, so a database- or schema-qualified name is not supported"
             )
         select = select.strip()
         # CREATE TABLE t AS (SELECT ...) — strip wrapping parens, but only a
@@ -4323,7 +4286,14 @@ class Engine:
                 break
             select = select[1:-1].strip()
         df = self._run_select(select)
-        if iceberg and not temp:
+        bn = bare_name(name)
+        if temp:
+            # session-scoped, like the reference's TEMP CTAS (duckdb.py:336-342)
+            self._temp_register(bn, df)
+            self._temp_ctas.add(bn)
+            return _status(f"created {name}")
+        to_iceberg = iceberg or bool(pcols)
+        if to_iceberg:
             # CREATE ICEBERG TABLE -> real Iceberg v2 metadata
             # (iceberg_format.py: metadata.json + Avro manifest lists +
             # manifests, written pure-Python) over file-granular COW DML and
@@ -4331,7 +4301,6 @@ class Engine:
             # (duckdb.py:274-334) without the jar
             from universql_spark.iceberg_format import IcebergTable
 
-            bn = bare_name(name)
             self._reclaim_dropped(bn)
             # EXTERNAL_VOLUME + BASE_LOCATION place the table in the
             # volume's lake path (the reference's table_location resolution,
@@ -4355,10 +4324,30 @@ class Engine:
                     "BASE_LOCATION requires EXTERNAL_VOLUME (it is relative "
                     "to the volume's STORAGE_BASE_URL)"
                 )
-            # PARTITION/CLUSTER BY on an Iceberg target = clustering keys:
-            # range-cluster the write + record the Iceberg sort order, so
-            # manifest bounds on those columns become disjoint and
-            # plan_files() can skip whole files on cluster-key predicates
+        # A table of either kind already named bn is replaced, with OR
+        # REPLACE only. A snapshot table's files go before the write, so the
+        # query, which may read them (CREATE ... AS SELECT ... FROM itself),
+        # is materialized first; a plain catalog table under an Iceberg
+        # CTAS is dropped after the write. A plain table replaced by a plain
+        # one is the catalog write's own overwrite.
+        db = self.spark.catalog.currentDatabase()
+        old = self.snap_tables.get(bn)
+        plain = to_iceberg and old is None and self.spark.catalog.tableExists(f"{db}.{bn}")
+        if (old is not None or plain) and not replace:
+            raise QueryError(f"table {bn} already exists", sql_state="42P07")
+        if old is not None:
+            import shutil  # noqa: PLC0415
+
+            df = df.localCheckpoint(eager=True)
+            del self.snap_tables[bn]
+            self._dynamic_meta.pop(bn, None)  # CTAS over a dynamic table demotes it
+            self.spark.catalog.dropTempView(bn)
+            shutil.rmtree(old.root, ignore_errors=True)
+        if to_iceberg:
+            # CLUSTER BY = clustering keys: range-cluster the write + record
+            # the Iceberg sort order, so manifest bounds on those columns
+            # become disjoint and plan_files() can skip whole files on
+            # cluster-key predicates. PARTITION BY = identity partition spec.
             snap = IcebergTable.create(
                 root,
                 df if pcols else right_sized(df),
@@ -4366,8 +4355,9 @@ class Engine:
                 cluster_by=pcols if pcols and pkind == "CLUSTER" else None,
                 partition_by=pcols if pcols and pkind == "PARTITION" else None,
             )
+            if plain:
+                self.spark.sql(f"DROP TABLE `{db}`.`{bn}`")
             self.snap_tables[bn] = snap
-            self._dynamic_meta.pop(bn, None)  # CTAS over a dynamic table demotes it
             self._refresh_snap_view(bn)
             if self.catalog_sync is not None:
                 # write-back AFTER the local commit is durable: the catalog
@@ -4375,65 +4365,43 @@ class Engine:
                 # failed sync leaves a valid local table + a clear error
                 self.catalog_sync(bn, snap._version_path(snap.current_version()))
             return _status(f"created iceberg {name}")
-        if temp:
-            # session-scoped, like the reference's TEMP CTAS (duckdb.py:336-342)
-            df.createOrReplaceTempView(bare_name(name))
-            self._temp_ctas.add(bare_name(name))
-        else:
-            bn = bare_name(name)
-            if bn in self.snap_tables:
-                # plain CTAS over a snapshot/adopted table: demote it, or the
-                # stale temp view would shadow the new catalog table
-                if not replace:
-                    raise QueryError(f"table {bn} already exists", sql_state="42P07")
-                import shutil  # noqa: PLC0415
+        resolved = self._resolve_name(name)
+        if "." in resolved:
+            # qualified create: make the (mangled) database real first, so
+            # db1.s.t and db2.s.t land in distinct namespaces
+            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {resolved.rsplit('.', 1)[0]}")
+        writer = df.write.mode("overwrite" if replace else "errorifexists")
+        try:
+            writer.saveAsTable(resolved)
+        except Exception as e:
+            # LOCATION_ALREADY_EXISTS: a previous process's in-memory
+            # catalog died but its managed-table directory survived.
+            # THIS process's catalog is not cross-process truth, though
+            # (ADVICE r7): another live engine sharing the warehouse
+            # dir may own that location right now, and reclaiming would
+            # delete its data. warehouse_guard's pid registry decides —
+            # reclaim + retry only when we are the sole live engine
+            # (the single-process crash-recovery UX, which is the
+            # common case); surface the original error otherwise.
+            if "LOCATION_ALREADY_EXISTS" in str(e):
+                from universql_spark import warehouse_guard  # noqa: PLC0415
 
-                old = self.snap_tables.pop(bn)
-                self._dynamic_meta.pop(bn, None)
-                self.spark.catalog.dropTempView(bn)
-                # df may read from the old table's files (CREATE ... AS
-                # SELECT ... FROM itself): materialize before the rmtree
-                df = df.localCheckpoint(eager=True)
-                shutil.rmtree(old.root, ignore_errors=True)
-            resolved = self._resolve_name(name)
-            if "." in resolved:
-                # qualified create: make the (mangled) database real first, so
-                # db1.s.t and db2.s.t land in distinct namespaces
-                self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {resolved.rsplit('.', 1)[0]}")
-            writer = df.write.mode("overwrite" if replace else "errorifexists")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            try:
-                writer.saveAsTable(resolved)
-            except Exception as e:
-                # LOCATION_ALREADY_EXISTS: a previous process's in-memory
-                # catalog died but its managed-table directory survived.
-                # THIS process's catalog is not cross-process truth, though
-                # (ADVICE r7): another live engine sharing the warehouse
-                # dir may own that location right now, and reclaiming would
-                # delete its data. warehouse_guard's pid registry decides —
-                # reclaim + retry only when we are the sole live engine
-                # (the single-process crash-recovery UX, which is the
-                # common case); surface the original error otherwise.
-                if "LOCATION_ALREADY_EXISTS" in str(e):
-                    from universql_spark import warehouse_guard  # noqa: PLC0415
-
-                    lm = re.search(r"location 'file:([^']+)'", str(e))
-                    # owned=replace: OR REPLACE claims the name, so the
-                    # orphan is reclaimed even with other live engines
-                    # (replacement IS the requested semantic); errorifexists
-                    # reclaims only as the sole live engine
-                    if lm and warehouse_guard.reclaim_orphan(
-                        self.spark, lm.group(1), owned=replace
-                    ):
-                        writer.saveAsTable(resolved)
-                    else:
-                        raise
+                lm = re.search(r"location 'file:([^']+)'", str(e))
+                # owned=replace: OR REPLACE claims the name, so the
+                # orphan is reclaimed even with other live engines
+                # (replacement IS the requested semantic); errorifexists
+                # reclaims only as the sole live engine
+                if lm and warehouse_guard.reclaim_orphan(
+                    self.spark, lm.group(1), owned=replace
+                ):
+                    writer.saveAsTable(resolved)
                 else:
                     raise
-            parts = [p.lower() for p in split_ident(name)]
-            if len(parts) >= 3:
-                self.qualified_tables.add((parts[-3], parts[-2], parts[-1]))
+            else:
+                raise
+        parts = [p.lower() for p in split_ident(name)]
+        if len(parts) >= 3:
+            self.qualified_tables.add((parts[-3], parts[-2], parts[-1]))
         return _status(f"created {name}")
 
 

@@ -1,39 +1,34 @@
-"""DELETE / UPDATE / MERGE on parquet-backed managed tables.
+"""DELETE / UPDATE / MERGE: one evaluation for every table kind.
 
 The reference's README support matrix declares MERGE/DELETE (SURVEY.md §2.2;
-its own tests for them are all @skip — transform.py:6-25). With an Iceberg
-catalog these are native Spark SQL (`MERGE INTO` / `DELETE FROM` on v2
-tables); this container has no Iceberg runtime jar, so managed parquet
-tables get the copy-on-write equivalent — at the same granularity Iceberg's
-copy-on-write operates at: the files that actually hold affected rows.
+its own tests for them are all @skip — transform.py:6-25) and keeps every
+table as a catalog-managed Iceberg table (warehouse/duckdb.py:274-334). Here
+a statement is parsed, its target columns resolved and its new rows derived
+once, whatever the target; only the final write depends on the table kind:
 
-Two paths, chosen by the table's layout:
+**Snapshot tables** (`tableformat.SnapshotTable`) — Iceberg v2 tables:
+`CREATE ICEBERG TABLE`, every unqualified `CREATE TABLE ... PARTITION BY |
+CLUSTER BY ... AS` (identity partition spec or sort order), and plain
+unpartitioned tables, adopted on their first DML. File-granular
+copy-on-write: one grouped targeting job finds the data files holding
+matched rows (a partitioned table's files each hold one partition tuple),
+and only those are rewritten, with a MERGE's inserts, in one commit.
 
-**Partitioned tables (CTAS ... PARTITION BY/CLUSTER BY)** — partition-
-granular copy-on-write, the Iceberg/Hive-native mechanism
-(`/root/reference/universql/warehouse/duckdb.py:274-334` CTAS->Iceberg is
-the reference's analogue):
-    1. compute the AFFECTED partition set (distinct partition values of
-       matched rows — a narrow aggregate, metadata-scale)
-    2. rebuild only those partitions' rows (semi-join against the affected
-       set, so the scan prunes to those partitions)
-    3. stage via localCheckpoint (breaks lineage -> no read-overwrite
-       conflict; only affected-partition data is materialized)
-    4. dynamic partition overwrite (`partitionOverwriteMode=dynamic`)
-       replaces exactly the partitions present in the staged frame;
-       partitions whose rows all vanished are dropped by ALTER TABLE
-       (a metadata op on a driver-collected, manifest-sized value list)
-    5. MERGE inserts never rewrite anything — they APPEND new files into
-       their partitions.
-A 1-row MERGE/DELETE/UPDATE therefore rewrites one partition, not the
-table (tests/test_engine.py::test_partitioned_merge_rewrites_one_partition
-pins this by file mtimes). UPDATE/MERGE falls back to the full path if an
-assignment writes a partition column (the row would migrate partitions).
+**Relations** (`Relation`) — targets that stay plain: qualified
+`db.schema.t` catalog tables, TEMP tables, and tables adoption refuses
+(Spark-DDL `PARTITIONED BY` tables among them). The statement computes the
+table's whole new contents and `Relation.replace` swaps them in: a shadow
+table + DROP/RENAME for a catalog table (`_replace_table`, which keeps its
+partition columns), a re-materialized temp view for a TEMP table. Values
+are cast to the columns' types, so a Relation's schema never changes.
 
-**Unpartitioned tables** — whole-table shadow-swap:
-    read table -> compute surviving/updated rows -> write to a shadow table
-    -> atomic-ish swap (DROP + RENAME)
-the same cost profile as copy-on-write on an unpartitioned Iceberg table.
+Rules written once, here, for both:
+  - DELETE keeps the rows whose condition is NULL (`NOT coalesce(c, false)`);
+  - a target column name (UPDATE SET, MERGE UPDATE SET, MERGE INSERT (cols))
+    matches the table's columns case-insensitively, an unknown one is a
+    QueryError, and each value takes its column's type (`_typed_values`);
+  - WHEN clauses are parsed paren- and CASE-aware, and text no clause
+    consumes is an error.
 
 Supported grammar (documented subset, QueryError beyond it):
   DELETE FROM t WHERE <cond>
@@ -48,33 +43,42 @@ clauses of either kind.
 from __future__ import annotations
 
 import re
+from functools import reduce
+from typing import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from universql_spark.dialect import _match_paren, _split_top_args
-from universql_spark.names import bare_name, resolve_name
-from universql_spark.tableformat import NondeterministicMergeError, estimated_bytes
+from universql_spark.dialect import _STRING_RE, _match_paren, _split_top_args
+from universql_spark.names import bare_name
+from universql_spark.tableformat import (
+    NondeterministicMergeError,
+    _promotion,
+    apply_assignments,
+    delete_survivors,
+    estimated_bytes,
+    merged_rows,
+)
 
 _DELETE_RE = re.compile(r"^\s*DELETE\s+FROM\s+([\w.\"]+)(?:\s+WHERE\s+(.*))?$", re.I | re.S)
 _UPDATE_RE = re.compile(r"^\s*UPDATE\s+([\w.\"]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$", re.I | re.S)
 _MERGE_RE = re.compile(
     r"^\s*MERGE\s+INTO\s+([\w.\"]+)(?:\s+AS)?(?:\s+(\w+))?\s+USING\s+([\w.\"]+)(?:\s+AS)?(?:\s+(\w+))?"
-    r"\s+ON\s+(.*?)(\s+WHEN\s+.*)$",
+    r"\s+ON\b\s*(.*)$",
     re.I | re.S,
 )
-#: one WHEN clause: [NOT] MATCHED [AND <cond>] THEN <action>, scanned in
-#: statement order — first-true-clause-wins semantics (SQL standard / the
-#: reference's Snowflake dialect)
-_WHEN_CLAUSE_RE = re.compile(
-    r"WHEN\s+(NOT\s+)?MATCHED\s*(?:\s+AND\s+(.*?))?\s*THEN\s+"
-    r"(UPDATE\s+SET\s+.*?|DELETE|INSERT\s*(?:\([^)]*\)\s*VALUES\s*\([^)]*\)|\*))"
-    r"(?=\s+WHEN\s+|\s*$)",
-    re.I | re.S,
-)
-_INSERT_ACTION_RE = re.compile(r"INSERT\s*(?:\(([^)]*)\)\s*VALUES\s*\(([^)]*)\)|\*)", re.I | re.S)
 _USING_PAREN_RE = re.compile(r"\bUSING\s*\(", re.I)
+#: words that structure a WHEN-clause list, and parentheses (depth)
+_CLAUSE_TOKEN_RE = re.compile(r"[()]|\b(?:CASE|END|WHEN|THEN)\b", re.I)
+_WHEN_HEAD_RE = re.compile(r"^WHEN\s+(NOT\s+)?MATCHED(?:\s+AND\b\s*(.*?))?\s*$", re.I | re.S)
+
+
+def _error(message: str) -> Exception:
+    from universql_spark.engine import QueryError  # noqa: PLC0415
+
+    return QueryError(message)
 
 
 def _lift_subquery_source(spark: SparkSession, stmt: str) -> str:
@@ -93,35 +97,218 @@ def _lift_subquery_source(spark: SparkSession, stmt: str) -> str:
     return f"{stmt[:m.start()]}USING {view} {stmt[close + 1:]}"
 
 
-def _split_assignments(s: str) -> list[tuple[str, str]]:
-    """'a = x, b = f(y, z)' -> [(a, x), (b, f(y, z))] — comma split at depth 0."""
-    parts, depth, buf = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    out = []
-    for p in parts:
-        col, expr = p.split("=", 1)
-        out.append((col.strip().strip('"'), expr.strip()))
+# ---------------------------------------------------------------------------
+# target columns
+# ---------------------------------------------------------------------------
+
+
+def _target_columns(columns: list[str], pairs: list[tuple[str, str]], what: str) -> dict[str, str]:
+    """[(name, value)] -> {table column: value}. Names match the target's
+    columns case-insensitively (Snowflake identifiers); an unknown name is
+    a QueryError, never a silently dropped assignment."""
+    by_lower = {c.lower(): c for c in columns}
+    out = {}
+    for name, value in pairs:
+        col = by_lower.get(name.strip().strip('"`').lower())
+        if col is None:
+            raise _error(f"{what}: invalid identifier '{name.strip()}'")
+        out[col] = value
     return out
 
 
+def _split_assignments(s: str) -> list[tuple[str, str]]:
+    """'a = x, b = f(y, z)' -> [(a, x), (b, f(y, z))] — comma split at depth
+    0 outside literals."""
+    out = []
+    for part in _split_top_args(s):
+        col, eq, expr = part.partition("=")
+        if not eq:
+            raise _error(f"cannot parse assignment '{part.strip()}'")
+        out.append((col.strip(), expr.strip()))
+    return out
+
+
+def _typed_values(
+    frame: DataFrame, values: dict[str, str], schema: T.StructType, promote: bool
+) -> dict[str, str]:
+    """Each assigned value (SQL text, evaluated over `frame`) in its target
+    column's type. With `promote` (a snapshot-table target), a value whose
+    type is a legal Iceberg promotion of the column's (int -> long, float ->
+    double, wider decimal) keeps it: the write promotes the column
+    (SnapshotTable._conform). Any other value is cast, so a Relation's
+    columns keep their types."""
+    if not values:
+        return values
+    got = frame.select(*[F.expr(v).alias(c) for c, v in values.items()]).schema
+    want = {f.name: f.dataType for f in schema.fields}
+    return {
+        f.name: values[f.name]
+        if f.dataType == want[f.name] or (promote and _promotion(want[f.name], f.dataType))
+        else f"CAST(({values[f.name]}) AS {want[f.name].simpleString()})"
+        for f in got.fields
+    }
+
+
+# ---------------------------------------------------------------------------
+# MERGE WHEN clauses
+# ---------------------------------------------------------------------------
+
+
+def _clause_starts(text: str) -> tuple[list[int], list[int]]:
+    """Offsets of the WHEN and THEN keywords that structure a clause list:
+    outside literals, parentheses and CASE ... END."""
+    masked = _STRING_RE.sub(lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", text)
+    depth = case = 0
+    whens: list[int] = []
+    thens: list[int] = []
+    for m in _CLAUSE_TOKEN_RE.finditer(masked):
+        tok = m.group(0).upper()
+        if tok == "(":
+            depth += 1
+        elif tok == ")":
+            depth -= 1
+        elif depth:
+            continue
+        elif tok == "CASE":
+            case += 1
+        elif tok == "END":
+            case -= 1
+        elif not case:
+            (whens if tok == "WHEN" else thens).append(m.start())
+    return whens, thens
+
+
+def _split_on_clause(text: str) -> tuple[str, str]:
+    """'<on cond> WHEN ...' -> (on cond, clause list)."""
+    whens, _thens = _clause_starts(text)
+    if not whens:
+        raise _error("MERGE needs at least one WHEN clause")
+    return text[: whens[0]].strip(), text[whens[0] :]
+
+
+def _insert_action(action: str, columns: list[str]) -> dict[str, str]:
+    """'INSERT (cols) VALUES (vals)' -> {table column: value};
+    'INSERT *' -> every column from the same-named source column."""
+    rest = action[len("INSERT") :].lstrip()
+    if rest == "*":
+        return {c: f"`{c}`" for c in columns}
+    if rest.startswith("("):
+        close = _match_paren(rest, 0)
+        names, rest = _split_top_args(rest[1:close]), rest[close + 1 :].lstrip()
+        vm = re.match(r"VALUES\s*\(", rest, re.I)
+        if vm:
+            close = _match_paren(rest, vm.end() - 1)
+            vals, rest = _split_top_args(rest[vm.end() : close]), rest[close + 1 :].strip()
+            if not rest and len(names) == len(vals):
+                return _target_columns(
+                    columns, list(zip(names, (v.strip() for v in vals))), "MERGE INSERT"
+                )
+    raise _error(f"unsupported MERGE insert action: {action[:80]}")
+
+
+def _parse_when_clauses(text: str, columns: list[str]) -> tuple[list, list]:
+    """Ordered clause lists with target columns resolved: matched ->
+    (cond|None, {column: value} | None for DELETE), not-matched ->
+    (cond|None, {column: value})."""
+    whens, thens = _clause_starts(text)
+    matched: list[tuple[str | None, dict[str, str] | None]] = []
+    inserts: list[tuple[str | None, dict[str, str]]] = []
+    for start, end in zip(whens, whens[1:] + [len(text)]):
+        then = next((t for t in thens if start < t < end), None)
+        head = _WHEN_HEAD_RE.match(text[start:then]) if then is not None else None
+        if head is None:
+            raise _error(f"cannot parse MERGE clause: {text[start:end].strip()[:80]}")
+        cond = head.group(2)
+        action = text[then + len("THEN") : end].strip()
+        if head.group(1):
+            if not re.match(r"INSERT\b", action, re.I):
+                raise _error(f"unsupported MERGE insert action: {action[:80]}")
+            inserts.append((cond, _insert_action(action, columns)))
+        elif action.upper() == "DELETE":
+            matched.append((cond, None))
+        else:
+            um = re.match(r"UPDATE\s+SET\s+(.*)$", action, re.I | re.S)
+            if not um:
+                raise _error(f"unsupported MERGE matched action: {action[:80]}")
+            pairs = _split_assignments(um.group(1))
+            matched.append((cond, _target_columns(columns, pairs, "MERGE UPDATE")))
+    return matched, inserts
+
+
+def _fired(conds: list[str | None]) -> list:
+    """Per clause: it holds and no earlier one did (first true wins)."""
+    out, prior = [], F.lit(False)
+    for c in conds:
+        holds = F.coalesce(F.expr(c), F.lit(False)) if c else F.lit(True)
+        out.append(holds & ~prior)
+        prior = prior | holds
+    return out
+
+
+def _matched_result_df(
+    tgt: DataFrame, source: DataFrame, cond, t_alias: str, matched_clauses: list, promote: bool
+) -> DataFrame:
+    """Matched rows after clause application: the first true clause wins —
+    UPDATE rewrites the row, DELETE drops it, no true clause keeps it."""
+    joined = tgt.join(source, cond, "inner")
+    fired = _fired([c for c, _a in matched_clauses])
+    deleted = [f for f, (_c, a) in zip(fired, matched_clauses) if a is None]
+    keep = ~reduce(lambda a, b: a | b, deleted, F.lit(False))
+    typed = [
+        _typed_values(joined, a, tgt.schema, promote) if a else {} for _c, a in matched_clauses
+    ]
+    out_cols = []
+    for col in tgt.columns:
+        expr = F.col(f"{t_alias}.{col}")
+        for f, a in reversed(list(zip(fired, typed))):
+            if col in a:
+                expr = F.when(f, F.expr(a[col])).otherwise(expr)
+        out_cols.append(expr.alias(col))
+    return joined.filter(keep).select(*out_cols)
+
+
+def _inserts_df(
+    target: DataFrame, source: DataFrame, cond, insert_clauses: list, promote: bool
+) -> DataFrame:
+    """Unmatched source rows routed to the first not-matched clause whose
+    AND-condition holds; a column the INSERT list leaves out is a NULL of
+    the column's type."""
+    unmatched = source.join(target, cond, "left_anti")
+    pieces = []
+    for f, (_c, values) in zip(_fired([c for c, _v in insert_clauses]), insert_clauses):
+        typed = _typed_values(unmatched, values, target.schema, promote)
+        pieces.append(
+            unmatched.filter(f).select(
+                *[
+                    F.expr(typed[c.name]).alias(c.name)
+                    if c.name in typed
+                    else F.lit(None).cast(c.dataType).alias(c.name)
+                    for c in target.schema.fields
+                ]
+            )
+        )
+    return reduce(DataFrame.unionByName, pieces)
+
+
+# ---------------------------------------------------------------------------
+# whole-relation targets
+# ---------------------------------------------------------------------------
+
+
 def _replace_table(spark: SparkSession, table: str, new_df: DataFrame) -> None:
-    """Shadow-write + swap: never reads and overwrites the same files."""
+    """Shadow-write + swap: never reads and overwrites the same files. The
+    shadow keeps the table's Hive partition columns (a Spark-DDL
+    `PARTITIONED BY` table, which adoption refuses)."""
     from . import warehouse_guard  # noqa: PLC0415
 
     warehouse_guard.register_process(spark)
     shadow = f"{table}__dml_shadow"
+    pcols = [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
+    writer = new_df.write.mode("overwrite")
+    if pcols:
+        writer = writer.partitionBy(*pcols)
     try:
-        new_df.write.mode("overwrite").saveAsTable(shadow)
+        writer.saveAsTable(shadow)
     except Exception as e:
         # crash recovery: a process killed mid-swap leaves the shadow's
         # LOCATION on disk with no catalog entry — Spark then refuses the
@@ -143,135 +330,12 @@ def _replace_table(spark: SparkSession, table: str, new_df: DataFrame) -> None:
             or not warehouse_guard.reclaim_orphan(spark, lm.group(1), owned=True)
         ):
             raise
-        new_df.write.mode("overwrite").saveAsTable(shadow)
+        writer.saveAsTable(shadow)
     spark.sql(f"DROP TABLE {table}")
     spark.sql(f"ALTER TABLE {shadow} RENAME TO {table}")
-
-
-def _partition_cols(spark: SparkSession, table: str) -> list[str]:
-    try:
-        return [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
-    except Exception:
-        return []
-
-
-class _dynamic_overwrite:
-    """Scoped `partitionOverwriteMode=dynamic`: INSERT OVERWRITE replaces
-    only the partitions present in the written frame."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
-
-
-def _overwrite_partitions(
-    spark: SparkSession,
-    table: str,
-    pcols: list[str],
-    affected: DataFrame,
-    new_rows: DataFrame,
-) -> None:
-    """Partition-granular copy-on-write: replace the `affected` partitions of
-    `table` with `new_rows` (which must contain rows ONLY from those
-    partitions). Partitions in `affected` that have no rows in `new_rows`
-    (fully deleted) are dropped via metadata ops."""
-    tcols = spark.table(table).columns
-    # localCheckpoint materializes the staged rows (executor memory/disk) and
-    # cuts lineage to the table's files — otherwise Spark refuses to
-    # overwrite a path it is reading. Only affected partitions are staged.
-    staged = new_rows.select(*tcols).localCheckpoint(eager=True)
-    with _dynamic_overwrite(spark):
-        staged.write.insertInto(table, overwrite=True)
-    # affected partitions that kept zero rows were not overwritten by the
-    # dynamic write — drop them explicitly (metadata-only, manifest-sized)
-    dead = affected.exceptAll(staged.select(*pcols).distinct()).collect()
-    for row in dead:
-        spec = ", ".join(f"{c} = '{row[c]}'" for c in pcols)
-        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({spec})")
-
-
-def execute_delete(spark: SparkSession, stmt: str, resolve=resolve_name) -> pa.Table:
-    m = _DELETE_RE.match(stmt)
-    table = resolve(m.group(1))
-    cond = m.group(2)
-    df = spark.table(table)
-    pcols = _partition_cols(spark, table) if cond else []
     if pcols:
-        match = F.expr(cond)
-        n_del = df.filter(match).count()
-        if n_del:
-            affected = df.filter(match).select(*pcols).distinct()
-            sub = df.join(F.broadcast(affected), pcols, "left_semi")
-            _overwrite_partitions(spark, table, pcols, affected, sub.filter(~match))
-        return pa.table({"rows_deleted": [n_del]})
-    before = df.count()
-    kept = df.filter(~F.expr(cond)) if cond else df.limit(0)
-    _replace_table(spark, table, kept)
-    after = spark.table(table).count()
-    return pa.table({"rows_deleted": [before - after]})
-
-
-def _apply_assignments(df: DataFrame, assign_map: dict[str, str], match) -> DataFrame:
-    """All assignment expressions evaluate against the ORIGINAL row in one
-    select — SQL UPDATE is simultaneous (SET a = b, b = a swaps)."""
-    return df.select(
-        *[
-            F.when(match, F.expr(assign_map[c])).otherwise(F.col(c)).alias(c) if c in assign_map else F.col(c)
-            for c in df.columns
-        ]
-    )
-
-
-def execute_update(spark: SparkSession, stmt: str, resolve=resolve_name) -> pa.Table:
-    m = _UPDATE_RE.match(stmt)
-    table = resolve(m.group(1))
-    assignments, cond = _split_assignments(m.group(2)), m.group(3)
-    df = spark.table(table)
-    match = F.expr(cond) if cond else F.lit(True)
-    n = df.filter(match).count()
-    assign_map = dict(assignments)
-    pcols = _partition_cols(spark, table)
-    # partition-granular path: rewrite only partitions holding matched rows.
-    # Requires a WHERE (else every partition is affected anyway) and that no
-    # assignment writes a partition column (the row would change partitions).
-    if pcols and cond and not (set(assign_map) & set(pcols)):
-        if n:
-            affected = df.filter(match).select(*pcols).distinct()
-            sub = df.join(F.broadcast(affected), pcols, "left_semi")
-            _overwrite_partitions(spark, table, pcols, affected, _apply_assignments(sub, assign_map, match))
-        return pa.table({"rows_updated": [n]})
-    _replace_table(spark, table, _apply_assignments(df, assign_map, match))
-    return pa.table({"rows_updated": [n]})
-
-
-def _parse_when_clauses(clauses: str) -> tuple[list, list]:
-    """Ordered clause lists: matched -> (cond|None, assigns|None-for-DELETE),
-    not-matched -> (cond|None, col->expr map | None for INSERT *)."""
-    matched_clauses: list[tuple[str | None, dict[str, str] | None]] = []
-    insert_clauses: list[tuple[str | None, dict[str, str] | None]] = []
-    for cm in _WHEN_CLAUSE_RE.finditer(clauses):
-        is_not, extra_cond, action = bool(cm.group(1)), cm.group(2), cm.group(3).strip()
-        if is_not:
-            im = _INSERT_ACTION_RE.match(action)
-            if not im:
-                raise ValueError(f"unsupported MERGE insert action: {action[:80]}")
-            val_map = None
-            if im.group(1):
-                cols = [c.strip().strip('"') for c in im.group(1).split(",")]
-                vals = [v.strip() for v in _split_top_args(im.group(2))]
-                val_map = dict(zip(cols, vals))
-            insert_clauses.append((extra_cond, val_map))
-        elif action.upper() == "DELETE":
-            matched_clauses.append((extra_cond, None))
-        else:
-            matched_clauses.append((extra_cond, dict(_split_assignments(action[action.upper().index("SET") + 3 :]))))
-    return matched_clauses, insert_clauses
+        # the catalog's partitions still point into the shadow's directory
+        spark.sql(f"REPAIR TABLE {table} SYNC PARTITIONS")
 
 
 def _check_deterministic(target: DataFrame, source: DataFrame, cond) -> None:
@@ -294,200 +358,110 @@ def _check_deterministic(target: DataFrame, source: DataFrame, cond) -> None:
         )
 
 
-def _matched_result_df(
-    tgt: DataFrame, source: DataFrame, cond, t_alias: str, tcols: list[str], matched_clauses: list
-) -> DataFrame:
-    """Matched rows after clause application: first-true clause wins —
-    UPDATE rewrites the row, DELETE drops it, no-true-clause keeps it."""
-    joined = tgt.join(source, cond, "inner")
-    conds = [F.expr(c) if c else F.lit(True) for c, _a in matched_clauses]
-    keep = F.lit(True)
-    for c, (_cond, a) in zip(conds, matched_clauses):
-        if a is None:  # DELETE clause: drop when it is the first true one
-            prior = F.lit(False)
-            for c2, (_c2, _a2) in zip(conds, matched_clauses):
-                if c2 is c:
-                    break
-                prior = prior | F.coalesce(c2, F.lit(False))
-            keep = keep & ~(F.coalesce(c, F.lit(False)) & ~prior)
-    out_cols = []
-    for col in tcols:
-        expr = F.col(f"{t_alias}.{col}")
-        # build CASE from last clause backwards so first-true wins
-        for c, (_cond, a) in reversed(list(zip(conds, matched_clauses))):
-            if a and col in a:
-                expr = F.when(F.coalesce(c, F.lit(False)), F.expr(a[col])).otherwise(expr)
-            elif a is None:
-                pass  # deletes handled by `keep`
-        out_cols.append(expr.alias(col))
-    return joined.filter(keep).select(*out_cols)
+class Relation:
+    """A DML target kept as one relation: each statement derives the
+    table's whole new contents and `replace` swaps them in. Same operations
+    and results as a SnapshotTable's, with no file count (None)."""
 
+    def __init__(self, name: str, replace: Callable[[DataFrame], None]):
+        self.name = name
+        self.replace = replace
 
-def _inserts_df(
-    target: DataFrame, source: DataFrame, cond, tcols: list[str], insert_clauses: list
-) -> DataFrame:
-    """Unmatched source rows routed to the first not-matched clause whose
-    AND-condition holds; a column the INSERT list leaves out is a NULL of
-    the column's type."""
-    ttypes = {f.name: f.dataType for f in target.schema.fields}
-    unmatched_src = source.join(target, cond, "left_anti")
-    pieces = []
-    prior = F.lit(False)
-    for extra_cond, val_map in insert_clauses:
-        c = F.expr(extra_cond) if extra_cond else F.lit(True)
-        sel = unmatched_src.filter(~prior & F.coalesce(c, F.lit(False)))
-        if val_map is not None:
-            sel = sel.select(
-                *[
-                    F.expr(val_map[col]).alias(col)
-                    if col in val_map
-                    else F.lit(None).cast(ttypes[col]).alias(col)
-                    for col in tcols
-                ]
-            )
-        else:
-            sel = sel.select(*tcols)  # INSERT *
-        pieces.append(sel)
-        prior = prior | F.coalesce(c, F.lit(False))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+    def read(self, spark: SparkSession) -> DataFrame:
+        return spark.table(self.name)
 
+    def row_count(self, spark: SparkSession) -> int:
+        return self.read(spark).count()
 
-def execute_merge(spark: SparkSession, stmt: str, resolve=resolve_name) -> pa.Table:
-    stmt = _lift_subquery_source(spark, stmt)
-    m = _MERGE_RE.match(stmt)
-    if not m:
-        raise ValueError(f"unsupported MERGE syntax: {stmt[:120]}")
-    t_name = resolve(m.group(1))
-    t_alias = m.group(2) or bare_name(t_name)
-    s_name = resolve(m.group(3))
-    s_alias = m.group(4) or bare_name(s_name)
-    on_cond, clauses = m.group(5), m.group(6)
+    def delete_where(self, spark: SparkSession, match, cond_str: str | None = None):
+        df = self.read(spark)
+        n = df.filter(match).count()
+        if n:
+            self.replace(delete_survivors(df, match))
+        return n, None
 
-    target = spark.table(t_name).alias(t_alias)
-    source = spark.table(s_name).alias(s_alias)
-    cond = F.expr(on_cond)
-    tcols = spark.table(t_name).columns
+    def update_where(self, spark: SparkSession, match, assign_exprs: dict[str, str], cond_str=None):
+        df = self.read(spark)
+        n = df.filter(match).count()
+        if n:
+            self.replace(apply_assignments(df, match, assign_exprs))
+        return n, None
 
-    matched_clauses, insert_clauses = _parse_when_clauses(clauses)
-    all_assigned = set().union(*[set(a) for _c, a in matched_clauses if a], set())
-
-    if matched_clauses:
-        _check_deterministic(target, source, cond)
-
-    def _matched_result(tgt: DataFrame) -> DataFrame:
-        return _matched_result_df(tgt, source, cond, t_alias, tcols, matched_clauses)
-
-    def _inserts() -> DataFrame:
-        return _inserts_df(target, source, cond, tcols, insert_clauses)
-
-    pcols = _partition_cols(spark, t_name)
-    if pcols and not (all_assigned & set(pcols)):
-        # partition-granular: rewrite only partitions holding MATCHED rows;
-        # inserts append new files without touching any existing partition
-        if matched_clauses:
-            affected = (
-                target.join(source, cond, "left_semi").select(*pcols).distinct()
-            )
-            sub = target.join(F.broadcast(affected), pcols, "left_semi").alias(t_alias)
-            untouched = sub.join(source, cond, "left_anti").select(*tcols)
-            new_rows = untouched.unionByName(_matched_result(sub))
-            if affected.limit(1).count():
-                _overwrite_partitions(spark, t_name, pcols, affected, new_rows)
-        n_inserted = 0
-        if insert_clauses:
-            ins = _inserts().localCheckpoint(eager=True)
-            n_inserted = ins.count()
-            if n_inserted:
-                ins.select(*tcols).write.insertInto(t_name, overwrite=False)
-        return pa.table(
-            {"rows_affected": [spark.table(t_name).count()], "rows_inserted": [n_inserted]}
-        )
-
-    if matched_clauses:
-        matched = _matched_result(target)
-    else:
-        matched = target.join(source, cond, "left_semi").select(*tcols)
-
-    untouched = target.join(source, cond, "left_anti").select(*tcols)
-
-    pieces = [untouched, matched]
-    n_inserted = 0
-    if insert_clauses:
-        inserts = _inserts()
-        n_inserted = inserts.count()
-        pieces.append(inserts)
-
-    new_df = pieces[0]
-    for p in pieces[1:]:
-        new_df = new_df.unionByName(p)
-    _replace_table(spark, t_name, new_df)
-    return pa.table({"rows_affected": [spark.table(t_name).count()], "rows_inserted": [n_inserted]})
+    def merge_apply(self, spark, source, cond, t_alias, matched_result, inserts, insert_bytes=None):
+        out = target = self.read(spark).alias(t_alias)
+        if matched_result is not None:
+            _check_deterministic(target, source, cond)
+            out = merged_rows(target, source, cond, matched_result)
+        n_ins = 0
+        if inserts is not None:
+            n_ins = inserts.count()
+            out = out.unionByName(inserts)
+        self.replace(out)
+        return n_ins, None
 
 
 # ---------------------------------------------------------------------------
-# Iceberg-table (iceberg_format.py) DML: file-granular copy-on-write
+# statements
 # ---------------------------------------------------------------------------
 
 
-def execute_delete_snap(spark: SparkSession, stmt: str, snap) -> pa.Table:
-    m = _DELETE_RE.match(stmt)
-    cond = m.group(2)
+def _result(n_files: int | None, **counts: int) -> pa.Table:
+    if n_files is not None:
+        counts["files_rewritten"] = n_files
+    return pa.table({k: [v] for k, v in counts.items()})
+
+
+def execute_delete(spark: SparkSession, stmt: str, table) -> pa.Table:
+    cond = _DELETE_RE.match(stmt).group(2)
     match = F.expr(cond) if cond else F.lit(True)
-    # cond_str lets IcebergTable prune candidate files from manifest bounds
-    n, n_files = snap.delete_where(spark, match, cond_str=cond)
-    return pa.table({"rows_deleted": [n], "files_rewritten": [n_files]})
+    # cond_str lets a snapshot table prune candidate files from manifest bounds
+    n, n_files = table.delete_where(spark, match, cond_str=cond)
+    return _result(n_files, rows_deleted=n)
 
 
-def execute_update_snap(spark: SparkSession, stmt: str, snap) -> pa.Table:
+def execute_update(spark: SparkSession, stmt: str, table) -> pa.Table:
     m = _UPDATE_RE.match(stmt)
-    assign_map = dict(_split_assignments(m.group(2)))
+    tdf = table.read(spark)
+    pairs = _split_assignments(m.group(2))
+    assign = _typed_values(
+        tdf, _target_columns(tdf.columns, pairs, "UPDATE"), tdf.schema,
+        promote=not isinstance(table, Relation),
+    )
     cond = m.group(3)
     match = F.expr(cond) if cond else F.lit(True)
-    n, n_files = snap.update_where(spark, match, assign_map, cond_str=cond)
-    return pa.table({"rows_updated": [n], "files_rewritten": [n_files]})
+    n, n_files = table.update_where(spark, match, assign, cond_str=cond)
+    return _result(n_files, rows_updated=n)
 
 
-def execute_merge_snap(spark: SparkSession, stmt: str, snap, read_table) -> pa.Table:
-    """MERGE into a snapshot table in one targeting job and one write:
-    `merge_apply` groups the target-source join by data file (a target row
-    matched twice is ERROR_ON_NONDETERMINISTIC_MERGE) to find the files
-    holding matched rows, and rewrites only those together with the
-    inserts, sized by the source's plan estimate. The inserted-row count
-    rides on the write; the table's row count comes from the manifests
-    unless delete files apply."""
-    stmt = _lift_subquery_source(spark, stmt)
+def execute_merge(spark: SparkSession, stmt: str, table, read_table) -> pa.Table:
+    """MERGE with a named source (the engine lifts an inline subquery
+    first). On a snapshot table `merge_apply` runs one targeting job (the
+    target-source join grouped by data file; a target row matched twice is
+    ERROR_ON_NONDETERMINISTIC_MERGE) and one write: the files holding
+    matched rows, rewritten together with the inserts and sized by the
+    source's plan estimate."""
     m = _MERGE_RE.match(stmt)
     if not m:
-        raise ValueError(f"unsupported MERGE syntax: {stmt[:120]}")
+        raise _error(f"unsupported MERGE syntax: {stmt[:120]}")
     t_alias = m.group(2) or bare_name(m.group(1))
     s_alias = m.group(4) or bare_name(m.group(3))
-    on_cond, clauses = m.group(5), m.group(6)
+    on_cond, clauses = _split_on_clause(m.group(5))
 
     source = read_table(m.group(3)).alias(s_alias)
     cond = F.expr(on_cond)
-    target = snap.read(spark).alias(t_alias)
-    tcols = target.columns
-
-    matched_clauses, insert_clauses = _parse_when_clauses(clauses)
-    inserts = None
-    if insert_clauses:
-        inserts = _inserts_df(target, source, cond, tcols, insert_clauses)
+    target = table.read(spark).alias(t_alias)
+    matched_clauses, insert_clauses = _parse_when_clauses(clauses, target.columns)
+    promote = not isinstance(table, Relation)
+    inserts = (
+        _inserts_df(target, source, cond, insert_clauses, promote) if insert_clauses else None
+    )
     matched_result = None
     if matched_clauses:
         matched_result = lambda sub: _matched_result_df(  # noqa: E731
-            sub, source, cond, t_alias, tcols, matched_clauses
+            sub, source, cond, t_alias, matched_clauses, promote
         )
-    n_ins, n_files = snap.merge_apply(
+    n_ins, n_files = table.merge_apply(
         spark, source, cond, t_alias, matched_result, inserts,
         insert_bytes=estimated_bytes(source) if inserts is not None else None,
     )
-    return pa.table(
-        {
-            "rows_affected": [snap.row_count(spark)],
-            "rows_inserted": [n_ins],
-            "files_rewritten": [n_files],
-        }
-    )
+    return _result(n_files, rows_affected=table.row_count(spark), rows_inserted=n_ins)

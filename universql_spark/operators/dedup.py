@@ -388,8 +388,8 @@ def _data_version(docs: DataFrame) -> int:
     """Content-version fingerprint of a corpus: its leaf input files plus
     each file's (mtime, size). semanticHash alone keys the PLAN, and a
     catalog table's plan hash survives an in-place data rewrite (ADVICE r7:
-    the engine's partition-granular COW DML writes new part-files into the
-    SAME table location, so a stale signature index would be served). Part-
+    the engine's DML rewrites a table's part-files while its name, and
+    so its plan, stays, so a stale signature index would be served). Part-
     file names change on every rewrite, so the sorted listing alone already
     moves; stat() covers same-name truncate/append edges. Driver cost is
     one (cached) file-index listing + local stats — sub-ms at bench scale,

@@ -1,7 +1,8 @@
 """DML specs: driver-visible proof that MERGE/DELETE/UPDATE produce correct
-table states — including the partition-granular copy-on-write path
-(engine_dml.py), the Spark re-derivation of the reference's Iceberg-backed
-DML (reference: warehouse/duckdb.py:274-334 CTAS->Iceberg; README.md:256-266
+table states — on partitioned tables (Iceberg from their CREATE) and on
+adopted plain tables, both through the file-granular copy-on-write of
+engine_dml.py, the Spark re-derivation of the reference's Iceberg-backed DML
+(reference: warehouse/duckdb.py:274-334 CTAS->Iceberg; README.md:256-266
 support matrix declares MERGE/DELETE).
 
 Each spec drives the full Engine (SQL text in, statements dispatched), then
@@ -37,10 +38,12 @@ SELECT d, etype, total FROM merged ORDER BY etype, d
 
 @register("dml_merge_partitioned", _MERGE_ORACLE, category="dml")
 def dml_merge_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Upsert MERGE into a PARTITION BY table: matched partitions are
-    rewritten via dynamic partition overwrite, inserts append — a 1-row
-    MERGE touches one partition, not the table (engine_dml.py docstring;
-    efficiency pinned by test_partitioned_merge_rewrites_one_partition)."""
+    """Upsert MERGE into a PARTITION BY table (an Iceberg table with an
+    identity partition spec): only the data files holding matched rows are
+    rewritten, each file holds one partition tuple, and the inserts are
+    written with them — a 1-row MERGE touches one partition, not the table
+    (engine_dml.py docstring; efficiency pinned by
+    test_partitioned_merge_rewrites_one_partition)."""
     from universql_spark.engine import Engine
 
     eng = Engine(spark=spark)
@@ -74,9 +77,10 @@ ORDER BY etype, d
 
 @register("dml_delete_partitioned", _DELETE_ORACLE, category="dml")
 def dml_delete_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELETE on a partitioned table: the all-rows-deleted partition
-    ('click') is dropped by a metadata op; the cross-partition predicate
-    (d = …) rewrites only partitions that held matching rows."""
+    """DELETE on a partitioned (Iceberg) table: the all-rows-deleted
+    partition ('click') leaves the snapshot with its files; the
+    cross-partition predicate (d = …) rewrites only files that held
+    matching rows."""
     from universql_spark.engine import Engine
 
     eng = Engine(spark=spark)
@@ -104,9 +108,9 @@ FROM base ORDER BY etype, d
 
 @register("dml_update_partitioned", _UPDATE_ORACLE, category="dml")
 def dml_update_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UPDATE with a partition-pruning predicate: only the 'view' partition
-    is rewritten (dynamic partition overwrite), every other partition's
-    files are untouched."""
+    """UPDATE with a partition-pruning predicate on a partitioned (Iceberg)
+    table: only the 'view' partition's files are rewritten, every other
+    partition's files are untouched."""
     from universql_spark.engine import Engine
 
     eng = Engine(spark=spark)

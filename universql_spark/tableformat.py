@@ -114,6 +114,35 @@ def _file_bytes(files: list[str]) -> int:
     return sum(os.path.getsize(f) for f in files)
 
 
+# -- row rules of DELETE / UPDATE / MERGE, shared by every table kind ---------
+
+
+def delete_survivors(df: DataFrame, match) -> DataFrame:
+    """The rows a DELETE keeps: those whose condition is not TRUE (a NULL
+    condition keeps the row)."""
+    return df.filter(~F.coalesce(match, F.lit(False)))
+
+
+def apply_assignments(df: DataFrame, match, assign_exprs: dict[str, str]) -> DataFrame:
+    """df with UPDATE's assignments applied to the matching rows. Every
+    value reads the original row (SET a = b, b = a swaps)."""
+    return df.select(
+        *[
+            F.when(match, F.expr(assign_exprs[c])).otherwise(F.col(c)).alias(c)
+            if c in assign_exprs
+            else F.col(c)
+            for c in df.columns
+        ]
+    )
+
+
+def merged_rows(target: DataFrame, source: DataFrame, cond, matched_result) -> DataFrame:
+    """target's rows after a MERGE's matched clauses: the rows no source row
+    matches, and matched_result(target) for the rest."""
+    untouched = target.join(source, cond, "left_anti").select(*target.columns)
+    return untouched.unionByName(matched_result(target))
+
+
 def _promotion(old: T.DataType, new: T.DataType) -> bool:
     """Iceberg's legal type promotions: int -> long, float -> double,
     decimal(P, S) -> decimal(P', S) with P' > P."""
@@ -555,12 +584,13 @@ class SnapshotTable:
     def delete_where(
         self, spark: SparkSession, match, cond_str: str | None = None
     ) -> tuple[int, int]:
-        """-> (rows_deleted, n_files_rewritten)"""
+        """-> (rows_deleted, n_files_rewritten); a row whose `match` is
+        NULL survives."""
         hits = self._affected_files(spark, match, self._candidate_files(cond_str))
         if not hits:
             return 0, 0
         affected = sorted(hits)
-        survivors = self._read_files(spark, affected).filter(~match)
+        survivors = delete_survivors(self._read_files(spark, affected), match)
         new = self._nonempty(self._write_files(coalesce_to_bytes(survivors, _file_bytes(affected))))
         self._commit_delta("delete", added=new, removed=affected)
         return sum(hits.values()), len(affected)
@@ -577,15 +607,7 @@ class SnapshotTable:
         if not hits:
             return 0, 0
         affected = sorted(hits)
-        sub = self._read_files(spark, affected)
-        out = sub.select(
-            *[
-                F.when(match, F.expr(assign_exprs[c])).otherwise(F.col(c)).alias(c)
-                if c in assign_exprs
-                else F.col(c)
-                for c in sub.columns
-            ]
-        )
+        out = apply_assignments(self._read_files(spark, affected), match, assign_exprs)
         new = self._write_files(coalesce_to_bytes(self._conform(spark, out), _file_bytes(affected)))
         self._commit_delta("update", added=new, removed=affected)
         return sum(hits.values()), len(affected)
@@ -629,8 +651,7 @@ class SnapshotTable:
         out, replaced = None, _file_bytes(affected)
         if affected:
             sub = self._read_files(spark, affected).alias(t_alias)
-            untouched = sub.join(source, cond, "left_anti").select(*sub.columns)
-            out = coalesce_to_bytes(untouched.unionByName(matched_result(sub)), replaced)
+            out = coalesce_to_bytes(merged_rows(sub, source, cond, matched_result), replaced)
         obs = None
         if inserts is not None:
             # the inserted-row count rides on the write job
