@@ -65,6 +65,7 @@ _SMOKE_TESTS: dict[str, set[str]] = {
         "test_iceberg_dml_spark_jobs_per_statement",
         "test_dml_type_change_keeps_iceberg_table_readable[update_promotes]",
         "test_delete_keeps_null_condition_rows",
+        "test_merge_reports_rows_it_changed", "test_update_set_subquery_with_where",
     },
     "test_protocol.py": {
         "test_login_query_roundtrip", "test_sync_monitoring_by_request_id", "test_set_variable_stays_in_its_session",

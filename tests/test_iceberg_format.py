@@ -395,18 +395,19 @@ def test_mor_update_deletes_positions_and_appends(spark, mor_table):
 
 def test_mor_cow_merge_does_not_resurrect(spark, mor_table):
     """A copy-on-write MERGE after MoR deletes must keep them applied."""
+    from universql_spark.engine_dml import Merge
+
     mor_table.delete_where(spark, F.col("id") < 10)
-    src = spark.range(8, 12).select("id", F.lit(-1.0).alias("nv"))
-    n_ins, _ = mor_table.merge_apply(
+    # a MERGE source carries the `__s` marker (engine_dml._merge_source)
+    src = spark.range(8, 12).select("id", F.lit(-1.0).alias("nv"), F.lit(True).alias("__s"))
+    counts, _ = mor_table.merge_apply(
         spark,
         src.alias("s"),
         F.expr("t.id = s.id"),
         "t",
-        lambda sub: sub.join(src.alias("s"), F.expr("t.id = s.id")).select(
-            "t.id", "t.g", F.col("s.nv").alias("v")
-        ),
-        inserts=None,
+        Merge("t", ["id", "g", "v"], [(None, {"v": "s.nv"})], inserts=False),
     )
+    assert counts == {"rows_inserted": 0, "rows_updated": 2, "rows_deleted": 0}
     out = mor_table.read(spark)
     assert out.count() == 10  # 10..19; deleted 8,9 must NOT come back
     assert out.filter(F.col("id") < 10).count() == 0

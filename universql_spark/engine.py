@@ -41,6 +41,7 @@ from collections import deque
 import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from universql_spark import copy_into, engine_dml
 from universql_spark.dialect import snowflake_to_spark, split_statements, strip_table_wrapper
@@ -1759,8 +1760,6 @@ class Engine:
                 tdf = snap.read(self.spark)
                 tcols, ttypes = tdf.columns, dict(tdf.dtypes)
                 if im.group(3):  # explicit column list; missing cols -> NULL
-                    from pyspark.sql import functions as F  # noqa: PLC0415
-
                     given = [c.strip().strip('"').lower() for c in im.group(3).split(",")]
                     df = df.toDF(*given)
                     df = df.select(
@@ -2925,8 +2924,6 @@ class Engine:
                 keys.append(lk)
             if not keys:
                 # keyless as-of: a constant key keeps one global ordering
-                from pyspark.sql import functions as F  # noqa: PLC0415
-
                 ldf = ldf.withColumn("__asof_k", F.lit(1))
                 rdf = rdf.withColumn("__asof_k", F.lit(1))
                 keys = ["__asof_k"]
@@ -3229,8 +3226,6 @@ class Engine:
         df.localCheckpoint(eager=True).createOrReplaceTempView(bn)
 
     def _temp_insert(self, im: re.Match) -> pa.Table:
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         bn = bare_name(im.group(1))
         tdf = self.spark.table(bn)
         tcols, ttypes = tdf.columns, dict(tdf.dtypes)
@@ -3926,11 +3921,12 @@ class Engine:
         only the target's final write depends on its kind (`_dml_target`)."""
         sql = snowflake_to_spark(stmt)
         if _MERGE_RE.match(stmt):
-            # inline USING (subquery) -> named temp view FIRST, so target
+            # inline USING (subquery) -> a placeholder name FIRST, so target
             # detection sees the named-source grammar
-            sql = engine_dml._lift_subquery_source(self.spark, sql)
+            sql, inline = engine_dml._lift_subquery_source(self.spark, sql)
             name, table = self._dml_target(engine_dml._MERGE_RE, sql)
-            out = engine_dml.execute_merge(self.spark, sql, table, read_table=self._read_table)
+            read = self._read_table if inline is None else lambda _name: inline
+            out = engine_dml.execute_merge(self.spark, sql, table, read_table=read)
         elif _UPDATE_RE.match(stmt):
             name, table = self._dml_target(engine_dml._UPDATE_RE, sql)
             out = engine_dml.execute_update(self.spark, sql, table)
@@ -4042,8 +4038,6 @@ class Engine:
     def _align_to_snap(self, df: DataFrame, tdf: DataFrame) -> DataFrame:
         """Positional rename + cast to the table's column types, so appended
         files stay schema-compatible with the manifest's existing files."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         tcols, ttypes = tdf.columns, dict(tdf.dtypes)
         df = df.toDF(*tcols)
         return df.select(*[F.col(c).cast(ttypes[c]).alias(c) for c in tcols])
@@ -4054,8 +4048,6 @@ class Engine:
         Masking/row-access policies attach here: the view itself carries
         the masking expressions and the row filter, so every read path sees
         policied data without per-query rewriting."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         df = self.snap_tables[name].read(self.spark)
         pol = self.table_policies.get(name)
         if pol:
@@ -4203,8 +4195,6 @@ class Engine:
                 end = snap.snapshots()[-1]["id"]
             df = snap.changes_between(self.spark, start, end)
             if info == "APPEND_ONLY":
-                from pyspark.sql import functions as F  # noqa: PLC0415
-
                 df = df.filter(F.col("METADATA$ACTION") == "INSERT")
             view = f"{name}__changes_{start}_{end}_{info.lower()}"
             df.createOrReplaceTempView(view)

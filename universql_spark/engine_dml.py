@@ -22,6 +22,17 @@ table + DROP/RENAME for a catalog table (`_replace_table`, which keeps its
 partition columns), a re-materialized temp view for a TEMP table. Values
 are cast to the columns' types, so a Relation's schema never changes.
 
+**MERGE** evaluates its source once per statement: the source (a named
+table, or an inline `USING (subquery)` handed over as a DataFrame, never a
+view), with each row's INSERT values, is materialized by an eager
+`localCheckpoint` and released after the commit. The write is derived from
+one outer join of it with the target rows (`Merge`): each joined row is
+tagged with the first WHEN clause that fires, and the reply's
+`rows_inserted`, `rows_updated` and `rows_deleted` are counted on the write
+job. A snapshot table joins only the files its targeting job named; a
+Relation joins the whole table and checks ERROR_ON_NONDETERMINISTIC_MERGE on
+the same write.
+
 Rules written once, here, for both:
   - DELETE keeps the rows whose condition is NULL (`NOT coalesce(c, false)`);
   - a target column name (UPDATE SET, MERGE UPDATE SET, MERGE INSERT (cols))
@@ -43,35 +54,37 @@ clauses of either kind.
 from __future__ import annotations
 
 import re
-from functools import reduce
 from typing import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from universql_spark.dialect import _STRING_RE, _match_paren, _split_top_args
 from universql_spark.names import bare_name
 from universql_spark.tableformat import (
+    NONDETERMINISTIC_MERGE,
     NondeterministicMergeError,
     _promotion,
     apply_assignments,
+    coalesce_to_bytes,
     delete_survivors,
     estimated_bytes,
-    merged_rows,
+    merge_writes,
 )
 
 _DELETE_RE = re.compile(r"^\s*DELETE\s+FROM\s+([\w.\"]+)(?:\s+WHERE\s+(.*))?$", re.I | re.S)
-_UPDATE_RE = re.compile(r"^\s*UPDATE\s+([\w.\"]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$", re.I | re.S)
+_UPDATE_RE = re.compile(r"^\s*UPDATE\s+([\w.\"]+)\s+SET\s+(.*)$", re.I | re.S)
 _MERGE_RE = re.compile(
     r"^\s*MERGE\s+INTO\s+([\w.\"]+)(?:\s+AS)?(?:\s+(\w+))?\s+USING\s+([\w.\"]+)(?:\s+AS)?(?:\s+(\w+))?"
     r"\s+ON\b\s*(.*)$",
     re.I | re.S,
 )
 _USING_PAREN_RE = re.compile(r"\bUSING\s*\(", re.I)
-#: words that structure a WHEN-clause list, and parentheses (depth)
-_CLAUSE_TOKEN_RE = re.compile(r"[()]|\b(?:CASE|END|WHEN|THEN)\b", re.I)
+#: words that structure a WHEN-clause list or an UPDATE, and parentheses (depth)
+_CLAUSE_TOKEN_RE = re.compile(r"[()]|\b(?:CASE|END|WHEN|THEN|WHERE)\b", re.I)
 _WHEN_HEAD_RE = re.compile(r"^WHEN\s+(NOT\s+)?MATCHED(?:\s+AND\b\s*(.*?))?\s*$", re.I | re.S)
 
 
@@ -81,20 +94,19 @@ def _error(message: str) -> Exception:
     return QueryError(message)
 
 
-def _lift_subquery_source(spark: SparkSession, stmt: str) -> str:
-    """`MERGE INTO t USING (SELECT ...) s ON ...` -> materialize the
-    inline source as a temp view so the named-source grammar applies. The
-    subquery arrives already dialect-transpiled (the engine rewrites the
-    whole statement before dispatch), so spark.sql can plan it directly."""
+def _lift_subquery_source(spark: SparkSession, stmt: str) -> tuple[str, DataFrame | None]:
+    """`MERGE INTO t USING (SELECT ...) s ON ...` -> (the statement with a
+    placeholder source name, so the named-source grammar applies; the
+    subquery as a DataFrame, no view), or (stmt, None) for a named source.
+    The subquery arrives already dialect-transpiled (the engine rewrites
+    the whole statement before dispatch), so spark.sql plans it directly."""
     m = _USING_PAREN_RE.search(stmt)
     if not m:
-        return stmt
+        return stmt, None
     open_idx = m.end() - 1
     close = _match_paren(stmt, open_idx)
     inner = stmt[open_idx + 1 : close].strip()
-    view = f"__merge_src_{abs(hash(inner)) % 10**8}"
-    spark.sql(inner).createOrReplaceTempView(view)
-    return f"{stmt[:m.start()]}USING {view} {stmt[close + 1:]}"
+    return f"{stmt[:m.start()]}USING __merge_source {stmt[close + 1:]}", spark.sql(inner)
 
 
 # ---------------------------------------------------------------------------
@@ -128,6 +140,10 @@ def _split_assignments(s: str) -> list[tuple[str, str]]:
     return out
 
 
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _typed_values(
     frame: DataFrame, values: dict[str, str], schema: T.StructType, promote: bool
 ) -> dict[str, str]:
@@ -139,7 +155,7 @@ def _typed_values(
     columns keep their types."""
     if not values:
         return values
-    got = frame.select(*[F.expr(v).alias(c) for c, v in values.items()]).schema
+    got = frame.selectExpr(*[f"({v}) AS {_quoted(c)}" for c, v in values.items()]).schema
     want = {f.name: f.dataType for f in schema.fields}
     return {
         f.name: values[f.name]
@@ -154,13 +170,12 @@ def _typed_values(
 # ---------------------------------------------------------------------------
 
 
-def _clause_starts(text: str) -> tuple[list[int], list[int]]:
-    """Offsets of the WHEN and THEN keywords that structure a clause list:
-    outside literals, parentheses and CASE ... END."""
+def _keywords(text: str) -> dict[str, list[int]]:
+    """Offsets of the WHEN, THEN and WHERE keywords that structure the
+    statement: outside literals, parentheses and CASE ... END."""
     masked = _STRING_RE.sub(lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", text)
     depth = case = 0
-    whens: list[int] = []
-    thens: list[int] = []
+    out: dict[str, list[int]] = {"WHEN": [], "THEN": [], "WHERE": []}
     for m in _CLAUSE_TOKEN_RE.finditer(masked):
         tok = m.group(0).upper()
         if tok == "(":
@@ -174,13 +189,22 @@ def _clause_starts(text: str) -> tuple[list[int], list[int]]:
         elif tok == "END":
             case -= 1
         elif not case:
-            (whens if tok == "WHEN" else thens).append(m.start())
-    return whens, thens
+            out[tok].append(m.start())
+    return out
+
+
+def _split_where(text: str) -> tuple[str, str | None]:
+    """'<assignments> [WHERE <cond>]' -> (assignments, cond | None), split at
+    the statement's own WHERE, not one inside a subquery or a literal."""
+    where = _keywords(text)["WHERE"]
+    if not where:
+        return text, None
+    return text[: where[0]].rstrip(), text[where[0] + len("WHERE") :].strip()
 
 
 def _split_on_clause(text: str) -> tuple[str, str]:
     """'<on cond> WHEN ...' -> (on cond, clause list)."""
-    whens, _thens = _clause_starts(text)
+    whens = _keywords(text)["WHEN"]
     if not whens:
         raise _error("MERGE needs at least one WHEN clause")
     return text[: whens[0]].strip(), text[whens[0] :]
@@ -210,7 +234,8 @@ def _parse_when_clauses(text: str, columns: list[str]) -> tuple[list, list]:
     """Ordered clause lists with target columns resolved: matched ->
     (cond|None, {column: value} | None for DELETE), not-matched ->
     (cond|None, {column: value})."""
-    whens, thens = _clause_starts(text)
+    offsets = _keywords(text)
+    whens, thens = offsets["WHEN"], offsets["THEN"]
     matched: list[tuple[str | None, dict[str, str] | None]] = []
     inserts: list[tuple[str | None, dict[str, str]]] = []
     for start, end in zip(whens, whens[1:] + [len(text)]):
@@ -235,59 +260,72 @@ def _parse_when_clauses(text: str, columns: list[str]) -> tuple[list, list]:
     return matched, inserts
 
 
-def _fired(conds: list[str | None]) -> list:
-    """Per clause: it holds and no earlier one did (first true wins)."""
-    out, prior = [], F.lit(False)
+def _fired(conds: list[str | None]) -> list[str]:
+    """Per clause, SQL text: it holds and no earlier one did (first true
+    wins)."""
+    out, prior = [], []
     for c in conds:
-        holds = F.coalesce(F.expr(c), F.lit(False)) if c else F.lit(True)
-        out.append(holds & ~prior)
-        prior = prior | holds
+        holds = f"coalesce(({c}), false)" if c else "true"
+        out.append(" AND ".join([holds] + [f"NOT {p}" for p in prior]))
+        prior.append(holds)
     return out
 
 
-def _matched_result_df(
-    tgt: DataFrame, source: DataFrame, cond, t_alias: str, matched_clauses: list, promote: bool
-) -> DataFrame:
-    """Matched rows after clause application: the first true clause wins —
-    UPDATE rewrites the row, DELETE drops it, no true clause keeps it."""
-    joined = tgt.join(source, cond, "inner")
-    fired = _fired([c for c, _a in matched_clauses])
-    deleted = [f for f, (_c, a) in zip(fired, matched_clauses) if a is None]
-    keep = ~reduce(lambda a, b: a | b, deleted, F.lit(False))
-    typed = [
-        _typed_values(joined, a, tgt.schema, promote) if a else {} for _c, a in matched_clauses
-    ]
-    out_cols = []
-    for col in tgt.columns:
-        expr = F.col(f"{t_alias}.{col}")
-        for f, a in reversed(list(zip(fired, typed))):
-            if col in a:
-                expr = F.when(f, F.expr(a[col])).otherwise(expr)
-        out_cols.append(expr.alias(col))
-    return joined.filter(keep).select(*out_cols)
+def _merge_source(source: DataFrame, inserts: list, schema: T.StructType, promote: bool) -> DataFrame:
+    """The source with a `__s` marker and, evaluated on the source alone
+    (an unqualified name in an INSERT value is a source column), `__ins`:
+    some NOT MATCHED clause fires, and `__ins_<k>`: target column k's value
+    under the first clause that fires (NULL of its type when that clause
+    leaves the column out)."""
+    extra = ["true AS __s"]
+    if inserts:
+        fired = _fired([c for c, _v in inserts])
+        typed = [_typed_values(source, v, schema, promote) for _c, v in inserts]
+        extra.append(" OR ".join(f"({f})" for f in fired) + " AS __ins")
+        for k, col in enumerate(schema.fields):
+            value = f"CAST(NULL AS {col.dataType.simpleString()})"
+            whens = "".join(f" WHEN {f} THEN {v[col.name]}" for f, v in zip(fired, typed) if col.name in v)
+            extra.append(f"{f'CASE{whens} ELSE {value} END' if whens else value} AS __ins_{k}")
+    return source.selectExpr("*", *extra)
 
 
-def _inserts_df(
-    target: DataFrame, source: DataFrame, cond, insert_clauses: list, promote: bool
-) -> DataFrame:
-    """Unmatched source rows routed to the first not-matched clause whose
-    AND-condition holds; a column the INSERT list leaves out is a NULL of
-    the column's type."""
-    unmatched = source.join(target, cond, "left_anti")
-    pieces = []
-    for f, (_c, values) in zip(_fired([c for c, _v in insert_clauses]), insert_clauses):
-        typed = _typed_values(unmatched, values, target.schema, promote)
-        pieces.append(
-            unmatched.filter(f).select(
-                *[
-                    F.expr(typed[c.name]).alias(c.name)
-                    if c.name in typed
-                    else F.lit(None).cast(c.dataType).alias(c.name)
-                    for c in target.schema.fields
-                ]
+class Merge:
+    """A MERGE's WHEN clauses as one projection of the source-target join:
+    `target FULL OUTER JOIN source ON cond` (LEFT OUTER when no NOT MATCHED
+    clause can insert), the target side marked by `__pos`, the source side
+    (`_merge_source`) by `__s`. `rows` turns each joined row into the row
+    the MERGE writes, tagged `__action` with the first clause that fires:
+    'U' updated, 'D' deleted, 'I' inserted, 'K' a target row kept as it is,
+    NULL a source row no clause inserts."""
+
+    def __init__(self, t_alias: str, columns: list[str], matched: list, inserts: bool):
+        self.t_alias, self.columns, self.inserts = t_alias, columns, inserts
+        #: [(cond | None, {column: typed value} | None for DELETE)]
+        self.matched = matched
+        self.how = "full_outer" if inserts else "left_outer"
+
+    def rows(self, joined: DataFrame, with_target: bool = True) -> DataFrame:
+        """Target columns after the MERGE plus `__action`. Without the
+        target side, every row of `joined` is an unmatched source row."""
+        ins = "__ins" if self.inserts else "false"
+        if not with_target:
+            return joined.selectExpr(
+                *[f"__ins_{k} AS {_quoted(c)}" for k, c in enumerate(self.columns)],
+                f"CASE WHEN {ins} THEN 'I' END AS __action",
             )
-        )
-    return reduce(DataFrame.unionByName, pieces)
+        fired = _fired([c for c, _a in self.matched])
+        both = "__pos IS NOT NULL AND __s IS NOT NULL"
+        clauses = [(f"{both} AND {f}", a) for f, (_c, a) in zip(fired, self.matched)]
+        values = []
+        for k, col in enumerate(self.columns):
+            whens = "".join(f" WHEN {f} THEN {a[col]}" for f, a in clauses if a and col in a)
+            if self.inserts:
+                whens = f" WHEN __pos IS NULL THEN __ins_{k}{whens}"
+            value = f"{_quoted(self.t_alias)}.{_quoted(col)}"
+            values.append(f"{f'CASE{whens} ELSE {value} END' if whens else value} AS {_quoted(col)}")
+        actions = "".join(f" WHEN {f} THEN '{'D' if a is None else 'U'}'" for f, a in clauses)
+        action = f"CASE WHEN __pos IS NULL THEN CASE WHEN {ins} THEN 'I' END{actions} ELSE 'K' END"
+        return joined.selectExpr(*values, f"{action} AS __action")
 
 
 # ---------------------------------------------------------------------------
@@ -338,26 +376,6 @@ def _replace_table(spark: SparkSession, table: str, new_df: DataFrame) -> None:
         spark.sql(f"REPAIR TABLE {table} SYNC PARTITIONS")
 
 
-def _check_deterministic(target: DataFrame, source: DataFrame, cond) -> None:
-    """Snowflake default ERROR_ON_NONDETERMINISTIC_MERGE=TRUE: a target row
-    matched by >1 source row is an error, not a silent duplicate (the inner
-    join would otherwise emit it once per source row)."""
-    rid = target.withColumn("__t_rid", F.monotonically_increasing_id())
-    dup = (
-        rid.join(source, cond, "inner")
-        .groupBy("__t_rid")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise NondeterministicMergeError(
-            "MERGE: a target row matches more than one source row "
-            "(ERROR_ON_NONDETERMINISTIC_MERGE)"
-        )
-
-
 class Relation:
     """A DML target kept as one relation: each statement derives the
     table's whole new contents and `replace` swaps them in. Same operations
@@ -369,9 +387,6 @@ class Relation:
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.table(self.name)
-
-    def row_count(self, spark: SparkSession) -> int:
-        return self.read(spark).count()
 
     def delete_where(self, spark: SparkSession, match, cond_str: str | None = None):
         df = self.read(spark)
@@ -387,17 +402,26 @@ class Relation:
             self.replace(apply_assignments(df, match, assign_exprs))
         return n, None
 
-    def merge_apply(self, spark, source, cond, t_alias, matched_result, inserts, insert_bytes=None):
-        out = target = self.read(spark).alias(t_alias)
-        if matched_result is not None:
-            _check_deterministic(target, source, cond)
-            out = merged_rows(target, source, cond, matched_result)
-        n_ins = 0
-        if inserts is not None:
-            n_ins = inserts.count()
-            out = out.unionByName(inserts)
-        self.replace(out)
-        return n_ins, None
+    def merge_apply(self, spark, source, cond, t_alias: str, merge: Merge, source_bytes=None):
+        """The whole table through the MERGE's outer join, in one write.
+        ERROR_ON_NONDETERMINISTIC_MERGE rides on that write: a target row
+        (`__pos`, a row id here) that more than one source row matches
+        fails the job, before `replace` swaps anything in."""
+        target = self.read(spark).withColumn("__pos", F.monotonically_increasing_id())
+        joined = (
+            target.alias(t_alias)
+            .join(source, cond, merge.how)
+            .withColumn("__matches", F.count("__s").over(Window.partitionBy("__pos")))
+            .filter(f"__pos IS NULL OR __matches < 2 OR raise_error('{NONDETERMINISTIC_MERGE}')")
+        )
+        out, counts = merge_writes(merge.rows(joined))
+        try:
+            self.replace(out)
+        except Exception as e:
+            if NONDETERMINISTIC_MERGE in str(e):
+                raise NondeterministicMergeError(NONDETERMINISTIC_MERGE) from None
+            raise
+        return counts(), None
 
 
 # ---------------------------------------------------------------------------
@@ -420,14 +444,12 @@ def execute_delete(spark: SparkSession, stmt: str, table) -> pa.Table:
 
 
 def execute_update(spark: SparkSession, stmt: str, table) -> pa.Table:
-    m = _UPDATE_RE.match(stmt)
+    assignments, cond = _split_where(_UPDATE_RE.match(stmt).group(2))
     tdf = table.read(spark)
-    pairs = _split_assignments(m.group(2))
     assign = _typed_values(
-        tdf, _target_columns(tdf.columns, pairs, "UPDATE"), tdf.schema,
+        tdf, _target_columns(tdf.columns, _split_assignments(assignments), "UPDATE"), tdf.schema,
         promote=not isinstance(table, Relation),
     )
-    cond = m.group(3)
     match = F.expr(cond) if cond else F.lit(True)
     n, n_files = table.update_where(spark, match, assign, cond_str=cond)
     return _result(n_files, rows_updated=n)
@@ -435,11 +457,7 @@ def execute_update(spark: SparkSession, stmt: str, table) -> pa.Table:
 
 def execute_merge(spark: SparkSession, stmt: str, table, read_table) -> pa.Table:
     """MERGE with a named source (the engine lifts an inline subquery
-    first). On a snapshot table `merge_apply` runs one targeting job (the
-    target-source join grouped by data file; a target row matched twice is
-    ERROR_ON_NONDETERMINISTIC_MERGE) and one write: the files holding
-    matched rows, rewritten together with the inserts and sized by the
-    source's plan estimate."""
+    first); the evaluation is in the module docstring."""
     m = _MERGE_RE.match(stmt)
     if not m:
         raise _error(f"unsupported MERGE syntax: {stmt[:120]}")
@@ -447,21 +465,23 @@ def execute_merge(spark: SparkSession, stmt: str, table, read_table) -> pa.Table
     s_alias = m.group(4) or bare_name(m.group(3))
     on_cond, clauses = _split_on_clause(m.group(5))
 
-    source = read_table(m.group(3)).alias(s_alias)
-    cond = F.expr(on_cond)
     target = table.read(spark).alias(t_alias)
-    matched_clauses, insert_clauses = _parse_when_clauses(clauses, target.columns)
+    matched, inserts = _parse_when_clauses(clauses, target.columns)
     promote = not isinstance(table, Relation)
-    inserts = (
-        _inserts_df(target, source, cond, insert_clauses, promote) if insert_clauses else None
-    )
-    matched_result = None
-    if matched_clauses:
-        matched_result = lambda sub: _matched_result_df(  # noqa: E731
-            sub, source, cond, t_alias, matched_clauses, promote
+    source = _merge_source(read_table(m.group(3)).alias(s_alias), inserts, target.schema, promote)
+    nbytes = estimated_bytes(source)
+    checkpoint = source.localCheckpoint(eager=True)
+    # later stages read the materialized rows in scan-split-sized partitions
+    source = checkpoint if nbytes is None else coalesce_to_bytes(checkpoint, nbytes)
+    try:
+        cond = F.expr(on_cond)
+        frame = target.join(source.alias(s_alias), cond)
+        typed = [(c, a and _typed_values(frame, a, target.schema, promote)) for c, a in matched]
+        merge = Merge(t_alias, target.columns, typed, bool(inserts))
+        counts, n_files = table.merge_apply(
+            spark, source.alias(s_alias), cond, t_alias, merge, source_bytes=nbytes
         )
-    n_ins, n_files = table.merge_apply(
-        spark, source, cond, t_alias, matched_result, inserts,
-        insert_bytes=estimated_bytes(source) if inserts is not None else None,
-    )
-    return _result(n_files, rows_affected=table.row_count(spark), rows_inserted=n_ins)
+    finally:
+        # the checkpoint's blocks
+        checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    return _result(n_files, **counts)

@@ -50,10 +50,12 @@ import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from universql_spark import avro_io
 from universql_spark.tableformat import MAX_COMMIT_RETRIES, CommitConflict, SnapshotTable
+from universql_spark.tableformat import _file_bytes, split_bytes
 
 # manifest-list entry (spec: "Manifest Lists", field-ids 500-517)
 _MANIFEST_FILE_SCHEMA = {
@@ -950,8 +952,6 @@ class IcebergTable(SnapshotTable):
             pf = []
         if not pf:
             return super()._write_files(df)
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         def texpr(transform: str, src: str):
             c = F.col(src)
             if transform == "identity":
@@ -1498,8 +1498,6 @@ class IcebergTable(SnapshotTable):
         broadcast of that would OOM executors at scale — above the gate the
         join runs un-hinted (AQE shuffles it, splitting skew as needed). The
         per-file sequence map is metadata-sized (always broadcast)."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         df = super()._read_files(spark, files)
         df = df.withColumn(
             "__path", F.regexp_replace(F.col("_metadata.file_path"), self._PATH_NORM, "")
@@ -1570,41 +1568,25 @@ class IcebergTable(SnapshotTable):
         files = candidates if candidates is not None else self.current_files()
         if not files:
             return {}
+        scan = self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
+        if _file_bytes(files) <= split_bytes(spark):
+            scan = scan.coalesce(1)  # one partition: the grouping needs no exchange
         rows = (
-            self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
-            .filter(match)
+            scan.filter(match)
             .groupBy("__path")
             .count()
             .collect()
         )
         return {r["__path"]: r["count"] for r in rows}
 
-    def _tagged_read(self, spark):
-        """Current-snapshot scan with each row's `__path`/`__pos` (deletes
-        applied); None when the snapshot has no data files."""
-        files = self.current_files()
+    def _tagged_read(self, spark, files: list[str] | None = None):
+        """Scan of `files` (default: the current snapshot's) with each row's
+        `__path`/`__pos`, current deletes applied; None when there are no
+        data files."""
+        files = files if files is not None else self.current_files()
         if not files:
             return None
         return self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
-
-    def row_count(self, spark) -> int:
-        """Rows in the current snapshot: the manifests' record counts, or a
-        count job when delete files hide some of them."""
-        if self.current_delete_files() or self.eq_entries_at():
-            return self.read(spark).count()
-        _v, meta = self._read_metadata()
-        current = next(
-            (s for s in meta.get("snapshots", [])
-             if s["snapshot-id"] == meta.get("current-snapshot-id")),
-            None,
-        )
-        if current is None:
-            return 0
-        return sum(
-            m["added_rows_count"] + m["existing_rows_count"]
-            for m in _read_avro_records(current["manifest-list"])
-            if m.get("content") != 1
-        )
 
     def _write_position_deletes(self, positions) -> list[str]:
         """Write (file_path, pos) rows as spec-conformant position-delete
@@ -1639,8 +1621,6 @@ class IcebergTable(SnapshotTable):
     def delete_where(self, spark, match, cond_str: str | None = None):
         if self._delete_mode() != "merge-on-read":
             return super().delete_where(spark, match, cond_str=cond_str)
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         candidates = self._candidate_files(cond_str)
         if candidates is not None and not candidates:
             return 0, 0
@@ -1669,8 +1649,6 @@ class IcebergTable(SnapshotTable):
     def update_where(self, spark, match, assign_exprs, cond_str: str | None = None):
         if self._delete_mode() != "merge-on-read":
             return super().update_where(spark, match, assign_exprs, cond_str=cond_str)
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         candidates = self._candidate_files(cond_str)
         if candidates is not None and not candidates:
             return 0, 0

@@ -26,10 +26,6 @@ def _dsum(colexpr: str, alias: str) -> F.Column:
     return F.expr(dsum(colexpr)).alias(alias)
 
 
-def _davg(colexpr: str, alias: str) -> F.Column:
-    return F.expr(davg(colexpr)).alias(alias)
-
-
 REVENUE = "l_extendedprice * (1 - l_discount)"
 
 

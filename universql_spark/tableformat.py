@@ -27,10 +27,8 @@ Avro manifests): it supplies `_load`/`_commit`, the read schema, the file
 targeting and the merge-on-read paths, and reaches the shared
 read/write/DML code here through super().
 
-File-granular COW is strictly finer than the hive-partition path in
-engine_dml.py (it bounds rewrite cost on UNPARTITIONED tables too) and is
-exactly what Iceberg's copy-on-write write mode does. At 100 TB the
-file-path aggregate is a narrow one over matched rows only (filter
+File-granular COW is what Iceberg's copy-on-write write mode does. At 100
+TB the file-path aggregate is a narrow one over matched rows only (filter
 pushdown cuts the scan), and the rewrite touches as many bytes as the
 matched files hold — independent of table size.
 
@@ -68,6 +66,11 @@ class NondeterministicMergeError(ValueError):
     row matched by more than one source row."""
 
 
+NONDETERMINISTIC_MERGE = (
+    "MERGE: a target row matches more than one source row (ERROR_ON_NONDETERMINISTIC_MERGE)"
+)
+
+
 # -- write sizing -----------------------------------------------------------
 #
 # A write aims at files of the session's scan split size
@@ -76,11 +79,14 @@ class NondeterministicMergeError(ValueError):
 # next statement's scan, listing and manifest costs stay flat.
 
 
+def split_bytes(spark: SparkSession) -> int:
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
 def coalesce_to_bytes(df: DataFrame, nbytes: int) -> DataFrame:
     """df coalesced to ceil(nbytes / split size) partitions. coalesce never
     adds partitions, so a write never gets more than df already has."""
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    n = max(1, -(-nbytes // int(conf.filesMaxPartitionBytes())))
+    n = max(1, -(-nbytes // split_bytes(df.sparkSession)))
     return df.coalesce(n) if n < 2**31 else df
 
 
@@ -110,8 +116,8 @@ def right_sized(df: DataFrame) -> DataFrame:
 
 
 def _file_bytes(files: list[str]) -> int:
-    """Bytes a copy-on-write rewrite replaces: it is sized to them."""
-    return sum(os.path.getsize(f) for f in files)
+    """Bytes of data files (a copy-on-write rewrite is sized to them)."""
+    return sum(os.path.getsize(re.sub(r"^file:(//)?", "", f)) for f in files)
 
 
 # -- row rules of DELETE / UPDATE / MERGE, shared by every table kind ---------
@@ -136,11 +142,19 @@ def apply_assignments(df: DataFrame, match, assign_exprs: dict[str, str]) -> Dat
     )
 
 
-def merged_rows(target: DataFrame, source: DataFrame, cond, matched_result) -> DataFrame:
-    """target's rows after a MERGE's matched clauses: the rows no source row
-    matches, and matched_result(target) for the rest."""
-    untouched = target.join(source, cond, "left_anti").select(*target.columns)
-    return untouched.unionByName(matched_result(target))
+def merge_writes(rows: DataFrame):
+    """The rows a MERGE writes out of its tagged rows (`__action` 'U', 'I'
+    or 'K'; see engine_dml.Merge), and a function that returns the
+    statement's counts, observed on the write job, once it has run."""
+    obs = Observation()
+    counted = rows.observe(
+        obs,
+        *[
+            F.expr(f"count_if(__action = '{a}') AS rows_{name}")
+            for a, name in (("I", "inserted"), ("U", "updated"), ("D", "deleted"))
+        ],
+    )
+    return counted.filter("__action IN ('U', 'I', 'K')").drop("__action"), lambda: dict(obs.get)
 
 
 def _promotion(old: T.DataType, new: T.DataType) -> bool:
@@ -172,14 +186,12 @@ class SnapshotTable:
         return self._load()["snapshots"]
 
     def current_files(self) -> list[str]:
-        snaps = self.snapshots()
-        return snaps[-1]["files"]
+        return self.snapshots()[-1]["files"]
 
     def current_delete_files(self) -> list[str]:
         """Positional-delete files of the current snapshot (Iceberg v2
         merge-on-read)."""
-        snaps = self.snapshots()
-        return snaps[-1].get("delete_files", []) if snaps else []
+        return self.deletes_at()
 
     def deletes_at(self, snapshot_id: int | None = None, timestamp_ms: int | None = None) -> list[str]:
         snaps = self.snapshots()
@@ -382,8 +394,6 @@ class SnapshotTable:
         first; tombstone-delta pruning is a future refinement). exceptAll
         keeps multiplicity, so duplicate rows diff correctly.
         """
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         snaps = self.snapshots()
         to_id = to_snapshot_id if to_snapshot_id is not None else snaps[-1]["id"]
         f_from = self.files_at(from_snapshot_id)
@@ -399,15 +409,11 @@ class SnapshotTable:
         else:
             only_to = [f for f in f_to if f not in set(f_from)]
             only_from = [f for f in f_from if f not in set(f_to)]
-        empty = None
+        rows_to = rows_from = None
         if only_to:
             rows_to = self._read_files(spark, only_to, deletes=dels_to, eq_entries=eq_to)
-        else:
-            rows_to = empty
         if only_from:
             rows_from = self._read_files(spark, only_from, deletes=dels_from, eq_entries=eq_from)
-        else:
-            rows_from = empty
         if rows_to is None and rows_from is None:
             base = self.read(spark).limit(0)
             rows_to = rows_from = base
@@ -618,50 +624,60 @@ class SnapshotTable:
         source: DataFrame,
         cond,
         t_alias: str,
-        matched_result,
-        inserts: DataFrame | None,
-        insert_bytes: int | None = None,
-    ) -> tuple[int, int]:
-        """File-granular MERGE in one targeting job and one write: rewrite
-        only files holding matched target rows (matched_result(sub_df) ->
-        their post-merge rows; None when the MERGE has no WHEN MATCHED
-        clause) and write them together with the `inserts`, whose plan
-        estimate `insert_bytes` (None: unknown) sizes the write with the
-        replaced bytes. -> (n_inserted, n_files_rewritten)
-
-        The targeting groups the target-source join by file: more join rows
-        than distinct target rows means a row matched more than once
-        (NondeterministicMergeError), and the files are the affected set."""
+        merge,
+        source_bytes: int | None = None,
+    ) -> tuple[dict, int]:
+        """File-granular MERGE in one targeting job and one write. The
+        targeting groups the target-source join by file: those files are
+        rewritten, and more join rows than distinct target rows is a row
+        matched twice (NondeterministicMergeError). The write is one outer
+        join of their rows with the source (`merge`: engine_dml.Merge),
+        sized by the replaced bytes plus `source_bytes` (the source's plan
+        estimate; None keeps the join's partitions). Without a WHEN MATCHED
+        clause it is the source rows no target row matches. When the files
+        and the source fit one scan split, each side is one partition and
+        the joins sort-merge with no exchange: each job is one stage.
+        -> ({rows_inserted, rows_updated, rows_deleted}, n_files_rewritten)"""
         affected: list[str] = []
-        tagged = self._tagged_read(spark) if matched_result is not None else None
+        files = self.current_files() if merge.matched else []
+        tagged = self._tagged_read(spark, files)
+        nbytes = None if source_bytes is None else source_bytes + _file_bytes(files)
+        small = bool(files) and nbytes is not None and nbytes <= split_bytes(spark)
+        if small:
+            source = source.coalesce(1).hint("merge")
         if tagged is not None:
+            tagged = tagged.coalesce(1) if small else tagged
+            joined = tagged.alias(t_alias).join(source, cond, "inner")
             rows = (
-                tagged.alias(t_alias)
-                .join(source, cond, "inner")
+                # by file, once: an exchange both aggregation steps accept
+                (joined if small else joined.repartition("__path"))
                 .groupBy("__path")
                 .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("__pos").alias("rows"))
                 .collect()
             )
             if any(r["n"] > r["rows"] for r in rows):
-                raise NondeterministicMergeError(
-                    "MERGE: a target row matches more than one source row "
-                    "(ERROR_ON_NONDETERMINISTIC_MERGE)"
-                )
+                raise NondeterministicMergeError(NONDETERMINISTIC_MERGE)
             affected = sorted(r["__path"] for r in rows)
-        out, replaced = None, _file_bytes(affected)
         if affected:
-            sub = self._read_files(spark, affected).alias(t_alias)
-            out = coalesce_to_bytes(merged_rows(sub, source, cond, matched_result), replaced)
-        obs = None
-        if inserts is not None:
-            # the inserted-row count rides on the write job
-            obs = Observation()
-            inserts = inserts.observe(obs, F.count(F.lit(1)).alias("n"))
-            out = inserts if out is None else out.unionByName(inserts)
-            if insert_bytes is not None:
-                out = coalesce_to_bytes(out, replaced + insert_bytes)
-        if out is None:
-            return 0, 0
+            if len(affected) < len(files):
+                tagged = self._tagged_read(spark, affected)
+                tagged = tagged.coalesce(1) if small else tagged
+            out = merge.rows(tagged.alias(t_alias).join(source, cond, merge.how))
+        elif merge.inserts:
+            # no target row matches any source row
+            unmatched = (
+                source if merge.matched
+                else source.join(self.read(spark).alias(t_alias), cond, "left_anti")
+            )
+            out = merge.rows(unmatched, with_target=False)
+        else:
+            return {"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0}, 0
+        out, counts = merge_writes(out)
+        replaced = _file_bytes(affected)
+        if not merge.inserts:
+            out = coalesce_to_bytes(out, replaced)
+        elif source_bytes is not None:
+            out = coalesce_to_bytes(out, replaced + source_bytes)
         new = self._nonempty(self._write_files(self._conform(spark, out)))
         self._commit_delta("merge", added=new, removed=affected)
-        return (obs.get["n"] if obs is not None else 0), len(affected)
+        return counts(), len(affected)
