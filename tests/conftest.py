@@ -66,6 +66,7 @@ _SMOKE_TESTS: dict[str, set[str]] = {
         "test_dml_type_change_keeps_iceberg_table_readable[update_promotes]",
         "test_delete_keeps_null_condition_rows",
         "test_merge_reports_rows_it_changed", "test_update_set_subquery_with_where",
+        "test_temp_table_dml_pins_no_blocks", "test_history_on_new_table[temp]",
     },
     "test_protocol.py": {
         "test_login_query_roundtrip", "test_sync_monitoring_by_request_id", "test_set_variable_stays_in_its_session",

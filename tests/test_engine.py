@@ -567,33 +567,27 @@ def test_partitioned_merge_rewrites_one_partition(engine):
 
 def test_unpartitioned_delete_adopts_file_granular(engine):
     """VERDICT r2 'Next round' #3 done-criterion: a 1-row DELETE on an
-    UNPARTITIONED plain table must not rewrite the whole table. First DML
-    adopts the table's files into the snapshot format (metadata-only move —
-    same basenames, same mtimes), then rewrites ONLY the file(s) holding
-    matched rows."""
-    import os as _os
-
+    UNPARTITIONED plain table must not rewrite the whole table. A plain
+    CTAS is an Iceberg table from its CREATE, so the DELETE rewrites ONLY
+    the file holding the matched row; the others keep their paths and
+    mtimes."""
     engine.execute(
         "CREATE OR REPLACE TABLE upd_t AS "
-        "SELECT id, CAST(id * 10 AS BIGINT) AS v FROM range(0, 40, 1, 4) AS r(id)"
+        "SELECT id, CAST(id * 10 AS BIGINT) AS v FROM range(0, 10) AS r(id)"
     )
+    for lo in (10, 20, 30):  # each append adds its own data file
+        engine.execute(f"INSERT INTO upd_t SELECT id, id * 10 FROM range({lo}, {lo + 10}) AS r(id)")
     before = _table_files(engine, "upd_t")
-    before_base = {_os.path.basename(f): m for f, m in before.items() if f.endswith(".parquet")}
-    assert len(before_base) >= 4  # range(..., 4 slices) -> >=4 data files
-    engine.execute("DELETE FROM upd_t WHERE id = 3")
-    snap = engine.snap_tables["upd_t"]
-    after = {
-        _os.path.basename(f): _os.stat(f).st_mtime_ns for f in snap.current_files()
-    }
-    survivors = set(before_base) & set(after)
-    # all but ONE original file survive byte-identical (moved, not rewritten)
-    assert len(survivors) == len(before_base) - 1
-    for b in survivors:
-        assert after[b] == before_base[b]
-    assert len(after) <= len(before_base)  # 1 file replaced, not the table
+    assert len(before) == 4
+    out = engine.execute("DELETE FROM upd_t WHERE id = 3").to_pylist()
+    assert out == [{"rows_deleted": 1, "files_rewritten": 1}]
+    after = _table_files(engine, "upd_t")
+    survivors = set(before) & set(after)
+    assert len(survivors) == len(before) - 1
+    assert all(after[f] == before[f] for f in survivors)
+    assert len(after) <= len(before)  # 1 file replaced, not the table
     rows = {r["id"] for r in engine.execute("SELECT id FROM upd_t").to_pylist()}
     assert rows == set(range(40)) - {3}
-    # follow-up DML stays on the snapshot path (no re-adoption)
     engine.execute("UPDATE upd_t SET v = 0 WHERE id = 5")
     assert engine.execute("SELECT v FROM upd_t WHERE id = 5").to_pylist() == [{"v": 0}]
     engine.execute("DROP TABLE upd_t")
@@ -604,8 +598,8 @@ def test_unpartitioned_delete_adopts_file_granular(engine):
     ["optimize", "vacuum", "clone", "branch", "partition_field", "clustering", "merge_on_read"],
 )
 def test_adopted_plain_table_takes_iceberg_statements(engine, case):
-    """A plain table's first DELETE adopts it as an Iceberg v2 table, so the
-    statements of a CREATE ICEBERG TABLE work on it too."""
+    """A plain table is an Iceberg v2 table from its CREATE, so the
+    statements of a CREATE ICEBERG TABLE work on it before any DML."""
     import json
 
     from universql_spark.iceberg_format import IcebergTable
@@ -615,7 +609,6 @@ def test_adopted_plain_table_takes_iceberg_statements(engine, case):
         f"CREATE OR REPLACE TABLE {t} AS "
         "SELECT id, CAST(id * 10 AS BIGINT) AS v FROM range(0, 40, 1, 4) AS r(id)"
     )
-    engine.execute(f"DELETE FROM {t} WHERE id = 3")
     snap = engine.snap_tables[t]
     assert isinstance(snap, IcebergTable)
     engine.execute("CREATE OR REPLACE ICEBERG TABLE adp_ice AS SELECT 1 AS id")
@@ -629,7 +622,7 @@ def test_adopted_plain_table_takes_iceberg_statements(engine, case):
         return sorted((r["id"], r["v"]) for r in engine.execute(f"SELECT id, v FROM {name}").to_pylist())
 
     before = rows(t)
-    assert [i for i, _v in before] == [i for i in range(40) if i != 3]
+    assert [i for i, _v in before] == list(range(40))
     if case == "optimize":
         engine.execute(f"OPTIMIZE {t}")
         assert rows(t) == before
@@ -665,15 +658,16 @@ def test_adopted_plain_table_takes_iceberg_statements(engine, case):
 
 
 def test_plain_table_without_iceberg_type_keeps_shadow_swap(engine):
-    """A column type Iceberg cannot express (an interval) refuses adoption:
-    the files move back and DELETE runs on the plain table instead."""
+    """A column type Iceberg cannot express (an interval) makes CREATE fall
+    back to a catalog table, which DELETE rewrites whole."""
     engine.execute(
         "CREATE OR REPLACE TABLE adp_ivl AS "
         "SELECT id, INTERVAL '1' DAY AS i FROM range(0, 8, 1, 2) AS r(id)"
     )
-    engine.execute("DELETE FROM adp_ivl WHERE id = 3")
     assert "adp_ivl" not in engine.snap_tables
     assert not os.path.exists(engine._snap_root("adp_ivl"))
+    assert engine.spark.catalog.tableExists("adp_ivl")
+    assert engine.execute("DELETE FROM adp_ivl WHERE id = 3").to_pylist() == [{"rows_deleted": 1}]
     ids = sorted(r["id"] for r in engine.execute("SELECT id FROM adp_ivl").to_pylist())
     assert ids == [0, 1, 2, 4, 5, 6, 7]
     engine.execute("DROP TABLE adp_ivl")
@@ -800,12 +794,12 @@ def test_merge_multi_clause_partitioned(engine):
     engine.execute("DROP TABLE mcp_t; DROP TABLE mcp_s")
 
 
-#: CREATE statements for each DML target kind: Iceberg, a plain table
-#: adopted on its first DML, a partitioned (Iceberg from CREATE) table, a
-#: qualified catalog table and a TEMP table (the last two replaced whole)
+#: CREATE statements for each DML target kind: Iceberg, plain,
+#: partitioned and TEMP tables (all Iceberg from their CREATE) and a
+#: qualified catalog table (replaced whole)
 _DML_KINDS = {
     "iceberg": "CREATE OR REPLACE ICEBERG TABLE {t} AS {q}",
-    "adopted": "CREATE OR REPLACE TABLE {t} AS {q}",
+    "plain": "CREATE OR REPLACE TABLE {t} AS {q}",
     "partitioned": "CREATE OR REPLACE TABLE {t} PARTITION BY (p) AS {q}",
     "qualified": "CREATE OR REPLACE TABLE {t} AS {q}",
     "temp": "CREATE OR REPLACE TEMP TABLE {t} AS {q}",
@@ -829,7 +823,7 @@ def test_delete_keeps_null_condition_rows(engine, kind):
     left = engine.execute(f"SELECT id, x FROM {t}").to_pylist()
     assert sorted(r["id"] for r in left) == [i for i in range(20) if i % 2 == 0 or i <= 5]
     assert sum(r["x"] is None for r in left) == 10
-    assert (t in engine.snap_tables) == (kind in ("iceberg", "adopted", "partitioned"))
+    assert (t in engine.snap_tables) == (kind != "qualified")
     engine.execute(f"DROP TABLE {t}")
 
 
@@ -897,21 +891,23 @@ def test_hive_partitioned_table_dml_keeps_partitions(engine):
     engine.execute("DROP TABLE hp_t")
 
 
-@pytest.mark.parametrize("kind", ["qualified", "temp"])
+@pytest.mark.parametrize("kind", ["qualified", "spark_ddl"])
 def test_relation_dml_keeps_column_types(engine, kind):
     """On a table DML rewrites whole, a wider value is cast to its column's
     type (only an Iceberg table promotes a column)."""
-    t = "rct.s.rct_t" if kind == "qualified" else "rct_temp"
-    engine.execute(
-        _DML_KINDS[kind].format(t=t, q="SELECT CAST(id AS INT) AS i FROM range(3) AS r(id)")
-    )
+    q = "SELECT CAST(id AS INT) AS i FROM range(3) AS r(id)"
+    if kind == "qualified":
+        t = "rct.s.rct_t"
+        engine.execute(_DML_KINDS[kind].format(t=t, q=q))
+    else:  # a catalog table made outside the engine's CREATE
+        t = "rct_ddl"
+        engine.spark.sql(f"CREATE TABLE {t} USING parquet AS {q}")
     engine.execute(f"UPDATE {t} SET i = i + CAST(10 AS BIGINT) WHERE i = 1")
     engine.execute(
         f"MERGE INTO {t} t USING (SELECT CAST(7 AS BIGINT) AS k) s ON t.i = s.k "
         "WHEN NOT MATCHED THEN INSERT (i) VALUES (s.k)"
     )
-    tdf = engine.spark.table(engine._resolve_name(t) if kind == "qualified" else t)
-    assert dict(tdf.dtypes)["i"] == "int"
+    assert dict(engine.spark.table(engine._resolve_name(t)).dtypes)["i"] == "int"
     assert sorted(r["i"] for r in engine.execute(f"SELECT i FROM {t}").to_pylist()) == [0, 2, 7, 11]
     engine.execute(f"DROP TABLE {t}")
 
@@ -1076,7 +1072,7 @@ def test_temp_table_merge_stays_temporary(engine):
         "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v "
         "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
     ).to_pylist()
-    assert out == [{"rows_inserted": 1, "rows_updated": 1, "rows_deleted": 0}]
+    assert out[0]["rows_inserted"] == 1 and out[0]["rows_updated"] == 1 and out[0]["rows_deleted"] == 0
     assert [t.isTemporary for t in engine.spark.catalog.listTables() if t.name == "tm_t"] == [True]
     rows = engine.execute("SELECT id, v FROM tm_t ORDER BY id").to_pylist()
     assert rows == [{"id": 1, "v": "b"}, {"id": 2, "v": "c"}]
@@ -2452,8 +2448,7 @@ END"""
     assert out == [{"RETURN_VALUE": "skipped"}]
     import pyarrow  # noqa: F401
 
-    tables = [t.name for t in engine.spark.catalog.listTables() if not t.isTemporary]
-    assert "never_made" not in tables
+    assert "never_made" not in {t.name for t in engine.spark.catalog.listTables()}
 
 
 def test_sql_udf_create_function(engine):
@@ -2610,10 +2605,9 @@ def test_show_surface_completions(spark, sf_dir):
 
 
 def test_stream_on_plain_table_adopts(spark, sf_dir):
-    """CREATE STREAM on a PLAIN managed table auto-adopts it into the
-    snapshot format (metadata-only file moves — the first-DML upgrade
-    path), so change tracking works like Snowflake's without requiring the
-    user to declare ICEBERG up front. Policy SHOW surfaces alongside."""
+    """CREATE STREAM works on a PLAIN table: it is an Iceberg table from its
+    CREATE, so change tracking works like Snowflake's without the user
+    declaring ICEBERG up front. Policy SHOW surfaces alongside."""
     eng = Engine(spark=spark, sf_dir=sf_dir)
     eng.execute(
         "CREATE OR REPLACE TABLE plain_st AS SELECT 1 AS id;"
@@ -3022,13 +3016,24 @@ def test_get_variant_and_array(engine):
     assert row["arr_get"] == 20  # 0-based, Spark-native = Snowflake semantics
 
 
-def test_copy_on_error_continue_and_validation(engine, tmp_path):
-    """COPY copyOptions: VALIDATION_MODE=RETURN_ERRORS dry-runs and returns
-    the rejected records; ON_ERROR=CONTINUE loads the good rows and counts
-    the bad ones; MATCH_BY_COLUMN_NAME loads by name, not position."""
+@pytest.mark.parametrize(
+    "create",
+    [
+        "CREATE OR REPLACE ICEBERG TABLE copt_t AS "
+        "SELECT CAST(NULL AS INT) AS k, CAST(NULL AS STRING) AS v WHERE 1 = 0",
+        "CREATE OR REPLACE TABLE copt_t (k INT, v STRING)",
+        "CREATE OR REPLACE TEMP TABLE copt_t (k INT, v STRING)",
+    ],
+    ids=["iceberg", "plain", "temp"],
+)
+def test_copy_on_error_continue_and_validation(engine, tmp_path, create):
+    """COPY copyOptions on every table kind: VALIDATION_MODE=RETURN_ERRORS
+    dry-runs and returns the rejected records; ON_ERROR=CONTINUE loads the
+    good rows and counts the bad ones; MATCH_BY_COLUMN_NAME loads by name,
+    not position."""
     f = tmp_path / "mixed.csv"
     f.write_text("1,a\n2,b\nnotanint,c\n3,d\n")
-    engine.execute("CREATE OR REPLACE TEMP TABLE copt_t (k INT, v STRING)")
+    engine.execute(create)
     engine.execute(f"CREATE OR REPLACE STAGE copt_stg URL='file://{tmp_path}'")
     out = engine.execute(
         "COPY INTO copt_t FROM @copt_stg/mixed.csv "
@@ -3054,6 +3059,8 @@ def test_copy_on_error_continue_and_validation(engine, tmp_path):
     assert out["rows_loaded"] == 1
     row = engine.execute("SELECT k, v FROM copt_t WHERE k = 7").to_pylist()
     assert row == [{"k": 7, "v": "x"}]
+    assert "copt_t" in engine.snap_tables
+    engine.execute("DROP TABLE copt_t")
 
 
 def test_infer_schema_table_function(engine, tmp_path):
@@ -3134,14 +3141,20 @@ def test_alter_partition_field_via_engine(engine):
 
 
 def test_analyze_table_stats(engine):
-    """ANALYZE TABLE passes through to Spark's CBO stats collection; the
-    catalog then reports sizeInBytes/rowCount for the table."""
-    engine.execute("CREATE OR REPLACE TABLE an_t AS SELECT * FROM nation")
-    engine.execute("ANALYZE TABLE an_t COMPUTE STATISTICS")
-    desc = engine.execute("DESCRIBE EXTENDED an_t").to_pylist()
+    """ANALYZE TABLE passes through to Spark's CBO stats collection for a
+    catalog table; the catalog then reports sizeInBytes/rowCount for it.
+    On an Iceberg table, whose manifests hold the statistics, it is a
+    no-op."""
+    engine.execute("CREATE OR REPLACE TABLE an.s.an_t AS SELECT * FROM nation")
+    engine.execute("ANALYZE TABLE an.s.an_t COMPUTE STATISTICS")
+    desc = engine.execute("DESCRIBE EXTENDED an.s.an_t").to_pylist()
     stats = [r for r in desc if "Statistics" in str(r)]
     assert stats, desc[-5:]
-    engine.execute("DROP TABLE an_t")
+    engine.execute("DROP TABLE an.s.an_t")
+    engine.execute("CREATE OR REPLACE TABLE an_ice AS SELECT * FROM nation")
+    out = engine.execute("ANALYZE TABLE an_ice COMPUTE STATISTICS").to_pylist()
+    assert "manifests" in out[0]["status"]
+    engine.execute("DROP TABLE an_ice")
 
 
 def test_describe_result_and_last_query_id_offset(engine):
@@ -4775,9 +4788,8 @@ def test_quantified_subquery_comparisons(engine):
 
 def test_temp_table_dml(engine):
     """Snowflake temp tables (CREATE TEMP TABLE AS SELECT) take
-    INSERT/DELETE/UPDATE: the view-backed table re-materializes
-    (localCheckpoint) per DML — data semantics, not a live query. DELETE
-    and UPDATE report the same rows_* counts as every other table."""
+    INSERT/DELETE/UPDATE like every other table: they are Iceberg tables
+    holding the selected rows, not a live query."""
     engine.execute("CREATE OR REPLACE TEMP TABLE tdml AS SELECT 1 AS v, 'a' AS s")
     assert engine.execute("INSERT INTO tdml SELECT 2, 'b'").to_pylist() == [
         {"number of rows inserted": 1}
@@ -4793,10 +4805,8 @@ def test_temp_table_dml(engine):
     ).to_pylist() == [{"n": 6, "sv": 15}]
     assert engine.execute(
         "UPDATE tdml SET v = v * 10 WHERE s IN ('a','b')"
-    ).to_pylist() == [{"rows_updated": 2}]
-    assert engine.execute("DELETE FROM tdml WHERE v IS NULL").to_pylist() == [
-        {"rows_deleted": 1}
-    ]
+    ).to_pylist()[0]["rows_updated"] == 2
+    assert engine.execute("DELETE FROM tdml WHERE v IS NULL").to_pylist()[0]["rows_deleted"] == 1
     rows = engine.execute("SELECT v, s FROM tdml ORDER BY s").to_pylist()
     assert rows == [
         {"v": 10, "s": "a"},
@@ -4806,6 +4816,191 @@ def test_temp_table_dml(engine):
         {"v": 5, "s": "e"},
     ]
     engine.execute("DROP TABLE tdml")
+
+
+def test_temp_table_dml_pins_no_blocks(engine):
+    """A TEMP table's DML holds nothing in memory: three UPDATEs and a DROP
+    leave the count of persisted RDDs where it was."""
+    jsc = engine.spark.sparkContext._jsc
+    blocks = jsc.getPersistentRDDs().size()
+    engine.execute(
+        "CREATE OR REPLACE TEMP TABLE tpb_t AS SELECT id, id * 2 AS v FROM range(10) AS r(id)"
+    )
+    for i in range(3):
+        engine.execute(f"UPDATE tpb_t SET v = v + 1 WHERE id = {i}")
+    assert engine.execute("SELECT SUM(v) AS s FROM tpb_t").to_pylist() == [{"s": 93}]
+    engine.execute("DROP TABLE tpb_t")
+    assert jsc.getPersistentRDDs().size() == blocks
+
+
+def test_column_list_temp_table_is_iceberg(engine):
+    """CREATE TEMP TABLE t (cols) makes an Iceberg table, not a catalog
+    table: a DELETE rewrites only the data file holding the matched row."""
+    engine.execute("CREATE OR REPLACE TEMP TABLE clt_t (k INT, v VARCHAR(8))")
+    assert "clt_t" in engine.snap_tables
+    assert not engine.spark.catalog.tableExists("default.clt_t")
+    engine.execute("INSERT INTO clt_t VALUES (1, 'a'), (2, 'b')")
+    engine.execute("INSERT INTO clt_t VALUES (3, 'c')")
+    before = _table_files(engine, "clt_t")
+    out = engine.execute("DELETE FROM clt_t WHERE k = 3").to_pylist()
+    assert out == [{"rows_deleted": 1, "files_rewritten": 1}]
+    after = _table_files(engine, "clt_t")
+    assert set(after) < set(before) and len(set(before) - set(after)) == 1
+    rows = engine.execute("SELECT k, v FROM clt_t ORDER BY k").to_pylist()
+    assert rows == [{"k": 1, "v": "a"}, {"k": 2, "v": "b"}]
+    engine.execute("DROP TABLE clt_t")
+
+
+@pytest.mark.parametrize("temp", ["", "TEMP "], ids=["plain", "temp"])
+def test_history_on_new_table(engine, temp):
+    """Time travel, STREAM and UNDROP work on a plain or TEMP table from its
+    CREATE, before any DML."""
+    engine.execute(f"CREATE OR REPLACE {temp}TABLE hnt_t AS SELECT 1 AS id")
+    sid = engine.snap_tables["hnt_t"].snapshots()[-1]["id"]
+    assert engine.execute(f"SELECT id FROM hnt_t AT(SNAPSHOT => {sid})").to_pylist() == [{"id": 1}]
+    engine.execute("CREATE OR REPLACE STREAM hnt_s ON TABLE hnt_t")
+    engine.execute("INSERT INTO hnt_t VALUES (2)", query_id="hnt_insert")
+    out = engine.execute("SELECT id, metadata$action AS act FROM hnt_s").to_pylist()
+    assert out == [{"id": 2, "act": "INSERT"}]
+    out = engine.execute("SELECT id FROM hnt_t BEFORE(STATEMENT => 'hnt_insert')").to_pylist()
+    assert out == [{"id": 1}]
+    engine.execute("DROP STREAM hnt_s; DROP TABLE hnt_t; UNDROP TABLE hnt_t")
+    assert sorted(r["id"] for r in engine.execute("SELECT id FROM hnt_t").to_pylist()) == [1, 2]
+    engine.execute("DROP TABLE hnt_t")
+
+
+@pytest.mark.parametrize(
+    "name, create",
+    [
+        ("orph_ice", "CREATE ICEBERG TABLE orph_ice AS SELECT 1 AS id"),
+        ("orph_plain", "CREATE TABLE orph_plain AS SELECT 1 AS id"),
+        ("orph_cols", "CREATE TABLE orph_cols (id INT)"),
+    ],
+)
+def test_create_over_orphaned_table_dir(engine, monkeypatch, name, create):
+    """A CREATE without OR REPLACE over a table directory no table of this
+    engine owns (another process's leftover) reclaims it as the sole live
+    engine of the warehouse, and fails while another engine shares it."""
+    from universql_spark import warehouse_guard as wg
+
+    root = engine._snap_root(name)
+    leftover = os.path.join(root, "metadata", "v1.metadata.json")
+    os.makedirs(os.path.dirname(leftover), exist_ok=True)
+    with open(leftover, "w") as f:
+        f.write("{}")
+    monkeypatch.setattr(wg, "other_live_engines", lambda spark: [1])
+    with pytest.raises(QueryError, match="already exists"):
+        engine.execute(create)
+    assert os.path.exists(leftover)
+    monkeypatch.setattr(wg, "other_live_engines", lambda spark: [])
+    engine.execute(create)
+    assert engine.snap_tables[name].root == root
+    assert engine.execute(f"SELECT COUNT(*) AS n FROM {name}").to_pylist()[0]["n"] in (0, 1)
+    engine.execute(f"DROP TABLE {name}")
+
+
+def test_create_under_a_renamed_tables_first_name(engine):
+    """A renamed table keeps its storage under its first name; a new table
+    of that name gets storage of its own instead of replacing it."""
+    engine.execute("CREATE OR REPLACE ICEBERG TABLE rnr_a AS SELECT 1 AS id")
+    engine.execute("ALTER TABLE rnr_a RENAME TO rnr_b")
+    engine.execute("CREATE OR REPLACE ICEBERG TABLE rnr_a AS SELECT 2 AS id")
+    assert engine.snap_tables["rnr_a"].root != engine.snap_tables["rnr_b"].root
+    assert engine.execute("SELECT id FROM rnr_a").to_pylist() == [{"id": 2}]
+    assert engine.execute("SELECT id FROM rnr_b").to_pylist() == [{"id": 1}]
+    engine.execute("DROP TABLE rnr_a; DROP TABLE rnr_b")
+
+
+def test_failed_create_leaves_no_table_dir(engine, monkeypatch):
+    """A CREATE whose query fails while it is written leaves no table
+    directory behind, so the next CREATE of the name needs no reclaiming,
+    even while another engine shares the warehouse."""
+    from universql_spark import warehouse_guard as wg
+
+    import shutil
+
+    t = "fcl_t"
+    shutil.rmtree(engine._snap_root(t), ignore_errors=True)  # an earlier run's dropped table
+    monkeypatch.setattr(wg, "other_live_engines", lambda spark: [1])
+    with pytest.raises(QueryError, match="DIVIDE_BY_ZERO"):
+        engine.execute(f"CREATE ICEBERG TABLE {t} AS SELECT 1 / (id - id) AS x FROM range(3) AS r(id)")
+    assert t not in engine.snap_tables
+    assert not os.path.exists(engine._snap_root(t))
+    engine.execute(f"CREATE ICEBERG TABLE {t} AS SELECT 1 AS x")
+    assert engine.execute(f"SELECT x FROM {t}").to_pylist() == [{"x": 1}]
+    engine.execute(f"DROP TABLE {t}")
+
+
+def test_temp_table_storage_ends_with_its_process():
+    """A TEMP table's files belong to its engine process: they are gone
+    once the process exits, while a plain table's stay."""
+    import subprocess
+    import sys
+    import textwrap
+
+    child = textwrap.dedent(
+        """
+        from universql_spark.engine import Engine
+        from universql_spark.session import get_spark
+
+        eng = Engine(spark=get_spark("temp_child", cpus=1))
+        eng.execute("CREATE OR REPLACE TEMP TABLE tse_t AS SELECT 1 AS id")
+        eng.execute("CREATE OR REPLACE TABLE tse_p AS SELECT 1 AS id")
+        print(eng.snap_tables["tse_t"].root, eng.snap_tables["tse_p"].root)
+        """
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", child], capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": repo}, check=True,
+    ).stdout.split()
+    temp_root, plain_root = out[-2:]
+    assert not os.path.exists(temp_root)
+    assert os.path.exists(plain_root)
+
+
+def test_parse_error_message_is_its_first_line(engine):
+    """A Spark parse error reaches the client with its first non-blank
+    line (ParseException text opens with a newline)."""
+    with pytest.raises(QueryError) as err:
+        engine.execute("SELEC 1")
+    assert err.value.message.startswith("[PARSE_SYNTAX_ERROR]")
+    assert engine.query_log[-1]["error_message"] == err.value.message
+
+
+def test_iceberg_tables_report_as_tables(engine):
+    """information_schema.tables and SHOW OBJECTS report Iceberg tables as
+    tables, though each reads through a temp view of its name."""
+    engine.execute("CREATE OR REPLACE ICEBERG TABLE rat_ice AS SELECT 1 AS id")
+    engine.execute("CREATE OR REPLACE TABLE rat_plain AS SELECT 1 AS id")
+    engine.execute("DELETE FROM rat_plain WHERE id = 0")
+    engine.execute("CREATE OR REPLACE TEMP VIEW rat_view AS SELECT 1 AS id")
+    rows = engine.execute(
+        "SELECT table_name, table_type FROM information_schema.tables "
+        "WHERE table_name LIKE 'RAT_%' ORDER BY table_name"
+    ).to_pylist()
+    assert [(r["table_name"], r["table_type"]) for r in rows] == [
+        ("RAT_ICE", "BASE TABLE"), ("RAT_PLAIN", "BASE TABLE"), ("RAT_VIEW", "VIEW"),
+    ]
+    out = engine.execute("SHOW OBJECTS LIKE 'rat_%'").to_pydict()
+    assert list(zip(out["name"], out["kind"])) == [
+        ("RAT_ICE", "TABLE"), ("RAT_PLAIN", "TABLE"), ("RAT_VIEW", "VIEW"),
+    ]
+    engine.execute("DROP TABLE rat_ice; DROP TABLE rat_plain; DROP VIEW rat_view")
+
+
+def test_insert_column_list_resolves_like_update(engine):
+    """INSERT (cols) into an Iceberg table names its columns as UPDATE and
+    MERGE do: case-insensitively, and an unknown name is an error, never a
+    silently dropped value."""
+    engine.execute("CREATE OR REPLACE ICEBERG TABLE icl_t AS SELECT 1 AS id, 'a' AS s")
+    out = engine.execute("INSERT INTO icl_t (ID, \"S\") VALUES (2, 'b')").to_pylist()
+    assert out == [{"number of rows inserted": 1}]
+    with pytest.raises(QueryError, match="invalid identifier 'nosuch'"):
+        engine.execute("INSERT INTO icl_t (id, nosuch) VALUES (3, 'c')")
+    rows = engine.execute("SELECT id, s FROM icl_t ORDER BY id").to_pylist()
+    assert rows == [{"id": 1, "s": "a"}, {"id": 2, "s": "b"}]
+    engine.execute("DROP TABLE icl_t")
 
 
 def test_procedure_unquoted_body(engine):

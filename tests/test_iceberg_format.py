@@ -852,7 +852,8 @@ def _evolved(spark, root):
 
 
 def _adopted_lagging(spark, root):
-    # a plain table's files written before and after its ADD COLUMN
+    # existing files written before and after an ADD COLUMN, referenced in
+    # place under the table's current schema
     os.makedirs(os.path.join(root, "data"))
     old, new = os.path.join(root, "data", "old"), os.path.join(root, "data", "new")
     spark.range(3).select("id", F.lit("a").alias("s")).coalesce(1).write.parquet(old)
@@ -861,7 +862,9 @@ def _adopted_lagging(spark, root):
     ).write.parquet(new)
     files = [os.path.join(d, f) for d in (old, new) for f in os.listdir(d) if f.endswith(".parquet")]
     schema = spark.range(1).select("id", F.lit("a").alias("s"), F.lit(1.0).alias("x")).schema
-    return IcebergTable.adopt(root, files, schema)
+    t = IcebergTable._init(root, schema)
+    t._append_snapshot(sorted(files), "append")
+    return t
 
 
 def _mor_deleted(spark, root):

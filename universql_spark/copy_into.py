@@ -3,10 +3,11 @@
 The reference rewrites `COPY INTO t FROM @stage (params)` into
 `INSERT INTO t SELECT * FROM read_<fmt>([urls], mapped_params)` with a ~35
 entry option-translation table (plugins/snow.py:89-300, 371-437). Here the
-same contract maps onto the DataFrameReader: option table below, then
-`df.write.insertInto(t)`. Paths are plain file/object-store URLs (the @stage
-indirection is a Snowflake-catalog concept; a local path or s3a:// URL plays
-the same role for Spark — SURVEY.md §2.1 'Stage resolution').
+same contract maps onto the DataFrameReader: option table below, then the
+target's append (an Iceberg commit, or `insertInto` a catalog table).
+Paths are plain file/object-store URLs (the @stage indirection is a
+Snowflake-catalog concept; a local path or s3a:// URL plays the same role
+for Spark — SURVEY.md §2.1 'Stage resolution').
 
 Scale note: spark.read on a glob/directory parallelizes by file split —
 loading N files is an N-way scan, and the append is a write-side shuffle-free
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+from typing import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -179,25 +181,6 @@ def read_stage(
     raise ValueError(f"unsupported COPY format: {fmt}")
 
 
-def execute_copy(spark: SparkSession, stmt: str, resolve=None) -> pa.Table:
-    """One source scan per COPY: the row count rides the write as an
-    Observation metric instead of a second df.count() pass (VERDICT r1
-    "What's wrong" #1 — the old insertInto+count read the source twice,
-    doubling load cost at scale)."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    table, path, fmt, options = parse_copy(stmt)
-    df = read_stage(spark, path, fmt, options)
-    if resolve is None:
-        from universql_spark.names import resolve_name as resolve
-    target = resolve(table)
-    obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).write.insertInto(target, overwrite=False)
-    n = obs.get["n"]
-    return pa.table({"rows_loaded": [n], "status": ["LOADED"]})
-
-
 # COPY INTO <location> — the UNLOAD direction (export query/table results to
 # a stage as CSV/PARQUET/JSON). Reference surface: Snowflake's
 # `COPY INTO @stage FROM t FILE_FORMAT=(...)`; options map onto
@@ -329,8 +312,13 @@ def execute_copy_with_options(
     resolve=None,
     named_formats: dict | None = None,
     default_format: tuple[str, dict] | None = None,
+    write: Callable[[DataFrame], None] | None = None,
 ) -> pa.Table:
-    """COPY INTO with the copyOptions surface. Semantics:
+    """COPY INTO with the copyOptions surface. The load is one scan of the
+    source: its row count rides the write as an Observation metric.
+    `write(df)` appends the loaded rows (default: `insertInto` the catalog
+    table); `df` has the source's columns, or the target's when the load
+    read by the target's schema or by name. Semantics:
 
     - VALIDATION_MODE = RETURN_ERRORS: dry run — rows that do not parse
       against the TARGET's schema come back as (error, rejected_record),
@@ -351,7 +339,7 @@ def execute_copy_with_options(
       documented divergence from Snowflake's implicit FORCE=FALSE.
     - PURGE=TRUE: staged files are deleted after a successful commit
       (raises for non-enumerable/remote paths instead of silently ignoring).
-    - default (ABORT_STATEMENT): the plain execute_copy path.
+    - default (ABORT_STATEMENT): any bad row fails the statement.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -363,6 +351,9 @@ def execute_copy_with_options(
     if resolve is None:
         from universql_spark.names import resolve_name as resolve
     target = resolve(table)
+    if write is None:
+        def write(df: DataFrame) -> None:
+            df.write.insertInto(target, overwrite=False)
     on_error = copts.get("ON_ERROR", "ABORT_STATEMENT")
     match_by = copts.get("MATCH_BY_COLUMN_NAME", "NONE")
     validation = copts.get("VALIDATION_MODE", "")
@@ -446,9 +437,7 @@ def execute_copy_with_options(
         good = df.filter(F.col("_corrupt").isNull()).drop("_corrupt")
         n_bad = df.filter(F.col("_corrupt").isNotNull()).count()
         obs = Observation()
-        good.observe(obs, F.count(F.lit(1)).alias("n")).write.insertInto(
-            target, overwrite=False
-        )
+        write(good.observe(obs, F.count(F.lit(1)).alias("n")))
         n = obs.get["n"]
         df.unpersist()
         _commit(clean=(n_bad == 0))
@@ -460,11 +449,11 @@ def execute_copy_with_options(
         df = read_stage(spark, src, fmt, options)
         df = _match_by_name(df, spark.table(target).schema, match_by == "CASE_INSENSITIVE")
         obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("n")).write.insertInto(target, overwrite=False)
+        write(df.observe(obs, F.count(F.lit(1)).alias("n")))
         _commit()
         return pa.table({"rows_loaded": [obs.get["n"]], "status": ["LOADED"]})
     df = read_stage(spark, src, fmt, options)
     obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).write.insertInto(target, overwrite=False)
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
     _commit()
     return pa.table({"rows_loaded": [obs.get["n"]], "status": ["LOADED"]})

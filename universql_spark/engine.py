@@ -8,19 +8,21 @@ state (USE), statement classification for the DDL/DML the reference handles
 itself (§2.2), and the Arrow result contract.
 
 Statement handling parity map (reference file:line):
-  CREATE [OR REPLACE] TABLE .. AS SELECT  -> saveAsTable (parquet-backed
-        managed table; Iceberg writeTo when the runtime jar is present)
-        [duckdb.py:274-334]
-  CREATE TEMP TABLE .. AS SELECT          -> temp view  [duckdb.py:336-342]
+  CREATE [OR REPLACE] [TEMP] TABLE t ..   -> Iceberg v2 table (iceberg_format.py)
+        (AS SELECT, column list, LIKE, USING TEMPLATE) under a bare name;
+        saveAsTable for a qualified name or a type Iceberg cannot express
+        [duckdb.py:274-342]
   CREATE [TEMP] VIEW                      -> spark.sql  [duckdb.py:346-351]
-  INSERT INTO                             -> spark.sql  [duckdb.py:352-372]
-  DROP TABLE / VIEW                       -> spark.sql  [duckdb.py:375-377]
+  INSERT INTO                             -> Iceberg append; spark.sql for
+                                             catalog tables [duckdb.py:352-372]
+  DROP TABLE / VIEW                       -> UNDROP registry for Iceberg
+                                             tables; spark.sql  [duckdb.py:375-377]
   USE [DATABASE|SCHEMA]                   -> session state + setCurrentDatabase
                                              [duckdb.py:378-395]
   SHOW ...                                -> spark.sql (Spark catalog is the
                                              catalog; no cloud hop) [session.py:82-85]
   COPY INTO t FROM path (options)         -> copy_into.py: spark.read.<fmt>
-                                             + append  [plugins/snow.py:353-437]
+                                             + the table's append  [plugins/snow.py:353-437]
   SELECT / everything else                -> dialect -> spark.sql
   table(to_query('...'))                  -> inner SQL runs on in-process
                                              DuckDB, result becomes a local
@@ -32,19 +34,24 @@ statement never poisons the session (reference tests/integration/extract.py:45-5
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import re
+import shutil
 import time
 import uuid
 from collections import deque
 
 import pyarrow as pa
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from universql_spark import copy_into, engine_dml
 from universql_spark.dialect import snowflake_to_spark, split_statements, strip_table_wrapper
+from universql_spark.iceberg_format import expressible as iceberg_expressible
 from universql_spark.names import bare_name, split_ident
 from universql_spark.session import get_spark, register_testdata
 from universql_spark.tableformat import right_sized
@@ -502,11 +509,6 @@ class Engine:
         }
         #: stored procedures: name -> (param names, scripting-block body)
         self.procedures: dict[str, tuple[list[str], str]] = {}
-        #: names created by CREATE TEMP TABLE AS SELECT (view-backed):
-        #: INSERT/DELETE/UPDATE on them re-materialize the view
-        #: (localCheckpoint) instead of falling into Spark's
-        #: can't-insert-into-RDD-based-table refusal
-        self._temp_ctas: set[str] = set()
         #: name -> (fmt, reader options) from CREATE FILE FORMAT
         self.file_formats: dict[str, tuple[str, dict[str, str]]] = {}
         #: stage name -> default FILE FORMAT name (CREATE STAGE ... FILE_FORMAT=)
@@ -537,8 +539,9 @@ class Engine:
         #: "not dynamic / manual refresh". In-memory cache so the read-path
         #: staleness check does not re-read metadata files per SELECT
         self._dynamic_meta: dict[str, tuple[int, int]] = {}
-        #: bare name -> IcebergTable (iceberg_format.py) for every CREATE
-        #: ICEBERG TABLE target and every plain table adopted on first DML:
+        #: bare name -> IcebergTable (iceberg_format.py) for every table the
+        #: engine creates under a bare name (plain, TEMP, ICEBERG, dynamic,
+        #: partitioned or clustered) and every attached REST-catalog table:
         #: snapshot manifests + file-granular copy-on-write DML + time travel
         self.snap_tables: dict[str, "object"] = {}
         #: catalog write-back (reference warehouse/snowflake.py:73-88):
@@ -1446,18 +1449,9 @@ class Engine:
             if m:
                 tbl = bare_name(self._resolve_name(m.group(2)))
                 if tbl not in self.snap_tables:
-                    # change tracking needs snapshots: ADOPT a plain managed
-                    # parquet table as an Iceberg v2 table (metadata-only
-                    # file moves — the same upgrade first DML performs)
-                    self._adopt_for_dml(
-                        re.compile(r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?STREAM\s+[\w.\"]+\s+ON\s+TABLE\s+([\w.\"]+)"),
-                        stmt,
-                    )
-                if tbl not in self.snap_tables:
+                    # change tracking reads the table's snapshots
                     raise QueryError(
-                        f"STREAM requires a snapshot/Iceberg table (or an adoptable "
-                        f"plain managed table); {tbl} is not one",
-                        sql_state="42000",
+                        f"STREAM requires an Iceberg table; {tbl} is not one", sql_state="42000"
                     )
                 self.streams[bare_name(m.group(1))] = {
                     "table": tbl,
@@ -1667,37 +1661,27 @@ class Engine:
                 )
             cm = _CREATE_TABLE_COLS_RE.match(stmt)
             if cm:
-                # column-definition CREATE TABLE (the reference's DDL->DuckDB
-                # passthrough, duckdb.py:336-345). TEMP tables land in the
-                # catalog too (one engine process == one session), so COPY
-                # INTO / insertInto work against them uniformly.
-                replace, _temp, name, cols = (
+                # column-definition CREATE [TEMP] TABLE (the reference's
+                # DDL->DuckDB passthrough, duckdb.py:336-345): an empty
+                # table, made like a CTAS's
+                replace, temp, name, cols = (
                     bool(cm.group(1)), bool(cm.group(2)), cm.group(3).strip('"'), cm.group(4)
                 )
                 cols = self._extract_constraints(bare_name(name), cols)
-                target = self._resolve_name(name)
-                if replace:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {target}")
-                ddl = snowflake_to_spark(f"CREATE TABLE {target} ({cols}) USING PARQUET")
-                try:
-                    self.spark.sql(ddl)
-                except Exception as e:
-                    # same reclamation rule as the CTAS path: OR REPLACE owns
-                    # the name, so an orphaned managed-table dir left by a
-                    # previous process's dead in-memory catalog is removed —
-                    # but only when no OTHER live engine shares the warehouse
-                    # (warehouse_guard pid registry, ADVICE r7)
-                    if replace and "LOCATION_ALREADY_EXISTS" in str(e):
-                        from universql_spark import warehouse_guard  # noqa: PLC0415
-
-                        lm = re.search(r"location 'file:([^']+)'", str(e))
-                        if not lm or not warehouse_guard.reclaim_orphan(
-                            self.spark, lm.group(1), owned=True  # replace-gated
-                        ):
-                            raise
-                        self.spark.sql(ddl)
-                    else:
-                        raise
+                ddl = snowflake_to_spark(f"CREATE TABLE __cols ({cols}) USING PARQUET")
+                parsed = T._parse_datatype_json_string(
+                    self.spark._jsparkSession.sessionState().sqlParser().parsePlan(ddl).tableSchema().json()
+                )
+                # Snowflake's CHAR(n) / VARCHAR(n) are one unpadded string type
+                schema = T.StructType([
+                    T.StructField(f.name, T.StringType(), f.nullable)
+                    if isinstance(f.dataType, (T.CharType, T.VarcharType)) else f
+                    for f in parsed.fields
+                ])
+                df = self.spark.createDataFrame([], schema)
+                if len(split_ident(name)) > 1 or not iceberg_expressible(schema):
+                    return self._catalog_ctas(name, df, replace)
+                self._create_iceberg(name, df, replace, temp=temp)
                 return _status(f"created {name}")
             # snapshot-table lifecycle statements (INSERT/COPY/ALTER/TRUNCATE
             # route to manifest commits; plain tables fall through to Spark)
@@ -1754,49 +1738,7 @@ class Engine:
                 self._refresh_snap_view(bn)
                 return _status(f"cloned {bare_name(clm.group(3))} -> {bn}")
             if im and bare_name(im.group(1)) in self.snap_tables:
-                bn = bare_name(im.group(1))
-                snap = self.snap_tables[bn]
-                df = self._run_select(im.group(4) + im.group(5))
-                tdf = snap.read(self.spark)
-                tcols, ttypes = tdf.columns, dict(tdf.dtypes)
-                if im.group(3):  # explicit column list; missing cols -> NULL
-                    given = [c.strip().strip('"').lower() for c in im.group(3).split(",")]
-                    df = df.toDF(*given)
-                    df = df.select(
-                        *[
-                            F.col(c).cast(ttypes[c]).alias(c)
-                            if c in given
-                            else F.lit(None).cast(ttypes[c]).alias(c)
-                            for c in tcols
-                        ]
-                    )
-                else:
-                    df = self._align_to_snap(df, tdf)
-                snap.append(right_sized(df))
-                self._refresh_snap_view(bn)
-                return _status(f"inserted into iceberg {bn}")
-            if im and self._is_temp_ctas(im.group(1)):
-                return self._temp_insert(im)
-            am = re.match(
-                r"^\s*ALTER\s+TABLE\s+([\w.\"]+)\s+ADD\s+COLUMN\s+(\w+)\s+([\w()0-9,]+)\s*$",
-                stmt,
-                re.I,
-            )
-            if am and bare_name(am.group(1)) in self.snap_tables:
-                bn = bare_name(am.group(1))
-                self.snap_tables[bn].add_column(am.group(2).lower(), snowflake_to_spark(am.group(3)))
-                self._refresh_snap_view(bn)
-                return _status(f"altered iceberg {bn}")
-            dm = re.match(
-                r"^\s*ALTER\s+TABLE\s+([\w.\"]+)\s+DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)\s*$",
-                stmt,
-                re.I,
-            )
-            if dm and bare_name(dm.group(1)) in self.snap_tables:
-                bn = bare_name(dm.group(1))
-                self.snap_tables[bn].drop_column(dm.group(2).lower())
-                self._refresh_snap_view(bn)
-                return _status(f"altered iceberg {bn}")
+                return self._insert(bare_name(im.group(1)), im, overwrite=False)
             pm2 = re.match(
                 r"^\s*ALTER\s+(?:ICEBERG\s+)?TABLE\s+([\w.\"]+)\s+(ADD|DROP)\s+"
                 r"PARTITION\s+FIELD\s+(?:(\w+)\s*\(\s*(\w+)\s*\)|(\w+))\s*$",
@@ -1838,16 +1780,6 @@ class Engine:
                 else:
                     t.drop_ref(bm.group(4))
                 return _status(f"{bm.group(3).lower()} {bm.group(4)} on {bn}")
-            rm = re.match(
-                r"^\s*ALTER\s+TABLE\s+([\w.\"]+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$",
-                stmt,
-                re.I,
-            )
-            if rm and bare_name(rm.group(1)) in self.snap_tables:
-                bn = bare_name(rm.group(1))
-                self.snap_tables[bn].rename_column(rm.group(2).lower(), rm.group(3).lower())
-                self._refresh_snap_view(bn)
-                return _status(f"altered iceberg {bn}")
             pm = re.match(
                 r"^\s*ALTER\s+(?:ICEBERG\s+)?TABLE\s+([\w.\"]+)\s+SET\s+"
                 r"(?:TBLPROPERTIES\s*\(|PROPERTIES\s*\(|)(.*?)\)?\s*$",
@@ -1864,6 +1796,12 @@ class Engine:
                 for k, v in re.findall(r"'([^']+)'\s*=\s*'([^']*)'", pm.group(2)):
                     self.snap_tables[bn].set_property(k, v)
                 return _status(f"properties set on iceberg {bn}")
+            am = re.match(r"^\s*ANALYZE\s+TABLE\s+([\w.\"]+)\b", stmt, re.I)
+            if am and bare_name(am.group(1)) in self.snap_tables:
+                # Spark's ANALYZE refuses the temp view an Iceberg table
+                # reads through; the manifests already hold each file's
+                # row count, size and column bounds
+                return _status(f"statistics of iceberg {bare_name(am.group(1))} are kept in its manifests")
             om = re.match(
                 r"^\s*OPTIMIZE\s+([\w.\"]+)(?:\s+ZORDER\s+BY\s*\(([^)]*)\))?\s*$",
                 stmt,
@@ -1930,21 +1868,12 @@ class Engine:
             )
             if tm:
                 # bare `TRUNCATE t` and IF EXISTS forms are valid Snowflake
-                # (r7 probe closure); dispatch per table kind like the
-                # column-lifecycle branch below
+                # (r7 probe closure)
                 bn = bare_name(tm.group(2))
                 if bn in self.snap_tables:
                     self.snap_tables[bn].truncate()
                     self._refresh_snap_view(bn)
                     return _status(f"truncated iceberg {bn}")
-                is_view = bn in {
-                    t.name.lower()
-                    for t in self.spark.catalog.listTables()
-                    if t.isTemporary
-                }
-                if is_view:
-                    self.spark.table(bn).limit(0).createOrReplaceTempView(bn)
-                    return _status(f"truncated {bn}")
                 resolved = self._resolve_name(tm.group(2))
                 if not self.spark.catalog.tableExists(resolved):
                     if tm.group(1):  # IF EXISTS: missing table is fine
@@ -1953,51 +1882,23 @@ class Engine:
                 self.spark.sql(f"TRUNCATE TABLE {resolved}")
                 return _status(f"truncated {bn}")
             om = re.match(
-                r"^\s*INSERT\s+OVERWRITE\s+INTO\s+([\w.\"]+)(.*)$", stmt, re.I | re.S
+                r"^\s*INSERT\s+OVERWRITE\s+INTO\s+([\w.\"]+)\s*(\(([^)]*)\))?\s*(SELECT|VALUES|WITH)(.*)$",
+                stmt, re.I | re.S,
             )
             if om:
-                # Snowflake INSERT OVERWRITE INTO is ATOMIC: a failing
-                # source query leaves the prior data intact. Emulation
-                # (ADVICE r7 — the old truncate-then-insert left the table
-                # EMPTY on failure): stage the new rows into a same-schema
-                # scratch table FIRST — this validates the source and
-                # materializes its rows — then truncate + copy from the
-                # staged parquet (already validated and typed, so the
-                # post-truncate window carries no query risk). Costs one
-                # extra write of the NEW rows only; overwrite batches are
-                # usually far smaller than the table they replace.
-                tgt = om.group(1)
-                staging = f"__iovw_{bare_name(tgt)}"
-                self.execute(
-                    f"CREATE OR REPLACE TABLE {staging} AS "
-                    f"SELECT * FROM {tgt} WHERE 1 = 0"
-                )
-                try:
-                    self.execute(f"INSERT INTO {staging}{om.group(2)}")
-                    self.execute(f"TRUNCATE TABLE {tgt}")
-                    out = self.execute(f"INSERT INTO {tgt} SELECT * FROM {staging}")
-                finally:
-                    try:
-                        self.execute(f"DROP TABLE IF EXISTS {staging}")
-                    except Exception:
-                        pass  # never mask the INSERT's own error
-                return out
+                return self._insert(bare_name(om.group(1)), om, overwrite=True)
             cm_sys = re.match(r"^\s*CALL\s+(SYSTEM\$\w+\s*\(.*\))\s*$", stmt, re.I | re.S)
             if cm_sys:
                 # system functions are CALLable in Snowflake; evaluate the
                 # SELECT form (SYSTEM$WAIT etc. rewrite there)
                 return self.execute(f"SELECT {cm_sys.group(1)}")
-            # --- table lifecycle on TEMP (view-backed) and plain v1 catalog
-            # tables. Snowflake allows TRUNCATE / ADD / RENAME / DROP COLUMN
-            # on every table kind; Spark's v1 catalog rejects RENAME/DROP
-            # COLUMN, and temp views reject all four. The transform builds
-            # through _run_select (so Snowflake types and star modifiers
-            # resolve through the dialect); temp tables rebuild their view,
-            # plain tables rewrite copy-on-write via an eager checkpoint
-            # before the overwrite (the CTAS-over-self move above).
+            # ADD / RENAME / DROP COLUMN: metadata commits on an Iceberg
+            # table. Spark's v1 catalog rejects RENAME/DROP COLUMN, so a
+            # catalog table is rewritten copy-on-write: an eager checkpoint
+            # of the new contents, then the overwrite.
             am = re.match(
                 r"^\s*ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s+ADD\s+COLUMN\s+"
-                r"(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+([\w(),0-9 ]+?)\s*$",
+                r"(IF\s+NOT\s+EXISTS\s+)?(\w+)\s+([\w(),0-9 ]+?)\s*$",
                 stmt, re.I,
             )
             rcm = re.match(
@@ -2007,50 +1908,36 @@ class Engine:
             )
             dcm = re.match(
                 r"^\s*ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s+DROP\s+"
-                r"(?:COLUMN\s+)?(?:IF\s+EXISTS\s+)?(\w+)\s*$",
+                r"(?:COLUMN\s+)?(IF\s+EXISTS\s+)?(\w+)\s*$",
                 stmt, re.I,
             )
-            target = tm or am or rcm or dcm
+            target = am or rcm or dcm
             if target is not None:
                 bn = bare_name(target.group(1))
-                is_view = bn in {
-                    t.name.lower()
-                    for t in self.spark.catalog.listTables()
-                    if t.isTemporary
-                } and bn not in self.snap_tables
+                snap = self.snap_tables.get(bn)
+                if snap is not None:
+                    cols = {c.lower() for c in snap.read(self.spark).columns}
+                    if am and not (am.group(2) and am.group(3).lower() in cols):
+                        snap.add_column(am.group(3).lower(), snowflake_to_spark(am.group(4)))
+                    elif rcm:
+                        snap.rename_column(rcm.group(2).lower(), rcm.group(3).lower())
+                    elif dcm and not (dcm.group(2) and dcm.group(3).lower() not in cols):
+                        snap.drop_column(dcm.group(3).lower())
+                    self._refresh_snap_view(bn)
+                    return _status(f"altered iceberg {bn}")
                 resolved = self._resolve_name(target.group(1))
-                is_plain = (
-                    not is_view
-                    and bn not in self.snap_tables
-                    and self.spark.catalog.tableExists(resolved)
-                )
-                if tm and is_view:
-                    self.spark.table(bn).limit(0).createOrReplaceTempView(bn)
-                    return _status(f"truncated {bn}")
-                df = None
-                if am and is_view:
-                    # through _run_select so the Snowflake TYPE resolves via
-                    # the dialect (NUMBER(10,2) -> DECIMAL etc.); new column
-                    # appends at the end, Snowflake's ADD COLUMN position
-                    df = self._run_select(
-                        f"SELECT *, CAST(NULL AS {am.group(3)}) AS {am.group(2)} FROM {bn}"
-                    )
-                elif rcm and (is_view or is_plain):
+                if (rcm or dcm) and self.spark.catalog.tableExists(resolved):
+                    df = self.spark.table(resolved)
                     # withColumnRenamed keeps the column POSITION (a star
                     # RENAME modifier would move it to the end)
-                    df = self.spark.table(bn).withColumnRenamed(
-                        rcm.group(2), rcm.group(3)
-                    )
-                elif dcm and (is_view or is_plain):
-                    df = self.spark.table(bn).drop(dcm.group(2))
-                if df is not None:
-                    if is_view:
-                        df.createOrReplaceTempView(bn)
-                    else:
-                        df = df.localCheckpoint(eager=True)
-                        df.write.mode("overwrite").option(
+                    df = df.withColumnRenamed(rcm.group(2), rcm.group(3)) if rcm else df.drop(dcm.group(3))
+                    checkpoint = df.localCheckpoint(eager=True)
+                    try:
+                        checkpoint.write.mode("overwrite").option(
                             "overwriteSchema", "true"
                         ).saveAsTable(resolved)
+                    finally:
+                        engine_dml.release(checkpoint)
                     return _status(f"altered {bn}")
             dm = re.match(r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.\"]+)\s*$", stmt, re.I)
             if dm and bare_name(dm.group(1)) in self.snap_tables:
@@ -2064,8 +1951,6 @@ class Engine:
                 self.spark.catalog.dropTempView(bn)
                 old = self.dropped_tables.pop(bn, None)
                 if old is not None:
-                    import shutil
-
                     shutil.rmtree(old.root, ignore_errors=True)
                 self.dropped_tables[bn] = snap
                 return _status(f"dropped iceberg {bn}")
@@ -2160,9 +2045,11 @@ class Engine:
                 tables = self.spark.catalog.listTables(db) if db else self.spark.catalog.listTables()
                 like = om.group(1)
                 pat = _like_regex(like) if like else None
+                # an Iceberg table reads through a temp view of its name
                 rows = [
                     (t.name.upper(),
-                     "VIEW" if t.tableType in ("VIEW", "TEMPORARY") else "TABLE",
+                     "VIEW" if t.tableType in ("VIEW", "TEMPORARY") and t.name not in self.snap_tables
+                     else "TABLE",
                      (t.database or db or self.session.database or "default").upper(),
                      "PUBLIC")
                     for t in tables
@@ -2370,20 +2257,20 @@ class Engine:
                 cp = copy_into.parse_copy(
                     stmt, named_formats=self.file_formats, default_format=default_fmt
                 )
-                if bare_name(cp[0]) in self.snap_tables:
-                    bn = bare_name(cp[0])
-                    snap = self.snap_tables[bn]
-                    df = copy_into.read_stage(self.spark, cp[1], cp[2], cp[3])
-                    n = df.count()
-                    snap.append(right_sized(self._align_to_snap(df, snap.read(self.spark))))
-                    self._refresh_snap_view(bn)
-                    return pa.table({"rows_loaded": [n], "status": ["LOADED"]})
+                bn = bare_name(cp[0])
+                snap = self.snap_tables.get(bn)
+                write = None
+                if snap is not None:
+                    def write(df: DataFrame) -> None:
+                        snap.append(right_sized(self._align_to_snap(df, snap.read(self.spark))))
+                        self._refresh_snap_view(bn)
                 return copy_into.execute_copy_with_options(
                     self.spark,
                     stmt,
                     resolve=self._resolve_name,
                     named_formats=self.file_formats,
                     default_format=default_fmt,
+                    write=write,
                 )
             if _DELETE_RE.match(stmt) or _UPDATE_RE.match(stmt) or _MERGE_RE.match(stmt):
                 return self._dml(stmt)
@@ -2401,7 +2288,9 @@ class Engine:
                 except Exception:
                     pass  # report the ORIGINAL Spark error below
             m = re.search(r"SQLSTATE: (\w{5})", msg)
-            raise QueryError(msg.split("\n")[0][:500], sql_state=m.group(1) if m else "42000") from e
+            # Spark's ParseException text opens with a blank line
+            first = next((ln for ln in msg.splitlines() if ln.strip()), "")
+            raise QueryError(first[:500], sql_state=m.group(1) if m else "42000") from e
 
     # -- handlers ------------------------------------------------------------
 
@@ -2512,7 +2401,8 @@ class Engine:
 
             stmt = self._resolve_info_schema_extras(stmt)
             stmt = info_schema.resolve(
-                self.spark, stmt, default_catalog=self.session.database or "UNIVERSQL"
+                self.spark, stmt, default_catalog=self.session.database or "UNIVERSQL",
+                table_views=set(self.snap_tables),
             )
         try:
             return self.spark.sql(snowflake_to_spark(stmt))
@@ -3056,8 +2946,6 @@ class Engine:
         into an Iceberg table and record (query, target lag, refresh time)
         as table properties, so the schedule survives the session. Refresh
         is a `replace` snapshot — time travel covers every materialization."""
-        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
         replace, name, opts, select = (
             bool(m.group(1)), m.group(2).strip('"'), m.group(3) or "", m.group(4).strip()
         )
@@ -3070,15 +2958,11 @@ class Engine:
             except (KeyError, ValueError) as e:
                 raise QueryError(f"unparseable TARGET_LAG {lm.group(1)!r}") from e
         bn = bare_name(name)
-        df = self._run_select(select)
-        self._reclaim_dropped(name)
-        snap = IcebergTable.create(self._snap_root(name), df, replace=replace)
+        snap = self._create_iceberg(name, self._run_select(select), replace)
         snap.set_property("universql-spark.dynamic.query", select)
         snap.set_property("universql-spark.dynamic.target-lag-seconds", str(lag_s))
         snap.set_property("universql-spark.dynamic.last-refresh-ms", str(int(time.time() * 1000)))
-        self.snap_tables[bn] = snap
         self._dynamic_meta[bn] = (lag_s, int(time.time() * 1000))
-        self._refresh_snap_view(bn)
         return _status(f"created dynamic table {name} (target lag {lag_s}s)")
 
     def _refresh_dynamic(self, bn: str) -> None:
@@ -3119,7 +3003,7 @@ class Engine:
             if bn in self._refreshing:
                 continue
             meta = self._dynamic_meta.get(bn)
-            if meta is None:  # first sight (e.g. table adopted from disk)
+            if meta is None:  # first sight (e.g. an attached catalog table)
                 lag = snap.get_property("universql-spark.dynamic.target-lag-seconds")
                 last = int(snap.get_property("universql-spark.dynamic.last-refresh-ms") or 0)
                 meta = (int(lag) if lag is not None else -1, last)
@@ -3199,65 +3083,6 @@ class Engine:
         r"(?:VALUES\s*\(((?:[^()]|\([^()]*\))*)\))?\s*",
         re.I | re.S,
     )
-
-    # -- TEMP tables --------------------------------------------------------
-    # CREATE TEMP TABLE AS SELECT lands as a session temp view over
-    # materialized rows (localCheckpoint), so the table holds DATA, not a
-    # live query. INSERT re-derives the view here; DELETE/UPDATE/MERGE run
-    # in engine_dml with `_temp_register` as their final replace. Either
-    # way repeated DML neither deepens the lazy plan nor re-evaluates
-    # non-deterministic sources.
-
-    def _is_temp_ctas(self, name: str) -> bool:
-        bn = bare_name(name)
-        if bn not in self._temp_ctas:
-            return False
-        try:
-            live = any(
-                t.name == bn and t.isTemporary for t in self.spark.catalog.listTables()
-            )
-        except Exception:  # noqa: BLE001 - catalog listing is advisory
-            live = True
-        if not live:
-            self._temp_ctas.discard(bn)
-        return live
-
-    def _temp_register(self, bn: str, df: DataFrame) -> None:
-        df.localCheckpoint(eager=True).createOrReplaceTempView(bn)
-
-    def _temp_insert(self, im: re.Match) -> pa.Table:
-        bn = bare_name(im.group(1))
-        tdf = self.spark.table(bn)
-        tcols, ttypes = tdf.columns, dict(tdf.dtypes)
-        before = tdf.count()
-        df = self._run_select(im.group(4) + im.group(5))
-        if im.group(3):  # explicit column list; missing cols -> NULL
-            given = [c.strip().strip('"').lower() for c in im.group(3).split(",")]
-            # Spark preserves identifier case in tdf.columns; Snowflake
-            # identifiers are case-insensitive — match on lower() and
-            # raise on names that hit no table column (Snowflake errors).
-            tset = {c.lower() for c in tcols}
-            unknown = [c for c in given if c not in tset]
-            if unknown:
-                raise ValueError(
-                    f"invalid identifier(s) in INSERT column list: {unknown}"
-                )
-            df = df.toDF(*given)
-            df = df.select(
-                *[
-                    F.col(c.lower()).cast(ttypes[c]).alias(c)
-                    if c.lower() in given
-                    else F.lit(None).cast(ttypes[c]).alias(c)
-                    for c in tcols
-                ]
-            )
-        else:
-            df = df.toDF(*tcols).select(
-                *[F.col(c).cast(ttypes[c]).alias(c) for c in tcols]
-            )
-        self._temp_register(bn, tdf.unionByName(df))
-        after = self.spark.table(bn).count()
-        return pa.table({"number of rows inserted": [after - before]})
 
     def _insert_multi(self, mode: str, clauses: str, select: str) -> pa.Table:
         """Snowflake multi-table INSERT ALL|FIRST: the source SELECT runs
@@ -3632,7 +3457,6 @@ class Engine:
         defaults TRUE like Snowflake (gzip, .gz suffix) — COPY's readers
         decompress by extension, so the round trip is seamless."""
         import gzip  # noqa: PLC0415
-        import shutil  # noqa: PLC0415
 
         src = m.group(1)[len("file://"):]
         dest_dir = self._local_stage_dir(m.group(2).lower(), m.group(3))
@@ -3688,8 +3512,6 @@ class Engine:
     def _get_files(self, m: re.Match) -> pa.Table:
         """SnowSQL's GET: download staged files matching the @stage path
         prefix into a local directory (the inverse of PUT)."""
-        import shutil  # noqa: PLC0415
-
         prefix = self._local_stage_dir(m.group(1).lower(), m.group(2))
         base_root = self._local_stage_dir(m.group(1).lower(), "")
         dest = m.group(3)[len("file://"):]
@@ -3815,8 +3637,6 @@ class Engine:
         copy (one retained generation, reclaimed on reuse)."""
         old = self.dropped_tables.pop(bare_name(name), None)
         if old is not None:
-            import shutil  # noqa: PLC0415
-
             shutil.rmtree(old.root, ignore_errors=True)
 
     def _extract_constraints(self, table: str, cols: str) -> str:
@@ -3877,18 +3697,16 @@ class Engine:
         return ", ".join(out)
 
     def _swap_tables(self, name_a: str, name_b: str) -> pa.Table:
-        """ALTER TABLE a SWAP WITH b — atomic name exchange. Snapshot tables
-        swap their table objects; temp-view tables re-register each name on
-        the OTHER's resolved plan (analysis is eager, so each DataFrame
-        pins the pre-swap definition); catalog tables do the three-way
-        RENAME dance."""
+        """ALTER TABLE a SWAP WITH b — atomic name exchange. Iceberg tables
+        swap their table objects; catalog tables do the three-way RENAME
+        dance."""
         a, b = bare_name(name_a), bare_name(name_b)
         in_a, in_b = a in self.snap_tables, b in self.snap_tables
         if in_a or in_b:
             if not (in_a and in_b):
                 raise QueryError(
                     "SWAP WITH requires both tables to be the same kind "
-                    "(both snapshot-backed or both catalog/temp)"
+                    "(both Iceberg or both catalog tables)"
                 )
             self.snap_tables[a], self.snap_tables[b] = (
                 self.snap_tables[b],
@@ -3896,14 +3714,6 @@ class Engine:
             )
             self._refresh_snap_view(a)
             self._refresh_snap_view(b)
-            return _status(f"swapped {a} with {b}")
-        temp_names = {
-            t.name.lower() for t in self.spark.catalog.listTables() if t.isTemporary
-        }
-        if a.lower() in temp_names and b.lower() in temp_names:
-            da, db = self.spark.table(a), self.spark.table(b)
-            db.createOrReplaceTempView(a)
-            da.createOrReplaceTempView(b)
             return _status(f"swapped {a} with {b}")
         ra, rb = self._resolve_name(name_a), self._resolve_name(name_b)
         tmp = f"__swap_{uuid.uuid4().hex[:8]}"
@@ -3938,19 +3748,15 @@ class Engine:
         return out
 
     def _dml_target(self, pattern: re.Pattern, sql: str):
-        """(snapshot-table name | None, target) of a DML statement: a
-        snapshot table (a plain one is adopted on its first DML), else an
-        `engine_dml.Relation` replaced whole — a TEMP table by
-        re-registering its view, a catalog table by a shadow swap."""
+        """(snapshot-table name | None, target) of a DML statement: an
+        Iceberg table, else a Spark catalog table as an
+        `engine_dml.Relation` replaced whole by a shadow swap."""
         m = pattern.match(sql)
         if not m:
             raise QueryError(f"unsupported {sql.split(None, 1)[0].upper()} syntax: {sql[:120]}")
-        snap = self._snap_target(pattern, sql) or self._adopt_for_dml(pattern, sql)
+        snap = self._snap_target(pattern, sql)
         if snap:
             return snap
-        if self._is_temp_ctas(m.group(1)):
-            bn = bare_name(m.group(1))
-            return None, engine_dml.Relation(bn, lambda df: self._temp_register(bn, df))
         resolved = self._resolve_name(m.group(1))
         return None, engine_dml.Relation(
             resolved, lambda df: engine_dml._replace_table(self.spark, resolved, df)
@@ -3965,75 +3771,40 @@ class Engine:
         snap = self.snap_tables.get(name)
         return (name, snap) if snap else None
 
-    def _adopt_for_dml(self, pattern: re.Pattern, sql: str):
-        """Upgrade an UNPARTITIONED plain managed parquet table to an Iceberg
-        v2 table on first DML (or CREATE STREAM), so DELETE/UPDATE/MERGE run
-        file-granular copy-on-write instead of a whole-table shadow swap, and
-        every Iceberg statement (OPTIMIZE, VACUUM, branches, CLONE,
-        partition evolution, merge-on-read) works on it. The adoption
-        itself is metadata-scale: the table's existing parquet files are
-        MOVED (same-filesystem rename) under the table root and referenced
-        as snapshot 1 — zero bytes of data rewritten; the manifests read
-        only the files' footers. Hive-partitioned catalog tables (their
-        files lack the partition columns) and qualified (non-default-
-        namespace) tables stay whole relations (snap_tables is keyed by
-        bare name)."""
-        m = pattern.match(sql)
-        if not m:
-            return None
-        name = m.group(1)
-        bn = bare_name(name)
-        resolved = self._resolve_name(name)
-        if "." in resolved:
-            return None
-        try:
-            tbl = self.spark.catalog.getTable(resolved)
-            if tbl.tableType != "MANAGED":
-                return None
-            if any(c.isPartition for c in self.spark.catalog.listColumns(resolved)):
-                return None
-            table = self.spark.table(resolved)
-            files = [f.removeprefix("file:") for f in table.inputFiles()]
-            if not files or not all(f.endswith(".parquet") for f in files):
-                return None
-        except Exception:
-            return None
-        import shutil  # noqa: PLC0415
-
-        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
-        root = self._snap_root(name)
-        self._reclaim_dropped(bn)
-        if os.path.exists(root):
-            # orphan from a previous process's in-memory catalog (same
-            # reclamation rule as the CTAS LOCATION_ALREADY_EXISTS path:
-            # only when no other live engine shares the warehouse —
-            # a same-named snapshot root may be ANOTHER process's table)
-            from universql_spark import warehouse_guard  # noqa: PLC0415
-
-            if not warehouse_guard.reclaim_orphan(self.spark, root):
-                return None  # leave DML on the safe shadow-swap path
-        dest_dir = os.path.join(root, "data", "adopted-v1")
-        os.makedirs(dest_dir, exist_ok=True)
-        moved = []
-        for f in files:
-            dest = os.path.join(dest_dir, os.path.basename(f))
-            os.rename(f, dest)
-            moved.append(dest)
-        try:
-            snap = IcebergTable.adopt(root, moved, table.schema)
-        except ValueError:
-            # a column type with no Iceberg mapping: put the files back and
-            # leave DML on the shadow-swap path
-            for f, dest in zip(files, moved):
-                os.rename(dest, f)
-            shutil.rmtree(root, ignore_errors=True)
-            return None
-        # the managed dir is now fileless; DROP purges only the husk
-        self.spark.sql(f"DROP TABLE {resolved}")
-        self.snap_tables[bn] = snap
-        self._refresh_snap_view(bn)
-        return (bn, snap)
+    def _insert(self, bn: str, m: re.Match, overwrite: bool) -> pa.Table:
+        """INSERT [OVERWRITE] INTO t [(cols)] <query> (`m` groups 1, 3, 4+5)
+        into an Iceberg table, or with OVERWRITE into a catalog table. A
+        column list names table columns case-insensitively (an unknown name
+        is an error, as in UPDATE and MERGE) and the columns it leaves out
+        are NULL; without one, columns match by position. OVERWRITE is
+        atomic, as Snowflake's: the new rows are written before one commit
+        (or a catalog table's shadow swap) replaces the old, so a failing
+        query leaves them intact."""
+        snap = self.snap_tables.get(bn)
+        resolved = self._resolve_name(m.group(1))
+        tdf = self.spark.table(resolved) if snap is None else snap.read(self.spark)
+        df = self._run_select(m.group(4) + m.group(5))
+        if m.group(3) is None:
+            df = self._align_to_snap(df, tdf)
+        else:
+            cols = engine_dml._target_columns(
+                tdf.columns, [(c, c) for c in m.group(3).split(",")], "INSERT"
+            )
+            ttypes = dict(tdf.dtypes)
+            df = df.toDF(*cols).select(
+                *[(F.col(c) if c in cols else F.lit(None)).cast(ttypes[c]).alias(c) for c in tdf.columns]
+            )
+        obs = Observation()
+        df = right_sized(df.observe(obs, F.count(F.lit(1)).alias("n")))
+        if snap is None:
+            engine_dml._replace_table(self.spark, resolved, df)
+        elif overwrite:
+            snap.replace_contents(df)
+        else:
+            snap.append(df)
+        if snap is not None:
+            self._refresh_snap_view(bn)
+        return pa.table({"number of rows inserted": [obs.get["n"]]})
 
     def _align_to_snap(self, df: DataFrame, tdf: DataFrame) -> DataFrame:
         """Positional rename + cast to the table's column types, so appended
@@ -4227,11 +3998,7 @@ class Engine:
 
     def _ctas(self, m: re.Match) -> pa.Table:
         replace, temp, iceberg, name, select = (
-            bool(m.group(1)),
-            bool(m.group(2)),
-            bool(m.group(3)),
-            m.group(4).strip('"'),
-            m.group(9),
+            bool(m.group(1)), bool(m.group(2)), bool(m.group(3)), m.group(4).strip('"'), m.group(9)
         )
         props = {
             k.upper(): v
@@ -4239,10 +4006,8 @@ class Engine:
         }
         # PARTITION BY records an identity partition spec (per-file
         # partition tuples + manifest pruning), CLUSTER BY range-clusters
-        # the write and records the sort order. Either makes the table an
-        # Iceberg table from its CREATE, so its DML is the file-granular
-        # copy-on-write every snapshot table takes. Snapshot tables are
-        # keyed by bare name, so a qualified name takes neither.
+        # the write and records the sort order. Both need an Iceberg table,
+        # and Iceberg tables are keyed by bare name.
         pkind = (m.group(6) or "").upper()
         from universql_spark.dialect import _split_top_args  # noqa: PLC0415
 
@@ -4251,7 +4016,8 @@ class Engine:
             for c in _split_top_args(m.group(7) or "")
             if c.strip()
         ]
-        if (iceberg or pcols) and not temp and len(split_ident(name)) > 1:
+        qualified = len(split_ident(name)) > 1
+        if (iceberg or pcols) and qualified:
             what = "ICEBERG" if iceberg else f"{pkind} BY"
             raise QueryError(
                 f"{what} table {name}: Iceberg tables are keyed by their bare "
@@ -4276,91 +4042,120 @@ class Engine:
                 break
             select = select[1:-1].strip()
         df = self._run_select(select)
-        bn = bare_name(name)
-        if temp:
-            # session-scoped, like the reference's TEMP CTAS (duckdb.py:336-342)
-            self._temp_register(bn, df)
-            self._temp_ctas.add(bn)
-            return _status(f"created {name}")
-        to_iceberg = iceberg or bool(pcols)
-        if to_iceberg:
-            # CREATE ICEBERG TABLE -> real Iceberg v2 metadata
-            # (iceberg_format.py: metadata.json + Avro manifest lists +
-            # manifests, written pure-Python) over file-granular COW DML and
-            # AT() time travel — the reference's CTAS->Iceberg
-            # (duckdb.py:274-334) without the jar
-            from universql_spark.iceberg_format import IcebergTable
-
-            self._reclaim_dropped(bn)
-            # EXTERNAL_VOLUME + BASE_LOCATION place the table in the
-            # volume's lake path (the reference's table_location resolution,
-            # duckdb.py:283-292 over snowflake.py get_volume_lake_path);
-            # without them the table lives under the warehouse dir
-            root = self._snap_root(name)
-            if "EXTERNAL_VOLUME" in props:
-                vol = props["EXTERNAL_VOLUME"].lower()
-                if vol not in self.volumes:
-                    raise QueryError(
-                        f"external volume {vol} does not exist "
-                        "(CREATE EXTERNAL VOLUME first)", sql_state="02000"
-                    )
-                base_url = self.volumes[vol]
-                rel = props.get("BASE_LOCATION", bn)
-                root = os.path.join(
-                    base_url.removeprefix("file://"), rel.strip("/")
-                )
-            elif "BASE_LOCATION" in props:
+        if qualified or not (iceberg or pcols or iceberg_expressible(df.schema)):
+            # a qualified name, or a type Iceberg cannot express (INTERVAL)
+            return self._catalog_ctas(name, df, replace)
+        # EXTERNAL_VOLUME + BASE_LOCATION place the table in the volume's
+        # lake path (the reference's table_location resolution,
+        # duckdb.py:283-292 over snowflake.py get_volume_lake_path);
+        # without them the table lives under the warehouse dir
+        root = None
+        if "EXTERNAL_VOLUME" in props:
+            vol = props["EXTERNAL_VOLUME"].lower()
+            if vol not in self.volumes:
                 raise QueryError(
-                    "BASE_LOCATION requires EXTERNAL_VOLUME (it is relative "
-                    "to the volume's STORAGE_BASE_URL)"
+                    f"external volume {vol} does not exist "
+                    "(CREATE EXTERNAL VOLUME first)", sql_state="02000"
                 )
-        # A table of either kind already named bn is replaced, with OR
-        # REPLACE only. A snapshot table's files go before the write, so the
-        # query, which may read them (CREATE ... AS SELECT ... FROM itself),
-        # is materialized first; a plain catalog table under an Iceberg
-        # CTAS is dropped after the write. A plain table replaced by a plain
-        # one is the catalog write's own overwrite.
-        db = self.spark.catalog.currentDatabase()
-        old = self.snap_tables.get(bn)
-        plain = to_iceberg and old is None and self.spark.catalog.tableExists(f"{db}.{bn}")
-        if (old is not None or plain) and not replace:
-            raise QueryError(f"table {bn} already exists", sql_state="42P07")
-        if old is not None:
-            import shutil  # noqa: PLC0415
+            rel = props.get("BASE_LOCATION", bare_name(name))
+            root = os.path.join(self.volumes[vol].removeprefix("file://"), rel.strip("/"))
+        elif "BASE_LOCATION" in props:
+            raise QueryError(
+                "BASE_LOCATION requires EXTERNAL_VOLUME (it is relative "
+                "to the volume's STORAGE_BASE_URL)"
+            )
+        self._create_iceberg(
+            name, df, replace, root=root, temp=temp,
+            cluster_by=pcols if pkind == "CLUSTER" else None,
+            partition_by=pcols if pkind == "PARTITION" else None,
+        )
+        return _status(f"created {name}")
 
-            df = df.localCheckpoint(eager=True)
+    def _create_iceberg(self, name: str, df: DataFrame, replace: bool, root: str | None = None,
+                        temp: bool = False, **layout) -> "object":
+        """The Iceberg v2 table `name` (a bare name) holding df's rows
+        (iceberg_format.py: metadata.json + Avro manifest lists + manifests,
+        written pure-Python) — the reference's CTAS->Iceberg
+        (duckdb.py:274-334) without the jar. `layout` is IcebergTable.create's
+        cluster_by / partition_by. A TEMP table's storage is this process's
+        (`_temp_dir`), so it goes when the process ends.
+
+        A directory already at the storage root that no table of this
+        engine owns is another process's leftover: warehouse_guard reclaims
+        it (OR REPLACE claims the name; a plain CREATE only as the sole live
+        engine), else the CREATE fails."""
+        from universql_spark import warehouse_guard  # noqa: PLC0415
+        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
+
+        bn = bare_name(name)
+        checkpoint, catalog = self._take_name(bn, replace, df)
+        if root is None:
+            root = os.path.join(_temp_dir(self._snap_root("_temp_tables")), bn) if temp else self._snap_root(name)
+        if os.path.exists(root):
+            owners = (*self.snap_tables.values(), *self.dropped_tables.values())
+            if any(getattr(t, "root", None) == root for t in owners):
+                # a renamed table keeps its storage under its first name
+                root = f"{root}-{uuid.uuid4().hex[:8]}"
+            elif not warehouse_guard.reclaim_orphan(self.spark, root, owned=replace):
+                raise QueryError(f"table {bn} already exists", sql_state="42P07")
+        source = df if checkpoint is None else checkpoint
+        try:
+            snap = IcebergTable.create(
+                root, source if any(layout.values()) else right_sized(source), **layout
+            )
+        except Exception:
+            shutil.rmtree(root, ignore_errors=True)  # a failed write leaves no leftover
+            raise
+        finally:
+            if checkpoint is not None:
+                engine_dml.release(checkpoint)
+        if catalog:
+            self.spark.sql(f"DROP TABLE {catalog}")
+        self.snap_tables[bn] = snap
+        self._refresh_snap_view(bn)
+        if self.catalog_sync is not None:
+            # write-back AFTER the local commit is durable: the catalog
+            # records the metadata location (register, not commit), so a
+            # failed sync leaves a valid local table + a clear error
+            self.catalog_sync(bn, snap._version_path(snap.current_version()))
+        return snap
+
+    def _take_name(self, bn: str, replace: bool, df: DataFrame):
+        """Free the bare name `bn` for a new table: a table already under
+        it, of either kind, is an error without OR REPLACE. An Iceberg
+        table's files go now, so df (which may read them: CREATE ... AS
+        SELECT ... FROM itself) is materialized first; a catalog table goes
+        after the new table is written, as the caller does. -> (df's
+        checkpoint | None, the catalog table to drop | None)."""
+        self._reclaim_dropped(bn)
+        old = self.snap_tables.get(bn)
+        db = self.spark.catalog.currentDatabase()
+        catalog = f"`{db}`.`{bn}`" if old is None and self.spark.catalog.tableExists(f"{db}.{bn}") else None
+        if (old is not None or catalog) and not replace:
+            raise QueryError(f"table {bn} already exists", sql_state="42P07")
+        checkpoint = None
+        if old is not None:
+            checkpoint = df.localCheckpoint(eager=True)
             del self.snap_tables[bn]
             self._dynamic_meta.pop(bn, None)  # CTAS over a dynamic table demotes it
             self.spark.catalog.dropTempView(bn)
             shutil.rmtree(old.root, ignore_errors=True)
-        if to_iceberg:
-            # CLUSTER BY = clustering keys: range-cluster the write + record
-            # the Iceberg sort order, so manifest bounds on those columns
-            # become disjoint and plan_files() can skip whole files on
-            # cluster-key predicates. PARTITION BY = identity partition spec.
-            snap = IcebergTable.create(
-                root,
-                df if pcols else right_sized(df),
-                replace=replace,
-                cluster_by=pcols if pcols and pkind == "CLUSTER" else None,
-                partition_by=pcols if pcols and pkind == "PARTITION" else None,
-            )
-            if plain:
-                self.spark.sql(f"DROP TABLE `{db}`.`{bn}`")
-            self.snap_tables[bn] = snap
-            self._refresh_snap_view(bn)
-            if self.catalog_sync is not None:
-                # write-back AFTER the local commit is durable: the catalog
-                # records the metadata location (register, not commit), so a
-                # failed sync leaves a valid local table + a clear error
-                self.catalog_sync(bn, snap._version_path(snap.current_version()))
-            return _status(f"created iceberg {name}")
+        return checkpoint, catalog
+
+    def _catalog_ctas(self, name: str, df: DataFrame, replace: bool) -> pa.Table:
+        """A Spark catalog table holding df's rows: for a qualified name, or
+        a bare one whose types Iceberg cannot express."""
         resolved = self._resolve_name(name)
+        checkpoint = None
         if "." in resolved:
             # qualified create: make the (mangled) database real first, so
             # db1.s.t and db2.s.t land in distinct namespaces
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {resolved.rsplit('.', 1)[0]}")
-        writer = df.write.mode("overwrite" if replace else "errorifexists")
+        else:
+            checkpoint, _catalog = self._take_name(resolved, replace, df)
+        writer = (df if checkpoint is None else checkpoint).write.mode(
+            "overwrite" if replace else "errorifexists"
+        )
         try:
             writer.saveAsTable(resolved)
         except Exception as e:
@@ -4389,11 +4184,13 @@ class Engine:
                     raise
             else:
                 raise
+        finally:
+            if checkpoint is not None:
+                engine_dml.release(checkpoint)
         parts = [p.lower() for p in split_ident(name)]
         if len(parts) >= 3:
             self.qualified_tables.add((parts[-3], parts[-2], parts[-1]))
         return _status(f"created {name}")
-
 
 def _estimate_cost_usd(
     duration_sec: float, electricity_rate: float = 0.15, pc_lifetime_years: int = 5
@@ -4417,6 +4214,16 @@ def _estimate_cost_usd(
 
 def _status(msg: str) -> pa.Table:
     return pa.table({"status": [msg]})
+
+
+@functools.cache
+def _temp_dir(base: str) -> str:
+    """This process's directory for TEMP tables under `base`, removed when
+    the process exits: a TEMP table outlives no engine process, and never
+    leaves a directory another process's CREATE must reclaim."""
+    path = os.path.join(base, str(os.getpid()))
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 _SNOWFLAKE_TYPE_NAMES = {

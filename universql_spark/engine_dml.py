@@ -7,20 +7,20 @@ a statement is parsed, its target columns resolved and its new rows derived
 once, whatever the target; only the final write depends on the table kind:
 
 **Snapshot tables** (`tableformat.SnapshotTable`) — Iceberg v2 tables:
-`CREATE ICEBERG TABLE`, every unqualified `CREATE TABLE ... PARTITION BY |
-CLUSTER BY ... AS` (identity partition spec or sort order), and plain
-unpartitioned tables, adopted on their first DML. File-granular
-copy-on-write: one grouped targeting job finds the data files holding
-matched rows (a partitioned table's files each hold one partition tuple),
-and only those are rewritten, with a MERGE's inserts, in one commit.
+every table the engine creates under a bare name, plain or TEMP, CTAS or
+column list, partitioned (identity spec) or clustered (sort order).
+File-granular copy-on-write: one grouped targeting job finds the data
+files holding matched rows (a partitioned table's files each hold one
+partition tuple), and only those are rewritten, with a MERGE's inserts, in
+one commit.
 
-**Relations** (`Relation`) — targets that stay plain: qualified
-`db.schema.t` catalog tables, TEMP tables, and tables adoption refuses
-(Spark-DDL `PARTITIONED BY` tables among them). The statement computes the
-table's whole new contents and `Relation.replace` swaps them in: a shadow
-table + DROP/RENAME for a catalog table (`_replace_table`, which keeps its
-partition columns), a re-materialized temp view for a TEMP table. Values
-are cast to the columns' types, so a Relation's schema never changes.
+**Relations** (`Relation`) — Spark catalog tables: qualified
+`db.schema.t` names, tables made by Spark DDL outside the engine's CREATE
+(`PARTITIONED BY` tables among them), and tables with a type Iceberg cannot
+express (INTERVAL). The statement computes the table's whole new contents
+and `Relation.replace` swaps them in: a shadow table + DROP/RENAME
+(`_replace_table`, which keeps the partition columns). Values are cast to
+the columns' types, so a Relation's schema never changes.
 
 **MERGE** evaluates its source once per statement: the source (a named
 table, or an inline `USING (subquery)` handed over as a DataFrame, never a
@@ -336,7 +336,7 @@ class Merge:
 def _replace_table(spark: SparkSession, table: str, new_df: DataFrame) -> None:
     """Shadow-write + swap: never reads and overwrites the same files. The
     shadow keeps the table's Hive partition columns (a Spark-DDL
-    `PARTITIONED BY` table, which adoption refuses)."""
+    `PARTITIONED BY` table)."""
     from . import warehouse_guard  # noqa: PLC0415
 
     warehouse_guard.register_process(spark)
@@ -482,6 +482,10 @@ def execute_merge(spark: SparkSession, stmt: str, table, read_table) -> pa.Table
             spark, source.alias(s_alias), cond, t_alias, merge, source_bytes=nbytes
         )
     finally:
-        # the checkpoint's blocks
-        checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        release(checkpoint)
     return _result(n_files, **counts)
+
+
+def release(checkpoint: DataFrame) -> None:
+    """Free the cached blocks of an eager `localCheckpoint`."""
+    checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)

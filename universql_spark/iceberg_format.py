@@ -24,11 +24,10 @@ the public spec (https://iceberg.apache.org/spec/, format-version 2):
 
 The copy-on-write DML mechanics (file-granular DELETE/UPDATE/MERGE,
 snapshot time travel) are inherited from tableformat.SnapshotTable; this
-class is their only persistence, so every engine table with snapshots —
-CREATE ICEBERG TABLE targets and plain tables adopted on first DML
-(IcebergTable.adopt) — produces and consumes spec-conformant Iceberg
-metadata. Readers plan a scan as: version-hint -> metadata.json ->
-snapshot -> manifest list -> manifests -> live data files ->
+class is their only persistence, so every table the engine creates under
+a bare name produces and consumes spec-conformant Iceberg metadata.
+Readers plan a scan as: version-hint -> metadata.json -> snapshot ->
+manifest list -> manifests -> live data files ->
 spark.read.schema(S).parquet(*files), with S the current schema as Spark
 types: no schema-inference job. Tables whose Spark types Iceberg cannot
 express exactly (SMALLINT/TINYINT are Iceberg int, CHAR/VARCHAR string)
@@ -340,6 +339,16 @@ def _iceberg_fields(schema: T.StructType, next_id: list[int]) -> list[dict]:
             }
         )
     return fields
+
+
+def expressible(schema: T.StructType) -> bool:
+    """True when every column type has an Iceberg mapping (an INTERVAL
+    has none)."""
+    try:
+        _iceberg_fields(schema, [1])
+    except ValueError:
+        return False
+    return True
 
 
 _SQL_TO_ICEBERG = {
@@ -2104,22 +2113,6 @@ class IcebergTable(SnapshotTable):
         t = cls._init(root, df.schema, cluster_by, partition_by)
         files = t._write_files(df)
         t._append_snapshot(files, "append")
-        return t
-
-    @classmethod
-    def adopt(cls, root: str, files: list[str], schema: T.StructType) -> "IcebergTable":
-        """Adopt EXISTING parquet files as snapshot 1 — metadata-only: the
-        files are referenced in place, never rewritten (the manifest writer
-        reads only their footers for row counts and column bounds). This is
-        the upgrade path that gives plain unpartitioned tables file-granular
-        copy-on-write DML: the caller moves the table's files under `root`
-        and hands ownership here; from then on a 1-row DELETE rewrites only
-        the file(s) holding matched rows, not the whole table. `schema` is
-        the table's schema (the files' own schemas may lag it). The caller
-        may have staged the files under `root/data` already, so only
-        existing metadata refuses."""
-        t = cls._init(root, schema)
-        t._append_snapshot(sorted(files), "append")
         return t
 
 

@@ -63,10 +63,13 @@ def _namespaces(spark: SparkSession, default_catalog: str) -> list[tuple[str, st
     return out
 
 
-def register_views(spark: SparkSession, kinds: set[str], default_catalog: str) -> None:
+def register_views(
+    spark: SparkSession, kinds: set[str], default_catalog: str, table_views: set[str]
+) -> None:
     """Materialize the requested information_schema views as temp views.
-    Driver-side catalog listings only; cost is one catalog RPC per database
-    (+ one per table for `columns`)."""
+    `table_views`: the temp views that are tables (an Iceberg table reads
+    through a temp view of its name). Catalog listings only, no Spark job;
+    cost is one catalog RPC per database (+ one per table for `columns`)."""
     ns = _namespaces(spark, default_catalog)
     if "schemata" in kinds:
         spark.createDataFrame(
@@ -84,7 +87,8 @@ def register_views(spark: SparkSession, kinds: set[str], default_catalog: str) -
             for t in spark.catalog.listTables(db):
                 if t.tableType == "TEMPORARY" and db != ns[0][0]:
                     continue  # temp views are global; list them once
-                ttype = "VIEW" if t.tableType in ("VIEW", "TEMPORARY") else "BASE TABLE"
+                view = t.tableType in ("VIEW", "TEMPORARY") and t.name not in table_views
+                ttype = "VIEW" if view else "BASE TABLE"
                 tcat, tsch = (cat, sch) if t.database else (default_catalog.upper(), "PUBLIC")
                 qual = f"{t.database}.{t.name}" if t.database else t.name
                 tables.append((tcat, tsch, t.name.upper(), ttype, qual))
@@ -118,14 +122,14 @@ def register_views(spark: SparkSession, kinds: set[str], default_catalog: str) -
             ).createOrReplaceTempView("information_schema__columns")
 
 
-def resolve(spark: SparkSession, stmt: str, default_catalog: str = "UNIVERSQL") -> str:
+def resolve(spark: SparkSession, stmt: str, default_catalog: str, table_views: set[str]) -> str:
     """Rewrite `[db.]information_schema.X` references to the materialized
     temp views (registering them first). No-op without a reference."""
     kinds = {m.group(1).lower() for m in _INFO_RE.finditer(stmt)}
     known = kinds & {"tables", "columns", "schemata", "views", "databases"}
     if not known:
         return stmt
-    register_views(spark, known, default_catalog)
+    register_views(spark, known, default_catalog, table_views)
     # db-qualified references (snowflake.information_schema.tables) too
     stmt = re.sub(r"\b\w+\s*\.\s*(information_schema\s*\.)", r"\1", stmt, flags=re.I)
     return _INFO_RE.sub(

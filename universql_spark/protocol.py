@@ -24,9 +24,10 @@ database/schema (login `databaseName`/`schemaName` apply as USE would),
 warehouse, ALTER SESSION parameters, SET variables; LAST_QUERY_ID counts
 its own statements. Warehouse-wide: the result cache (Snowflake's reuse is
 account-wide; the key holds the session's db/schema/parameters), the query
-log, the current role (bound into policied temp views at refresh) and TEMP
-tables (temp views of the one SparkSession, like every fixture and user
-table, which a `spark.newSession()` per login would not see).
+log, the current role (bound into policied temp views at refresh) and the
+tables, TEMP ones included (each Iceberg table and fixture reads through a
+temp view of the one SparkSession, which a `spark.newSession()` per login
+would not see).
 """
 
 from __future__ import annotations
