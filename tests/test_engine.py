@@ -3585,6 +3585,36 @@ def test_external_volume_and_iceberg_base_location(engine, spark, tmp_path):
         engine.execute(
             "CREATE ICEBERG TABLE vol_t4 EXTERNAL_VOLUME='nope' AS SELECT 1 AS a"
         )
+    # a volume location that already holds files is the user's, not an
+    # orphan to reclaim: a CREATE without OR REPLACE fails and leaves them
+    kept = tmp_path / "lake" / "fv_t" / "data.csv"
+    kept.parent.mkdir(parents=True)
+    kept.write_text("1,a\n")
+    for create in ("CREATE ICEBERG TABLE", "CREATE TABLE"):
+        with _pytest.raises(QueryError, match="already exists"):
+            engine.execute(
+                f"{create} fv_t EXTERNAL_VOLUME='exvol' BASE_LOCATION='lake/fv_t' AS SELECT 1 AS a"
+            )
+        assert kept.read_text() == "1,a\n"
+    assert "fv_t" not in engine.snap_tables
+
+
+def test_bare_table_of_another_database(engine):
+    """Under USE of another database a bare CREATE makes that database's
+    table, and it, not the same-named `default` table, takes the bare name's
+    reads and writes until `default` is current again."""
+    engine.execute("USE DATABASE default; CREATE OR REPLACE TABLE btd_t AS SELECT 'default' AS w")
+    engine.execute("CREATE DATABASE IF NOT EXISTS btd_db; USE DATABASE btd_db")
+    try:
+        engine.execute("CREATE OR REPLACE TABLE btd_t AS SELECT 'btd' AS w")
+        engine.execute("INSERT INTO btd_t SELECT 'more'")
+        engine.execute("DELETE FROM btd_t WHERE w = 'btd'")
+        assert engine.execute("SELECT w FROM btd_t").to_pylist() == [{"w": "more"}]
+    finally:
+        engine.execute("USE DATABASE default")
+    assert engine.execute("SELECT w FROM btd_t").to_pylist() == [{"w": "default"}]
+    assert engine.execute("SELECT w FROM btd_db.btd_t").to_pylist() == [{"w": "more"}]
+    engine.execute("DROP TABLE btd_t; DROP TABLE btd_db.btd_t; DROP DATABASE btd_db")
 
 
 def test_r5_scalar_surface(engine):
@@ -4946,7 +4976,10 @@ def test_temp_table_storage_ends_with_its_process():
         eng = Engine(spark=get_spark("temp_child", cpus=1))
         eng.execute("CREATE OR REPLACE TEMP TABLE tse_t AS SELECT 1 AS id")
         eng.execute("CREATE OR REPLACE TABLE tse_p AS SELECT 1 AS id")
-        print(eng.snap_tables["tse_t"].root, eng.snap_tables["tse_p"].root)
+        eng.execute("CREATE OR REPLACE TABLE tse_d AS SELECT 1 AS id")
+        dropped = eng.snap_tables["tse_d"].root
+        eng.execute("DROP TABLE tse_d")
+        print(eng.snap_tables["tse_t"].root, eng.snap_tables["tse_p"].root, dropped)
         """
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -4954,9 +4987,11 @@ def test_temp_table_storage_ends_with_its_process():
         [sys.executable, "-c", child], capture_output=True, text=True, timeout=300,
         env={**os.environ, "PYTHONPATH": repo}, check=True,
     ).stdout.split()
-    temp_root, plain_root = out[-2:]
+    temp_root, plain_root, dropped_root = out[-3:]
     assert not os.path.exists(temp_root)
     assert os.path.exists(plain_root)
+    # UNDROP cannot outlive the engine, so neither do a dropped table's files
+    assert not os.path.exists(dropped_root)
 
 
 def test_parse_error_message_is_its_first_line(engine):

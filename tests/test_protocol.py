@@ -780,13 +780,15 @@ def test_timezone_stays_in_its_session(client):
 
 def test_use_database_stays_in_its_session(client):
     a, b = _login(client), _login(client)
-    for sql in ("CREATE DATABASE IF NOT EXISTS iso_use_db", "CREATE OR REPLACE TABLE iso_use_db.iso_use_t AS SELECT 'iso' AS w"):
+    for sql in ("CREATE DATABASE IF NOT EXISTS iso_use_db", "CREATE OR REPLACE TABLE iso_use_t AS SELECT 'default' AS w"):
         assert _query(client, b, sql)["success"]
-    assert _query(client, a, "USE DATABASE iso_use_db")["success"]
+    for sql in ("USE DATABASE iso_use_db", "CREATE OR REPLACE TABLE iso_use_t AS SELECT 'iso' AS w"):
+        assert _query(client, a, sql)["success"]
     read = "SELECT w FROM iso_use_t"
     assert _decode(_query(client, a, read)).to_pylist() == [{"w": "iso"}]
-    assert _query(client, b, read)["success"] is False
-    assert _query(client, a, "DROP TABLE iso_use_t")["success"]
+    assert _decode(_query(client, b, read)).to_pylist() == [{"w": "default"}]
+    for token in (a, b):
+        assert _query(client, token, "DROP TABLE iso_use_t")["success"]
     # another session drops A's database: A falls back to `default`
     assert _query(client, b, "DROP DATABASE iso_use_db")["success"]
     assert _decode(_query(client, a, "SELECT 1 AS alive")).to_pylist() == [{"alive": 1}]

@@ -10,7 +10,8 @@ itself (§2.2), and the Arrow result contract.
 Statement handling parity map (reference file:line):
   CREATE [OR REPLACE] [TEMP] TABLE t ..   -> Iceberg v2 table (iceberg_format.py)
         (AS SELECT, column list, LIKE, USING TEMPLATE) under a bare name;
-        saveAsTable for a qualified name or a type Iceberg cannot express
+        saveAsTable for a qualified name, a bare one under USE of another
+        database than `default`, or a type Iceberg cannot express
         [duckdb.py:274-342]
   CREATE [TEMP] VIEW                      -> spark.sql  [duckdb.py:346-351]
   INSERT INTO                             -> Iceberg append; spark.sql for
@@ -41,6 +42,7 @@ import re
 import shutil
 import time
 import uuid
+import weakref
 from collections import deque
 
 import pyarrow as pa
@@ -472,8 +474,13 @@ class Engine:
         self.table_functions: dict[str, tuple[list[str], str]] = {}
         #: created scalar SQL UDF names (information_schema.functions)
         self.sql_functions: set[str] = set()
-        #: dropped snapshot tables kept for UNDROP (Snowflake Time Travel)
+        #: dropped snapshot tables kept for UNDROP (Snowflake Time Travel).
+        #: UNDROP lives only in this engine, so the warehouse directories of
+        #: what is still here go with it (or with the process)
         self.dropped_tables: dict[str, "object"] = {}
+        weakref.finalize(
+            self, _purge_dropped, self.dropped_tables, os.path.dirname(self._snap_root("_"))
+        )
         #: SEQUENCE objects: name -> [next_base, increment]
         self.sequences: dict[str, list[int]] = {}
         #: EXTERNAL TABLE registry: name -> {path, fmt, options}
@@ -542,8 +549,13 @@ class Engine:
         #: bare name -> IcebergTable (iceberg_format.py) for every table the
         #: engine creates under a bare name (plain, TEMP, ICEBERG, dynamic,
         #: partitioned or clustered) and every attached REST-catalog table:
-        #: snapshot manifests + file-granular copy-on-write DML + time travel
+        #: snapshot manifests + file-granular copy-on-write DML + time travel.
+        #: A plain (not TEMP) CREATE under USE of another database makes
+        #: that database's catalog table instead, as a qualified name does
         self.snap_tables: dict[str, "object"] = {}
+        #: snapshot tables stepped aside for a same-named catalog table of
+        #: the current database (`_shadow_snap_tables`)
+        self._shadowed: dict[str, "object"] = {}
         #: catalog write-back (reference warehouse/snowflake.py:73-88):
         #: after CREATE ICEBERG TABLE, invoke (table_name,
         #: metadata_location) so an external catalog learns the table.
@@ -779,6 +791,7 @@ class Engine:
                 s.spark_db = None
                 self.spark.catalog.setCurrentDatabase("default")
             self._spark_db = s.spark_db
+            self._shadow_snap_tables()
         tz = s.params.get("TIMEZONE")
         if tz != self._spark_tz:
             self.spark.conf.set("spark.sql.session.timeZone", tz or "UTC")
@@ -1679,7 +1692,7 @@ class Engine:
                     for f in parsed.fields
                 ])
                 df = self.spark.createDataFrame([], schema)
-                if len(split_ident(name)) > 1 or not iceberg_expressible(schema):
+                if self._names_catalog_table(name, temp) or not iceberg_expressible(schema):
                     return self._catalog_ctas(name, df, replace)
                 self._create_iceberg(name, df, replace, temp=temp)
                 return _status(f"created {name}")
@@ -3632,6 +3645,25 @@ class Engine:
 
     # -- snapshot tables (iceberg_format.py) --------------------------------
 
+    def _shadow_snap_tables(self) -> None:
+        """Snapshot tables are keyed warehouse-wide by bare name, but in a
+        database other than `default` a bare name names that database's
+        catalog table first (Snowflake resolves it against the current
+        database). A snapshot table of the same name steps aside, its temp
+        view and every `snap_tables` route, while that database is current."""
+        for bn, snap in self._shadowed.items():
+            if bn not in self.snap_tables:
+                self.snap_tables[bn] = snap
+                self._refresh_snap_view(bn)
+        self._shadowed.clear()
+        if not (self._other_database() and self.snap_tables):
+            return
+        rows = self.spark.sql(f"SHOW TABLES IN `{self._spark_db}`").collect()
+        names = {r.tableName for r in rows if not r.isTemporary}
+        for bn in names & self.snap_tables.keys():
+            self._shadowed[bn] = self.snap_tables.pop(bn)
+            self.spark.catalog.dropTempView(bn)
+
     def _reclaim_dropped(self, name: str) -> None:
         """Creating a new table under a dropped name forfeits its UNDROP
         copy (one retained generation, reclaimed on reuse)."""
@@ -4017,7 +4049,7 @@ class Engine:
             if c.strip()
         ]
         qualified = len(split_ident(name)) > 1
-        if (iceberg or pcols) and qualified:
+        if (iceberg or pcols) and not temp and qualified:
             what = "ICEBERG" if iceberg else f"{pkind} BY"
             raise QueryError(
                 f"{what} table {name}: Iceberg tables are keyed by their bare "
@@ -4042,8 +4074,8 @@ class Engine:
                 break
             select = select[1:-1].strip()
         df = self._run_select(select)
-        if qualified or not (iceberg or pcols or iceberg_expressible(df.schema)):
-            # a qualified name, or a type Iceberg cannot express (INTERVAL)
+        if not (iceberg or pcols) and (self._names_catalog_table(name, temp) or not iceberg_expressible(df.schema)):
+            # a database's table, or a type Iceberg cannot express (INTERVAL)
             return self._catalog_ctas(name, df, replace)
         # EXTERNAL_VOLUME + BASE_LOCATION place the table in the volume's
         # lake path (the reference's table_location resolution,
@@ -4080,23 +4112,28 @@ class Engine:
         cluster_by / partition_by. A TEMP table's storage is this process's
         (`_temp_dir`), so it goes when the process ends.
 
-        A directory already at the storage root that no table of this
-        engine owns is another process's leftover: warehouse_guard reclaims
-        it (OR REPLACE claims the name; a plain CREATE only as the sole live
-        engine), else the CREATE fails."""
+        A directory already at the warehouse root (`_snap/<name>`) that no
+        table of this engine owns is another process's leftover:
+        warehouse_guard reclaims it (OR REPLACE claims the name; a plain
+        CREATE only as the sole live engine), else the CREATE fails. An
+        EXTERNAL_VOLUME location (`root`) that holds files is the user's:
+        OR REPLACE overwrites it, a plain CREATE fails."""
         from universql_spark import warehouse_guard  # noqa: PLC0415
         from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
 
         bn = bare_name(name)
         checkpoint, catalog = self._take_name(bn, replace, df)
-        if root is None:
+        warehouse = root is None
+        if warehouse:
             root = os.path.join(_temp_dir(self._snap_root("_temp_tables")), bn) if temp else self._snap_root(name)
         if os.path.exists(root):
-            owners = (*self.snap_tables.values(), *self.dropped_tables.values())
+            owners = (*self.snap_tables.values(), *self._shadowed.values(), *self.dropped_tables.values())
             if any(getattr(t, "root", None) == root for t in owners):
                 # a renamed table keeps its storage under its first name
                 root = f"{root}-{uuid.uuid4().hex[:8]}"
-            elif not warehouse_guard.reclaim_orphan(self.spark, root, owned=replace):
+            elif replace and not warehouse:
+                shutil.rmtree(root)
+            elif not (warehouse and warehouse_guard.reclaim_orphan(self.spark, root, owned=replace)):
                 raise QueryError(f"table {bn} already exists", sql_state="42P07")
         source = df if checkpoint is None else checkpoint
         try:
@@ -4128,30 +4165,44 @@ class Engine:
         after the new table is written, as the caller does. -> (df's
         checkpoint | None, the catalog table to drop | None)."""
         self._reclaim_dropped(bn)
-        old = self.snap_tables.get(bn)
+        old = self.snap_tables.get(bn) or self._shadowed.get(bn)
         db = self.spark.catalog.currentDatabase()
-        catalog = f"`{db}`.`{bn}`" if old is None and self.spark.catalog.tableExists(f"{db}.{bn}") else None
+        catalog = f"`{db}`.`{bn}`" if self.spark.catalog.tableExists(f"{db}.{bn}") else None
         if (old is not None or catalog) and not replace:
             raise QueryError(f"table {bn} already exists", sql_state="42P07")
         checkpoint = None
         if old is not None:
             checkpoint = df.localCheckpoint(eager=True)
-            del self.snap_tables[bn]
+            self.snap_tables.pop(bn, None)
+            self._shadowed.pop(bn, None)
             self._dynamic_meta.pop(bn, None)  # CTAS over a dynamic table demotes it
             self.spark.catalog.dropTempView(bn)
             shutil.rmtree(old.root, ignore_errors=True)
         return checkpoint, catalog
 
+    def _names_catalog_table(self, name: str, temp: bool) -> bool:
+        """Whether a plain CREATE of `name` makes a Spark catalog table: a
+        qualified name names a database's table, and so does a bare one
+        under USE of a database other than `default`. A TEMP table belongs
+        to no database."""
+        return not temp and (len(split_ident(name)) > 1 or self._other_database())
+
+    def _other_database(self) -> bool:
+        """Whether the current session's Spark database is not `default`."""
+        return (self._spark_db or "default") != "default"
+
     def _catalog_ctas(self, name: str, df: DataFrame, replace: bool) -> pa.Table:
-        """A Spark catalog table holding df's rows: for a qualified name, or
-        a bare one whose types Iceberg cannot express."""
+        """A Spark catalog table holding df's rows: for a database's table
+        (`_names_catalog_table`), or a bare name whose types Iceberg cannot
+        express."""
         resolved = self._resolve_name(name)
         checkpoint = None
+        in_default = not self._other_database()
         if "." in resolved:
             # qualified create: make the (mangled) database real first, so
             # db1.s.t and db2.s.t land in distinct namespaces
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {resolved.rsplit('.', 1)[0]}")
-        else:
+        elif in_default:
             checkpoint, _catalog = self._take_name(resolved, replace, df)
         writer = (df if checkpoint is None else checkpoint).write.mode(
             "overwrite" if replace else "errorifexists"
@@ -4190,6 +4241,8 @@ class Engine:
         parts = [p.lower() for p in split_ident(name)]
         if len(parts) >= 3:
             self.qualified_tables.add((parts[-3], parts[-2], parts[-1]))
+        if not in_default:
+            self._shadow_snap_tables()
         return _status(f"created {name}")
 
 def _estimate_cost_usd(
@@ -4214,6 +4267,15 @@ def _estimate_cost_usd(
 
 def _status(msg: str) -> pa.Table:
     return pa.table({"status": [msg]})
+
+
+def _purge_dropped(dropped: dict, snap_base: str) -> None:
+    """Remove the warehouse directories of dropped tables no UNDROP can
+    reach any more. A table on an EXTERNAL_VOLUME keeps its files."""
+    for snap in dropped.values():
+        if os.path.dirname(snap.root) == snap_base:
+            shutil.rmtree(snap.root, ignore_errors=True)
+    dropped.clear()
 
 
 @functools.cache

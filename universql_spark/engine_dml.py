@@ -15,7 +15,8 @@ partition tuple), and only those are rewritten, with a MERGE's inserts, in
 one commit.
 
 **Relations** (`Relation`) — Spark catalog tables: qualified
-`db.schema.t` names, tables made by Spark DDL outside the engine's CREATE
+`db.schema.t` names and bare ones created under USE of a database other
+than `default`, tables made by Spark DDL outside the engine's CREATE
 (`PARTITIONED BY` tables among them), and tables with a type Iceberg cannot
 express (INTERVAL). The statement computes the table's whole new contents
 and `Relation.replace` swaps them in: a shadow table + DROP/RENAME

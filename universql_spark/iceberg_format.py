@@ -2092,7 +2092,6 @@ class IcebergTable(SnapshotTable):
         cls,
         root: str,
         df: DataFrame,
-        replace: bool = False,
         cluster_by: list[str] | None = None,
         partition_by: list[str] | None = None,
     ) -> "IcebergTable":
@@ -2104,10 +2103,6 @@ class IcebergTable(SnapshotTable):
         partition spec: recorded as spec-id 0 fields (ids from 1000), data
         files each belong to one partition tuple, manifests carry the
         typed partition struct, and plan_files() prunes on it."""
-        if os.path.exists(root):
-            if not replace:
-                raise ValueError(f"iceberg table already exists at {root}")
-            shutil.rmtree(root)
         if cluster_by:
             df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
         t = cls._init(root, df.schema, cluster_by, partition_by)
