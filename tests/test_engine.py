@@ -3617,6 +3617,25 @@ def test_bare_table_of_another_database(engine):
     engine.execute("DROP TABLE btd_t; DROP TABLE btd_db.btd_t; DROP DATABASE btd_db")
 
 
+def test_engines_sharing_a_spark_session_keep_their_databases(spark):
+    """Spark's current database belongs to the SparkSession, which several
+    Engines may share: after one Engine's USE DATABASE, a bare CREATE from
+    another still lands in that Engine's own database, and back."""
+    a, b = Engine(spark=spark), Engine(spark=spark)
+    ivl = "AS SELECT id, INTERVAL '1' DAY AS i FROM range(0, 3, 1, 1) AS r(id)"  # a catalog table
+    a.execute("CREATE DATABASE IF NOT EXISTS esd_db; USE DATABASE esd_db")
+    try:
+        b.execute(f"CREATE OR REPLACE TABLE esd_b {ivl}")
+        a.execute(f"CREATE OR REPLACE TABLE esd_a {ivl}")
+        assert spark.catalog.tableExists("default.esd_b")
+        assert not spark.catalog.tableExists("esd_db.esd_b")
+        assert spark.catalog.tableExists("esd_db.esd_a")
+    finally:
+        a.execute("USE DATABASE default")
+    b.execute("DROP TABLE IF EXISTS esd_b")
+    a.execute("DROP TABLE IF EXISTS esd_db.esd_a; DROP DATABASE esd_db")
+
+
 def test_r5_scalar_surface(engine):
     """Round-5 probe-driven surface: DIFFERENCE, SEQ*, the MINHASH sketch
     family, COLLATE (Spark 4 native collations), STRTOK_SPLIT_TO_TABLE."""
@@ -5321,6 +5340,153 @@ def test_result_reuse_stream_reads_never_cached(engine):
     assert engine.result_cache_hits == h
     engine.execute("DROP STREAM rr_stream")
     engine.execute("DROP TABLE rr_src")
+
+
+def _reuses(engine, sql: str, session=None) -> tuple[list[dict], bool]:
+    """(rows, whether they came from the result cache)."""
+    h = engine.result_cache_hits
+    rows = engine.execute(sql, session=session).to_pylist()
+    return rows, engine.result_cache_hits == h + 1
+
+
+def test_result_reuse_view_over_table_runs_again_after_each_write(engine):
+    """A TEMP VIEW over an Iceberg table is reused until a write to the base
+    table: INSERT, UPDATE, DELETE and MERGE each make it run again."""
+    engine.execute("ALTER SESSION SET USE_CACHED_RESULT = TRUE")
+    engine.execute("CREATE OR REPLACE TABLE rr_vbase AS SELECT 1 AS k, 10 AS v")
+    engine.execute("CREATE OR REPLACE TEMP VIEW rr_vview AS SELECT SUM(v) AS s, COUNT(*) AS n FROM rr_vbase")
+    sql = "SELECT s, n FROM rr_vview"
+    engine.execute(sql)
+    for write, expected in (
+        ("INSERT INTO rr_vbase VALUES (2, 20)", {"s": 30, "n": 2}),
+        ("UPDATE rr_vbase SET v = v + 1 WHERE k = 1", {"s": 31, "n": 2}),
+        ("DELETE FROM rr_vbase WHERE k = 2", {"s": 11, "n": 1}),
+        (
+            "MERGE INTO rr_vbase t USING (SELECT 3 AS k, 5 AS v) s ON t.k = s.k "
+            "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)",
+            {"s": 16, "n": 2},
+        ),
+    ):
+        assert _reuses(engine, sql)[1], write
+        engine.execute(write)
+        assert _reuses(engine, sql) == ([expected], False), write
+    engine.execute("DROP VIEW rr_vview; DROP TABLE rr_vbase")
+
+
+def test_result_reuse_write_keeps_other_tables_results(engine):
+    """A write to one table invalidates only the results that read it:
+    cached reads of another Iceberg table and of a fixture table stay hits."""
+    engine.execute("ALTER SESSION SET USE_CACHED_RESULT = TRUE")
+    engine.execute("CREATE OR REPLACE TABLE rr_ta AS SELECT 1 AS v; CREATE OR REPLACE TABLE rr_tb AS SELECT 2 AS v")
+    read_a, others = "SELECT SUM(v) AS s FROM rr_ta", ("SELECT SUM(v) AS s FROM rr_tb", "SELECT COUNT(*) AS c FROM nation")
+    for sql in (read_a, *others):
+        engine.execute(sql)
+    engine.execute("INSERT INTO rr_ta VALUES (5)")
+    assert [_reuses(engine, sql) for sql in others] == [([{"s": 2}], True), ([{"c": 25}], True)]
+    assert _reuses(engine, read_a) == ([{"s": 6}], False)
+    engine.execute("DROP TABLE rr_ta; DROP TABLE rr_tb")
+
+
+def test_result_reuse_invalidated_by_another_sessions_write(engine):
+    """Results are shared across sessions, and so is their invalidation: a
+    write from one session makes another session's cached read run again."""
+    home = engine.session
+    s1, s2 = engine.new_session(), engine.new_session()
+    try:
+        engine.execute("CREATE OR REPLACE TABLE rr_sx AS SELECT 1 AS v", session=s1)
+        sql = "SELECT SUM(v) AS s FROM rr_sx"
+        engine.execute(sql, session=s1)
+        assert _reuses(engine, sql, s1)[1]
+        engine.execute("INSERT INTO rr_sx VALUES (5)", session=s2)
+        assert _reuses(engine, sql, s1) == ([{"s": 6}], False)
+        engine.execute("DROP TABLE rr_sx", session=s1)
+    finally:
+        engine._enter(home)
+
+
+def test_result_reuse_after_recreate_and_role_change(engine):
+    """DROP then CREATE OR REPLACE of the same name runs the read again, and
+    so does a row-access-policied table's read across USE ROLE."""
+    engine.execute("ALTER SESSION SET USE_CACHED_RESULT = TRUE; USE ROLE ACCOUNTADMIN")
+    engine.execute("CREATE OR REPLACE TABLE rr_rc AS SELECT 1 AS v")
+    sql = "SELECT SUM(v) AS s FROM rr_rc"
+    engine.execute(sql)
+    engine.execute("DROP TABLE rr_rc")
+    engine.execute("CREATE OR REPLACE TABLE rr_rc AS SELECT 7 AS v")
+    assert _reuses(engine, sql) == ([{"s": 7}], False)
+    engine.execute(
+        "CREATE OR REPLACE TABLE rr_pol_t AS SELECT 'ANALYST' AS owner, 1 AS v "
+        "UNION ALL SELECT 'ACCOUNTADMIN', 2;"
+        "CREATE OR REPLACE ROW ACCESS POLICY rr_pol AS (o STRING) RETURNS BOOLEAN -> o = CURRENT_ROLE();"
+        "ALTER TABLE rr_pol_t ADD ROW ACCESS POLICY rr_pol ON (owner)"
+    )
+    sql = "SELECT SUM(v) AS s FROM rr_pol_t"
+    try:
+        engine.execute(sql)
+        assert _reuses(engine, sql) == ([{"s": 2}], True)
+        engine.execute("USE ROLE analyst")
+        assert _reuses(engine, sql) == ([{"s": 1}], False)
+        engine.execute("USE ROLE ACCOUNTADMIN")
+        assert _reuses(engine, sql) == ([{"s": 2}], False)
+    finally:
+        engine.execute("USE ROLE ACCOUNTADMIN")
+    engine.execute("ALTER TABLE rr_pol_t DROP ROW ACCESS POLICY rr_pol; DROP TABLE rr_pol_t; DROP TABLE rr_rc")
+
+
+def test_result_reuse_keys_on_role(engine):
+    """CURRENT_ROLE() answers per role: after USE ROLE the read runs again."""
+    engine.execute("ALTER SESSION SET USE_CACHED_RESULT = TRUE; USE ROLE ACCOUNTADMIN")
+    sql = "SELECT CURRENT_ROLE() AS r, IS_ROLE_IN_SESSION('ANALYST') AS a"
+    engine.execute(sql)
+    try:
+        engine.execute("USE ROLE analyst")
+        assert _reuses(engine, sql) == ([{"r": "ANALYST", "a": True}], False)
+    finally:
+        engine.execute("USE ROLE ACCOUNTADMIN")
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT COUNT(*) AS c FROM rr_hist AT(OFFSET => 0)",
+        "SELECT COUNT(*) AS c FROM information_schema.tables WHERE table_name = 'RR_HIST'",
+        "SELECT COUNT(*) AS c FROM rr_hist_dyn",
+    ],
+    ids=["at_offset", "information_schema", "lagged_dynamic_table"],
+)
+def test_result_reuse_never_for_history_or_information_schema(engine, sql):
+    """Time travel reads a table's history, INFORMATION_SCHEMA reports
+    table state through scratch views, and a dynamic table with a
+    TARGET_LAG refreshes on read: none is keyed on a snapshot view alone,
+    so none is reused."""
+    engine.execute("ALTER SESSION SET USE_CACHED_RESULT = TRUE")
+    engine.execute("CREATE OR REPLACE TABLE rr_hist AS SELECT 1 AS v; INSERT INTO rr_hist VALUES (2)")
+    engine.execute(
+        "CREATE OR REPLACE DYNAMIC TABLE rr_hist_dyn TARGET_LAG = '1 hour' WAREHOUSE = compute_xs "
+        "AS SELECT v FROM rr_hist"
+    )
+    first = engine.execute(sql).to_pylist()
+    assert _reuses(engine, sql) == (first, False)
+    engine.execute("DROP TABLE rr_hist_dyn; DROP TABLE rr_hist")
+
+
+def test_result_reuse_off_reads_no_plan(engine, monkeypatch):
+    """With USE_CACHED_RESULT = FALSE a SELECT reads no plan dependencies;
+    with reuse on, a cacheable miss reads them once."""
+    engine.execute("CREATE OR REPLACE TABLE rr_off AS SELECT 1 AS v")
+    calls = []
+    real = engine._plan_views
+    monkeypatch.setattr(engine, "_plan_views", lambda df: calls.append(1) or real(df))
+    try:
+        engine.execute("ALTER SESSION SET USE_CACHED_RESULT = FALSE")
+        engine.execute("SELECT SUM(v) AS s FROM rr_off")
+        assert calls == []
+        engine.execute("ALTER SESSION SET USE_CACHED_RESULT = TRUE")
+        engine.execute("SELECT SUM(v) AS s FROM rr_off")
+        assert calls == [1]
+    finally:
+        engine.execute("ALTER SESSION SET USE_CACHED_RESULT = TRUE")
+    engine.execute("DROP TABLE rr_off")
 
 
 # -- query_log: one bounded record per statement --------------------------------

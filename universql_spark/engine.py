@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import atexit
 import functools
+import itertools
 import os
 import re
 import shutil
@@ -392,6 +393,17 @@ _NONDET_FN_RE = re.compile(
     r"CURRENT_SESSION|CURRENT_WAREHOUSE|QUERY_HISTORY\w*)\s*\("  # answers vary by session/statement
     r"|NEXTVAL\b)"  # sequence state advances per evaluation, no parens
 )
+#: time travel and change queries: AT / BEFORE / CHANGES read a table's
+#: history, not the snapshot view a result is keyed on (OFFSET is relative
+#: to the clock besides)
+_TIME_TRAVEL_RE = re.compile(r"(?i)\b(?:AT|BEFORE|CHANGES)\s*\(")
+#: a write to one named table; on a snapshot table (a bare name) its view
+#: refresh invalidates the results that read it, so the cache is not cleared
+_TABLE_DML_RE = re.compile(
+    r"(?i)^\s*(?:INSERT\s+(?:OVERWRITE\s+)?INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO)\s+([\w.\"]+)"
+)
+#: a temp view in an analyzed plan's tree string: View (`name`, [cols])
+_VIEW_NODE_RE = re.compile(r"\bView \(`([^`]+)`, ")
 _RESULT_CACHE_MAX_BYTES = 16 * 1024 * 1024
 _RESULT_CACHE_MAX_ENTRIES = 32
 #: statements retained in Engine.query_log — the one retention bound for
@@ -404,6 +416,27 @@ RECORD_STATE_KEYS = ("result", "pre_snapshots")
 _STAGE_REF_RE = re.compile(
     r"@(\w+)((?:/[\w.\-*]+)*)\s*(?:\(\s*FILE_FORMAT\s*=>\s*([\w']+)\s*\))?", re.I
 )
+
+
+class _SparkState:
+    """What belongs to one SparkSession and so to every Engine on it:
+    Spark's current database and session timezone as last applied (None =
+    Spark's default; kept here, not per Engine, because one Engine's USE
+    moves the database under the others), and a generation per snapshot
+    table's temp view, stamped each time one is registered, so a retained
+    result can tell whether a view it read was registered again since."""
+
+    def __init__(self):
+        self.db: str | None = None
+        self.tz: str | None = None
+        self.view_gen: dict[str, int] = {}
+        self._gens = itertools.count(1)
+
+    def stamp(self, view: str) -> None:
+        self.view_gen[view.lower()] = next(self._gens)
+
+
+_SPARK_STATE: "weakref.WeakKeyDictionary[SparkSession, _SparkState]" = weakref.WeakKeyDictionary()
 
 
 class Session:
@@ -448,9 +481,13 @@ class Engine:
         #: the session statements run in; execute(session=) switches it, and
         #: direct callers stay in this default one
         self.session = Session()
-        #: Spark's current database and session timezone as last applied
-        #: for a session (None = never changed here)
-        self._spark_db = self._spark_tz = None
+        #: Spark's current database and timezone as applied by any Engine on
+        #: this SparkSession, and its snapshot views' generations
+        self._spark_state = _SPARK_STATE.setdefault(self.spark, _SparkState())
+        #: the Spark database of the session this engine last entered (None
+        #: = `default`), which its snapshot tables step aside for
+        #: (`_shadow_snap_tables`)
+        self._spark_db = None
         #: name -> base URL/path, already in Spark-readable form (s3-> s3a
         #: etc.). Reference resolves @stage via DESCRIBE STAGE metadata,
         #: plugins/snow.py:400-414, 496-629; here CREATE STAGE records it
@@ -525,19 +562,23 @@ class Engine:
         #: (names.py; VERDICT r1 "What's wrong" #3)
         self.qualified_tables: set[tuple[str, str, str]] = set()
         #: Snowflake persisted-result reuse (USE_CACHED_RESULT, default
-        #: TRUE): a repeated identical SELECT in an unchanged session/data
-        #: context returns the retained result without re-execution, like
-        #: Snowflake's 24h query-result reuse, across sessions as Snowflake's
-        #: is account-wide. Key = (data version, the session's
-        #: db/schema/params, statement text); ANY statement whose
-        #: head is not read-only bumps the version and clears the cache
-        #: (process-local semantics — Snowflake's cache is global with
-        #: centralized invalidation; a multi-process deployment would key
-        #: on the warehouse catalog version instead). Statements containing
-        #: execution-time functions (CURRENT_TIMESTAMP, RANDOM, ...),
-        #: stage/remote reads, or reads of STREAM / dynamic / snapshot
-        #: tables are never cached — same exclusions Snowflake documents.
-        self._result_cache: dict[tuple, pa.Table] = {}
+        #: TRUE): a repeated identical SELECT whose inputs are unchanged
+        #: returns the retained result without re-execution, across
+        #: sessions, as Snowflake's account-wide reuse does. Key =
+        #: (`_data_version`, role, the session's db/schema/params, statement
+        #: text) -> (result, the snapshot views its analyzed plan read, with
+        #: their generations). A snapshot view pins one file list, and every
+        #: commit, policy change, USE ROLE or un-shadow registers it again
+        #: under a new generation (`_refresh_snap_view`), so a hit, which
+        #: needs every recorded generation unchanged, returns what running
+        #: the statement again in this process would. INSERT / UPDATE /
+        #: DELETE / MERGE on a snapshot table therefore leave the other
+        #: results in place; every other statement whose head is not
+        #: read-only bumps the version and clears the cache. Exclusions
+        #: (`_result_cache_key`) are what no generation covers: execution-time
+        #: functions, stage and remote reads, variables, time travel,
+        #: INFORMATION_SCHEMA, STREAMs and dynamic tables with a TARGET_LAG.
+        self._result_cache: dict[tuple, tuple[pa.Table, tuple[tuple[str, int], ...]]] = {}
         self._data_version = 0
         self.result_cache_hits = 0
         #: dynamic tables currently mid-refresh (re-entrancy guard)
@@ -712,12 +753,16 @@ class Engine:
         ck = self._result_cache_key(stmt)
         cached = self._result_cache.get(ck) if ck is not None else None
         if cached is not None:
-            # persisted-result reuse: recorded as a fresh query and kept
-            # RESULT_SCAN-addressable under its new id, like Snowflake's
-            # QUERY_RESULT_REUSE entries
-            self.result_cache_hits += 1
-            rec["result_reuse"] = True
-            return cached
+            result, deps = cached
+            gens = self._spark_state.view_gen
+            if all(gens.get(name) == gen for name, gen in deps):
+                # persisted-result reuse: recorded as a fresh query and kept
+                # RESULT_SCAN-addressable under its new id, like Snowflake's
+                # QUERY_RESULT_REUSE entries
+                self.result_cache_hits += 1
+                rec["result_reuse"] = True
+                return result
+            del self._result_cache[ck]
         # BEFORE(STATEMENT => qid) support: history-changing statements
         # record each snapshot table's pre-statement snapshot id (a
         # metadata-json read per table — no data scan)
@@ -735,15 +780,19 @@ class Engine:
                 except Exception:  # noqa: BLE001 - table mid-drop
                     continue
             rec["pre_snapshots"] = pre_snaps
-        result = self._execute_one(stmt)
+        deps: list | None = [] if ck is not None else None
+        result = self._execute_one(stmt, deps)
         if not _READ_ONLY_HEAD_RE.match(stmt):
-            # anything that can change engine-visible state invalidates
-            # every retained result (version key + explicit clear so
-            # stale tables are not pinned in memory)
-            self._data_version += 1
-            self._result_cache.clear()
-        elif ck is not None and result.nbytes <= _RESULT_CACHE_MAX_BYTES:
-            self._result_cache[ck] = result
+            m = _TABLE_DML_RE.match(stmt)
+            target = split_ident(m.group(1)) if m else []
+            if not (len(target) == 1 and target[0].lower() in self.snap_tables):
+                # anything else that can change engine-visible state
+                # invalidates every retained result (version key + explicit
+                # clear so stale tables are not pinned in memory)
+                self._data_version += 1
+                self._result_cache.clear()
+        elif deps and result.nbytes <= _RESULT_CACHE_MAX_BYTES:
+            self._result_cache[ck] = (result, deps[0])
             while len(self._result_cache) > _RESULT_CACHE_MAX_ENTRIES:
                 self._result_cache.pop(next(iter(self._result_cache)))
         # Snowflake stream consumption: only a DML that read the stream
@@ -782,33 +831,39 @@ class Engine:
     def _enter(self, session: Session | None) -> None:
         """Make `session` current (None keeps the current one) and bring
         Spark's current database and timezone in line with it. Spark is
-        called only for what differs from the last session applied."""
+        called only for what differs from what the last session applied,
+        by this Engine or another on the same SparkSession."""
         s = self.session = session or self.session
-        if s.spark_db != self._spark_db:
+        applied = self._spark_state
+        if s.spark_db != applied.db:
             try:
                 self.spark.catalog.setCurrentDatabase(s.spark_db or "default")
             except AnalysisException:  # dropped by another session since its USE
                 s.spark_db = None
                 self.spark.catalog.setCurrentDatabase("default")
+            applied.db = s.spark_db
+        if s.spark_db != self._spark_db:
             self._spark_db = s.spark_db
             self._shadow_snap_tables()
         tz = s.params.get("TIMEZONE")
-        if tz != self._spark_tz:
+        if tz != applied.tz:
             self.spark.conf.set("spark.sql.session.timeZone", tz or "UTC")
-            self._spark_tz = tz
+            applied.tz = tz
 
     def _result_cache_key(self, stmt: str) -> tuple | None:
         """Result-reuse eligibility (Snowflake USE_CACHED_RESULT semantics):
         None when the statement must execute; otherwise the cache key.
 
         Cacheable = a SELECT/WITH with no execution-time function, no stage
-        or remote read, and no reference to a STREAM (re-reads the delta),
-        dynamic table (refresh-on-read past TARGET_LAG), or snapshot table
-        (another process may commit between runs — DML here is
-        cross-process via the warehouse guard, so process-local version
-        bumps cannot see it). The key carries the data version, session
-        database/schema, and every session parameter, so USE/ALTER SESSION
-        changes address a different slot."""
+        or remote read, no variable, no time travel or CHANGES clause, no
+        INFORMATION_SCHEMA read (its scratch views report snapshot-table
+        state no generation stamps), and no reference to a STREAM (re-reads
+        the delta) or to a dynamic table with a TARGET_LAG (refresh on
+        read). Snapshot tables are cacheable: the entry records the
+        generations of the views it read. The key carries the data
+        version, the role (CURRENT_ROLE, IS_ROLE_IN_SESSION and policies
+        answer per role), the session database/schema, and every session
+        parameter, so USE/ALTER SESSION changes address a different slot."""
         if self.session.params.get("USE_CACHED_RESULT", "TRUE").strip("'\"").upper() in (
             "FALSE", "OFF", "0",
         ):
@@ -816,16 +871,20 @@ class Engine:
         s = stmt.strip()
         if not re.match(r"(?i)^(SELECT|WITH)\b", s):
             return None
-        if _NONDET_FN_RE.search(s) or "@" in s or "$" in s:
+        low = s.lower()
+        if _NONDET_FN_RE.search(s) or "@" in s or "$" in s or _TIME_TRAVEL_RE.search(s) or (
+            "information_schema" in low
+        ):
             # '@' = stage read (backing files change without a version
             # bump); '$' = session variable / positional column substitution
             return None
-        low = s.lower()
-        for name in (*self.streams, *self._dynamic_meta, *self.snap_tables):
+        lagged = (name for name, (lag_s, _) in self._dynamic_meta.items() if lag_s >= 0)
+        for name in (*self.streams, *lagged):
             if re.search(rf"\b{re.escape(name.lower())}\b", low):
                 return None
         return (
             self._data_version,
+            self.current_role,
             self.session.database,
             self.session.schema,
             tuple(sorted(self.session.params.items())),
@@ -950,7 +1009,10 @@ class Engine:
             return f"DATE '{v.isoformat()}'"
         return "'" + str(v).replace("'", "''") + "'"
 
-    def _execute_one(self, stmt: str) -> pa.Table:
+    def _execute_one(self, stmt: str, deps: list | None = None) -> pa.Table:
+        """Run one statement. Given `deps`, a SELECT planned by Spark
+        appends the snapshot views its plan reads (`_plan_views`), which a
+        retained result needs unchanged to be reused."""
         try:
             stmt = self._rewrite_qualified(stmt)
             m = self._SET_VAR_RE.match(stmt)
@@ -1076,7 +1138,7 @@ class Engine:
                 k, v = m.group(1).upper(), m.group(2).strip().strip("'")
                 if k == "TIMEZONE":  # Spark validates the zone before the session keeps it
                     self.spark.conf.set("spark.sql.session.timeZone", v)
-                    self._spark_tz = v
+                    self._spark_state.tz = v
                 self.session.params[k] = v
                 return _status(f"session parameter {k} set")
             m = re.match(r"^\s*ALTER\s+SESSION\s+UNSET\s+(\w+)\s*$", stmt, re.I)
@@ -2287,7 +2349,10 @@ class Engine:
                 )
             if _DELETE_RE.match(stmt) or _UPDATE_RE.match(stmt) or _MERGE_RE.match(stmt):
                 return self._dml(stmt)
-            return self._run_select(stmt).toArrow()
+            df = self._run_select(stmt)
+            if deps is not None:
+                deps.append(self._plan_views(df))
+            return df.toArrow()
         except QueryError:
             raise
         except Exception as e:  # AnalysisException / ParseException / Py4J
@@ -3663,6 +3728,7 @@ class Engine:
         for bn in names & self.snap_tables.keys():
             self._shadowed[bn] = self.snap_tables.pop(bn)
             self.spark.catalog.dropTempView(bn)
+            self._spark_state.view_gen.pop(bn, None)
 
     def _reclaim_dropped(self, name: str) -> None:
         """Creating a new table under a dropped name forfeits its UNDROP
@@ -3872,6 +3938,18 @@ class Engine:
                 arg, expr = self.masking_policies[pname]
                 df = df.withColumn(col, F.expr(bind(expr, [arg], [col])))
         df.createOrReplaceTempView(name)
+        self._spark_state.stamp(name)
+
+    def _plan_views(self, df: DataFrame) -> tuple[tuple[str, int], ...]:
+        """The snapshot views df's analyzed plan reads, nested views and
+        subqueries included, each with its current generation: one tree
+        string read, none while no snapshot view is registered."""
+        gens = self._spark_state.view_gen
+        if not gens:
+            return ()
+        plan = df._jdf.queryExecution().analyzed().toString()
+        names = {n.lower() for n in _VIEW_NODE_RE.findall(plan)}
+        return tuple((n, gens[n]) for n in names if n in gens)
 
     def register_external_iceberg(
         self,
